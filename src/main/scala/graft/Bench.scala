@@ -99,7 +99,7 @@ object Bench {
     val ordered = shuffleSeed.fold(alpha) { seed =>
       new scala.util.Random(seed).shuffle(alpha)
     }
-    val results = ordered
+    val outcomes = ordered
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
         val reps = if (gateOnce(name)) 1 else repeat
@@ -112,11 +112,13 @@ object Bench {
         // the gate so its fits start on a clean heap; the matching
         // collect AFTER runs below, also outside every timer.
         if (gateOnce(name)) System.gc()
+        // a query that throws in any rep is reported under "failed" with
+        // its error class, never timed as if it had succeeded
+        var failure: Option[String] = None
         val dt = (1 to reps).map { _ =>
           val t0 = System.nanoTime()
-          // SPARK_GRAFT_RETHROW=1 surfaces per-query failures (dev
-          // attribution aid — a swallowed exception reads as an
-          // impossibly fast timing in the sweep otherwise).
+          // SPARK_GRAFT_RETHROW=1 aborts the sweep on the first failure
+          // with its stack trace (dev aid).
           // SPARK_GRAFT_FORCE_FULL=1 executes the FULL physical plan
           // (toRdd) instead of count(): for pure-projection queries
           // Catalyst collapses count() to a parquet metadata count and
@@ -133,7 +135,7 @@ object Bench {
           } catch {
             case e: Throwable =>
               if (sys.env.get("SPARK_GRAFT_RETHROW").contains("1")) throw e
-              -1L
+              failure = Some(e.getClass.getName)
           }
           val t = (System.nanoTime() - t0) / 1e9
           if (debugReps) System.err.println(f"[reps] $name $t%.3f")
@@ -165,8 +167,11 @@ object Bench {
         // ... and clear the gate's own fit garbage (or a featurizer's
         // persisted-frame debt) before the next timer
         if (gateOnce(name) || gcAfter(name)) System.gc()
-        name -> dt
+        name -> failure.toLeft(dt)
       }
+    val results = outcomes.collect { case (k, Right(v)) => k -> v }
+    val failed = outcomes.collect { case (k, Left(e)) => s"\"$k\":\"$e\"" }
+      .mkString(""","failed":{""", ",", "}")
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -185,7 +190,7 @@ object Bench {
         s""","calibration":${fmt(v)},"calibration_ref":$calRef""" +
           s""","total_adjusted":${fmt(total * calRef / v)}""").getOrElse("")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec"${calStr(_.toString)},"queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec"${calStr(_.toString)},"queries":$qs$failed,"sf":"$sfDir"}"""
     // The harness keeps only the last ~2000 chars of stdout and sbt's
     // epilogue spends ~100 of them; a full-precision 80-query line is
     // ~2600 chars, so its head (the {"metric":... prefix) gets truncated
@@ -200,7 +205,7 @@ object Bench {
       .zip(entries).takeWhile(_._1 <= budget).map(_._2)
     val qsShort = kept.mkString("{", ",", "}")
     val shortLine =
-      s"""{"metric":"total","value":${ms(total)},"unit":"sec"${calStr(ms)},"queries":$qsShort,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${ms(total)},"unit":"sec"${calStr(ms)},"queries":$qsShort$failed,"sf":"$sfDir"}"""
     // Order matters: the harness keeps only a merged-stream tail, so the
     // short parseable line must be the LAST thing we emit — r3's tail
     // shows the stderr full-line mirror displacing the stdout short line.

@@ -83,9 +83,10 @@ object TreeQueries extends QueryPack {
   // DuckDB replay of the depth-3 level-wise trainer.
   // ---------------------------------------------------------------------
 
-  /** Per-candidate entropy gain, operand-for-operand the same arithmetic
-    * order as `DecisionTree.impurityExpr`/`splitStats` (proven
-    * cross-engine by `split_gains_discount`).
+  /** Per-candidate entropy gain in the same operand order as the
+    * trainer's split scan (`DecisionTree.impurity` and its gain), so both
+    * engines produce bit-identical doubles; `split_gains_discount` checks
+    * this cross-engine.
     */
   private[queries] val gainSql =
     """(-(CASE WHEN tc0 > 0 THEN (tc0/tn)*log2(tc0/tn) ELSE 0.0 END

@@ -1,9 +1,11 @@
 package graft.tree
 
 import graft.transform.QuantileBinner
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.{Aggregator, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Distributed decision-tree training with the reference's exact
@@ -11,9 +13,12 @@ import org.apache.spark.storage.StorageLevel
   * (PLANET-style) for Spark:
   *
   *  - the driver holds only the tree + per-node class counts;
-  *  - one Spark job per level computes, for ALL frontier nodes at once,
-  *    per (node, feature, candidate-threshold) cumulative class histograms
-  *    (melt features to rows -> groupBy -> ordered window cumsum);
+  *  - one Spark job per level searches ALL frontier nodes at once: a
+  *    single shuffle combines per-class counts map-side under
+  *    (node, feature, value), hash-partitions them on (node, feature) and
+  *    sorts each partition by value; a streaming scan then walks each
+  *    (node, feature) group in value order with O(classes) state and keeps
+  *    its best split;
   *  - the driver applies the reference's stopping rules
   *    (house_predict.py:325-334) and tie-breaks (first feature in sampled
   *    order, lowest threshold, strict gain improvement — :310-313), then
@@ -158,89 +163,240 @@ object TreeModel {
 
 object DecisionTree {
 
-  /** Impurity of class-count columns (matching reference vectorized
-    * entropy/gini, house_predict.py:228-245). Count/total columns must be
-    * integer-typed; division yields identical doubles in Spark and DuckDB,
-    * making the gain table oracle-checkable.
+  /** Shuffle key of one histogram cell: a (node, feature) group, a null
+    * flag, and the raw bits of the value. Values are normalised before the
+    * bits are taken (-0.0 -> 0.0; `doubleToLongBits` keeps one NaN), so
+    * equal bits mean Spark-equal values. A `Double` field would never
+    * combine NaN keys, since NaN != NaN.
     */
-  def impurityExpr(counts: Seq[Column], n: Column, criterion: String): Column =
+  private final case class Cell(node: Int, feat: Int, isNull: Boolean, bits: Long) {
+    def value: Double = java.lang.Double.longBitsToDouble(bits)
+  }
+
+  /** (node, feature), then the group's null cell, then values in Spark's
+    * double order: on normalised values `Double.compare` is that order,
+    * with NaN last.
+    */
+  private object CellOrdering extends Ordering[Cell] {
+    def compare(a: Cell, b: Cell): Int = {
+      val byGroup =
+        if (a.node != b.node) Integer.compare(a.node, b.node)
+        else Integer.compare(a.feat, b.feat)
+      if (byGroup != 0) byGroup
+      else if (a.isNull != b.isNull) { if (a.isNull) -1 else 1 }
+      else java.lang.Double.compare(a.value, b.value)
+    }
+  }
+
+  /** Sends every cell of a (node, feature) group to one reduce task. */
+  private final class GroupPartitioner(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = {
+      val c = key.asInstanceOf[Cell]
+      Math.floorMod(31 * c.node + c.feat, numPartitions)
+    }
+  }
+
+  /** One split candidate of a (node, feature) group: `left` holds the
+    * per-class counts at or below `threshold`, `ln` their sum, and `tn`
+    * the group's rows with a non-null value.
+    */
+  private[tree] final case class Candidate(
+      node: Int, feat: Int, threshold: Double, ln: Long, tn: Long,
+      gain: Double, left: Seq[Long])
+
+  private val Ln2 = StrictMath.log(2)
+
+  /** Impurity of a class-count vector (the reference's vectorized
+    * entropy/gini, house_predict.py:228-245). The operand order and the
+    * `StrictMath` log are those of the same formula in Spark SQL, so the
+    * gains are bit-identical to it and to DuckDB's (TreeQueries.gainSql).
+    */
+  private def impurity(criterion: String): (Array[Long], Long) => Double =
     criterion match {
-      case "entropy" =>
-        -counts.map(c => when(c > 0, (c / n) * log2(c / n)).otherwise(0.0))
-          .reduce(_ + _)
-      case "gini" =>
-        lit(1.0) - counts.map(c => (c / n) * (c / n)).reduce(_ + _)
+      case "entropy" => (c, n) => {
+        def term(i: Int) =
+          if (c(i) > 0) (c(i).toDouble / n) * (StrictMath.log(c(i).toDouble / n) / Ln2)
+          else 0.0
+        var s = term(0)
+        var i = 1
+        while (i < c.length) { s += term(i); i += 1 }
+        -s
+      }
+      case "gini" => (c, n) => {
+        def sq(i: Int) = (c(i).toDouble / n) * (c(i).toDouble / n)
+        var s = sq(0)
+        var i = 1
+        while (i < c.length) { s += sq(i); i += 1 }
+        1.0 - s
+      }
       case other => throw new IllegalArgumentException(s"criterion $other")
     }
 
-  /** Per (node, feature, threshold) split statistics + information gain
-    * for all frontier nodes in ONE aggregation pass.
-    *
-    * Input must have columns: __node (int), label (long), plus features.
-    * Output: (__node, feat, threshold, ln, tn, gain, l_ci.., t_ci..) where
-    * ln/l_ci are cumulative (x <= threshold) counts and tn/t_ci node
-    * totals. Rows violating minSamplesLeaf are pre-filtered; the row for
-    * the max value (empty right child) drops out via tn-ln >= msl, and the
-    * MIN distinct value is never a candidate — the reference iterates
-    * `unique_values[1:]` (house_predict.py:283).
-    *
-    * Null feature values are excluded from the histograms (and from gain):
-    * at routing/inference time `x <= thr` is null for them, so they fall
-    * to the RIGHT child; child counts stay consistent because the right
-    * child's counts are computed as (node total - left counts).
+  /** Row count per label, in label order, from one aggregate. A null label
+    * has no class, so it is rejected here with the column's name.
     */
-  def splitStats(
-      cur: DataFrame, features: Seq[String], labels: Seq[Long],
-      criterion: String, minSamplesLeaf: Int): DataFrame = {
-    val stackExpr = explode(array(features.map(f =>
-      struct(lit(f).as("feat"), col(f).cast("double").as("value"))): _*))
-    val melted = cur.select(col("__node"), col("label"), stackExpr.as("fv"))
-      .select(col("__node"), col("label"), col("fv.feat"), col("fv.value"))
-      .filter(col("value").isNotNull)
-    val classAggs = labels.zipWithIndex.map { case (l, i) =>
-      sum(when(col("label") === l, 1L).otherwise(0L)).as(s"c$i")
-    }
-    val grouped = melted.groupBy("__node", "feat", "value")
-      .agg(count(lit(1)).as("n"), classAggs: _*)
-    val wCum = Window.partitionBy("__node", "feat").orderBy("value")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val wAll = Window.partitionBy("__node", "feat")
-    val cums = labels.indices.foldLeft(
-      grouped
-        .withColumn("ln", sum("n").over(wCum))
-        .withColumn("tn", sum("n").over(wAll))) { (df, i) =>
-      df.withColumn(s"l_c$i", sum(s"c$i").over(wCum))
-        .withColumn(s"t_c$i", sum(s"c$i").over(wAll))
-    }
-    val lCounts = labels.indices.map(i => col(s"l_c$i"))
-    val rCounts = labels.indices.map(i => col(s"t_c$i") - col(s"l_c$i"))
-    val tCounts = labels.indices.map(i => col(s"t_c$i"))
-    val rn = col("tn") - col("ln")
-    val hp = impurityExpr(tCounts, col("tn"), criterion)
-    val hl = impurityExpr(lCounts, col("ln"), criterion)
-    val hr = impurityExpr(rCounts, rn, criterion)
-    cums
-      .withColumn("__vmin", min("value").over(wAll))
-      .filter(col("value") > col("__vmin") &&
-        col("ln") >= minSamplesLeaf && rn >= minSamplesLeaf)
-      .drop("__vmin")
-      .withColumn(
-        "gain", hp - (col("ln") / col("tn")) * hl - (rn / col("tn")) * hr)
-      .withColumnRenamed("value", "threshold")
+  private def labelCounts(df: DataFrame, labelCol: String): Seq[(Long, Long)] = {
+    val rows = df.groupBy(col(labelCol).cast("long")).count().collect()
+    if (rows.exists(_.isNullAt(0)))
+      throw new IllegalArgumentException(
+        s"label column '$labelCol' contains null values")
+    rows.map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
   }
 
-  /** Root-level gain table for one feature — the trainer's core
-    * aggregation exposed for the differential oracle.
+  /** The level's one shuffle. Each row of `rows` (columns __node, label
+    * and `feats`) adds one to its class in the cell of every feature its
+    * node samples (`featsOf`: node -> indexes into `feats`). Counts are
+    * combined map-side, hash-partitioned on (node, feature) and sorted by
+    * the full key within each partition: Spark's spillable combine and
+    * sort, the only place memory grows with the distinct values.
+    */
+  private def histogram(
+      rows: DataFrame, feats: Seq[String], featsOf: Map[Int, Array[Int]],
+      labels: Seq[Long]): RDD[(Cell, Array[Long])] = {
+    val k = labels.size
+    val classOf = labels.zipWithIndex.toMap
+    val melted = rows
+      .select(col("__node") +: col("label") +: feats.map(col(_).cast("double")): _*)
+      .queryExecution.toRdd
+      .flatMap { r =>
+        val node = r.getInt(0)
+        val cls = classOf(r.getLong(1))
+        featsOf(node).iterator.map { j =>
+          val cell =
+            if (r.isNullAt(2 + j)) Cell(node, j, isNull = true, 0L)
+            else {
+              val v = r.getDouble(2 + j)
+              Cell(node, j, isNull = false,
+                java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v))
+            }
+          (cell, cls)
+        }
+      }
+    val counts = new Aggregator[Cell, Int, Array[Long]](
+      cls => { val c = new Array[Long](k); c(cls) = 1L; c },
+      (c, cls) => { c(cls) += 1L; c },
+      (a, b) => { var i = 0; while (i < k) { a(i) += b(i); i += 1 }; a })
+    val parts = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    new ShuffledRDD[Cell, Int, Array[Long]](melted, new GroupPartitioner(parts))
+      .setAggregator(counts)
+      .setMapSideCombine(true)
+      .setKeyOrdering(CellOrdering)
+  }
+
+  /** Streams one reduce partition of [[histogram]] into split candidates
+    * with O(classes) state. Per (node, feature) group the null cell comes
+    * first: the node's class counts (`counts`, kept with the frontier)
+    * minus the null counts are the non-null totals. Values then arrive in
+    * Spark's double order. The lowest distinct value is never a candidate
+    * (the reference iterates `unique_values[1:]`, house_predict.py:283),
+    * nor is one that leaves either child under `minSamplesLeaf` rows
+    * (so never the max value: its right child is empty).
+    *
+    * Null feature values are excluded from the gain: at routing and
+    * inference `x <= thr` is null for them, so they fall to the RIGHT
+    * child, whose counts `fit` takes as node total - left counts.
+    */
+  private def candidates(
+      cells: Iterator[(Cell, Array[Long])], counts: Map[Int, Array[Long]],
+      impurity: (Array[Long], Long) => Double,
+      minSamplesLeaf: Int): Iterator[Candidate] = {
+    var node, feat = -1
+    var tot, left = Array.emptyLongArray
+    var tn, ln = 0L
+    var first = true
+    cells.flatMap { case (cell, c) =>
+      if (cell.node != node || cell.feat != feat) {
+        node = cell.node; feat = cell.feat
+        tot = counts(node).clone(); left = new Array[Long](tot.length)
+        tn = tot.sum; ln = 0L; first = true
+      }
+      if (cell.isNull) {
+        for (i <- c.indices) tot(i) -= c(i)
+        tn -= c.sum
+        None
+      } else {
+        for (i <- c.indices) left(i) += c(i)
+        ln += c.sum
+        val rn = tn - ln
+        val lowest = first
+        first = false
+        if (lowest || ln < minSamplesLeaf || rn < minSamplesLeaf) None
+        else {
+          val right = Array.tabulate(tot.length)(i => tot(i) - left(i))
+          val gain = impurity(tot, tn) - (ln.toDouble / tn) * impurity(left, ln) -
+            (rn.toDouble / tn) * impurity(right, rn)
+          Some(Candidate(node, feat, cell.value, ln, tn, gain, left.toSeq))
+        }
+      }
+    }
+  }
+
+  /** Max-gain candidate per (node, feature) group, lowest threshold on
+    * ties: a group's candidates arrive in threshold order and only a
+    * strictly larger gain replaces the kept one.
+    */
+  private def bestPerGroup(cands: Iterator[Candidate]): Iterator[Candidate] = {
+    val in = cands.buffered
+    new Iterator[Candidate] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Candidate = {
+        var best = in.next()
+        while (in.hasNext && in.head.node == best.node && in.head.feat == best.feat) {
+          val c = in.next()
+          if (c.gain > best.gain) best = c
+        }
+        best
+      }
+    }
+  }
+
+  /** Best split of every (node, sampled feature) pair in ONE job: one
+    * [[histogram]] shuffle, a [[candidates]] scan per reduce partition,
+    * and a collect of one [[Candidate]] per pair that has any.
+    *
+    * `rows` holds only the nodes of `featsOf`, with columns __node (int),
+    * label (long) and the features; `counts` are those nodes' per-class
+    * row counts, aligned with `labels`.
+    */
+  private[tree] def bestSplits(
+      rows: DataFrame, featsOf: Map[Int, Seq[String]],
+      counts: Map[Int, Seq[Long]], labels: Seq[Long], criterion: String,
+      minSamplesLeaf: Int): Map[(Int, String), Candidate] = {
+    val feats = featsOf.values.flatten.toSeq.distinct
+    val imp = impurity(criterion)
+    val totals = counts.map { case (id, c) => id -> c.toArray }
+    val featIdx = featsOf.map { case (id, fs) => id -> fs.map(feats.indexOf).toArray }
+    histogram(rows, feats, featIdx, labels)
+      .mapPartitions(cells =>
+        bestPerGroup(candidates(cells, totals, imp, minSamplesLeaf)))
+      .collect()
+      .map(c => (c.node, feats(c.feat)) -> c).toMap
+  }
+
+  /** Root-level gain table for one feature, every candidate
+    * (threshold, ln, tn, gain): the trainer's split search exposed for the
+    * differential oracle. `labels` must cover every label in `df`.
     */
   def rootGains(
       df: DataFrame, feature: String, labelCol: String, labels: Seq[Long],
-      criterion: String = "entropy", minSamplesLeaf: Int = 1): DataFrame =
-    splitStats(
-      df.select(
-        lit(0).as("__node"), col(labelCol).cast("long").as("label"),
-        col(feature)),
-      Seq(feature), labels, criterion, minSamplesLeaf)
-      .select(col("threshold"), col("ln"), col("tn"), col("gain"))
+      criterion: String = "entropy", minSamplesLeaf: Int = 1): DataFrame = {
+    val counts = labelCounts(df, labelCol).toMap
+    val unknown = counts.keySet -- labels
+    require(unknown.isEmpty,
+      s"labels ${unknown.mkString(", ")} of '$labelCol' are not in $labels")
+    val imp = impurity(criterion)
+    val root = Map(0 -> labels.map(counts.getOrElse(_, 0L)).toArray)
+    val rows = df.select(
+      lit(0).as("__node"), col(labelCol).cast("long").as("label"), col(feature))
+    val gains = histogram(rows, Seq(feature), Map(0 -> Array(0)), labels)
+      .mapPartitions(candidates(_, root, imp, minSamplesLeaf))
+      .map(c => Row(c.threshold, c.ln, c.tn, c.gain))
+    df.sparkSession.createDataFrame(gains, StructType(Seq(
+      StructField("threshold", DoubleType, nullable = false),
+      StructField("ln", LongType, nullable = false),
+      StructField("tn", LongType, nullable = false),
+      StructField("gain", DoubleType, nullable = false))))
+  }
 
   def fit(
       input: DataFrame, features: Seq[String], labelCol: String,
@@ -265,20 +421,15 @@ object DecisionTree {
           (binned, (f, code) => edgeMap(f).edges(code.toInt + 1))
       }
 
-    val labels = df0.select(col(labelCol).cast("long"))
-      .distinct().collect().map(_.getLong(0)).sorted.toSeq
+    // labels and root counts in one aggregate, before `cur` is persisted: the
+    // aggregate reads only the label column, and level 0 fills the cache
+    val (labels, rootCounts) = labelCounts(df0, labelCol).unzip
 
     var cur = df0
       .select((features.map(col) :+
         col(labelCol).cast("long").as("label") :+
         lit(0).as("__node")): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    val rootCounts = {
-      val m = cur.groupBy("label").count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      labels.map(m.getOrElse(_, 0L))
-    }
 
     val nFeat = params.maxFeatures match {
       case None          => features.size
@@ -320,24 +471,12 @@ object DecisionTree {
 
       if (searchable.nonEmpty) {
         val ids = searchable.keys.toSeq.sorted
-        val active = cur.filter(col("__node").isin(ids: _*))
         val featsByNode = ids.map(id => id -> sampleFeatures(id)).toMap
-        val usedFeats = featsByNode.values.flatten.toSeq.distinct
-        val stats = splitStats(
-          active, usedFeats, labels, params.criterion, params.minSamplesLeaf)
-        // best candidate per (node, feature): max gain, lowest threshold
-        val w = Window.partitionBy("__node", "feat")
-          .orderBy(desc("gain"), asc("threshold"))
-        val best = stats.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-          .collect()
-          .map { r =>
-            (r.getAs[Int]("__node"), r.getAs[String]("feat")) ->
-              (r.getAs[Double]("threshold"), r.getAs[Double]("gain"),
-                labels.indices.map(i => r.getAs[Long](s"l_c$i")))
-          }.toMap
-        // this level's stats pass has materialized `cur`'s persisted
-        // blocks — the parent's are no longer needed
+        val best = bestSplits(
+          cur.filter(col("__node").isin(ids: _*)), featsByNode, searchable,
+          labels, params.criterion, params.minSamplesLeaf)
+        // this level's search has materialized `cur`'s persisted blocks —
+        // the parent's are no longer needed
         pendingPrev.foreach(_.unpersist())
         pendingPrev = None
 
@@ -346,20 +485,20 @@ object DecisionTree {
         searchable.foreach { case (id, counts) =>
           // first feature in sampled order wins on strict gain improvement
           var bestGain = 0.0
-          var chosen: Option[(String, Double, Seq[Long])] = None
+          var chosen: Option[(String, Candidate)] = None
           featsByNode(id).foreach { f =>
-            best.get((id, f)).foreach { case (thr, gain, lc) =>
-              if (gain > bestGain) { bestGain = gain; chosen = Some((f, thr, lc)) }
+            best.get((id, f)).foreach { c =>
+              if (c.gain > bestGain) { bestGain = c.gain; chosen = Some(f -> c) }
             }
           }
           chosen match {
             case None => leaves(id) = leafOf(counts)
-            case Some((f, thrRaw, lc)) =>
-              val thr = thrRaw // still in (possibly binned) training units
-              splits(id) = (f, thr)
-              routed += ((id, f, thr))
-              next += (2 * id + 1) -> lc
-              next += (2 * id + 2) -> counts.zip(lc).map { case (t, l) => t - l }
+            case Some((f, c)) =>
+              // the threshold is still in (possibly binned) training units
+              splits(id) = (f, c.threshold)
+              routed += ((id, f, c.threshold))
+              next += (2 * id + 1) -> c.left
+              next += (2 * id + 2) -> counts.zip(c.left).map { case (t, l) => t - l }
           }
         }
 
