@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line. The line is (a) printed to stdout and flushed the
@@ -9,55 +8,24 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle partitioning is a per-deployment knob, not a constant: at
     // sf<=0.1 one partition per core is right, but a 600M-row shuffle in
     // 32 partitions is ~19M rows each — past executor memory, so the
     // sort spills and the plan goes superlinear (measured at sf100:
     // q18 93.8 s at 32 partitions). Real cluster jobs size this so each
     // shuffle partition lands ~100-200MB; SPARK_GRAFT_SHUFFLE_PARTITIONS
-    // exposes the same knob to the scale rungs. AQE coalesces small
-    // partitions back down, so oversizing is cheap.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    // (read by SparkEntry.session) exposes the same knob to the scale
+    // rungs. AQE coalesces small partitions back down, so oversizing is
+    // cheap.
     // Input-split sizing, same reasoning: the scale rungs ship some
     // tables as ONE parquet file (the nanos events table), so the
     // default 128MB split gives a 1.2GB file only ~10 scan tasks on a
-    // 32-core box. Smaller splits restore scan parallelism; on a real
-    // cluster the input is many files and the default is fine.
-    val maxPartitionBytes =
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", "134217728")
-    // AQE coalescing mode: parallelismFirst=true (Spark's default) keeps
-    // post-shuffle partition count at defaultParallelism even when the
-    // data is tiny; false makes AQE size partitions to
-    // advisoryPartitionSizeInBytes — the setting Spark's own docs
-    // recommend for production, and the scale-adaptive choice (partition
-    // count derives from DATA SIZE at any scale factor, not from the
-    // local core count). Both knobs are env-overridable for the scale
-    // rungs; defaults chosen by the r16 A/B sweep (see
-    // OPTIMIZATION_r16.md).
-    val parallelismFirst =
-      sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true")
-    val advisoryBytes =
-      sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PARTITION_BYTES", "67108864")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parallelismFirst)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        advisoryBytes)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table queries write real table data: pin the warehouse
-      // to a controlled location instead of ./spark-warehouse under
-      // whatever cwd spark-submit ran from (multi-GB at sf100)
-      .config("spark.sql.warehouse.dir",
-        sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
-          "/root/repo/target/scale/warehouse"))
-      .getOrCreate()
+    // 32-core box. SPARK_GRAFT_MAX_PARTITION_BYTES sets smaller splits to
+    // restore scan parallelism; on a real cluster the input is many
+    // files and the default is fine.
+    val spark = SparkEntry.session()
+    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
+      .foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
     // ERROR, not WARN: every saved log line is budget for the JSON tail
     spark.sparkContext.setLogLevel("ERROR")
     // warm-up: JVM/codegen/parquet-reader paths, so the first timed query
@@ -68,7 +36,9 @@ object Bench {
     // Per-query repeat-and-take-min (default 2): this box's wall clock
     // swings ±2x and heavy MLlib fits shadow the next query with GC debt —
     // min-of-2 makes cross-round regressions attributable to plans, not
-    // JVM state.
+    // JVM state. Every rep is cold: the shared-intermediate registry is
+    // cleared before it, so a query pays its model fits and checkpointed
+    // chains each time.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "2").toInt.max(1)
     // Driver-orchestrated MLlib gates are shape checks, not plan timings:
     // repeating them doubles multi-fit pipelines (10+ fits each) for no
@@ -83,9 +53,6 @@ object Bench {
     // MLlib gates, outside every timer.
     val gcAfter = Set(
       "quality_classifier_select", "quality_classifier_slice")
-    // SPARK_GRAFT_DEBUG_REPS=1 prints every rep's time to stderr (dev
-    // attribution aid: cold-vs-warm rep split, adjacency effects)
-    val debugReps = sys.env.get("SPARK_GRAFT_DEBUG_REPS").contains("1")
     // SPARK_GRAFT_SHUFFLE_ORDER=<seed> runs the sweep in a seeded-random
     // order instead of alphabetical. Rounds 7 and 8 both chased per-query
     // regressions that turned out to be sweep-adjacency artifacts (GC
@@ -116,39 +83,24 @@ object Bench {
         // its error class, never timed as if it had succeeded
         var failure: Option[String] = None
         val dt = (1 to reps).map { _ =>
+          ChainGuard.clear(spark)
           val t0 = System.nanoTime()
           // SPARK_GRAFT_RETHROW=1 aborts the sweep on the first failure
           // with its stack trace (dev aid).
-          // SPARK_GRAFT_FORCE_FULL=1 executes the FULL physical plan
-          // (toRdd) instead of count(): for pure-projection queries
-          // Catalyst collapses count() to a parquet metadata count and
-          // the default timing measures the scan stats, not the
-          // projection work (any SQL engine's count pushdown does the
-          // same). The default stays count() for cross-round
-          // comparability; use the flag when the projection cost itself
-          // is the measurement target.
-          try {
-            val df = fn(spark, sfDir)
-            if (sys.env.get("SPARK_GRAFT_FORCE_FULL").contains("1"))
-              df.queryExecution.toRdd.count()
-            else df.count()
-          } catch {
+          try fn(spark, sfDir).count()
+          catch {
             case e: Throwable =>
               if (sys.env.get("SPARK_GRAFT_RETHROW").contains("1")) throw e
               failure = Some(e.getClass.getName)
           }
           val t = (System.nanoTime() - t0) / 1e9
-          if (debugReps) System.err.println(f"[reps] $name $t%.3f")
           // Isolate runs: leftover cached / localCheckpoint blocks must
           // not shrink execution memory for what follows (observed
           // 7s -> 200s on RF training from exactly this). BLOCKING
-          // unpersist so the free lands before the next timer starts;
-          // ChainGuard-protected ids are the memoized shared chains
-          // whose checkpoint blocks must survive the whole sweep.
+          // unpersist so the free lands before the next timer starts.
           spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (!ChainGuard.isProtected(id)) rdd.unpersist(blocking = true)
-          }
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(_.unpersist(blocking = true))
           t
         }.min
         // Streaming twins leave loaded state-store maps + GC debt that

@@ -8,11 +8,7 @@ object Explain {
     val names = if (args.length > 1) args.tail.toSeq
       else Seq("q1_pricing_summary", "q3_top_order_revenue",
         "q5_region_nation_revenue", "flagship_bin_label_dist")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scale-up for scale testing: replicates every
@@ -41,13 +41,7 @@ object ScaleUp {
     val src = args(0)
     val dst = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     spark.sparkContext.setLogLevel("WARN")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
@@ -62,7 +56,7 @@ object ScaleUp {
     // `__shift` = copy * STRIDE is the per-copy key offset.
     def copies(t: String)(remap: DataFrame => DataFrame): Unit = {
       val base = read(t)
-        .repartition(cpus.toInt * 2)
+        .repartition(spark.sparkContext.defaultParallelism * 2)
         .select(col("*"),
           posexplode(array_repeat(lit(0), factor)).as(Seq("__copy", "__z")))
         .withColumn("__shift", col("__copy").cast("long") * Stride)

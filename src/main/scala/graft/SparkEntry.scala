@@ -34,4 +34,31 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     allQueries.flatMap(q => q.oracle.map(o => q.name -> o.trim)).toMap
+
+  /** The one session builder, for every main and the test suites: a local
+    * master on `cores` threads (SPARK_GRAFT_CPUS, else every core),
+    * `shufflePartitions` (SPARK_GRAFT_SHUFFLE_PARTITIONS, else one per
+    * core), UTC session time, no UI, and the warehouse pinned to
+    * SPARK_GRAFT_WAREHOUSE (else `target/scale/warehouse` under the working
+    * directory), so bucketed-table writes land in the build output, not
+    * in a stray `spark-warehouse`.
+    */
+  def session(
+      cores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+        .fold(Runtime.getRuntime.availableProcessors)(_.toInt),
+      shufflePartitions: Option[Int] = None): SparkSession = {
+    val partitions = shufflePartitions
+      .orElse(sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS").map(_.toInt))
+      .getOrElse(cores)
+    val warehouse = sys.env.getOrElse("SPARK_GRAFT_WAREHOUSE",
+      java.nio.file.Paths.get("target", "scale", "warehouse")
+        .toAbsolutePath.toString)
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", partitions.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", warehouse)
+      .getOrCreate()
+  }
 }

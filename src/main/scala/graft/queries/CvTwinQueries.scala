@@ -40,8 +40,8 @@ import org.apache.spark.sql.functions._
   * node×feature×distinct-value — rows never leave the cluster) + 6
   * validation-slice aggregations behind compiled when-chain inference;
   * the 6-row result frame is checkpointed and the winning config
-  * attaches as a broadcast 1-row frame. Fits are memoized per sfDir
-  * (the tree family's model-cache pattern).
+  * attaches as a broadcast 1-row frame. No other query reads the fits,
+  * so each run trains all six.
   */
 object CvTwinQueries extends QueryPack {
 
@@ -54,14 +54,9 @@ object CvTwinQueries extends QueryPack {
   private val feats =
     Seq("l_quantity", "l_discount", "l_tax", "l_linenumber")
 
-  private val modelCache = scala.collection.concurrent.TrieMap[
-    (String, Int, Int), graft.tree.TreeModel]()
-  private def model(
-      s: SparkSession, dir: String, d: DataFrame,
-      depth: Int, fold: Int): graft.tree.TreeModel =
-    modelCache.getOrElseUpdate((dir, depth, fold),
-      DecisionTree.fit(d.filter(col("h") =!= fold), feats, "label",
-        params(depth)))
+  private def model(d: DataFrame, depth: Int, fold: Int): graft.tree.TreeModel =
+    DecisionTree.fit(d.filter(col("h") =!= fold), feats, "label",
+      params(depth))
 
   private def withFold(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem").select(
@@ -91,7 +86,7 @@ object CvTwinQueries extends QueryPack {
     (s, dir) => {
       val d = withFold(s, dir)
       val perRow = (for (dep <- depths; f <- 0 until nFolds) yield {
-        val m = model(s, dir, d, dep, f)
+        val m = model(d, dep, f)
         d.filter(col("h") === f)
           .select(col("label"), m.predictExpr.as("pred"))
           .agg(

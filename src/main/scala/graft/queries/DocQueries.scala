@@ -461,39 +461,23 @@ object DocQueries extends QueryPack {
     .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
 
   // ---------------------------------------------------------------------
-  // Shared dedup chains, memoized per (session, sfDir) — the tree
-  // family's model-cache pattern. The MinHash chain feeds 3 registered
-  // queries and the SimHash / all-pairs chains feed 2 each; without
-  // memoization every policy query re-pays the full
-  // shingle->MinHash->LSH(->CC) cost its sibling already paid (~15 s of
-  // repeated work per bench sweep). localCheckpoint materializes each
-  // frame eagerly as RDD blocks, which survive `spark.catalog
-  // .clearCache()` between bench queries (RDD-level persistence is not
-  // CacheManager state). Each frame is candidate-pair / label sized —
-  // orders of magnitude smaller than the corpus — so the blocks are
-  // cheap to hold for the life of the run.
+  // Shared dedup chains, held in the session's registry (graft.ChainGuard)
+  // under the sfDir. The MinHash chain feeds 3 registered queries and the
+  // SimHash / all-pairs chains feed 2 each; without sharing every policy
+  // query re-pays the full shingle->MinHash->LSH(->CC) cost its sibling
+  // already paid. Each frame is candidate-pair / label sized — orders of
+  // magnitude smaller than the corpus — so its checkpoint blocks are
+  // cheap to hold until the registry is cleared.
   // ---------------------------------------------------------------------
   import org.apache.spark.sql.{DataFrame, SparkSession}
-  private val chainCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String, String), DataFrame]()
-  private def memo(s: SparkSession, dir: String, what: String)
-                  (build: => DataFrame): DataFrame =
-    chainCache.getOrElseUpdate((s, dir, what), {
-      val out = build.localCheckpoint()
-      // checkpoint blocks are the frame's ONLY copy (truncated lineage);
-      // register them so the bench's between-query unpersist skips them
-      out.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
-      }.foreach(graft.ChainGuard.protect)
-      out
-    })
+  import graft.ChainGuard.frame
 
   /** MinHash(32) + LSH(4 bands) candidate edges at est_jaccard >= 0.5.
     * Signatures come from the per-row form (r16): no shingle explode or
     * regroup exchange — the signature projection runs where the text is.
     */
   private def lshEdges(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "lsh_edges") {
+    frame(s, s"lsh_edges $dir") {
       val sigs = Dedup.minhashSigsPerRow(
         Tables(s, dir, "documents"), "doc_id", "text", 3, 32)
       // lshCandidates checkpoints the signature frame internally
@@ -504,7 +488,7 @@ object DocQueries extends QueryPack {
 
   /** Connected-component labels over [[lshEdges]] (id, comp). */
   private def lshComponents(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "lsh_components") {
+    frame(s, s"lsh_components $dir") {
       Dedup.connectedComponents(lshEdges(s, dir).select("id_a", "id_b"))
     }
 
@@ -514,7 +498,7 @@ object DocQueries extends QueryPack {
     * identical to running the chain at 0.8 directly.
     */
   private def allPairs05(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "allpairs_05") {
+    frame(s, s"allpairs_05 $dir") {
       Dedup.allPairsJaccard(Dedup.shingleSet(
         Tables(s, dir, "documents").filter(col("doc_id") < 500),
         "doc_id", "text", 3), 0.5)
@@ -522,7 +506,7 @@ object DocQueries extends QueryPack {
 
   /** SimHash banded Hamming pairs at maxDist = 3. */
   private def simhashPairs3(s: SparkSession, dir: String): DataFrame =
-    memo(s, dir, "simhash_pairs") {
+    frame(s, s"simhash_pairs $dir") {
       Dedup.simhashHammingPairs(
         Dedup.simhash(Tables(s, dir, "documents"), "doc_id", "text",
           nBits = simhashBits, hashFn = Dedup.md5Hash60),
@@ -878,8 +862,8 @@ object DocQueries extends QueryPack {
   private def bucketCcLabels(
       s: SparkSession, dir: String, memoKey: String,
       docs: => DataFrame): DataFrame =
-    memo(s, dir, memoKey + "_cc") {
-      val edges = memo(s, dir, memoKey) {
+    frame(s, s"${memoKey}_cc $dir") {
+      val edges = frame(s, s"$memoKey $dir") {
         Dedup.lshBucketStarEdges(
           Dedup.minhashSigsPerRow(docs, "doc_id", "text", 3, 32),
           4, sqlBuckets = true)

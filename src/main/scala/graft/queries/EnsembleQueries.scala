@@ -35,16 +35,10 @@ object EnsembleQueries extends QueryPack {
   private val feats =
     Seq("l_quantity", "l_discount", "l_tax", "l_extendedprice")
 
-  // the three bag fits are deterministic per sfDir — memoize them (the
-  // tree family's model-cache pattern) so repeated runs pay inference
-  // (three compiled when-chains), not three level-wise trainings
-  private val modelCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String), Seq[graft.tree.TreeModel]]()
-  private def bagModels(
-      s: SparkSession, dir: String, d: DataFrame): Seq[graft.tree.TreeModel] =
-    modelCache.getOrElseUpdate((s, dir), (0 until nBags).map { b =>
+  private def bagModels(d: DataFrame): Seq[graft.tree.TreeModel] =
+    (0 until nBags).map { b =>
       DecisionTree.fit(d.filter(col("h") =!= b), feats, "label", params)
-    })
+    }
 
   private def withBagHash(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "lineitem").select(
@@ -57,7 +51,7 @@ object EnsembleQueries extends QueryPack {
     "rf_bagged_vote_confusion",
     (s, dir) => {
       val d = withBagHash(s, dir)
-      val models = bagModels(s, dir, d)
+      val models = bagModels(d)
       // `votes` (how many trees said 1) is reported alongside the
       // majority `pred`: the vote histogram is sensitive to EVERY bag
       // tree's leaf labels, so a training divergence in any single bag

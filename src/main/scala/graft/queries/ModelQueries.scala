@@ -31,14 +31,13 @@ object ModelQueries extends QueryPack {
 
   // `rf_train_eval` and `model_comparison` evaluate the IDENTICAL RF
   // configuration (5 trees, depth 4, seed 42, balanced weights, same
-  // hash split) — memoize the fitted model per sfDir (the tree family's
-  // model-cache pattern) so the sweep pays one RF training pass, not two.
-  // Deterministic: same data + params + seed => same model either way.
-  private val rfCache = scala.collection.concurrent.TrieMap[
-    String, org.apache.spark.ml.PipelineModel]()
+  // hash split) — the fitted model is shared through the session's
+  // registry (graft.ChainGuard) so a sweep pays one RF training pass, not
+  // two. Deterministic: same data + params + seed => same model either way.
+  private def rfKey(dir: String) = s"rf_model $dir"
   private def rfModel(s: SparkSession, dir: String)
       : org.apache.spark.ml.PipelineModel =
-    rfCache.getOrElseUpdate(dir, {
+    graft.ChainGuard.memo(s, rfKey(dir)) {
       val (train, _) = trainValid(s, dir)
       // materialize the weighted frame for the fit's passes (the same
       // reasoning as crossValidate), then release it
@@ -48,7 +47,7 @@ object ModelQueries extends QueryPack {
       try Models.randomForest(feats, "label", numTrees = 5, maxDepth = 4)
         .fit(w)
       finally w.unpersist(blocking = false)
-    })
+    }
 
   /** Multimodal: opaque binary column -> typed metadata via partition-wise
     * stub decode; oracle mirrors the deterministic fake arithmetic.
@@ -421,9 +420,10 @@ object ModelQueries extends QueryPack {
         "random_forest" -> Models.randomForest(feats, "label", numTrees = 5,
           maxDepth = 4),
         "gbt" -> Models.gbt(feats, "label", maxIter = 5, maxDepth = 3)),
-        fitted = rfCache.get(dir).map("random_forest" -> _).toMap,
+        fitted = graft.ChainGuard.built[org.apache.spark.ml.PipelineModel](
+          s, rfKey(dir)).map("random_forest" -> _).toMap,
         onFit = (name, m) =>
-          if (name == "random_forest") rfCache.putIfAbsent(dir, m))
+          if (name == "random_forest") graft.ChainGuard.memo(s, rfKey(dir))(m))
     },
     None)
 

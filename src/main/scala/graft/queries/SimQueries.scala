@@ -536,14 +536,13 @@ object SimQueries extends QueryPack {
             FROM m$t GROUP BY list)"""
 
   // the deterministic Lloyd fit is shared by ivf_ann_topk_vec0 and the
-  // recall report — memoized per (session, sfDir) like the dedup chains
-  private val ivfCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), Similarity.IvfIndex]()
+  // recall report through the session's registry (graft.ChainGuard)
   private def lloydIndex(
       s: org.apache.spark.sql.SparkSession, dir: String): Similarity.IvfIndex =
-    ivfCache.getOrElseUpdate((s, dir), Similarity.ivfFitLloyd(
-      Tables(s, dir, "embeddings"), "vec_id", "embedding", nLists = 8,
-      iters = ivfIters))
+    graft.ChainGuard.memo(s, s"ivf_lloyd $dir") {
+      Similarity.ivfFitLloyd(Tables(s, dir, "embeddings"), "vec_id",
+        "embedding", nLists = 8, iters = ivfIters)
+    }
 
   val ivfTopK: GraftQuery = GraftQuery(
     "ivf_ann_topk_vec0",
@@ -593,19 +592,17 @@ object SimQueries extends QueryPack {
   private val kmMinK = 8
   private val kmMaxK = 1 << 20
 
-  // memoized like lloydIndex; delegates to it when the scaled k equals
+  // shared like lloydIndex; delegates to it when the scaled k equals
   // the ANN family's fixed 8 (every small sf), so the sweep pays one fit
-  private val kmCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String), Similarity.IvfIndex]()
   private def scaledKmeansIndex(
       s: org.apache.spark.sql.SparkSession, dir: String): Similarity.IvfIndex =
-    kmCache.getOrElseUpdate((s, dir), {
+    graft.ChainGuard.memo(s, s"km_scaled $dir") {
       val emb = Tables(s, dir, "embeddings")
       val k = Similarity.scaledListCount(emb.count(), kmTarget, kmMinK, kmMaxK)
       if (k == 8) lloydIndex(s, dir)
       else Similarity.ivfFitLloyd(emb, "vec_id", "embedding", nLists = k,
         iters = ivfIters)
-    })
+    }
 
   /** The kmeans-dedup drop chain as CTE fragments over source table
     * `tbl`: the deterministic Lloyd assignment rounds (shared

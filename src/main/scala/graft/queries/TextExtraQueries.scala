@@ -1002,22 +1002,20 @@ object TextExtraQueries extends QueryPack {
     * ~2 s at sf0.01 because every round runs on the Heaps-bounded vocab,
     * never the corpus). EVERY round is hash-checked, not just a prefix:
     * a wrong merge in round k derails rounds k+1..64's counts. Training
-    * is memoized per (session, sfDir) and shared with the curve gate so
-    * the 64 argmax collects are paid once. Lineage is localCheckpoint-
-    * truncated every 16 merges — the deep-loop scaling fix.
+    * is shared with the curve gate through the session's registry
+    * (graft.ChainGuard) so the 64 argmax collects are paid once. Lineage
+    * is localCheckpoint-truncated every 16 merges — the deep-loop scaling
+    * fix.
     */
   private val DeepRounds = 64
   private val DeepCheckpoints = Seq(0, 8, 16, 32, 64)
-  private val deepBpeCache = scala.collection.concurrent.TrieMap[
-    (org.apache.spark.sql.SparkSession, String),
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
   private def deepBpe(s: org.apache.spark.sql.SparkSession, dir: String) =
-    deepBpeCache.getOrElseUpdate((s, dir), {
+    graft.ChainGuard.memo(s, s"bpe_deep $dir") {
       val (m, _, c) = graft.text.Bpe.trainFull(
         s, Tables(s, dir, "documents"), col("text"),
         DeepRounds, DeepCheckpoints)
       (m, c)
-    })
+    }
 
   val bpeDeep: GraftQuery = GraftQuery(
     "bpe_merge_train_deep",

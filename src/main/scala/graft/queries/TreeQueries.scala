@@ -70,14 +70,13 @@ object TreeQueries extends QueryPack {
     TreeParams(maxDepth = 3, minSamplesSplit = 50, minSamplesLeaf = 20)
   private val nBins = 16
 
-  // memoized per (sfDir, binned): the query family shares 2 fits per
-  // scale factor instead of one per query
-  private val modelCache =
-    scala.collection.concurrent.TrieMap[(String, Boolean), graft.tree.TreeModel]()
+  // shared through the session's registry (graft.ChainGuard): the five
+  // queries of the family pay 2 fits per scale factor, not one each
   private def model(s: SparkSession, dir: String, binned: Boolean) =
-    modelCache.getOrElseUpdate((dir, binned), DecisionTree.fit(
-      labeled(s, dir), feats, "label",
-      if (binned) params.copy(maxBins = Some(nBins)) else params))
+    graft.ChainGuard.memo(s, s"tree_model $dir binned=$binned") {
+      DecisionTree.fit(labeled(s, dir), feats, "label",
+        if (binned) params.copy(maxBins = Some(nBins)) else params)
+    }
 
   // ---------------------------------------------------------------------
   // DuckDB replay of the depth-3 level-wise trainer.

@@ -8,10 +8,6 @@ trait SparkTestSession {
 }
 
 object SparkTestSession {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession =
+    SparkEntry.session(cores = 4, shufflePartitions = Some(4))
 }
