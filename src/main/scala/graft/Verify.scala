@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json for the DuckDB compare and status.json, one
+  * `query: "ok" | exception class` entry per query run. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -10,23 +11,6 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump (dev iteration aid)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        // cold, like a Bench rep: no query reads what another left in
-        // the shared-intermediate registry
-        ChainGuard.clear(spark)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          e.printStackTrace()
-        }
-        // release per-query persists (e.g. rfm_segments' base frame) so
-        // they don't stay pinned for the rest of the run — mirrors
-        // Bench's post-query clearCache
-        spark.catalog.clearCache()
-      }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -39,9 +23,34 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    val status = Seq.newBuilder[String] // "query": "ok" | exception class
+    SparkEntry.queries
+      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .foreach { case (name, fn) =>
+        // cold, like a Bench rep: no query reads what another left in
+        // the shared-intermediate registry
+        ChainGuard.clear(spark)
+        val outcome =
+          try {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+            "ok"
+          } catch { case e: Throwable =>
+            System.err.println(s"[verify] $name failed: ${e.getMessage}")
+            e.printStackTrace()
+            e.getClass.getName
+          }
+        status += s"${q(name)}: ${q(outcome)}"
+        // release per-query persists (e.g. rfm_segments' base frame) so
+        // they don't stay pinned for the rest of the run — mirrors
+        // Bench's post-query clearCache
+        spark.catalog.clearCache()
+      }
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/status.json"),
+      status.result().mkString("{", ",", "}"))
     spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft.dedup
 
 import graft.Q
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -361,69 +363,62 @@ object Dedup {
   }
 
   /** Connected components over an undirected edge list `(id_a, id_b)` by
-    * iterative min-label propagation: every vertex's label converges to
-    * the smallest vertex id in its component — the canonical "keep this
-    * doc, drop the rest" cluster id that turns near-dup PAIRS into dedup
-    * DECISIONS.
+    * min-label propagation: every vertex's label converges to the smallest
+    * vertex id in its component — the canonical "keep this doc, drop the
+    * rest" cluster id that turns near-dup PAIRS into dedup DECISIONS. An
+    * edge with a null endpoint is dropped: a null id is not a vertex.
     *
-    * Each iteration is one equi-join + one min-aggregation on vertex id
-    * (plain shuffles AQE can size), and lineage is truncated with an
-    * eager localCheckpoint so plan depth stays O(1) across iterations.
-    * Converges in O(component diameter) passes — near-dup graphs are
-    * shallow (LSH clusters are quasi-cliques), so this beats the
-    * constant-factor-heavier large-star/small-star on the graphs this
-    * engine feeds it; the join+min primitives are the same if a
-    * deep-graph variant is ever needed.
+    * The symmetrised adjacency is built once, hash-partitioned on the
+    * vertex over `spark.sql.shuffle.partitions` and checkpointed; labels
+    * live in an RDD co-partitioned with it. Each round is ONE Spark job:
+    * only vertices whose label changed in the previous round (all of them
+    * in round 1) send it to their neighbours — exact for min-propagation,
+    * since an unchanged label has already been seen — the messages are
+    * combined by one `reduceByKey(min)`, merged into the labels by a
+    * narrow `zipPartitions`, and the checkpointed round's action counts
+    * the changed vertices. Runs to the fixpoint: at most diameter + 1
+    * rounds. The sf0.01 LSH verified-pair graph (378 vertices, 3,351
+    * edges) takes 7 rounds, the bucket-star graph (380 vertices, 559
+    * edges) 10.
     */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 40): DataFrame = {
-    // Materialize the (possibly expensive) upstream edge pipeline ONCE —
-    // an eager localCheckpoint truncates lineage so every iteration reads
-    // stored blocks instead of re-deriving (or first-action-priming) it.
-    val sym = edges
-      .select(col("id_a").cast("long").as("src"),
-        col("id_b").cast("long").as("dst"))
-      .unionByName(edges.select(
-        col("id_b").cast("long").as("src"),
-        col("id_a").cast("long").as("dst")))
-      .distinct().localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
+  def connectedComponents(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    val parts = new HashPartitioner(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val adj = edges
+      .select(col("id_a").cast("long"), col("id_b").cast("long")).na.drop()
+      .queryExecution.toRdd
+      .flatMap { r =>
+        val (a, b) = (r.getLong(0), r.getLong(1))
+        Iterator(a -> b, b -> a)
+      }
+      .groupByKey(parts).mapValues(_.toArray.distinct)
       .localCheckpoint()
+    // (vertex, (label, changed last round)), in adj's stored order
+    var labels: RDD[(Long, (Long, Boolean))] = adj.mapPartitions(
+      _.map { case (v, _) => (v, (v, true)) }, preservesPartitioning = true)
     var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      val nbrMin = sym
-        .join(labels.select(col("id").as("src"), col("comp")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min("comp").as("nbr"))
-      // NOTE: Dataset.observe would fold this count into the checkpoint
-      // job, but initializing the session's ObservationManager (a lazy,
-      // non-serializable field) poisons later task closures that capture
-      // the session via MLlib trainingSummary objects — so the
-      // convergence count is a second, cheap agg over the CHECKPOINTED
-      // labels (vertex-count rows, no joins) instead.
-      val next = labels
-        .join(nbrMin, Seq("id"), "left")
-        .select(
-          col("id"),
-          least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
-          (coalesce(col("nbr"), col("comp")) < col("comp"))
-            .cast("long").as("__chg"))
-        .localCheckpoint() // eager: materialized before the old gen is freed
-      // Convergence agg only every 2nd iteration (and at the cap): LSH
-      // near-dup graphs are quasi-cliques that converge in 2-3 passes, so
-      // checking every pass spends an extra action per iteration for a
-      // signal that rarely fires early; the worst case is ONE redundant
-      // (idempotent) propagation pass after the fixpoint.
-      changed =
-        if (i % 2 == 1)
-          next.agg(coalesce(sum("__chg"), lit(0L))).head().getLong(0)
-        else 1L
-      labels.unpersist() // superseded checkpoint blocks — don't pin memory
-      labels = next.drop("__chg")
-      i += 1
+    while (changed > 0) {
+      val msgs = adj.zipPartitions(labels) { (a, l) =>
+        a.zip(l).flatMap { case ((_, nbrs), (_, (lbl, chg))) =>
+          if (chg) nbrs.iterator.map(_ -> lbl) else Iterator.empty
+        }
+      }.reduceByKey(parts, math.min(_, _))
+      val next = labels.zipPartitions(msgs, preservesPartitioning = true) {
+        (l, m) =>
+          val best = m.toMap
+          l.map { case (v, (lbl, _)) =>
+            val nbr = best.getOrElse(v, lbl)
+            (v, if (nbr < lbl) (nbr, true) else (lbl, false))
+          }
+      }.localCheckpoint()
+      changed = next.filter(_._2._2).count() // the round's one job
+      labels.unpersist() // superseded round — don't pin its blocks
+      labels = next
     }
-    sym.unpersist()
-    labels
+    adj.unpersist()
+    spark.createDataFrame(labels.map { case (v, (c, _)) => (v, c) })
+      .toDF("id", "comp")
   }
 
   /** STREAMING exact dedup: the same keep-first-arrival semantics as

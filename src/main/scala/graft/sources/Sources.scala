@@ -75,12 +75,13 @@ object Sources {
     * applicationId so concurrent runs against the same data dir (e.g.
     * bench and verify overlapping in tmux) never clobber each other's
     * shards mid-read, and deleted recursively on JVM exit so a
-    * Bench+Verify cycle leaves no `/tmp/graft_*_roundtrip` residue.
+    * Bench+Verify cycle leaves no `graft_*_roundtrip` residue. Rooted
+    * under `java.io.tmpdir`, so no query writes outside a configured dir.
     * (mode=overwrite already handles delete-on-rerun within a JVM.)
     */
   def scratchDir(spark: SparkSession, kind: String, dataDir: String): String = {
-    val root =
-      s"/tmp/graft_${kind}_roundtrip/${spark.sparkContext.applicationId}"
+    val root = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_${kind}_roundtrip", spark.sparkContext.applicationId).toString
     cleanupHook
     scratchRoots.add(root): Unit
     s"$root/${dataDir.replaceAll("[^A-Za-z0-9]+", "_")}"

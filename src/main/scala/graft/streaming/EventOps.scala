@@ -224,11 +224,11 @@ object EventOps {
   def streamingClickErrorPairsOrderedResult(
       spark: SparkSession, sfDir: String, gapUs: Long): DataFrame = {
     import org.apache.hadoop.fs.Path
-    // app-id-salted scratch (the roundtrip-sink convention) so concurrent
-    // runs against the same data dir never collide
+    // app-id-salted scratch under java.io.tmpdir (the roundtrip-sink
+    // convention) so concurrent runs against the same data dir never collide
     val scratch = new Path(
-      s"/tmp/graft_ordered_events/${spark.sparkContext.applicationId}/" +
-        new Path(sfDir).getName)
+      s"${System.getProperty("java.io.tmpdir")}/graft_ordered_events/" +
+        s"${spark.sparkContext.applicationId}/${new Path(sfDir).getName}")
     val k = 8
     events(spark, sfDir)
       .drop("ts_us", "event_ts")

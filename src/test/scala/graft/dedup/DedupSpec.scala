@@ -1,6 +1,8 @@
 package graft.dedup
 
 import graft.SparkTestSession
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -51,6 +53,54 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(comp.keySet == (1L to 10L).toSet && comp.values.forall(_ == 1L))
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.connectedComponents(empty).count() == 0)
+  }
+
+  test("connected components: a 60-vertex path runs to its fixpoint") {
+    // 60 rounds: more than any fixed round cap of 40 would allow
+    val path = (1L to 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val comp = Dedup.connectedComponents(path).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp.keySet == (1L to 60L).toSet && comp.values.forall(_ == 1L))
+  }
+
+  test("connected components: an edge with a null endpoint is dropped") {
+    // 3 appears only beside a null: not a vertex of the graph
+    val edges = Seq[(Option[Long], Option[Long])](
+      (Some(2L), Some(1L)), (Some(3L), None), (None, None), (None, Some(2L)))
+      .toDF("id_a", "id_b")
+    val comp = Dedup.connectedComponents(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(comp == Map(1L -> 1L, 2L -> 1L))
+  }
+
+  test("connected components: each propagation round is one Spark job") {
+    val sc = spark.sparkContext
+    // counts only this thread's jobs (its job group), not those of any
+    // stream another suite left running
+    def jobsForPath(n: Long): Int = {
+      val group = s"cc-job-guard-$n"
+      var jobs = 0
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null &&
+              e.properties.getProperty("spark.jobGroup.id") == group)
+            synchronized { jobs += 1 }
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "DedupSpec job guard")
+      try {
+        Dedup.connectedComponents(
+          (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+        ListenerBusDrain(sc)
+        listener.synchronized(jobs)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+    // a path 1-2-...-n takes n rounds: n - 1 carry label 1 to vertex n,
+    // one more sees no change
+    assert(jobsForPath(8) - jobsForPath(4) == 8 - 4)
   }
 
   test("star bucket edges span the same components as the full bucket-pair graph") {
