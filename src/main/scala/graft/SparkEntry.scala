@@ -55,10 +55,34 @@ object SparkEntry {
         .toAbsolutePath.toString)
     SparkSession.builder()
       .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", partitions.toLong)
+      .config(ShufflePartitions, partitions.toLong)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", warehouse)
       .getOrCreate()
   }
+
+  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  private val confLocks = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, AnyRef]())
+
+  /** The session's `spark.sql.shuffle.partitions`. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get(ShufflePartitions).toInt
+
+  /** The one way to scope a conf change: runs `body` with
+    * `spark.sql.shuffle.partitions` set to `n` on `spark`, then restores
+    * the value it replaced. Scopes on one session take turns on that
+    * session's lock; without it two overlapping scopes can restore out of
+    * order (A saves 4 and sets 8, B saves 8 and sets 1, A restores 4, B
+    * restores 8) and leave the session pinned. A body must not wait on
+    * another thread that enters a scope on the same session.
+    */
+  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+    confLocks.computeIfAbsent(spark, _ => new Object).synchronized {
+      val prev = spark.conf.get(ShufflePartitions)
+      spark.conf.set(ShufflePartitions, n.toString)
+      try body
+      finally spark.conf.set(ShufflePartitions, prev)
+    }
 }

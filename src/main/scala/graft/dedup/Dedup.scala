@@ -6,7 +6,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines: exact (hash
   * groupBy), character-shingle Jaccard, MinHash+LSH, SimHash.
@@ -384,7 +383,7 @@ object Dedup {
   def connectedComponents(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     val parts = new HashPartitioner(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      graft.SparkEntry.shufflePartitions(spark))
     val adj = edges
       .select(col("id_a").cast("long"), col("id_b").cast("long")).na.drop()
       .queryExecution.toRdd
@@ -431,25 +430,11 @@ object Dedup {
     */
   def streamingDistinctCounts(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_dedup"
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val docs = graft.sources.StreamRead.table(spark, sfDir, "documents", schema)
-    // state partitions sized to the stream's data, not core count (r17;
-    // see Streams) — dedup keeps one fp per distinct doc, well under the
-    // source bytes the sizing is derived from
-    val sq = graft.streaming.Streams
-      .withStatePartitions(spark, s"$sfDir/documents.parquet") {
-        docs
-          .select(col("lang"), md5(col("text").cast("binary")).as("fp"))
-          .dropDuplicates("lang", "fp")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-      }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name)
+    val firsts = graft.sources.StreamRead.table(spark, sfDir, "documents")
+      .select(col("lang"), md5(col("text").cast("binary")).as("fp"))
+      .dropDuplicates("lang", "fp")
+    graft.streaming.Streams
+      .drain(firsts, "append", s"$sfDir/documents.parquet")
       .groupBy("lang").agg(count(lit(1)).as("n_distinct"))
       .orderBy("lang")
   }
@@ -464,19 +449,13 @@ object Dedup {
     */
   def streamingDistinctUsersWithinWatermark(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_dedup_wm"
-    val sq = graft.streaming.Streams
-      .withStatePartitions(spark, s"$sfDir/events.parquet") {
-        graft.streaming.EventOps.streamingEvents(spark, sfDir)
-          .select(col("event_type"), col("user_id"),
-            expr("timestamp_micros(ts div 1000)").as("ts_event"))
-          .withWatermark("ts_event", "1 hour")
-          .dropDuplicatesWithinWatermark("event_type", "user_id")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").start()
-      }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name)
+    val firsts = graft.streaming.EventOps.streamingEvents(spark, sfDir)
+      .select(col("event_type"), col("user_id"),
+        expr("timestamp_micros(ts div 1000)").as("ts_event"))
+      .withWatermark("ts_event", "1 hour")
+      .dropDuplicatesWithinWatermark("event_type", "user_id")
+    graft.streaming.Streams
+      .drain(firsts, "append", s"$sfDir/events.parquet")
       .groupBy("event_type").agg(count(lit(1)).as("n_users"))
       .orderBy("event_type")
   }

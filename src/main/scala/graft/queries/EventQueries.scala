@@ -824,7 +824,7 @@ object EventQueries extends QueryPack {
       val regs = graft.sketch.Hll.streamingRegisters(
         EventOps.streamingEvents(s, dir)
           .select(col("user_id").cast("string").as("u")),
-        col("u"), "graft_hll_users_stream", s"$dir/events.parquet")
+        col("u"), s"$dir/events.parquet")
       val est = graft.sketch.Hll.estimate(regs, Seq.empty)
       val exact = EventOps.events(s, dir)
         .agg(countDistinct("user_id").as("exact_users"))

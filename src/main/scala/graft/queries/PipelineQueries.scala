@@ -33,18 +33,15 @@ object PipelineQueries extends QueryPack {
       // cv_random_search's coalesce(8)): measured 20.6 -> ~14 s on the
       // r14 box. Values are partition-independent (hash split, exact
       // quantiles, deterministic tree), so the gate output is unchanged.
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val (r, hist) =
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          val res = HousePipeline.run(train, test,
-            HousePipeline.Config(tree = graft.tree.TreeParams(
-              maxDepth = 4, minSamplesSplit = 20, minSamplesLeaf = 10,
-              criterion = "entropy")))
-          val h = res.submission.groupBy("label").agg(count(lit(1)).as("n"))
-            .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-          (res, h)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val (r, hist) = graft.SparkEntry.withShufflePartitions(s, 8) {
+        val res = HousePipeline.run(train, test,
+          HousePipeline.Config(tree = graft.tree.TreeParams(
+            maxDepth = 4, minSamplesSplit = 20, minSamplesLeaf = 10,
+            criterion = "entropy")))
+        val h = res.submission.groupBy("label").agg(count(lit(1)).as("n"))
+          .collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+        (res, h)
+      }
       Seq((
         Q.r6Double(r.valAccuracy), Q.r6Double(r.valMacroF1),
         hist.getOrElse(0L, 0L), hist.getOrElse(1L, 0L),
@@ -75,13 +72,10 @@ object PipelineQueries extends QueryPack {
       // for a few KB. Values are partition-independent (hash split,
       // seeded fits), so the report is unchanged; only scheduling load
       // drops. The house gate measured 20.6 -> 7.3 s from this pin.
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val r =
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", "8")
-          Sol2Pipeline.run(train, Sol2Pipeline.Config(
-            cvFolds = 2, rfNumTrees = 3, gbtMaxIter = 3))
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      val r = graft.SparkEntry.withShufflePartitions(s, 8) {
+        Sol2Pipeline.run(train, Sol2Pipeline.Config(
+          cvFolds = 2, rfNumTrees = 3, gbtMaxIter = 3))
+      }
       r.report.select(
         col("model"), Q.r6(col("accuracy")).as("accuracy"),
         Q.r6(col("macro_f1")).as("macro_f1"))

@@ -70,8 +70,8 @@ object TextExtraQueries extends QueryPack {
   val cmsStream: GraftQuery = GraftQuery(
     "cms_heavy_hitters_stream",
     (s, dir) => {
-      val cells = graft.sketch.CountMin.streamingCells(
-        s, dir, d = cmsD, w = cmsW, queryName = "graft_cms_stream")
+      val cells =
+        graft.sketch.CountMin.streamingCells(s, dir, d = cmsD, w = cmsW)
       val toks = Tables(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("tok"))
       graft.sketch.CountMin.estimates(toks, "tok", cells, d = cmsD, w = cmsW)

@@ -402,13 +402,6 @@ object TransformQueries extends QueryPack {
     "latest_status_stream",
     (s, dir) => {
       import org.apache.spark.sql.types._
-      val schema = StructType(Seq(
-        StructField("o_orderkey", LongType), StructField("o_custkey", LongType),
-        StructField("o_orderstatus", StringType),
-        StructField("o_totalprice", DoubleType),
-        StructField("o_orderdate", TimestampType), // timestamp[ms] parquet
-        StructField("o_orderpriority", StringType)))
-      val name = "graft_latest_status_stream"
       // The result is KEY-CARDINALITY sized (one row per customer —
       // 15M at sf100, billions at 100 TB), so a complete-mode memory
       // sink is the wrong shape: it re-collects the whole aggregate to
@@ -420,22 +413,20 @@ object TransformQueries extends QueryPack {
       // store would contain. Trigger-invariant by construction (the
       // last complete snapshot is the full aggregate either way).
       val out = graft.sources.Sources.scratchDir(s, "lateststatus", dir)
-      // state partitions sized to the stream's data, not core count
-      // (r17; see Streams) — the complete-mode snapshot is a per-key
-      // max, partition-count independent
+      // state sized to the source like every drained stream (see Streams)
       val sq = graft.streaming.Streams
         .withStatePartitions(s, s"$dir/orders.parquet") {
-          graft.sources.StreamRead.table(s, dir, "orders", schema)
+          graft.sources.StreamRead.table(s, dir, "orders")
             .groupBy(col("o_custkey").as("custkey"))
             .agg(max(struct(col("o_orderdate"), col("o_orderkey"),
               col("o_orderstatus"))).as("m"))
-            .writeStream.queryName(name).outputMode("complete")
+            .writeStream.outputMode("complete")
             .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
               df.write.mode("overwrite").parquet(out)
             }
             .start()
         }
-      try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
+      try sq.processAllAvailable() finally sq.stop()
       // Zero micro-batches (empty/missing source) never invokes
       // foreachBatch, so the snapshot dir may not exist — return the
       // empty aggregate with the query's schema instead of letting the

@@ -94,27 +94,14 @@ object CountMin {
     */
   def streamingCells(
       spark: org.apache.spark.sql.SparkSession, sfDir: String, d: Int,
-      w: Int, queryName: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val docs = graft.sources.StreamRead.table(spark, sfDir, "documents", schema)
-    val cellStream = docs
+      w: Int): DataFrame = {
+    val cellStream = graft.sources.StreamRead.table(spark, sfDir, "documents")
       .select(explode(split(col("text"), " ")).as("item"))
       .select(col("item"), explode(sequence(lit(0), lit(d - 1))).as("r"))
       .select(col("r"), bucket(col("item"), col("r"), w).as("bucket"))
       .groupBy("r", "bucket").agg(count(lit(1)).as("cnt"))
-    // state partitions sized to the stream's data, not core count (r17;
-    // see Streams): the cell grid is d·w rows of state however many
-    // events arrive
-    val sq = graft.streaming.Streams
-      .withStatePartitions(spark, s"$sfDir/documents.parquet") {
-        cellStream.writeStream.format("memory").queryName(queryName)
-          .outputMode("complete").start()
-      }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(queryName)
+    // the cell grid is d·w rows of state however many events arrive
+    graft.streaming.Streams
+      .drain(cellStream, "complete", s"$sfDir/documents.parquet")
   }
 }

@@ -81,27 +81,18 @@ object Hll {
     * reg, rho) ready for `estimate`.
     */
   def streamingRegisters(
-      stream: DataFrame, value: Column, queryName: String,
-      sourcePath: String): DataFrame = {
-    val spark = stream.sparkSession
+      stream: DataFrame, value: Column, sourcePath: String): DataFrame = {
     val h = conv(substring(md5(value), 1, 15), 16, 10).cast("long")
-    // state partitions sized to the stream's data, not core count (r17;
-    // see Streams): register state is ≤ M rows for any event volume
-    val sq = graft.streaming.Streams.withStatePartitions(spark, sourcePath) {
-      stream
-        .select(h.as("__h"))
-        .select(
-          (col("__h") % M).cast("int").as("reg"),
-          when(shiftrightunsigned(col("__h"), 8) === 0L, lit(MaxRho))
-            .otherwise(lit(MaxRho) -
-              length(bin(shiftrightunsigned(col("__h"), 8)))).cast("int")
-            .as("rho0"))
-        .groupBy("reg").agg(max("rho0").as("rho"))
-        .writeStream.format("memory").queryName(queryName)
-        .outputMode("complete").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(queryName)
+    val registers = stream
+      .select(h.as("__h"))
+      .select(
+        (col("__h") % M).cast("int").as("reg"),
+        when(shiftrightunsigned(col("__h"), 8) === 0L, lit(MaxRho))
+          .otherwise(lit(MaxRho) -
+            length(bin(shiftrightunsigned(col("__h"), 8)))).cast("int")
+          .as("rho0"))
+      .groupBy("reg").agg(max("rho0").as("rho"))
+    graft.streaming.Streams.drain(registers, "complete", sourcePath)
   }
 
   /** The same estimate as a SQL expression over an aggregated

@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 
 /** Streaming file-source read of `sfDir/<table>.parquet` that handles
   * BOTH table layouts in play: the driver's single parquet FILE directly
@@ -18,39 +17,17 @@ object StreamRead {
     * for hdfs:// and object-store URIs too (a java.io.File check is
     * always false there and would silently route a directory-shaped
     * table into the empty-matching glob branch). A source that resolves
-    * to nothing fails fast instead of streaming an empty table.
+    * to nothing fails fast instead of streaming an empty table. The
+    * stream's schema is the table's own footer schema.
     */
-  def table(
-      spark: SparkSession, sfDir: String, name: String,
-      schema: StructType): DataFrame = {
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val base = s"$sfDir/$name.parquet"
     val path = new Path(base)
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     require(fs.exists(path),
       s"stream source $base matches nothing — refusing to stream an " +
         "empty table")
-    // SPARK_GRAFT_STREAM_MAX_FILES=N rate-limits ingestion to N files
-    // per micro-batch (a measurement knob, like SPARK_GRAFT_STREAM
-    // _METRICS): processAllAvailable over a finite table otherwise
-    // ingests EVERYTHING as one micro-batch, which makes a watermarked
-    // join/aggregate hold its worst-case state — the bounded-trigger
-    // run is how the watermark's steady-state bound is demonstrated
-    // rather than argued. Trigger-invariance caveat: non-watermarked
-    // operators (the CMS cell grid, append-only projections) produce
-    // the same result under any trigger split, but WATERMARKED ones
-    // (the sliding/hourly aggregates, the click-error interval join,
-    // dropDuplicatesWithinWatermark) advance the watermark BETWEEN
-    // micro-batches — an event arriving more than the configured delay
-    // behind the watermark in a later batch is dropped or re-emitted,
-    // so bounded-trigger results can diverge from the single-batch
-    // oracle when real lateness exceeds the delay (watermark_lateness
-    // shows that is a live possibility in this corpus). Knob-on runs
-    // of watermarked streams must therefore re-verify oracle equality
-    // once per corpus before quoting knob-on numbers (the r11/r12
-    // sf100 runbooks do exactly that).
-    val rd0 = spark.readStream.schema(schema)
-    val rd = sys.env.get("SPARK_GRAFT_STREAM_MAX_FILES")
-      .fold(rd0)(n => rd0.option("maxFilesPerTrigger", n.toInt))
+    val rd = spark.readStream.schema(spark.read.parquet(base).schema)
     if (fs.getFileStatus(path).isDirectory)
       rd.parquet(base)
     else

@@ -160,19 +160,16 @@ object EventOps {
     * by the identical DuckDB oracle as the batch form.
     */
   def streamingClickErrorPairs(
-      spark: SparkSession, sfDir: String, gapUs: Long): DataFrame = {
-    val ev = streamingEvents(spark, sfDir)
-    clickErrorPairsStreamJoin(spark, ev, gapUs, "graft_stream_pairs",
-      s"$sfDir/events.parquet")
-  }
+      spark: SparkSession, sfDir: String, gapUs: Long): DataFrame =
+    clickErrorPairsStreamJoin(
+      streamingEvents(spark, sfDir), gapUs, s"$sfDir/events.parquet")
 
   /** Shared stream-stream interval-join tail: watermarked click/error
     * split, range join, append memory sink, batch-side per-user count.
     * `ev` must carry `ts` (int64 nanos), `user_id`, `event_type`.
     */
   private def clickErrorPairsStreamJoin(
-      spark: SparkSession, ev: DataFrame, gapUs: Long,
-      name: String, sourcePath: String): DataFrame = {
+      ev: DataFrame, gapUs: Long, sourcePath: String): DataFrame = {
     val tsd = ev.withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
     val clicks = tsd.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("event_ts").as("click_ts"))
@@ -185,20 +182,7 @@ object EventOps {
       expr(s"""c_user = e_user
         AND click_ts >= err_ts - INTERVAL ${gapUs / 1000000L} SECONDS
         AND click_ts <= err_ts"""))
-    // A stream-stream join materializes FOUR state stores per shuffle
-    // partition (left/right x keyWithIndex/keyToNumValues); their fixed
-    // open/commit cost dominates small-to-medium micro-batches. Size the
-    // join's state partitioning to the stream's DATA, not the batch
-    // default or a constant — the partition count is fixed per query at
-    // first start anyway, so a real deployment chooses it exactly once,
-    // here (r17: the r16 driver measured this query 35.2 s at 32 cores
-    // vs 7.4 s at 8 under the old constant-8 pin; see Streams).
-    val sq = Streams.withStatePartitions(spark, sourcePath) {
-      joined.writeStream.format("memory").queryName(name)
-        .outputMode("append").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name)
+    Streams.drain(joined, "append", sourcePath)
       .groupBy(col("e_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
@@ -252,9 +236,7 @@ object EventOps {
       val stream = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(scratch.toString)
-      clickErrorPairsStreamJoin(
-        spark, stream, gapUs, "graft_stream_pairs_ordered",
-        scratch.toString)
+      clickErrorPairsStreamJoin(stream, gapUs, scratch.toString)
     } finally fs.delete(scratch, true) // memory sink holds the result
   }
 
@@ -328,20 +310,10 @@ object EventOps {
     * hash-checks the Structured Streaming path against the exact same
     * DuckDB oracle as the batch `hourly`.
     */
-  def streamingHourlyResult(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_hourly"
-    // state partitions sized to the stream's data, not the core count
-    // (r17, guide §2.2; see Streams) — all six event-stream gates below
-    // get the same treatment, their outputs are per-key aggregates and
-    // partition-count independent
-    val sq = Streams.withStatePartitions(spark, s"$sfDir/events.parquet") {
-      streamingHourly(spark, sfDir)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name).orderBy("hour", "event_type")
-  }
+  def streamingHourlyResult(spark: SparkSession, sfDir: String): DataFrame =
+    Streams.drain(streamingHourly(spark, sfDir), "complete",
+        s"$sfDir/events.parquet")
+      .orderBy("hour", "event_type")
 
   /** Stateful streaming sessionization run to completion: the
     * `flatMapGroupsWithState` operator over a streaming read of the same
@@ -352,34 +324,25 @@ object EventOps {
   def streamingSessionizeResult(
       spark: SparkSession, sfDir: String, gapUs: Long): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_sessions"
     val evs = streamingEvents(spark, sfDir)
       .select(col("user_id"), expr("ts div 1000").as("ts_us"), col("event_id"))
       .as[UserEvent]
-    val sq = Streams.withStatePartitions(spark, s"$sfDir/events.parquet") {
-      statefulSessionCounts(evs, gapUs)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name).groupBy("user_id")
+    Streams.drain(statefulSessionCounts(evs, gapUs).toDF(), "update",
+        s"$sfDir/events.parquet")
+      .groupBy("user_id")
       .agg(max("n_events").as("n_events"), max("n_sessions").as("n_sessions"))
       .orderBy("user_id")
   }
 
-  /** Streaming read of the events parquet (explicit schema — required by
-    * readStream — taken from a batch read of the same file). `ts` is
-    * normalized to int64 nanos under both physical layouts, exactly as in
-    * [[events]], so downstream `ts div 1000` micros math is layout-proof.
+  /** Streaming read of the events parquet (layout-aware, schema from the
+    * table's footer; see StreamRead). `ts` is normalized to int64 nanos
+    * under both physical layouts, exactly as in [[events]], so downstream
+    * `ts div 1000` micros math is layout-proof.
     */
   def streamingEvents(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val fileSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    // Layout-aware read — the glob form against a directory-shaped
-    // events table silently streams an EMPTY source (see StreamRead).
-    val stream =
-      graft.sources.StreamRead.table(spark, sfDir, "events", fileSchema)
-    fileSchema("ts").dataType match {
+    val stream = graft.sources.StreamRead.table(spark, sfDir, "events")
+    stream.schema("ts").dataType match {
       case LongType => stream
       case _ => stream.withColumn(
         "ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
@@ -392,19 +355,14 @@ object EventOps {
     * complete mode — the dimension-lookup pattern for event pipelines.
     */
   def streamingEnrichedResult(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_enriched"
     val dim = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
-    val sq = Streams.withStatePartitions(spark, s"$sfDir/events.parquet") {
-      streamingEvents(spark, sfDir)
-        .join(dim, col("c_custkey") === col("user_id"))
-        .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n"), sum(Q.cents("value")).as("sum_value_cents"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name).orderBy("c_mktsegment")
+    val enriched = streamingEvents(spark, sfDir)
+      .join(dim, col("c_custkey") === col("user_id"))
+      .groupBy("c_mktsegment")
+      .agg(count(lit(1)).as("n"), sum(Q.cents("value")).as("sum_value_cents"))
+    Streams.drain(enriched, "complete", s"$sfDir/events.parquet")
+      .orderBy("c_mktsegment")
   }
 
   /** The 2h/1h sliding-window aggregation as a Structured Streaming
@@ -427,16 +385,10 @@ object EventOps {
   /** [[streamingSliding]] run to completion on a memory sink — final
     * table equals the batch [[sliding]] output, hence shares its oracle.
     */
-  def streamingSlidingResult(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_sliding"
-    val sq = Streams.withStatePartitions(spark, s"$sfDir/events.parquet") {
-      streamingSliding(spark, sfDir)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name).orderBy("win_start", "event_type")
-  }
+  def streamingSlidingResult(spark: SparkSession, sfDir: String): DataFrame =
+    Streams.drain(streamingSliding(spark, sfDir), "complete",
+        s"$sfDir/events.parquet")
+      .orderBy("win_start", "event_type")
 
   /** The hourly aggregation as a Structured Streaming query over the same
     * parquet (watermark + tumbling window). Returns the streaming DF; the
@@ -459,17 +411,11 @@ object EventOps {
     * streaming-exact-distinct pattern; complete-mode memory sink.
     */
   def streamingDauResult(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_dau"
-    val evs = streamingEvents(spark, sfDir)
+    val dau = streamingEvents(spark, sfDir)
       .selectExpr("user_id", "(ts div 1000) div 86400000000 AS day")
-    val sq = Streams.withStatePartitions(spark, s"$sfDir/events.parquet") {
-      evs.dropDuplicates("user_id", "day")
-        .groupBy("day").agg(count(lit(1)).as("dau"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name).orderBy("day")
+      .dropDuplicates("user_id", "day")
+      .groupBy("day").agg(count(lit(1)).as("dau"))
+    Streams.drain(dau, "complete", s"$sfDir/events.parquet").orderBy("day")
   }
 
   /** Per-user trailing time-series features over the ordered event
@@ -546,19 +492,14 @@ object EventOps {
       spark: SparkSession, sfDir: String,
       st1: String, st2: String, st3: String): DataFrame = {
     import spark.implicits._
-    val name = "graft_stream_funnel"
     val evs = streamingEvents(spark, sfDir)
       .select(col("user_id"), expr("ts div 1000").as("ts_us"),
         col("event_id"), col("event_type"))
       .as[FunnelEvent]
-    val sq = Streams.withStatePartitions(spark, s"$sfDir/events.parquet") {
-      statefulFunnel(evs, st1, st2, st3)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update").start()
-    }
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
     val unset = Long.MaxValue
-    spark.table(name).groupBy("user_id")
+    Streams.drain(statefulFunnel(evs, st1, st2, st3).toDF(), "update",
+        s"$sfDir/events.parquet")
+      .groupBy("user_id")
       .agg(min("s1").as("s1"), min("s2").as("s2"), min("s3").as("s3"))
       .agg(
         sum(when(col("s1") =!= unset, 1L).otherwise(0L)).as("n_stage1"),

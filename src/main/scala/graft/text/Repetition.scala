@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Gopher-style repetition signals (Rae et al. 2021 §A1.1: "repetitious
   * documents are low quality") for pre-training corpus filtering: the
@@ -79,29 +78,22 @@ object Repetition {
   /** STREAMING repetition scoring: because [[scoreColumns]] is a pure
     * projection, the quality filter runs stateless in append mode — no
     * watermark, no state store, per-row cost only. Drains to a memory
-    * sink for the gate; a production job would writeStream straight to
-    * the filtered sink.
+    * sink for the gate; a production job would stream straight to the
+    * filtered sink.
     */
   def streamingScores(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "graft_stream_repetition"
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType),
-      StructField("n_chars", LongType)))
-    val docs = graft.sources.StreamRead.table(spark, sfDir, "documents", schema)
+    val docs = graft.sources.StreamRead.table(spark, sfDir, "documents")
     // The file source parallelizes at FILE granularity, so a single-file
     // batch scores every document in one task while the sort+fold
     // projection is the expensive part. Rebalance the micro-batch across
     // cores first: rows are tiny next to the per-row compute, and with a
     // many-file source at scale this degrades to a cheap rebalance of
     // already-parallel splits.
-    val sq = docs
+    val scored = docs
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id") +: scoreColumns(col("text")): _*)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try { sq.processAllAvailable(); graft.streaming.StreamMetrics.dump(sq) } finally sq.stop()
-    spark.table(name)
+    graft.streaming.Streams
+      .drain(scored, "append", s"$sfDir/documents.parquet")
   }
 
   /** Per-document repetition scores: word count, mean word length,

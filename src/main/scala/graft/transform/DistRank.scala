@@ -59,7 +59,7 @@ object DistRank {
       buckets: Int = 0): DataFrame = {
     val spark = df.sparkSession
     val b = (if (buckets > 0) buckets
-             else spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+             else graft.SparkEntry.shufflePartitions(spark))
       .max(2)
     val keyed = df.withColumn("__dr_k", bucketKey.cast("double"))
     // Edge wobble is harmless (see scaladoc): dedupe + sort and let skewed

@@ -276,7 +276,7 @@ object DecisionTree {
       cls => { val c = new Array[Long](k); c(cls) = 1L; c },
       (c, cls) => { c(cls) += 1L; c },
       (a, b) => { var i = 0; while (i < k) { a(i) += b(i); i += 1 }; a })
-    val parts = rows.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val parts = graft.SparkEntry.shufflePartitions(rows.sparkSession)
     new ShuffledRDD[Cell, Int, Array[Long]](melted, new GroupPartitioner(parts))
       .setAggregator(counts)
       .setMapSideCombine(true)

@@ -68,7 +68,7 @@ class CountMinSpec extends AnyFunSuite with SparkTestSession {
     // on the identical tokenization.
     val sfDir = "/root/testdata/sf0.001"
     val streamed = CountMin
-      .streamingCells(spark, sfDir, d, w, "cms_spec_cells")
+      .streamingCells(spark, sfDir, d, w)
       .collect().map(r => (r.getInt(0), r.getLong(1)) -> r.getLong(2))
       .toMap
     val batch = CountMin.cells(

@@ -1,7 +1,6 @@
 package graft.sources
 
 import graft.SparkTestSession
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the layout-awareness of the streaming file read. The failure
@@ -13,23 +12,15 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class StreamReadSpec extends AnyFunSuite with SparkTestSession {
 
-  private val schema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  private def countStreamed(sfDir: String, name: String): Long = {
-    val q = StreamRead.table(spark, sfDir, "documents", schema)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name).count()
-  }
+  private def countStreamed(sfDir: String): Long =
+    graft.streaming.Streams.drain(
+      StreamRead.table(spark, sfDir, "documents"), "append",
+      s"$sfDir/documents.parquet").count()
 
   test("single-file layout (driver testdata) streams every row") {
     val expected =
       spark.read.parquet("/root/testdata/sf0.001/documents.parquet").count()
-    assert(countStreamed("/root/testdata/sf0.001", "sr_single") === expected)
+    assert(countStreamed("/root/testdata/sf0.001") === expected)
   }
 
   test("directory layout (Spark-written table) streams every row") {
@@ -44,7 +35,7 @@ class StreamReadSpec extends AnyFunSuite with SparkTestSession {
       val expected =
         spark.read.parquet(s"$tmp/documents.parquet").count()
       assert(expected > 0)
-      assert(countStreamed(tmp, "sr_dir") === expected)
+      assert(countStreamed(tmp) === expected)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
