@@ -16,16 +16,10 @@ object Bench {
     // shuffle partition lands ~100-200MB; SPARK_GRAFT_SHUFFLE_PARTITIONS
     // (read by SparkEntry.session) exposes the same knob to the scale
     // rungs. AQE coalesces small partitions back down, so oversizing is
-    // cheap.
-    // Input-split sizing, same reasoning: the scale rungs ship some
-    // tables as ONE parquet file (the nanos events table), so the
-    // default 128MB split gives a 1.2GB file only ~10 scan tasks on a
-    // 32-core box. SPARK_GRAFT_MAX_PARTITION_BYTES sets smaller splits to
-    // restore scan parallelism; on a real cluster the input is many
-    // files and the default is fine.
+    // cheap. Input splits need no knob: the scale rungs write the events
+    // table as many ~25 MB part files (tools/scale_events.py), so the
+    // default 128MB split already gives one scan task per file.
     val spark = SparkEntry.session()
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .foreach(spark.conf.set("spark.sql.files.maxPartitionBytes", _))
     // ERROR, not WARN: every saved log line is budget for the JSON tail
     spark.sparkContext.setLogLevel("ERROR")
     // warm-up: JVM/codegen/parquet-reader paths, so the first timed query
@@ -85,14 +79,8 @@ object Bench {
         val dt = (1 to reps).map { _ =>
           ChainGuard.clear(spark)
           val t0 = System.nanoTime()
-          // SPARK_GRAFT_RETHROW=1 aborts the sweep on the first failure
-          // with its stack trace (dev aid).
           try fn(spark, sfDir).count()
-          catch {
-            case e: Throwable =>
-              if (sys.env.get("SPARK_GRAFT_RETHROW").contains("1")) throw e
-              failure = Some(e.getClass.getName)
-          }
+          catch { case e: Throwable => failure = Some(e.getClass.getName) }
           val t = (System.nanoTime() - t0) / 1e9
           // Isolate runs: leftover cached / localCheckpoint blocks must
           // not shrink execution memory for what follows (observed

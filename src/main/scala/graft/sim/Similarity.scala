@@ -21,12 +21,6 @@ object Similarity {
   def dotD(a: Column, b: Column): Column =
     graft.expressions.DotProduct.dot(a, b)
 
-  /** The composed-builtins fold form, kept for plan comparison. */
-  def dotDBuiltins(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def normD(a: Column): Column = sqrt(dotD(a, a))
 
   def cosine(a: Column, b: Column): Column = dotD(a, b) / (normD(a) * normD(b))

@@ -16,10 +16,6 @@ object Sources {
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("header", "true").schema(schema).csv(path)
 
-  /** Parity helper for ad-hoc exploration only. */
-  def readCsvInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
   def writeSubmissionCsv(
       df: DataFrame, path: String, cols: Seq[String] = Seq("id", "label"),
       singleFile: Boolean = true): Unit = {
@@ -27,9 +23,6 @@ object Sources {
     (if (singleFile) out.coalesce(1) else out)
       .write.mode("overwrite").option("header", "true").csv(path)
   }
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
 
   /** JSONL (newline-delimited JSON) scan with an explicit schema — the
     * interchange format real document corpora ship in. Schema-on-read is

@@ -47,12 +47,6 @@ object Splits {
       graft.dedup.Dedup.md5Hash60(keyCol.cast("string"), seed) % 1000000L <
         round(weightCol * 1000000L).cast("long"))
 
-  /** Seeded random split: fraction `frac` -> split=0 (train), rest ->
-    * split=1. Pure projection (rand is per-row, no shuffle).
-    */
-  def seededSplit(df: DataFrame, frac: Double, seed: Long): DataFrame =
-    df.withColumn("split", when(rand(seed) < frac, 0).otherwise(1))
-
   /** Stratified split with exact per-class proportions, scale-safe:
     * exactly ceil(frac*n_class) rows per class go to train (split=0),
     * chosen by seeded rand order — but WITHOUT a single global window

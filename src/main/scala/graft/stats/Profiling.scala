@@ -1,18 +1,18 @@
 package graft.stats
 
 import graft.Q
-import graft.transform.{BinModel, EqualWidthBinner, QuantileBinner}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import graft.transform.{BinModel, ColumnGrid, EqualWidthBinner, QuantileBinner}
+import org.apache.spark.sql.DataFrame
 
 /** The reference's profiling rule engine and adaptive binning designer
   * (data_analysis.ipynb cells 7-10, SURVEY §3 entry point 3).
   *
-  * Per column: two aggregation passes (exact scaled-integer mean +
-  * cardinality + spread, then central moments), driver-side rule
-  * evaluation on the tiny result. All thresholds are the reference's
-  * (cell 8): CV>1.0, |skew|>2, kurtosis>3, unique_ratio>0.8,
-  * range>10·std.
+  * Per column: the [[ColumnGrid]] moments (one melted scan, two grid
+  * aggregations: exact scaled-integer mean + cardinality + spread, then
+  * central moments), driver-side rule evaluation on the tiny result. All
+  * thresholds are the reference's (cell 8): CV>1.0, |skew|>2,
+  * kurtosis>3, unique_ratio>0.8, range>10·std. An all-null column is an
+  * IllegalArgumentException naming it.
   */
 object Profiling {
 
@@ -22,94 +22,30 @@ object Profiling {
       range: Double, skewness: Double, kurtosis: Double)
 
   def columnStats(df: DataFrame, cols: Seq[(String, Int)]): Seq[ColumnStats] =
-    columnStatsWithGrid(df, cols)._1
+    columnStats(ColumnGrid(df, cols.map(_._1)).localCheckpoint(), cols)
 
-  /** The grid-backed stats pass (r17, guide §6 one corpus pass): ONE
-    * melted scan builds the per-(column, value) occurrence grid; counts,
-    * distinct, exact scaled mean, min/max, std and the central moments
-    * all derive from that grid (bounded by the value DOMAINS, not the
-    * row count). The old shape paid (a) a wide agg whose 4 countDistinct
-    * aggs EXPAND the corpus 4x before aggregating, then (b) a second
-    * full scan for the central moments — and designBinning paid (c) a
-    * THIRD melted scan for the quantile fit, which now reuses this same
-    * grid (returned for exactly that). Arithmetic per column is
-    * unchanged: s1/n over exact longs; the moments sum the same
-    * (x − meanS)^k terms, weighted by exact counts instead of added one
-    * occurrence at a time — inside the same ulp band the two engines'
-    * differing accumulation orders already span, and the outputs are
-    * r6-rounded ratios; std is the m2-about-the-true-mean form
-    * stddev_samp converges to (the profileNumeric r17 class,
-    * parity-pinned at both scales).
+  /** Stats from the grid's moments. Arithmetic per column: exact s1/n
+    * over longs for the mean; skewness and kurtosis from the central
+    * moments about that scaled mean, weighted by exact counts — inside
+    * the same ulp band the two engines' differing accumulation orders
+    * already span, and the outputs are r6-rounded ratios; std is the
+    * m2-about-the-true-mean form stddev_samp converges to (the
+    * profileNumeric r17 class, parity-pinned at both scales).
     */
-  def columnStatsWithGrid(
-      df: DataFrame, cols: Seq[(String, Int)])
-      : (Seq[ColumnStats], DataFrame) = {
-    // int column codes (index in `cols`), not name strings, as the
-    // melted group key (r17): the melted rows hash/compare/shuffle a
-    // 4-byte int instead of a string; names come back from cols(idx)
-    // driver-side. The returned grid carries the same codes — consumers
-    // translate via the `cols` order (designBinningFor does).
-    val kvCols = cols.zipWithIndex.flatMap { case ((c, _), i) =>
-      Seq(lit(i), col(c).cast("double")) }
-    val melted = df.select(explode(map(kvCols: _*)).as(Seq("g", "v")))
-    val grid = melted.filter(col("v").isNotNull)
-      .groupBy("g", "v").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    val scaledV = {
-      val first = when(col("g") === 0,
-        round(col("v") * math.pow(10, cols.head._2)))
-      cols.tail.zipWithIndex.foldLeft(first) { case (acc, ((_, d), i)) =>
-        acc.when(col("g") === (i + 1), round(col("v") * math.pow(10, d)))
-      }.cast("long")
-    }
-    val p1 = grid.groupBy("g").agg(
-      sum(col("cnt")).as("n"),
-      count(lit(1)).as("nd"),
-      sum(col("cnt") * scaledV).as("s1"),
-      min(col("v")).as("mn"),
-      max(col("v")).as("mx"),
-      sum(col("cnt") * col("v")).as("sv")
-    ).collect().map(r => cols(r.getInt(0))._1 -> r).toMap
-    val meanS = cols.map { case (c, _) =>
-      c -> p1(c).getLong(3) * 1.0 / p1(c).getLong(1)
-    }.toMap
-    val muRaw = cols.map { case (c, _) =>
-      c -> p1(c).getDouble(6) / p1(c).getLong(1)
-    }.toMap
-    def perColLit(m: Map[String, Double]): Column =
-      cols.tail.zipWithIndex.foldLeft(
-        when(col("g") === 0, lit(m(cols.head._1)))) {
-        case (acc, ((c, _), i)) => acc.when(col("g") === (i + 1), lit(m(c)))
-      }
-    val dltS = scaledV.cast("double") - perColLit(meanS)
-    val d2 = dltS * dltS
-    val dltR = col("v") - perColLit(muRaw)
-    val p2 = grid.groupBy("g").agg(
-      sum(col("cnt") * d2).as("s2"),
-      sum(col("cnt") * d2 * dltS).as("s3"),
-      sum(col("cnt") * d2 * d2).as("s4"),
-      sum(col("cnt") * dltR * dltR).as("m2raw")
-    ).collect().map(r => cols(r.getInt(0))._1 -> r).toMap
-    val stats = cols.map { case (c, d) =>
+  private def columnStats(
+      grid: ColumnGrid, cols: Seq[(String, Int)]): Seq[ColumnStats] = {
+    val moments = grid.moments(cols.toMap)
+    cols.map { case (c, d) =>
+      val m = moments(c)
+      require(m.n > 0, s"no non-null rows to profile column $c")
       val scale = math.pow(10, d)
-      val n = p1(c).getLong(1).toDouble
-      val mean = meanS(c) / scale
-      val std = math.sqrt(p2(c).getDouble(4) / (n - 1))
-      val (m2, m3, m4) = (
-        p2(c).getDouble(1) / n,
-        p2(c).getDouble(2) / n,
-        p2(c).getDouble(3) / n)
-      val g1 = m3 / math.pow(m2, 1.5)
-      val skew = g1 * math.sqrt(n * (n - 1)) / (n - 2)
-      val g2 = m4 / (m2 * m2) - 3.0
-      val kurt = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
-      ColumnStats(c, n.toLong, p1(c).getLong(2),
-        p1(c).getLong(2) * 1.0 / n, mean, std, std / mean,
-        p1(c).getDouble(4), p1(c).getDouble(5),
-        p1(c).getDouble(5) - p1(c).getDouble(4),
-        skew, kurt)
+      val n = m.n.toDouble
+      val mean = m.ssum * 1.0 / m.n / scale
+      val std = math.sqrt(m.m2 / (n - 1))
+      val (skew, kurt) = m.skewKurtosis
+      ColumnStats(c, m.n, m.nd, m.nd * 1.0 / n, mean, std, std / mean,
+        m.min, m.max, m.max - m.min, skew, kurt)
     }
-    (stats, grid)
   }
 
   /** Overfitting-risk flags per column (cell 8 rules), flags as 0/1. */
@@ -140,46 +76,38 @@ object Profiling {
       column: String, strategy: String, nBins: Int, model: BinModel)
 
   def designBinning(
-      df: DataFrame, cols: Seq[(String, Int)]): Seq[BinDesign] = {
-    val (stats, grid) = columnStatsWithGrid(df, cols)
-    designBinningFor(df, stats, Some(grid))
-  }
+      df: DataFrame, cols: Seq[(String, Int)]): Seq[BinDesign] =
+    designed(df, cols).map(_._1)
 
-  def designBinningFor(
-      df: DataFrame, stats: Seq[ColumnStats],
-      grid: Option[DataFrame] = None): Seq[BinDesign] = {
-    val chosen = stats.map { s =>
+  /** Zero extra scans (r17): the quantile fit probes the SAME grid the
+    * stats came from — four jobs for any column count (the checkpoint,
+    * two moment passes, one quantile probe).
+    */
+  private def designed(
+      df: DataFrame, cols: Seq[(String, Int)]): Seq[(BinDesign, ColumnStats)] = {
+    val grid = ColumnGrid(df, cols.map(_._1)).localCheckpoint()
+    val chosen = columnStats(grid, cols).map { s =>
       val strategy =
         if (s.uniqueRatio > 0.5 || math.abs(s.skewness) > 1.0) "quantile"
         else "equal_width"
-      val nBins = math.max(3, math.min(10, math.sqrt(s.nUnique).toInt))
+      val nBins = math.max(3, math.min(10, math.sqrt(s.nUnique.toDouble).toInt))
       (s, strategy, nBins)
     }
-    // zero extra scans when the profiling grid is in hand (r17): the
-    // quantile fit probes the SAME (column, value, count) grid the stats
-    // came from. Otherwise all quantile columns still fit in one scan.
-    val qSpecs = chosen.collect { case (s, "quantile", k) => s.column -> k }
-    val qModels = grid match {
-      // the profiling grid's int codes are the column's position in
-      // `stats` (= columnStatsWithGrid's cols order)
-      case Some(g) => QuantileBinner.fitManyFromCounts(
-        g, qSpecs, stats.map(_.column).zipWithIndex.toMap)
-      case None    => QuantileBinner.fitMany(df, qSpecs)
-    }
+    val qModels = QuantileBinner.fitMany(
+      grid, chosen.collect { case (s, "quantile", k) => s.column -> k })
     chosen.map { case (s, strategy, nBins) =>
       val model = strategy match {
         case "quantile"    => qModels(s.column)
         case "equal_width" => EqualWidthBinner.fromMinMax(s.column, nBins, s.min, s.max)
       }
-      BinDesign(s.column, strategy, nBins, model)
+      (BinDesign(s.column, strategy, nBins, model), s)
     }
   }
 
   def designReport(df: DataFrame, cols: Seq[(String, Int)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (stats, grid) = columnStatsWithGrid(df, cols)
-    designBinningFor(df, stats, Some(grid)).zip(stats).map { case (d, s) =>
+    designed(df, cols).map { case (d, s) =>
       (d.column, s.nUnique, Q.r6Double(s.uniqueRatio),
         Q.r6Double(s.skewness), d.strategy, d.nBins,
         d.model.nBins) // effective bins after duplicate-edge drop

@@ -1,6 +1,7 @@
 package graft.stats
 
 import graft.Q
+import graft.transform.ColumnGrid
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -25,125 +26,46 @@ object Stats {
 
   /** Per-column profile matching pandas `describe()` (column, n_rows,
     * n_nulls, n_distinct, mean, std, min, p25, p50, p75, max). `decimals`
-    * gives each column's fixed decimal scale (for exact means). The
-    * quartiles come from the distinct-value grid
-    * ([[graft.transform.GridQuantiles]]) — value-identical to the exact
-    * `percentile` aggregate (and to pandas / DuckDB `quantile_cont`),
-    * but distributed: the percentile aggregate merges every partition's
-    * value→count map in ONE reducer, the single-task bottleneck
-    * QuantileBinner.fitMany measured at 147 s for exactly this
-    * 4-lineitem-column shape at sf10 (r16: guide §5). Two jobs now (grid
-    * + wide agg), stacked to rows driver-side as before.
+    * gives each column's fixed decimal scale (for exact means). Every
+    * statistic is read off ONE melted scan, the [[ColumnGrid]]: its
+    * moments (two grid aggregations) and its quartiles, value-identical
+    * to the exact `percentile` aggregate (and to pandas / DuckDB
+    * `quantile_cont`) but distributed: the percentile aggregate merges
+    * every partition's value→count map in ONE reducer, the single-task
+    * bottleneck QuantileBinner.fitMany measured at 147 s for exactly this
+    * 4-lineitem-column shape at sf10 (r16: guide §5). Four jobs: the
+    * grid checkpoint, the two moment passes and the overlapped quartile
+    * probe. An all-null column reports n_rows 0 and null statistics.
     */
   def profileNumeric(df: DataFrame, cols: Seq[(String, Int)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // int column codes, not name strings, as the melted group key (r17):
-    // 2.4M melted rows hash/compare/shuffle a 4-byte int instead of a
-    // string — the key only decorates the output, names come back from
-    // cols(idx) driver-side
-    val kvCols = cols.zipWithIndex.flatMap { case ((c, _), i) =>
-      Seq(lit(i), col(c).cast("double")) }
-    val melted = df.select(explode(map(kvCols: _*)).as(Seq("g", "v")))
-    // ONE corpus pass (r17, guide §6): per-(column, value) occurrence
-    // counts, null values kept as their own grid rows so the null count
-    // rides along. Everything below — counts, distinct, exact scaled
-    // mean, min/max, central moment, quantiles — derives from this tiny
-    // grid (bounded by the value DOMAINS, not the row count); the old
-    // shape paid a second full scan for a wide agg whose countDistinct
-    // alone expanded the corpus 4x. localCheckpoint materializes the
-    // grid once for its four small consumers.
-    val grid = melted.groupBy("g", "v").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    // round(v * 10^d) per column — the same doubles the per-row
-    // scaled() computed, taken once per distinct value and weighted by
-    // its exact count, so the integer ssum is unchanged
-    val scaledV = {
-      val first = when(col("g") === 0,
-        round(col("v") * math.pow(10, cols.head._2)))
-      cols.tail.zipWithIndex.foldLeft(first) { case (acc, ((_, d), i)) =>
-        acc.when(col("g") === (i + 1), round(col("v") * math.pow(10, d)))
-      }.cast("long")
-    }
-    val nn = col("v").isNotNull
-    // the quantile probe is independent of the stat/moment passes — run
-    // it overlapped (guide §2.6) so its grid shuffle+sort back-fills the
+    val grid = ColumnGrid(df, cols.map(_._1)).localCheckpoint()
+    // the quantile probe is independent of the moment passes — run it
+    // overlapped (guide §2.6) so its grid shuffle+sort back-fills the
     // two small grid aggregations
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
     val pctF = scala.concurrent.Future {
-      val probsDf = cols.indices.flatMap { i =>
-        Seq((i, 1, 0.25), (i, 2, 0.5), (i, 3, 0.75)) }.toDF("g", "i", "p")
-      graft.transform.GridQuantiles
-        .quantilesFromCounts(grid.filter(nn), broadcast(probsDf)).collect()
-        .map(r => (cols(r.getInt(0))._1, r.getInt(1)) -> r.getDouble(3))
-        .toMap
+      grid.quantiles(cols.map { case (c, _) => c -> Seq(0.25, 0.5, 0.75) }.toMap)
     }
-    val statRows = grid.groupBy("g").agg(
-      coalesce(sum(when(nn, col("cnt"))), lit(0L)).as("n"),
-      coalesce(sum(when(col("v").isNull, col("cnt"))), lit(0L)).as("nulls"),
-      coalesce(sum(when(nn, 1L)), lit(0L)).as("nd"),
-      sum(when(nn, col("cnt") * scaledV)).as("ssum"),
-      min(col("v")).as("mn"),
-      max(col("v")).as("mx"),
-      sum(when(nn, col("cnt") * col("v"))).as("sv")
-    ).collect()
-    val stats = statRows.map(r => cols(r.getInt(0))._1 -> r).toMap
-    // sample central moment about the true mean — the value
-    // stddev_samp converges to; r4 keeps the last-ulp band of the
-    // different accumulation orders (Spark Welford / DuckDB / this)
-    // collapsed, exactly as it already had to across engines
-    val muOf = statRows.collect {
-      case r if r.getLong(1) > 0 =>
-        r.getInt(0) -> (r.getDouble(7) / r.getLong(1))
-    }.toMap
-    val m2Map =
-      if (muOf.isEmpty) Map.empty[String, Double]
-      else {
-        val muExpr = {
-          val ks = muOf.keys.toSeq
-          ks.tail.foldLeft(
-            when(col("g") === ks.head, lit(muOf(ks.head)))) { (acc, g) =>
-            acc.when(col("g") === g, lit(muOf(g)))
-          }
-        }
-        grid.filter(nn)
-          .groupBy("g")
-          .agg(sum(col("cnt") *
-            (col("v") - muExpr) * (col("v") - muExpr)).as("m2"))
-          .collect().map(r => cols(r.getInt(0))._1 -> r.getDouble(1)).toMap
-      }
+    val moments = grid.moments(cols.toMap)
     val pct = scala.concurrent.Await.result(
       pctF, scala.concurrent.duration.Duration.Inf)
-    def dlit(o: Option[Double]): Column =
-      o.map(v => lit(v)).getOrElse(lit(null)).cast("double")
-    def pctLit(c: String, i: Int): Column =
-      dlit(pct.get((c, i)).map(Q.r6Double)) // all-null column: grid empty
-    val perCol = cols.map { case (c, d) =>
-      val r = stats.get(c)
-      val n = r.map(_.getLong(1)).getOrElse(0L)
-      val meanV =
-        r.filter(x => !x.isNullAt(4) && n > 0)
-          .map(x => Q.r6Double(x.getLong(4).toDouble / math.pow(10, d) / n))
-      val stdV =
-        if (n == 0) None
-        else m2Map.get(c).map(m2 => Q.r4Double(math.sqrt(m2 / (n - 1))))
-      spark.range(1).select(
-        lit(c).as("column"),
-        lit(n).as("n_rows"),
-        lit(r.map(_.getLong(2)).getOrElse(0L)).as("n_nulls"),
-        lit(r.map(_.getLong(3)).getOrElse(0L)).as("n_distinct"),
-        dlit(meanV).as("mean"),
-        dlit(stdV).as("std"),
-        dlit(r.flatMap(x =>
-          if (x.isNullAt(5)) None else Some(x.getDouble(5)))).as("min"),
-        pctLit(c, 1).as("p25"),
-        pctLit(c, 2).as("p50"),
-        pctLit(c, 3).as("p75"),
-        dlit(r.flatMap(x =>
-          if (x.isNullAt(6)) None else Some(x.getDouble(6)))).as("max"))
-    }
-    perCol.reduce(_.unionByName(_)).orderBy("column")
+    cols.map { case (c, d) =>
+      val m = moments(c)
+      def ifRows(x: => Double): Option[Double] = if (m.n > 0) Some(x) else None
+      val q = pct.get(c).map(_.map(Q.r6Double))
+      // sample central moment about the true mean — the value
+      // stddev_samp converges to; r4 keeps the last-ulp band of the
+      // different accumulation orders (Spark Welford / DuckDB / this)
+      // collapsed, exactly as it already had to across engines
+      (c, m.n, m.nulls, m.nd,
+        ifRows(Q.r6Double(m.ssum.toDouble / math.pow(10, d) / m.n)),
+        ifRows(Q.r4Double(math.sqrt(m.m2 / (m.n - 1)))),
+        ifRows(m.min), q.map(_(0)), q.map(_(1)), q.map(_(2)), ifRows(m.max))
+    }.toDF("column", "n_rows", "n_nulls", "n_distinct", "mean", "std", "min",
+      "p25", "p50", "p75", "max").orderBy("column")
   }
 
   /** value_counts(normalize=True): counts + share-of-total per value.
@@ -219,40 +141,23 @@ object Stats {
   }
 
   /** Bias-corrected sample skewness G1 and excess kurtosis G2 (pandas
-    * semantics, SURVEY §7.4.5) from exact central moments. Only for
-    * small-magnitude fixed-decimal columns (moments must stay in exact
-    * double range). Two jobs: exact mean, then central moments.
+    * semantics, SURVEY §7.4.5) from exact central moments: the
+    * [[ColumnGrid]] moments of Profiling.columnStats, one melted scan for
+    * every column. Only for small-magnitude fixed-decimal columns
+    * (moments must stay in exact double range). An all-null column is an
+    * IllegalArgumentException naming it.
     */
   def skewKurtosis(df: DataFrame, cols: Seq[(String, Int)]): DataFrame = {
-    val perCol = cols.map { case (c, d) =>
-      val scale = math.pow(10, d)
-      val m = df.agg(
-        sum(scaled(col(c), d)).as("s1"), count(col(c)).as("n")).head()
-      val n = m.getLong(1).toDouble
-      val mean = m.getLong(0) * 1.0 / n
-      val x = scaled(col(c), d).cast("double")
-      // multiplications instead of pow() — same rationale and ulp
-      // argument as Profiling.columnStats's moment pass (r16)
-      val dlt = x - mean
-      val d2 = dlt * dlt
-      val mom = df
-        .agg(
-          sum(d2).as("s2"),
-          sum(d2 * dlt).as("s3"),
-          sum(d2 * d2).as("s4"))
-        .head()
-      val (m2, m3, m4) =
-        (mom.getDouble(0) / n, mom.getDouble(1) / n, mom.getDouble(2) / n)
-      val g1 = m3 / math.pow(m2, 1.5)
-      val skew = g1 * math.sqrt(n * (n - 1)) / (n - 2)
-      val g2 = m4 / (m2 * m2) - 3.0
-      val kurt = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
-      (c, scale, skew, kurt)
-    }
     val spark = df.sparkSession
     import spark.implicits._
-    perCol.map { case (c, _, sk, ku) => (c, Q.r6Double(sk), Q.r6Double(ku)) }
-      .toDF("column", "skewness", "kurtosis").orderBy("column")
+    val moments =
+      ColumnGrid(df, cols.map(_._1)).localCheckpoint().moments(cols.toMap)
+    cols.map { case (c, _) =>
+      val m = moments(c)
+      require(m.n > 0, s"no non-null rows to profile column $c")
+      val (sk, ku) = m.skewKurtosis
+      (c, Q.r6Double(sk), Q.r6Double(ku))
+    }.toDF("column", "skewness", "kurtosis").orderBy("column")
   }
 
   /** Pearson chi-square test of independence between two categorical

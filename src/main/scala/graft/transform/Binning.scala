@@ -100,45 +100,21 @@ object QuantileBinner {
     */
   def fitMany(df: DataFrame, specs: Seq[(String, Int)]): Map[String, BinModel] =
     if (specs.isEmpty) Map.empty
-    else {
-      // int column codes as the melted group key (r17): the melted rows
-      // shuffle a 4-byte int instead of the column-name string
-      val kvCols = specs.zipWithIndex.flatMap { case ((c, _), i) =>
-        Seq(lit(i), col(c).cast("double")) }
-      val melted = df.select(explode(map(kvCols: _*)).as(Seq("g", "v")))
-      fitManyFromCounts(
-        melted.filter(col("v").isNotNull)
-          .groupBy("g", "v").agg(count(lit(1)).as("cnt")),
-        specs, specs.map(_._1).zipWithIndex.toMap)
-    }
+    else fitMany(ColumnGrid(df, specs.map(_._1)), specs)
 
-  /** [[fitMany]] over an ALREADY-COUNTED (g, v, cnt) grid (the
-    * [[GridQuantiles.quantilesFromCounts]] contract) — callers that just
-    * profiled the same columns reuse their grid and fit with ZERO
-    * additional corpus scans (r17, guide §6).
+  /** [[fitMany]] over a [[ColumnGrid]] that holds every spec column:
+    * callers that just profiled the same columns reuse their grid and
+    * fit with ZERO additional corpus scans (r17, guide §6).
     */
-  def fitManyFromCounts(
-      counts: DataFrame, specs: Seq[(String, Int)],
-      codeOf: Map[String, Int]): Map[String, BinModel] =
+  def fitMany(grid: ColumnGrid, specs: Seq[(String, Int)]): Map[String, BinModel] =
     if (specs.isEmpty) Map.empty
     else {
-      val spark = counts.sparkSession
-      import spark.implicits._
-      // `counts` carries int column codes as g (r17); `codeOf` maps a
-      // spec's column name to the grid builder's code for it
-      val probs = specs.flatMap { case (c, k) =>
-        (0 to k).map(i => (codeOf(c), i, i.toDouble / k)) }
-        .toDF("g", "i", "p")
-      val rows = GridQuantiles
-        .quantilesFromCounts(counts, broadcast(probs)).collect()
-      val edgesByCode = rows.groupBy(_.getInt(0)).map { case (code, rs) =>
-        code -> rs.sortBy(_.getAs[Int]("i")).map(_.getAs[Double]("q"))
-      }
+      val qs = grid.quantiles(specs.map { case (c, k) =>
+        c -> (0 to k).map(i => i.toDouble / k) }.toMap)
       specs.map { case (c, _) =>
-        val qs = edgesByCode.getOrElse(codeOf(c),
-          throw new IllegalArgumentException(
-            s"no non-null rows to fit quantile bins for $c"))
-        c -> BinModel(c, Binning.atLeastOneBucket(Binning.dedupEdges(qs)))
+        val edges = qs.getOrElse(c, throw new IllegalArgumentException(
+          s"no non-null rows to fit quantile bins for $c"))
+        c -> BinModel(c, Binning.atLeastOneBucket(Binning.dedupEdges(edges.toArray)))
       }.toMap
     }
 

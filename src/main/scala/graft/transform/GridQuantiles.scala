@@ -36,7 +36,7 @@ object GridQuantiles {
 
   /** The interpolation tail of [[quantiles]] over an ALREADY-COUNTED
     * grid — rows (g, v, cnt) with non-null v. Callers that derive
-    * several statistics from one grid (profileNumeric, madOutliers)
+    * several statistics from one grid ([[ColumnGrid]], madOutliers)
     * count once and reuse the frame, so the corpus is scanned exactly
     * once (guide §6).
     */
