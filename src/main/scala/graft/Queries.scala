@@ -8,6 +8,12 @@ import org.apache.spark.sql.functions._
   * over the same tables. Column names MUST match between the two — the
   * driver sorts columns by name before hashing values.
   *
+  * A replay that several oracles share is defined once, next to the
+  * operator it replays, as a CTE-list fragment the oracle composes after
+  * its own `WITH` (`PageRank.oracleCtes`, `Dedup.oracleMinhashCtes`,
+  * `Similarity.oracleBandedCtes`, ...), so a fix to a replay lands in one
+  * place.
+  *
   * Harness contract: runners (Bench, Verify, tests) call
   * `spark.catalog.clearCache()` between queries. A query MAY therefore
   * `persist()` an intermediate frame without unpersisting it (e.g.

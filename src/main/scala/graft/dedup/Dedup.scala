@@ -13,14 +13,13 @@ import org.apache.spark.sql.functions._
   * Scale design: everything reduces through groupBy/join on
   * shingle/signature keys — no driver-side collection, no cross joins of
   * raw documents. MinHash-LSH turns the O(n²) pair problem into a
-  * band-bucket equi-join; SimHash compresses each doc to 63 bits.
+  * band-bucket equi-join; SimHash compresses each doc to 60 bits.
+  *
+  * Every hash is the md5-based cross-engine form, so each operator has a
+  * DuckDB replay; the `oracle*` fragments below are those replays, shared
+  * by every query whose oracle needs them.
   */
 object Dedup {
-
-  /** Seeded 64-bit document hash — Spark-native xxhash64; the fast default
-    * for production pipelines (engine-internal, so rows-only checkable).
-    */
-  val xxHash: (Column, Int) => Column = (c, seed) => xxhash64(c, lit(seed))
 
   /** Seeded 60-bit cross-engine hash: first 15 hex chars of a seeded md5,
     * parsed base-16. Bit-identical to DuckDB
@@ -159,24 +158,6 @@ object Dedup {
     jaccardForPairs(df, cand).filter(col("jaccard") >= threshold)
   }
 
-  /** MinHash signatures: numHashes seeded hash permutations, min per
-    * doc. Returns (id, sig array<long>) — sig(i) uses seed i. `hashFn`
-    * defaults to xxhash64; pass `md5Hash60` for oracle-checkable output.
-    */
-  def minhashSignatures(
-      shingles: DataFrame, numHashes: Int,
-      hashFn: (Column, Int) => Column = xxHash): DataFrame = {
-    // all permutations as parallel min-aggregations in ONE pass over the
-    // shingles (no seed cross-join, one shuffle on id)
-    val aggs = (0 until numHashes).map(i =>
-      min(hashFn(col("sh"), i)).as(s"__m$i"))
-    shingles.toDF("id", "sh")
-      .groupBy("id").agg(aggs.head, aggs.tail: _*)
-      .select(
-        col("id"),
-        array((0 until numHashes).map(i => col(s"__m$i")): _*).as("sig"))
-  }
-
   /** MinHash via the universal-hash permutation family over ONE md5 base
     * hash per shingle: h_i = (a_i*h + b_i) mod P31. 32x fewer hash
     * evaluations than hashing per seed, and every step is expressible in
@@ -232,17 +213,13 @@ object Dedup {
   /** (id, sig, band, bucket) banding of a signature frame — the shared
     * blocking step of the self-join and cross-set LSH variants below.
     */
-  private def banded(
-      sigs: DataFrame, bands: Int, sqlBuckets: Boolean): DataFrame = {
-    // bucket key per band: hash of the band's signature slice (fast
-    // default), or the slice itself joined to a string — bit-identical to
-    // DuckDB string_agg(m, ',' ORDER BY perm), for oracle checking
+  private def banded(sigs: DataFrame, bands: Int): DataFrame = {
+    // bucket key per band: the band's signature slice joined to a string —
+    // bit-identical to DuckDB string_agg(m, ',' ORDER BY perm)
     val sliceExpr =
       s"slice(sig, band * (size(sig) div $bands) + 1, size(sig) div $bands)"
     val bucketCol =
-      if (sqlBuckets)
-        expr(s"array_join(transform($sliceExpr, x -> cast(x as string)), ',')")
-      else xxhash64(col("band"), expr(sliceExpr)).cast("string")
+      expr(s"array_join(transform($sliceExpr, x -> cast(x as string)), ',')")
     sigs
       .select(col("id"), col("sig"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
@@ -261,9 +238,7 @@ object Dedup {
     * band hash, emit distinct id pairs sharing any bucket, with estimated
     * similarity = fraction of matching minhashes.
     */
-  def lshCandidates(
-      sigsIn: DataFrame, bands: Int,
-      sqlBuckets: Boolean = false): DataFrame = {
+  def lshCandidates(sigsIn: DataFrame, bands: Int): DataFrame = {
     // The signature frame is consumed 3x (banding + two joins back); its
     // upstream — shingle explode + md5 + 32-perm min-agg — is the most
     // expensive stage of the pipeline, so materialize it once instead of
@@ -272,7 +247,7 @@ object Dedup {
     // (not persist): blocks are released when the checkpointed RDD is
     // GC'd, so long-lived sessions need no caller-side unpersist.
     val sigs = sigsIn.localCheckpoint()
-    val bk = banded(sigs, bands, sqlBuckets)
+    val bk = banded(sigs, bands)
     // dedupe bare id pairs first (cheap shuffle), then join signatures
     // back — never shuffle signature arrays through the pair distinct
     val a = bk.select(col("band"), col("bucket"), col("id").as("id_a"))
@@ -300,10 +275,8 @@ object Dedup {
     * production trade ("bucket-connectivity dedup"): banding
     * parameters, not a post-filter, set the similarity bar.
     */
-  def lshBucketStarEdges(
-      sigs: DataFrame, bands: Int,
-      sqlBuckets: Boolean = false): DataFrame = {
-    val bk = banded(sigs, bands, sqlBuckets)
+  def lshBucketStarEdges(sigs: DataFrame, bands: Int): DataFrame = {
+    val bk = banded(sigs, bands)
     bk.select(col("band"), col("bucket"), col("id"))
       .withColumn("id_a",
         min(col("id")).over(Window.partitionBy("band", "bucket")))
@@ -325,11 +298,10 @@ object Dedup {
     * similarity bar, same trade as [[lshBucketStarEdges]].
     */
   def lshBucketHitIds(
-      newSigs: DataFrame, oldSigs: DataFrame, bands: Int,
-      sqlBuckets: Boolean = false): DataFrame = {
-    val probe = banded(newSigs, bands, sqlBuckets)
+      newSigs: DataFrame, oldSigs: DataFrame, bands: Int): DataFrame = {
+    val probe = banded(newSigs, bands)
       .select(col("band"), col("bucket"), col("id"))
-    val index = banded(oldSigs, bands, sqlBuckets)
+    val index = banded(oldSigs, bands)
       .select(col("band"), col("bucket")).distinct()
     probe.join(index, Seq("band", "bucket"), "left_semi")
       .select("id").distinct()
@@ -345,13 +317,12 @@ object Dedup {
     * (consumed twice each) — blocks free with RDD GC, no caller contract.
     */
   def lshCandidatesAcross(
-      newSigs: DataFrame, oldSigs: DataFrame, bands: Int,
-      sqlBuckets: Boolean = false): DataFrame = {
+      newSigs: DataFrame, oldSigs: DataFrame, bands: Int): DataFrame = {
     val ns = newSigs.localCheckpoint()
     val os = oldSigs.localCheckpoint()
-    val a = banded(ns, bands, sqlBuckets)
+    val a = banded(ns, bands)
       .select(col("band"), col("bucket"), col("id").as("id_a"))
-    val b = banded(os, bands, sqlBuckets)
+    val b = banded(os, bands)
       .select(col("band"), col("bucket"), col("id").as("id_b"))
     val pairs = a.join(b, Seq("band", "bucket"))
       .select("id_a", "id_b").distinct()
@@ -460,24 +431,25 @@ object Dedup {
       .orderBy("event_type")
   }
 
-  /** SimHash over whitespace tokens weighted by in-doc frequency.
-    * One explode + one wide aggregation; fingerprint assembled bitwise.
-    * Default: 63 bits of xxhash64. With (`md5Hash60`, nBits = 60) the
-    * fingerprints are DuckDB-oracle-checkable.
+  /** SimHash fingerprint width: the 60 bits of one [[md5Hash60]]. */
+  private val SimhashBits = 60
+
+  /** SimHash over whitespace tokens weighted by in-doc frequency:
+    * [[SimhashBits]]-bit fingerprints from [[md5Hash60]] token hashes, so
+    * they replay in DuckDB ([[oracleSimhashCtes]]). One explode + one
+    * wide aggregation; fingerprint assembled bitwise.
     */
-  def simhash(
-      df: DataFrame, idCol: String, textCol: String, nBits: Int = 63,
-      hashFn: (Column, Int) => Column = xxHash): DataFrame = {
+  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val toks = df.select(
         col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("tok"))
       .groupBy("id", "tok").agg(count(lit(1)).as("w"))
-      .withColumn("h", hashFn(col("tok"), 0))
-    val bitSums = (0 until nBits).map { i =>
+      .withColumn("h", md5Hash60(col("tok"), 0))
+    val bitSums = (0 until SimhashBits).map { i =>
       sum(when(shiftright(col("h"), i).bitwiseAND(lit(1L)) === 1L, col("w"))
         .otherwise(-col("w"))).as(s"s$i")
     }
-    val fp = (0 until nBits)
+    val fp = (0 until SimhashBits)
       .map(i => when(col(s"s$i") > 0, shiftleft(lit(1L), i)).otherwise(lit(0L)))
       .reduce(_ bitwiseOR _)
     toks.groupBy("id").agg(bitSums.head, bitSums.tail: _*)
@@ -517,4 +489,133 @@ object Dedup {
       .distinct()
       .filter(col("dist") <= maxDist)
   }
+
+  // ---- DuckDB replays, in the `oracleCtes` idiom of graft.graph: each is
+  // a CTE list that a query's oracle places after its own WITH. `where`
+  // selects documents ("" or " WHERE <predicate>"); `pair` is a predicate
+  // over the two join sides `a` and `b` (e.g. "a.id < b.id").
+
+  /** `sh(id, sh)`: the distinct character 3-shingles of the documents
+    * `where` selects ([[shingleSet]] with k = 3).
+    */
+  def oracleShingleCtes(where: String): String = s"""sh AS MATERIALIZED (
+        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
+        FROM (SELECT doc_id, text,
+                     unnest(generate_series(1, length(text) - 2)) AS i
+              FROM documents$where))"""
+
+  /** Given `sh`: `jac(id_a, id_b, jaccard)`, the r6 exact Jaccard of each
+    * shingle-sharing document pair that `pair` admits
+    * ([[jaccardForPairs]]: pairs with no shared shingle are absent).
+    */
+  def oracleJaccardCtes(pair: String): String = s"""sz AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
+      inter AS (
+        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
+        FROM sh a JOIN sh b ON a.sh = b.sh AND $pair
+        GROUP BY 1, 2),
+      jac AS (
+        SELECT id_a, id_b,
+               round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
+        FROM inter
+        JOIN sz sa ON sa.id = id_a
+        JOIN sz sb ON sb.id = id_b)"""
+
+  /** `sh` plus `mh(id, p, m)`: the 32-permutation MinHash signatures of
+    * the documents `where` selects, one row per (doc, permutation) —
+    * [[minhashSigsPerRow]] with k = 3 and 32 hashes, in the explode form
+    * (one md5 base hash per shingle, crossed with the permutations).
+    */
+  def oracleMinhashCtes(where: String): String = {
+    val perms = permConstants(32).zipWithIndex
+      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
+    s"""${oracleShingleCtes(where)},
+      base AS (
+        SELECT id,
+               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
+                 % $P31 AS h
+        FROM sh),
+      perms(p, a, b) AS (VALUES $perms),
+      mh AS MATERIALIZED (
+        SELECT id, p, MIN((a * h + b) % $P31) AS m
+        FROM base CROSS JOIN perms
+        GROUP BY id, p)"""
+  }
+
+  /** Given `mh`: `bk(id, band, bucket)` (4 bands of 8 rows), the pairs
+    * sharing a bucket that `pair` admits as `cand(id_a, id_b)`, and
+    * `est(id_a, id_b, est_jaccard)` — [[lshCandidates]] (pair
+    * "a.id < b.id") and [[lshCandidatesAcross]] with 4 bands.
+    */
+  def oracleLshCtes(pair: String): String = s"""bk AS MATERIALIZED (
+        SELECT id, p // 8 AS band,
+               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
+        FROM mh GROUP BY id, p // 8),
+      cand AS (
+        SELECT DISTINCT a.id AS id_a, b.id AS id_b
+        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
+                               AND $pair),
+      est AS (
+        SELECT c.id_a, c.id_b,
+               round(SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0, 6)
+                 AS est_jaccard
+        FROM cand c
+        JOIN mh ma ON ma.id = c.id_a
+        JOIN mh mb ON mb.id = c.id_b AND mb.p = ma.p
+        GROUP BY c.id_a, c.id_b)"""
+
+  /** Given `edges(id_a, id_b)`: `sym(s, d)` and `comp(id, component)`,
+    * the labels [[connectedComponents]] converges to, as a transitive
+    * closure (needs `WITH RECURSIVE`; its rows grow with the square of
+    * a component's size, so it suits small graphs only).
+    */
+  val oracleComponentsCtes: String = """sym AS (SELECT id_a AS s, id_b AS d FROM edges
+              UNION SELECT id_b, id_a FROM edges),
+      reach(id, r) AS (
+        SELECT DISTINCT s, s FROM sym
+        UNION
+        SELECT sym.d, reach.r FROM reach JOIN sym ON sym.s = reach.id),
+      comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id)"""
+
+  /** `fp(id, simhash)`: the [[simhash]] fingerprint of every document. */
+  val oracleSimhashCtes: String = {
+    val bitSums = (0 until SimhashBits).map(i =>
+      s"SUM(CASE WHEN (h >> $i) & 1 = 1 THEN w ELSE -w END) AS s$i")
+      .mkString(",\n               ")
+    val assemble = (0 until SimhashBits).map(i =>
+      s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
+    s"""toks AS (
+        SELECT id, tok, COUNT(*) AS w
+        FROM (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS tok
+              FROM documents)
+        GROUP BY id, tok),
+      h AS (
+        SELECT id, w,
+               CAST(concat('0x', substring(md5(tok || '|0'), 1, 15))
+                    AS BIGINT) AS h
+        FROM toks),
+      b AS (
+        SELECT id,
+               $bitSums
+        FROM h GROUP BY id),
+      fp AS MATERIALIZED (
+        SELECT id, $assemble AS simhash FROM b)"""
+  }
+
+  /** Given `fp`: `ham(id_a, id_b, dist)`, the pairs within `maxDist`
+    * bits — [[simhashHammingPairs]].
+    */
+  def oracleHammingCtes(nBands: Int, bandBits: Int, maxDist: Int): String =
+    s"""bands AS (
+        SELECT id, simhash, band,
+               (simhash >> (band * $bandBits)) & ${(1L << bandBits) - 1}
+                 AS bucket
+        FROM fp CROSS JOIN range(0, $nBands) r(band)),
+      hcand AS (
+        SELECT DISTINCT a.id AS id_a, b2.id AS id_b,
+               a.simhash AS sa, b2.simhash AS sb
+        FROM bands a JOIN bands b2
+          ON a.band = b2.band AND a.bucket = b2.bucket AND a.id < b2.id),
+      ham AS (
+        SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS dist
+        FROM hcand WHERE bit_count(xor(sa, sb)) <= $maxDist)"""
 }

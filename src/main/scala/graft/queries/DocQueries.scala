@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** Text-analysis + deduplication queries over the `documents` table.
   * Token math is oracle-expressible via list functions; MinHash/SimHash
-  * run here with the md5-based cross-engine hash so the full pipelines
-  * are DuckDB-hash-checked (xxhash64 stays the production default).
+  * use the md5-based cross-engine hash, so the full pipelines are
+  * DuckDB-hash-checked through the replay fragments in [[Dedup]].
   */
 object DocQueries extends QueryPack {
 
@@ -176,23 +176,10 @@ object DocQueries extends QueryPack {
   val jaccardAdjacent: GraftQuery = GraftQuery(
     "ngram_jaccard_adjacent",
     (s, dir) => adjacentJaccard3(Tables(s, dir, "documents"), lit(true)),
-    Some("""
-      WITH sh AS (
-        SELECT DISTINCT doc_id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents)),
-      sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1 AND a.sh = b.sh
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-             round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-      FROM inter
-      JOIN sz sa ON sa.doc_id = id_a
-      JOIN sz sb ON sb.doc_id = id_b
-      ORDER BY id_a"""))
+    Some(s"""
+      WITH ${Dedup.oracleShingleCtes("")},
+      ${Dedup.oracleJaccardCtes("b.id = a.id + 1")}
+      SELECT id_a, id_b, jaccard FROM jac ORDER BY id_a"""))
 
   /** Truth slice of `ngram_jaccard_adjacent` for sf100 value evidence
     * (VERDICT r13 task 4): adjacency pairs each doc only with doc_id + 1,
@@ -209,24 +196,10 @@ object DocQueries extends QueryPack {
     (s, dir) => adjacentJaccard3(
       Tables(s, dir, "documents").filter(col("doc_id") <= 100000),
       col("doc_id") < 100000),
-    Some("""
-      WITH sh AS (
-        SELECT DISTINCT doc_id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents WHERE doc_id <= 100000)),
-      sz AS (SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON b.doc_id = a.doc_id + 1 AND a.sh = b.sh
-        WHERE a.doc_id < 100000
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-             round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-      FROM inter
-      JOIN sz sa ON sa.doc_id = id_a
-      JOIN sz sb ON sb.doc_id = id_b
-      ORDER BY id_a"""))
+    Some(s"""
+      WITH ${Dedup.oracleShingleCtes(" WHERE doc_id <= 100000")},
+      ${Dedup.oracleJaccardCtes("b.id = a.id + 1 AND a.id < 100000")}
+      SELECT id_a, id_b, jaccard FROM jac ORDER BY id_a"""))
 
   /** EXACT all-pairs Jaccard >= 0.8 near-dup pairs via prefix filtering
     * (Dedup.allPairsJaccard — candidate generation is a rare-shingle
@@ -249,23 +222,9 @@ object DocQueries extends QueryPack {
     "allpairs_jaccard_pairs",
     (s, dir) => allPairs05(s, dir).filter(col("jaccard") >= 0.8)
       .orderBy("id_a", "id_b"),
-    Some("""
-      WITH sh AS (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents WHERE doc_id < 500)),
-      sz AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-      inter AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.id < b.id
-        GROUP BY 1, 2)
-      SELECT id_a, id_b,
-             round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-      FROM inter
-      JOIN sz sa ON sa.id = id_a
-      JOIN sz sb ON sb.id = id_b
-      WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 6) >= 0.8
+    Some(s"""
+      WITH $allPairsSql
+      SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.8
       ORDER BY id_a, id_b"""))
 
   /** Top-15 most-similar document pairs by bag-of-4-gram-shingle COSINE
@@ -373,30 +332,14 @@ object DocQueries extends QueryPack {
       val grid = Seq("0.5" -> 5, "0.6" -> 6, "0.7" -> 7, "0.8" -> 8,
         "0.9" -> 9)
       val cols = grid.map { case (t, tag) =>
-        s"""CAST(SUM(CASE WHEN j >= $t THEN 1 ELSE 0 END) AS BIGINT)
+        s"""CAST(SUM(CASE WHEN jaccard >= $t THEN 1 ELSE 0 END) AS BIGINT)
               AS n_pairs_$tag,
-            COUNT(DISTINCT CASE WHEN j >= $t THEN id_b END)
+            COUNT(DISTINCT CASE WHEN jaccard >= $t THEN id_b END)
               AS n_dropped_$tag"""
       }.mkString(",\n            ")
       s"""
-      WITH sh AS (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents WHERE doc_id < 500)),
-      sz AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-      inter AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON a.sh = b.sh AND a.id < b.id
-        GROUP BY 1, 2),
-      p AS (
-        SELECT id_a, id_b,
-               round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS j
-        FROM inter
-        JOIN sz sa ON sa.id = id_a
-        JOIN sz sb ON sb.id = id_b
-        WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 6) >= 0.5)
-      SELECT $cols FROM p"""
+      WITH $allPairsSql
+      SELECT $cols FROM jac WHERE jaccard >= 0.5"""
     })
 
   /** Cross-source duplicate leakage matrix keyed on the 40-char text
@@ -448,18 +391,6 @@ object DocQueries extends QueryPack {
              MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
       FROM kept"""))
 
-  /** MinHash(32) + LSH(4 bands x 8 rows, candidate threshold ~0.84):
-    * near-dup pairs with estimated similarity >= 0.5. One md5 base hash
-    * per shingle fans out to 32 permutations arithmetically
-    * ((a*h+b) mod P31), and band buckets are the verbatim signature
-    * slices, so the ENTIRE pipeline — shingling, permutations, banding,
-    * candidate dedup, similarity estimate — is hash-checked against
-    * DuckDB. DedupSpec pins this path to the xxhash64 default's pair
-    * structure.
-    */
-  private val permValues = Dedup.permConstants(32).zipWithIndex
-    .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
-
   // ---------------------------------------------------------------------
   // Shared dedup chains, held in the session's registry (graft.ChainGuard)
   // under the sfDir. The MinHash chain feeds 3 registered queries and the
@@ -472,19 +403,34 @@ object DocQueries extends QueryPack {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import graft.ChainGuard.frame
 
-  /** MinHash(32) + LSH(4 bands) candidate edges at est_jaccard >= 0.5.
-    * Signatures come from the per-row form (r16): no shingle explode or
-    * regroup exchange — the signature projection runs where the text is.
+  /** MinHash(32) + LSH(4 bands x 8 rows, candidate threshold ~0.84):
+    * near-dup pairs of `docs` with estimated similarity >= 0.5. One md5
+    * base hash per shingle fans out to 32 permutations arithmetically
+    * ((a*h+b) mod P31), and band buckets are the verbatim signature
+    * slices, so the ENTIRE pipeline — shingling, permutations, banding,
+    * candidate dedup, similarity estimate — replays in DuckDB
+    * ([[Dedup.oracleMinhashCtes]], [[Dedup.oracleLshCtes]]). Signatures
+    * come from the per-row form (r16): no shingle explode or regroup
+    * exchange — the signature projection runs where the text is.
+    * lshCandidates checkpoints the signature frame internally (consumed
+    * 3x); its blocks free with RDD GC — no cleanup here.
     */
+  private def lshPairs(docs: DataFrame): DataFrame =
+    Dedup.lshCandidates(
+        Dedup.minhashSigsPerRow(docs, "doc_id", "text", 3, 32), 4)
+      .filter(col("est_jaccard") >= 0.5)
+
+  /** [[lshPairs]] over the whole corpus. */
   private def lshEdges(s: SparkSession, dir: String): DataFrame =
-    frame(s, s"lsh_edges $dir") {
-      val sigs = Dedup.minhashSigsPerRow(
-        Tables(s, dir, "documents"), "doc_id", "text", 3, 32)
-      // lshCandidates checkpoints the signature frame internally
-      // (consumed 3x); its blocks free with RDD GC — no cleanup here
-      Dedup.lshCandidates(sigs, 4, sqlBuckets = true)
-        .filter(col("est_jaccard") >= 0.5)
-    }
+    frame(s, s"lsh_edges $dir") { lshPairs(Tables(s, dir, "documents")) }
+
+  /** Oracle of [[lshEdges]] and [[lshComponents]]: `edges` and `comp`
+    * (needs `WITH RECURSIVE`).
+    */
+  private def lshComponentsSql: String = s"""${Dedup.oracleMinhashCtes("")},
+      ${Dedup.oracleLshCtes("a.id < b.id")},
+      edges AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.5),
+      ${Dedup.oracleComponentsCtes}"""
 
   /** Connected-component labels over [[lshEdges]] (id, comp). */
   private def lshComponents(s: SparkSession, dir: String): DataFrame =
@@ -504,12 +450,17 @@ object DocQueries extends QueryPack {
         "doc_id", "text", 3), 0.5)
     }
 
+  /** Oracle of every shingle-sharing pair's Jaccard on the doc_id < 500
+    * slice (`sh`, `jac`): the truth [[allPairs05]] filters.
+    */
+  private def allPairsSql: String = s"""${Dedup.oracleShingleCtes(" WHERE doc_id < 500")},
+      ${Dedup.oracleJaccardCtes("a.id < b.id")}"""
+
   /** SimHash banded Hamming pairs at maxDist = 3. */
   private def simhashPairs3(s: SparkSession, dir: String): DataFrame =
     frame(s, s"simhash_pairs $dir") {
       Dedup.simhashHammingPairs(
-        Dedup.simhash(Tables(s, dir, "documents"), "doc_id", "text",
-          nBits = simhashBits, hashFn = Dedup.md5Hash60),
+        Dedup.simhash(Tables(s, dir, "documents"), "doc_id", "text"),
         nBands = shBands, bandBits = shBandBits, maxDist = 3)
     }
 
@@ -531,11 +482,8 @@ object DocQueries extends QueryPack {
   val lshQuality: GraftQuery = GraftQuery(
     "lsh_quality_report",
     (s, dir) => {
-      val cand = Dedup.lshCandidates(
-          Dedup.minhashSigsPerRow(
-            Tables(s, dir, "documents").filter(col("doc_id") < 500),
-            "doc_id", "text", 3, 32), 4, sqlBuckets = true)
-        .filter(col("est_jaccard") >= 0.5)
+      val cand = lshPairs(
+          Tables(s, dir, "documents").filter(col("doc_id") < 500))
         .select(col("id_a"), col("id_b"), lit(1L).as("c"))
       val truth = allPairs05(s, dir)
         .select(col("id_a"), col("id_b"), lit(1L).as("t"))
@@ -547,50 +495,11 @@ object DocQueries extends QueryPack {
           Q.r6(col("tp") * 1.0 / col("n_true")).as("rec"))
     },
     Some(s"""
-      WITH sh AS (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents WHERE doc_id < 500)),
-      base AS (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $permValues),
-      mh AS (
-        SELECT id, p, MIN((a * h + b) % 2147483647) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p),
-      bk AS (
-        SELECT id, p // 8 AS band,
-               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
-        FROM mh GROUP BY id, p // 8),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                               AND a.id < b.id),
-      est AS (
-        SELECT c.id_a, c.id_b,
-               SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0 AS ej
-        FROM cand c
-        JOIN mh ma ON ma.id = c.id_a
-        JOIN mh mb ON mb.id = c.id_b AND mb.p = ma.p
-        GROUP BY c.id_a, c.id_b),
-      candf AS (
-        SELECT id_a, id_b FROM est WHERE round(ej, 6) >= 0.5),
-      tsh AS (SELECT id, sh FROM sh),
-      tsz AS (SELECT id, COUNT(*) AS n FROM tsh GROUP BY id),
-      tint AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-        FROM tsh a JOIN tsh b ON a.sh = b.sh AND a.id < b.id
-        GROUP BY 1, 2),
-      truthf AS (
-        SELECT id_a, id_b
-        FROM tint
-        JOIN tsz sa ON sa.id = id_a
-        JOIN tsz sb ON sb.id = id_b
-        WHERE round(inter * 1.0 / (sa.n + sb.n - inter), 6) >= 0.5)
+      WITH ${Dedup.oracleMinhashCtes(" WHERE doc_id < 500")},
+      ${Dedup.oracleLshCtes("a.id < b.id")},
+      ${Dedup.oracleJaccardCtes("a.id < b.id")},
+      candf AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.5),
+      truthf AS (SELECT id_a, id_b FROM jac WHERE jaccard >= 0.5)
       SELECT nc.n_cand, nt.n_true, j.tp,
              round(j.tp * 1.0 / nc.n_cand, 6) AS prec,
              round(j.tp * 1.0 / nt.n_true, 6) AS rec
@@ -603,38 +512,10 @@ object DocQueries extends QueryPack {
     "minhash_lsh_candidates",
     (s, dir) => lshEdges(s, dir).orderBy("id_a", "id_b"),
     Some(s"""
-      WITH sh AS (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents)),
-      base AS (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $permValues),
-      mh AS (
-        SELECT id, p, MIN((a * h + b) % 2147483647) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p),
-      bk AS (
-        SELECT id, p // 8 AS band,
-               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
-        FROM mh GROUP BY id, p // 8),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                               AND a.id < b.id),
-      est AS (
-        SELECT c.id_a, c.id_b,
-               SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0 AS ej
-        FROM cand c
-        JOIN mh ma ON ma.id = c.id_a
-        JOIN mh mb ON mb.id = c.id_b AND mb.p = ma.p
-        GROUP BY c.id_a, c.id_b)
-      SELECT id_a, id_b, round(ej, 6) AS est_jaccard
-      FROM est WHERE round(ej, 6) >= 0.5 ORDER BY id_a, id_b"""))
+      WITH ${Dedup.oracleMinhashCtes("")},
+      ${Dedup.oracleLshCtes("a.id < b.id")}
+      SELECT id_a, id_b, est_jaccard
+      FROM est WHERE est_jaccard >= 0.5 ORDER BY id_a, id_b"""))
 
   /** MinHash ESTIMATOR calibration — the third leg of the dedup
     * evaluation layer (blocking quality: `lsh_quality_report`; ANN
@@ -696,37 +577,13 @@ object DocQueries extends QueryPack {
         .orderBy("matches")
     },
     Some(s"""
-      WITH sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents WHERE doc_id < 2000)),
-      base AS MATERIALIZED (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $permValues),
-      mh AS MATERIALIZED (
-        SELECT id, p, MIN((a * h + b) % 2147483647) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p),
-      sz AS (SELECT id, COUNT(*) AS n FROM sh GROUP BY id),
-      inter AS (
-        SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS inter
-        FROM sh a JOIN sh b ON b.id = a.id + 1 AND a.sh = b.sh
-        GROUP BY 1, 2),
-      ex AS (
-        SELECT id_a, id_b,
-               round(inter * 1.0 / (sa.n + sb.n - inter), 6) AS jaccard
-        FROM inter
-        JOIN sz sa ON sa.id = id_a
-        JOIN sz sb ON sb.id = id_b),
+      WITH ${Dedup.oracleMinhashCtes(" WHERE doc_id < 2000")},
+      ${Dedup.oracleJaccardCtes("b.id = a.id + 1")},
       mt AS (
         SELECT e.id_a, e.jaccard,
                CAST(SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT)
                  AS matches
-        FROM ex e
+        FROM jac e
         JOIN mh ma ON ma.id = e.id_a
         JOIN mh mb ON mb.id = e.id_b AND mb.p = ma.p
         GROUP BY e.id_a, e.id_b, e.jaccard)
@@ -751,44 +608,8 @@ object DocQueries extends QueryPack {
       .select(col("id"), col("comp").as("component"))
       .orderBy("id"),
     Some(s"""
-      WITH RECURSIVE sh AS (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents)),
-      base AS (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $permValues),
-      mh AS (
-        SELECT id, p, MIN((a * h + b) % 2147483647) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p),
-      bk AS (
-        SELECT id, p // 8 AS band,
-               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
-        FROM mh GROUP BY id, p // 8),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                               AND a.id < b.id),
-      est AS (
-        SELECT c.id_a, c.id_b,
-               SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0 AS ej
-        FROM cand c
-        JOIN mh ma ON ma.id = c.id_a
-        JOIN mh mb ON mb.id = c.id_b AND mb.p = ma.p
-        GROUP BY c.id_a, c.id_b),
-      edges AS (SELECT id_a, id_b FROM est WHERE round(ej, 6) >= 0.5),
-      sym AS (SELECT id_a AS s, id_b AS d FROM edges
-              UNION SELECT id_b, id_a FROM edges),
-      reach(id, r) AS (
-        SELECT DISTINCT s, s FROM sym
-        UNION
-        SELECT sym.d, reach.r FROM reach JOIN sym ON sym.s = reach.id)
-      SELECT id, MIN(r) AS component FROM reach GROUP BY id ORDER BY id"""))
+      WITH RECURSIVE $lshComponentsSql
+      SELECT id, component FROM comp ORDER BY id"""))
 
   /** SCALE-MODE near-dup components: star-reduced bucket-connectivity
     * CC ([[Dedup.lshBucketStarEdges]]) — one hub edge per bucket member
@@ -803,11 +624,8 @@ object DocQueries extends QueryPack {
     * (1/b)^(1/r)) is the similarity bar, the standard production
     * trade. `dedup_clusters_lsh` remains the verified-pair gate.
     */
-  val dedupComponentsBucket: GraftQuery = GraftQuery(
-    "dedup_components_bucket",
-    (s, dir) => bucketCc(s, dir, "bucket_star_edges",
-      Tables(s, dir, "documents")),
-    Some(bucketCcSql("")))
+  val dedupComponentsBucket: GraftQuery =
+    bucketCcQuery("dedup_components_bucket", "bucket_star_edges", "")
 
   /** Truth-slice twin of `dedup_components_bucket` for sf100
     * value-level evidence: the full oracle disk-killed DuckDB at 373 s /
@@ -830,11 +648,8 @@ object DocQueries extends QueryPack {
     * itself — hashing, banding, bucket-star reduction, min-label
     * propagation — at sf100 data characteristics.
     */
-  val dedupComponentsSlice: GraftQuery = GraftQuery(
-    "dedup_components_slice",
-    (s, dir) => bucketCc(s, dir, "bucket_star_edges_slice",
-      Tables(s, dir, "documents").filter(col("doc_id") % 100 === 7)),
-    Some(bucketCcSql(" WHERE doc_id % 100 = 7")))
+  val dedupComponentsSlice: GraftQuery = bucketCcQuery(
+    "dedup_components_slice", "bucket_star_edges_slice", "doc_id % 100 = 7")
 
   /** 10% truth slice of the bucket-CC operator (VERDICT r12 task 4):
     * viable now that the oracle's transitive-closure CTE — which
@@ -847,36 +662,119 @@ object DocQueries extends QueryPack {
     * duplicate mass makes the sf100 gate an order of magnitude more
     * representative of the real corpus structure.
     */
-  val dedupComponentsSlice10: GraftQuery = GraftQuery(
-    "dedup_components_slice10",
-    (s, dir) => bucketCc(s, dir, "bucket_star_edges_slice10",
-      Tables(s, dir, "documents").filter(col("doc_id") % 10 === 7)),
-    Some(bucketCcSql(" WHERE doc_id % 10 = 7")))
+  val dedupComponentsSlice10: GraftQuery = bucketCcQuery(
+    "dedup_components_slice10", "bucket_star_edges_slice10",
+    "doc_id % 10 = 7")
+
+  // A sliced query runs on the documents `pred` selects: "" for all of
+  // them, else one SQL predicate that both engines evaluate.
+  private def sliceDocs(s: SparkSession, dir: String, pred: String): DataFrame = {
+    val d = Tables(s, dir, "documents")
+    if (pred.isEmpty) d else d.filter(expr(pred))
+  }
+
+  private def sliceWhere(pred: String): String =
+    if (pred.isEmpty) "" else s" WHERE $pred"
 
   /** Memoized bucket-CC labels (id, comp) for a doc subset: star edges
     * (memoized under `memoKey`) then min-label propagation, memoized one
-    * level up so the keep/drop policy twins reuse the SAME component
-    * frame `dedup_components_bucket` computed instead of re-running the
+    * level up so the keep/drop policies reuse the SAME component frame
+    * the components query computed instead of re-running the
     * propagation loop per policy query.
     */
   private def bucketCcLabels(
       s: SparkSession, dir: String, memoKey: String,
-      docs: => DataFrame): DataFrame =
+      pred: String): DataFrame =
     frame(s, s"${memoKey}_cc $dir") {
       val edges = frame(s, s"$memoKey $dir") {
         Dedup.lshBucketStarEdges(
-          Dedup.minhashSigsPerRow(docs, "doc_id", "text", 3, 32),
-          4, sqlBuckets = true)
+          Dedup.minhashSigsPerRow(sliceDocs(s, dir, pred), "doc_id", "text", 3, 32),
+          4)
       }
       Dedup.connectedComponents(edges)
     }
 
-  private def bucketCc(
-      s: SparkSession, dir: String, memoKey: String,
-      docs: DataFrame): DataFrame =
-    bucketCcLabels(s, dir, memoKey, docs)
+  private def bucketCcQuery(
+      name: String, memoKey: String, pred: String): GraftQuery = GraftQuery(
+    name,
+    (s, dir) => bucketCcLabels(s, dir, memoKey, pred)
       .select(col("id"), col("comp").as("component"))
+      .orderBy("id"),
+    Some(s"""
+      ${bucketCcPrefixSql(sliceWhere(pred))}
+      SELECT id, component FROM comp ORDER BY id"""))
+
+  /** Clustered docs with their component and length:
+    * (id, component, n_chars), from component labels (id, comp).
+    */
+  private def members(labels: DataFrame, docs: DataFrame): DataFrame =
+    labels.select(col("id"), col("comp").as("component"))
+      .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
+
+  /** Oracle of [[members]], given `comp(id, component)`: `jd`. */
+  private def membersSql: String = """jd AS (SELECT c.id, c.component, d.n_chars
+             FROM comp c JOIN documents d ON d.doc_id = c.id)"""
+
+  /** The keep-longest drop list over [[members]]: keep = 1 for each
+    * component's longest member (n_chars desc, id tiebreak), 0 for the
+    * rest. Unclustered docs are implicitly kept and don't appear.
+    */
+  private def dropFlags(members: DataFrame): DataFrame = {
+    val w = Window.partitionBy("component")
+      .orderBy(desc("n_chars"), col("id"))
+    members
+      .withColumn("keep", when(row_number().over(w) === 1, 1L).otherwise(0L))
+      .select("id", "component", "n_chars", "keep")
       .orderBy("id")
+  }
+
+  /** Oracle of [[dropFlags]], given `comp(id, component)`. */
+  private def dropFlagsSql: String = s"""$membersSql
+      SELECT id, component, n_chars,
+             CAST(CASE WHEN row_number() OVER (PARTITION BY component
+                    ORDER BY n_chars DESC, id) = 1
+                  THEN 1 ELSE 0 END AS BIGINT) AS keep
+      FROM jd ORDER BY id"""
+
+  /** [[dropFlags]] over the memoized bucket-CC components. */
+  private def dropComponentsQuery(
+      name: String, memoKey: String, pred: String): GraftQuery = GraftQuery(
+    name,
+    (s, dir) => dropFlags(members(
+      bucketCcLabels(s, dir, memoKey, pred), sliceDocs(s, dir, pred))),
+    Some(s"""
+      ${bucketCcPrefixSql(sliceWhere(pred))},
+      $dropFlagsSql"""))
+
+  /** Keep-best over the memoized bucket-CC components: one row per
+    * component with its longest member (n_chars desc, id tiebreak) and
+    * the member count.
+    */
+  private def keepBestComponentsQuery(
+      name: String, memoKey: String, pred: String): GraftQuery = GraftQuery(
+    name,
+    (s, dir) => {
+      val w = Window.partitionBy("component")
+        .orderBy(desc("n_chars"), col("id"))
+      members(bucketCcLabels(s, dir, memoKey, pred), sliceDocs(s, dir, pred))
+        .withColumn("rk", row_number().over(w))
+        .withColumn("n_members",
+          count(lit(1)).over(Window.partitionBy("component")))
+        .filter(col("rk") === 1)
+        .select(col("component"), col("id").as("kept_doc_id"),
+          col("n_members"), col("n_chars").as("kept_len"))
+        .orderBy("component")
+    },
+    Some(s"""
+      ${bucketCcPrefixSql(sliceWhere(pred))},
+      $membersSql,
+      k AS (SELECT component, id, n_chars,
+                   row_number() OVER (PARTITION BY component
+                     ORDER BY n_chars DESC, id) AS rk,
+                   COUNT(*) OVER (PARTITION BY component) AS n_members
+            FROM jd)
+      SELECT component, id AS kept_doc_id, n_members, n_chars AS kept_len
+      FROM k WHERE rk = 1 ORDER BY component"""))
 
   /** One min-label-propagation round as a CTE: every vertex takes the
     * min of its own label and its neighbors' labels — the exact
@@ -897,7 +795,7 @@ object DocQueries extends QueryPack {
         GROUP BY v.id, v.lbl)"""
 
   // final + literal => compile-time constant, immune to object-val
-  // initialization order (the query vals above evaluate bucketCcSql
+  // initialization order (the query vals above evaluate bucketCcPrefixSql
   // during construction, before later plain vals are assigned).
   // 20 rounds: the r14 guard measured the sf100 slice10 graph converging
   // at EXACTLY depth 16 (the r13 value was tight, not comfortable), so
@@ -924,7 +822,7 @@ object DocQueries extends QueryPack {
       }.mkString(",\n               ")
 
   /** 4-band bucket rows (id, band, bucket) from the `wide` signature
-    * frame — bit-identical to Spark's sqlBuckets=true band strings.
+    * frame — bit-identical to Spark's band strings.
     */
   private def listMinhashBandSel: String = (0 until 4).map { b =>
     val cols = (0 until 8).map(j => s"CAST(m${b * 8 + j} AS VARCHAR)")
@@ -993,10 +891,6 @@ object DocQueries extends QueryPack {
                     ELSE lbl END AS component
         FROM l$ccRounds)"""
 
-  private def bucketCcSql(where: String): String = s"""
-      ${bucketCcPrefixSql(where)}
-      SELECT id, component FROM comp ORDER BY id"""
-
   /** SCALE-MODE dedup DECISION (VERDICT r13 task 1): the per-doc
     * keep/drop flags a production pipeline ships, composed over the
     * bucket-CC component labels instead of verified pairs. The
@@ -1010,30 +904,8 @@ object DocQueries extends QueryPack {
     * keep-policy tie-breaking matches `dedup_keep_best`/`dedup_drop_list`
     * exactly. Unclustered docs are implicitly kept and don't appear.
     */
-  val dedupDropComponents: GraftQuery = GraftQuery(
-    "dedup_drop_components",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val labels = bucketCcLabels(s, dir, "bucket_star_edges",
-        Tables(s, dir, "documents"))
-      val w = Window.partitionBy("component")
-        .orderBy(desc("n_chars"), col("id"))
-      labels.select(col("id"), col("comp").as("component"))
-        .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-        .withColumn("keep",
-          when(row_number().over(w) === 1, 1L).otherwise(0L))
-        .select("id", "component", "n_chars", "keep")
-        .orderBy("id")
-    },
-    Some(s"""
-      ${bucketCcPrefixSql("")},
-      jd AS (SELECT c.id, c.component, d.n_chars
-             FROM comp c JOIN documents d ON d.doc_id = c.id)
-      SELECT id, component, n_chars,
-             CAST(CASE WHEN row_number() OVER (PARTITION BY component
-                    ORDER BY n_chars DESC, id) = 1
-                  THEN 1 ELSE 0 END AS BIGINT) AS keep
-      FROM jd ORDER BY id"""))
+  val dedupDropComponents: GraftQuery = dropComponentsQuery(
+    "dedup_drop_components", "bucket_star_edges", "")
 
   /** Keep-BEST policy over the bucket-CC components — the scale-mode
     * twin of `dedup_keep_best` (whose verified-pair chain is the same
@@ -1042,35 +914,8 @@ object DocQueries extends QueryPack {
     * count. Same component frame as `dedup_drop_components` (memoized),
     * one argmax window over the clustered-doc set.
     */
-  val dedupKeepBestComponents: GraftQuery = GraftQuery(
-    "dedup_keep_best_components",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val labels = bucketCcLabels(s, dir, "bucket_star_edges",
-        Tables(s, dir, "documents"))
-      val m = labels.select(col("id"), col("comp").as("component"))
-        .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-      val w = Window.partitionBy("component")
-        .orderBy(desc("n_chars"), col("id"))
-      m.withColumn("rk", row_number().over(w))
-        .withColumn("n_members",
-          count(lit(1)).over(Window.partitionBy("component")))
-        .filter(col("rk") === 1)
-        .select(col("component"), col("id").as("kept_doc_id"),
-          col("n_members"), col("n_chars").as("kept_len"))
-        .orderBy("component")
-    },
-    Some(s"""
-      ${bucketCcPrefixSql("")},
-      jd AS (SELECT c.id, c.component, d.n_chars
-             FROM comp c JOIN documents d ON d.doc_id = c.id),
-      k AS (SELECT component, id, n_chars,
-                   row_number() OVER (PARTITION BY component
-                     ORDER BY n_chars DESC, id) AS rk,
-                   COUNT(*) OVER (PARTITION BY component) AS n_members
-            FROM jd)
-      SELECT component, id AS kept_doc_id, n_members, n_chars AS kept_len
-      FROM k WHERE rk = 1 ORDER BY component"""))
+  val dedupKeepBestComponents: GraftQuery = keepBestComponentsQuery(
+    "dedup_keep_best_components", "bucket_star_edges", "")
 
   /** 10% truth slice of `dedup_drop_components` for sf100 VALUE
     * evidence: the full-corpus replay is a measured DuckDB disk bound
@@ -1082,64 +927,17 @@ object DocQueries extends QueryPack {
     * argmax window + keep flags — is exercised verbatim. Shares the
     * memoized slice CC chain with `dedup_components_slice10`.
     */
-  val dedupDropComponentsSlice: GraftQuery = GraftQuery(
-    "dedup_drop_components_slice10",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") % 10 === 7)
-      val labels = bucketCcLabels(s, dir, "bucket_star_edges_slice10",
-        Tables(s, dir, "documents").filter(col("doc_id") % 10 === 7))
-      val w = Window.partitionBy("component")
-        .orderBy(desc("n_chars"), col("id"))
-      labels.select(col("id"), col("comp").as("component"))
-        .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-        .withColumn("keep",
-          when(row_number().over(w) === 1, 1L).otherwise(0L))
-        .select("id", "component", "n_chars", "keep")
-        .orderBy("id")
-    },
-    Some(s"""
-      ${bucketCcPrefixSql(" WHERE doc_id % 10 = 7")},
-      jd AS (SELECT c.id, c.component, d.n_chars
-             FROM comp c JOIN documents d ON d.doc_id = c.id)
-      SELECT id, component, n_chars,
-             CAST(CASE WHEN row_number() OVER (PARTITION BY component
-                    ORDER BY n_chars DESC, id) = 1
-                  THEN 1 ELSE 0 END AS BIGINT) AS keep
-      FROM jd ORDER BY id"""))
+  val dedupDropComponentsSlice: GraftQuery = dropComponentsQuery(
+    "dedup_drop_components_slice10", "bucket_star_edges_slice10",
+    "doc_id % 10 = 7")
 
   /** 10% truth slice of `dedup_keep_best_components` — same bound story
     * and induced-subgraph semantics as the drop-list slice above; one
     * winner row per sliced component.
     */
-  val dedupKeepBestComponentsSlice: GraftQuery = GraftQuery(
-    "dedup_keep_best_components_slice10",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents").filter(col("doc_id") % 10 === 7)
-      val labels = bucketCcLabels(s, dir, "bucket_star_edges_slice10",
-        Tables(s, dir, "documents").filter(col("doc_id") % 10 === 7))
-      val m = labels.select(col("id"), col("comp").as("component"))
-        .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-      val w = Window.partitionBy("component")
-        .orderBy(desc("n_chars"), col("id"))
-      m.withColumn("rk", row_number().over(w))
-        .withColumn("n_members",
-          count(lit(1)).over(Window.partitionBy("component")))
-        .filter(col("rk") === 1)
-        .select(col("component"), col("id").as("kept_doc_id"),
-          col("n_members"), col("n_chars").as("kept_len"))
-        .orderBy("component")
-    },
-    Some(s"""
-      ${bucketCcPrefixSql(" WHERE doc_id % 10 = 7")},
-      jd AS (SELECT c.id, c.component, d.n_chars
-             FROM comp c JOIN documents d ON d.doc_id = c.id),
-      k AS (SELECT component, id, n_chars,
-                   row_number() OVER (PARTITION BY component
-                     ORDER BY n_chars DESC, id) AS rk,
-                   COUNT(*) OVER (PARTITION BY component) AS n_members
-            FROM jd)
-      SELECT component, id AS kept_doc_id, n_members, n_chars AS kept_len
-      FROM k WHERE rk = 1 ORDER BY component"""))
+  val dedupKeepBestComponentsSlice: GraftQuery = keepBestComponentsQuery(
+    "dedup_keep_best_components_slice10", "bucket_star_edges_slice10",
+    "doc_id % 10 = 7")
 
   /** SCALE-MODE incremental ingest dedup (VERDICT r13 task 1): the daily
     * shard (doc_id % 10 = 0) deduped against the existing corpus with NO
@@ -1154,54 +952,52 @@ object DocQueries extends QueryPack {
     * sharing >= 1 bucket with the corpus, their union, and the clean
     * remainder admitted.
     */
-  val incrementalDedupComponents: GraftQuery = GraftQuery(
-    "incremental_dedup_components",
-    (s, dir) => {
-      val d = Tables(s, dir, "documents")
-      val isNew = col("doc_id") % 10 === 0
-      val newDocs = d.filter(isNew)
-      val corpus = d.filter(!isNew)
-      val exactIds = newDocs
-        .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
-        .join(corpus.select(md5(col("text").cast("binary")).as("fp"))
-          .distinct(), Seq("fp"), "left_semi")
-        .select("doc_id")
-      val sigsNew = Dedup.minhashSigsPerRow(newDocs, "doc_id", "text", 3, 32)
-      val sigsOld = Dedup.minhashSigsPerRow(corpus, "doc_id", "text", 3, 32)
-      val near = Dedup.lshBucketHitIds(sigsNew, sigsOld, 4,
-          sqlBuckets = true)
-        .withColumnRenamed("id", "doc_id")
-      // ONE labeled pass instead of four crossJoined aggregates: the old
-      // shape re-derived exactIds twice and scanned newDocs five times
-      // (each crossJoin branch is its own subtree). exactIds and near are
-      // distinct id sets by construction, so the left joins preserve
-      // cardinality and the flag sums equal the old per-frame counts;
-      // n_dup_docs = |exactIds ∪ near| is the count of rows with either
-      // flag (guide §1.2: don't compute things twice).
-      newDocs.select(col("doc_id"))
-        .join(exactIds.withColumn("__e", lit(1L)), Seq("doc_id"), "left")
-        .join(near.withColumn("__n", lit(1L)), Seq("doc_id"), "left")
-        .agg(
-          count(lit(1)).as("n_new"),
-          coalesce(sum(coalesce(col("__e"), lit(0L))), lit(0L))
-            .as("n_exact_dup"),
-          coalesce(sum(coalesce(col("__n"), lit(0L))), lit(0L))
-            .as("n_near_bucket"),
-          coalesce(sum(when(col("__e") === 1L || col("__n") === 1L, 1L)
-            .otherwise(0L)), lit(0L)).as("n_dup_docs"))
-        .select(col("n_new"), col("n_exact_dup"), col("n_near_bucket"),
-          col("n_dup_docs"),
-          (col("n_new") - col("n_dup_docs")).as("n_clean"))
-    },
-    Some(s"""
-      ${listMinhashBkSql("")},
-      cb AS MATERIALIZED (
-        SELECT DISTINCT band, bucket FROM bk WHERE id % 10 <> 0),
-      near AS MATERIALIZED (
-        SELECT DISTINCT id AS doc_id
-        FROM bk JOIN cb USING (band, bucket)
-        WHERE id % 10 = 0),
-      ex AS MATERIALIZED (
+  /** The daily-shard ingest summary of both incremental queries: the new
+    * shard (doc_id % 10 = 0) against the existing corpus — exact dups by
+    * full-text md5 semi-join, near dups as the distinct ids `near` finds
+    * from the (new, corpus) signature frames. One row: n_new,
+    * n_exact_dup, `nearName`, n_dup_docs, n_clean.
+    */
+  private def incrementalSummary(
+      s: SparkSession, dir: String, nearName: String)(
+      near: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val d = Tables(s, dir, "documents")
+    val isNew = col("doc_id") % 10 === 0
+    val newDocs = d.filter(isNew)
+    val corpus = d.filter(!isNew)
+    val exactIds = newDocs
+      .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
+      .join(corpus.select(md5(col("text").cast("binary")).as("fp"))
+        .distinct(), Seq("fp"), "left_semi")
+      .select("doc_id")
+    val nearIds = near(
+      Dedup.minhashSigsPerRow(newDocs, "doc_id", "text", 3, 32),
+      Dedup.minhashSigsPerRow(corpus, "doc_id", "text", 3, 32))
+    // ONE labeled pass instead of four crossJoined aggregates: the old
+    // shape re-derived exactIds twice and scanned newDocs five times
+    // (each crossJoin branch is its own subtree). exactIds and nearIds
+    // are distinct id sets by construction, so the left joins preserve
+    // cardinality and the flag sums equal the old per-frame counts;
+    // n_dup_docs = |exactIds ∪ nearIds| is the count of rows with either
+    // flag (guide §1.2: don't compute things twice).
+    newDocs.select(col("doc_id"))
+      .join(exactIds.withColumn("__e", lit(1L)), Seq("doc_id"), "left")
+      .join(nearIds.withColumn("__n", lit(1L)), Seq("doc_id"), "left")
+      .agg(
+        count(lit(1)).as("n_new"),
+        coalesce(sum(coalesce(col("__e"), lit(0L))), lit(0L))
+          .as("n_exact_dup"),
+        coalesce(sum(coalesce(col("__n"), lit(0L))), lit(0L))
+          .as(nearName),
+        coalesce(sum(when(col("__e") === 1L || col("__n") === 1L, 1L)
+          .otherwise(0L)), lit(0L)).as("n_dup_docs"))
+      .select(col("n_new"), col("n_exact_dup"), col(nearName),
+        col("n_dup_docs"),
+        (col("n_new") - col("n_dup_docs")).as("n_clean"))
+  }
+
+  /** Oracle tail of [[incrementalSummary]], given `near(doc_id)`. */
+  private def incrementalSummarySql(nearName: String): String = s"""ex AS MATERIALIZED (
         SELECT DISTINCT n.doc_id
         FROM documents n
         JOIN (SELECT DISTINCT md5(text) AS fp FROM documents
@@ -1211,10 +1007,25 @@ object DocQueries extends QueryPack {
         SELECT doc_id FROM ex UNION SELECT doc_id FROM near)
       SELECT (SELECT COUNT(*) FROM documents WHERE doc_id % 10 = 0) AS n_new,
              (SELECT COUNT(*) FROM ex) AS n_exact_dup,
-             (SELECT COUNT(*) FROM near) AS n_near_bucket,
+             (SELECT COUNT(*) FROM near) AS $nearName,
              (SELECT COUNT(*) FROM dup) AS n_dup_docs,
              (SELECT COUNT(*) FROM documents WHERE doc_id % 10 = 0)
-               - (SELECT COUNT(*) FROM dup) AS n_clean"""))
+               - (SELECT COUNT(*) FROM dup) AS n_clean"""
+
+  val incrementalDedupComponents: GraftQuery = GraftQuery(
+    "incremental_dedup_components",
+    (s, dir) => incrementalSummary(s, dir, "n_near_bucket") { (ns, os) =>
+      Dedup.lshBucketHitIds(ns, os, 4).withColumnRenamed("id", "doc_id")
+    },
+    Some(s"""
+      ${listMinhashBkSql("")},
+      cb AS MATERIALIZED (
+        SELECT DISTINCT band, bucket FROM bk WHERE id % 10 <> 0),
+      near AS MATERIALIZED (
+        SELECT DISTINCT id AS doc_id
+        FROM bk JOIN cb USING (band, bucket)
+        WHERE id % 10 = 0),
+      ${incrementalSummarySql("n_near_bucket")}"""))
 
   /** Keep-BEST dedup policy over the LSH near-dup clusters: each
     * component keeps its longest member (doc id as tiebreak) instead of
@@ -1244,52 +1055,15 @@ object DocQueries extends QueryPack {
         .orderBy("component")
     },
     Some(s"""
-      WITH RECURSIVE sh AS (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents)),
-      base AS (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $permValues),
-      mh AS (
-        SELECT id, p, MIN((a * h + b) % 2147483647) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p),
-      bk AS (
-        SELECT id, p // 8 AS band,
-               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
-        FROM mh GROUP BY id, p // 8),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b.id AS id_b
-        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                               AND a.id < b.id),
-      est AS (
-        SELECT c.id_a, c.id_b,
-               SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0 AS ej
-        FROM cand c
-        JOIN mh ma ON ma.id = c.id_a
-        JOIN mh mb ON mb.id = c.id_b AND mb.p = ma.p
-        GROUP BY c.id_a, c.id_b),
-      edges AS (SELECT id_a, id_b FROM est WHERE round(ej, 6) >= 0.5),
-      sym AS (SELECT id_a AS s, id_b AS d FROM edges
-              UNION SELECT id_b, id_a FROM edges),
-      reach(id, r) AS (
-        SELECT DISTINCT s, s FROM sym
-        UNION
-        SELECT sym.d, reach.r FROM reach JOIN sym ON sym.s = reach.id),
-      comp AS (SELECT id, MIN(r) AS comp FROM reach GROUP BY id),
-      mem AS (SELECT c.comp, c.id, length(d.text) AS len
+      WITH RECURSIVE $lshComponentsSql,
+      mem AS (SELECT c.component, c.id, length(d.text) AS len
               FROM comp c JOIN documents d ON d.doc_id = c.id),
-      k AS (SELECT comp, id, len,
-                   row_number() OVER (PARTITION BY comp
+      k AS (SELECT component, id, len,
+                   row_number() OVER (PARTITION BY component
                      ORDER BY len DESC, id) AS rk,
-                   COUNT(*) OVER (PARTITION BY comp) AS n_members
+                   COUNT(*) OVER (PARTITION BY component) AS n_members
             FROM mem)
-      SELECT comp AS component, id AS kept_doc_id, n_members,
+      SELECT component, id AS kept_doc_id, n_members,
              len AS kept_len
       FROM k WHERE rk = 1 ORDER BY component"""))
 
@@ -1297,30 +1071,7 @@ object DocQueries extends QueryPack {
     * LLM-batch construction step; the oracle replays the sequential
     * accumulate/reset scan as a recursive CTE over row_number.
     */
-  val packDocs: GraftQuery = GraftQuery(
-    "pack_greedy_docs",
-    (s, dir) => graft.text.Packing.packGreedy(
-        Tables(s, dir, "documents"), "lang", "doc_id",
-        TextOps.tokenCount(col("text")), budget = 512L)
-      .select(col("lang"), col("doc_id"), col("weight").as("n_tokens"),
-        col("pack"))
-      .orderBy("lang", "doc_id"),
-    Some("""
-      WITH RECURSIVE d AS (
-        SELECT lang, doc_id,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-               row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-        FROM documents),
-      p(lang, rn, doc_id, nt, pack, acc) AS (
-        SELECT lang, rn, doc_id, nt, CAST(0 AS BIGINT), nt
-        FROM d WHERE rn = 1
-        UNION ALL
-        SELECT d.lang, d.rn, d.doc_id, d.nt,
-               CASE WHEN p.acc + d.nt > 512 THEN p.pack + 1 ELSE p.pack END,
-               CASE WHEN p.acc + d.nt > 512 THEN d.nt ELSE p.acc + d.nt END
-        FROM p JOIN d ON d.lang = p.lang AND d.rn = p.rn + 1)
-      SELECT lang, doc_id, nt AS n_tokens, pack
-      FROM p ORDER BY lang, doc_id"""))
+  val packDocs: GraftQuery = packQuery("pack_greedy_docs", "")
 
   /** Truth slice of `pack_greedy_docs` for sf100 value evidence (VERDICT
     * r13 task 4): greedy packing scans each lang partition sequentially
@@ -1334,21 +1085,22 @@ object DocQueries extends QueryPack {
     * corpus is under 50k docs, so slice == full there (the small-sf
     * hash-parity these gates always carry).
     */
-  val packSlice: GraftQuery = GraftQuery(
-    "pack_greedy_slice",
+  val packSlice: GraftQuery = packQuery("pack_greedy_slice", "doc_id < 50000")
+
+  private def packQuery(name: String, pred: String): GraftQuery = GraftQuery(
+    name,
     (s, dir) => graft.text.Packing.packGreedy(
-        Tables(s, dir, "documents").filter(col("doc_id") < 50000),
-        "lang", "doc_id",
+        sliceDocs(s, dir, pred), "lang", "doc_id",
         TextOps.tokenCount(col("text")), budget = 512L)
       .select(col("lang"), col("doc_id"), col("weight").as("n_tokens"),
         col("pack"))
       .orderBy("lang", "doc_id"),
-    Some("""
+    Some(s"""
       WITH RECURSIVE d AS (
         SELECT lang, doc_id,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
                row_number() OVER (PARTITION BY lang ORDER BY doc_id) AS rn
-        FROM documents WHERE doc_id < 50000),
+        FROM documents${sliceWhere(pred)}),
       p(lang, rn, doc_id, nt, pack, acc) AS (
         SELECT lang, rn, doc_id, nt, CAST(0 AS BIGINT), nt
         FROM d WHERE rn = 1
@@ -1458,41 +1210,16 @@ object DocQueries extends QueryPack {
         ORDER BY doc_id"""))
   }
 
-  private val simhashBits = 60
-  private val simhashBitSums = (0 until simhashBits).map(i =>
-    s"SUM(CASE WHEN (h >> $i) & 1 = 1 THEN w ELSE -w END) AS s$i")
-    .mkString(",\n               ")
-  private val simhashAssemble = (0 until simhashBits).map(i =>
-    s"(CASE WHEN s$i > 0 THEN ${1L << i} ELSE 0 END)")
-    .mkString(" + ")
-
-  /** SimHash fingerprints — md5-based 60-bit variant, fully
-    * oracle-checked (bit-sum votes and fingerprint assembly replicated in
-    * SQL). Production default stays 63-bit xxhash64.
+  /** SimHash fingerprints — md5-based 60-bit, fully oracle-checked
+    * (bit-sum votes and fingerprint assembly replicated in SQL).
     */
   val simhashDocs: GraftQuery = GraftQuery(
     "simhash_docs",
-    (s, dir) => Dedup.simhash(
-        Tables(s, dir, "documents"), "doc_id", "text",
-        nBits = simhashBits, hashFn = Dedup.md5Hash60)
+    (s, dir) => Dedup.simhash(Tables(s, dir, "documents"), "doc_id", "text")
       .orderBy("id"),
     Some(s"""
-      WITH toks AS (
-        SELECT id, tok, COUNT(*) AS w
-        FROM (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS tok
-              FROM documents)
-        GROUP BY id, tok),
-      h AS (
-        SELECT id, w,
-               CAST(concat('0x', substring(md5(tok || '|0'), 1, 15))
-                    AS BIGINT) AS h
-        FROM toks),
-      b AS (
-        SELECT id,
-               $simhashBitSums
-        FROM h GROUP BY id)
-      SELECT id, $simhashAssemble AS simhash
-      FROM b ORDER BY id"""))
+      WITH ${Dedup.oracleSimhashCtes}
+      SELECT id, simhash FROM fp ORDER BY id"""))
 
   /** SimHash near-dup pairs at Hamming distance <= 3 via 4x15-bit band
     * blocking. Pigeonhole (maxDist < nBands) makes the banding LOSSLESS:
@@ -1503,85 +1230,32 @@ object DocQueries extends QueryPack {
     */
   private val shBands = 4
   private val shBandBits = 15
-  /** Shared oracle prefix: fingerprints -> bands -> verified candidate
-    * pairs (used by `simhash_hamming_pairs` and `dedup_drop_list`).
-    */
-  private val simhashCandSql = s"""toks AS MATERIALIZED (
-        SELECT id, tok, COUNT(*) AS w
-        FROM (SELECT doc_id AS id, unnest(string_split(text, ' ')) AS tok
-              FROM documents)
-        GROUP BY id, tok),
-      h AS (
-        SELECT id, w,
-               CAST(concat('0x', substring(md5(tok || '|0'), 1, 15))
-                    AS BIGINT) AS h
-        FROM toks),
-      b AS (
-        SELECT id,
-               $simhashBitSums
-        FROM h GROUP BY id),
-      sh AS MATERIALIZED (
-        SELECT id, $simhashAssemble AS simhash FROM b),
-      bands AS (
-        SELECT id, simhash, band,
-               (simhash >> (band * $shBandBits)) & ${(1L << shBandBits) - 1}
-                 AS bucket
-        FROM sh CROSS JOIN range(0, $shBands) r(band)),
-      cand AS (
-        SELECT DISTINCT a.id AS id_a, b2.id AS id_b,
-               a.simhash AS sa, b2.simhash AS sb
-        FROM bands a JOIN bands b2
-          ON a.band = b2.band AND a.bucket = b2.bucket AND a.id < b2.id)"""
   val simhashPairs: GraftQuery = GraftQuery(
     "simhash_hamming_pairs",
     (s, dir) => simhashPairs3(s, dir).orderBy("id_a", "id_b"),
     Some(s"""
-      WITH $simhashCandSql
-      SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS dist
-      FROM cand WHERE bit_count(xor(sa, sb)) <= 3
-      ORDER BY id_a, id_b"""))
+      WITH ${Dedup.oracleSimhashCtes},
+      ${Dedup.oracleHammingCtes(shBands, shBandBits, 3)}
+      SELECT id_a, id_b, dist FROM ham ORDER BY id_a, id_b"""))
 
   /** The dedup DECISION, end to end: SimHash hamming pairs as edges,
     * connected components, then one canonical survivor per cluster —
     * keep the longest document (n_chars desc, id tiebreak), drop the
-    * rest. keep=1 rows are the cluster representatives a pipeline
-    * retains; unclustered docs are implicitly kept and don't appear.
-    * Same bounded-window scale shape as `dedup_clusters_lsh` plus one
-    * per-cluster row_number — no new shuffle class.
+    * rest ([[dropFlags]]). Same bounded-window scale shape as
+    * `dedup_clusters_lsh` plus one per-cluster row_number — no new
+    * shuffle class.
     */
   val dedupDropList: GraftQuery = GraftQuery(
     "dedup_drop_list",
-    (s, dir) => {
-      val docs = Tables(s, dir, "documents")
-      val labels = Dedup.connectedComponents(
-        simhashPairs3(s, dir).select("id_a", "id_b"))
-      val w = Window.partitionBy("component")
-        .orderBy(desc("n_chars"), col("id"))
-      labels.select(col("id"), col("comp").as("component"))
-        .join(docs.select(col("doc_id").as("id"), col("n_chars")), Seq("id"))
-        .withColumn("keep",
-          when(row_number().over(w) === 1, 1L).otherwise(0L))
-        .select("id", "component", "n_chars", "keep")
-        .orderBy("id")
-    },
+    (s, dir) => dropFlags(members(
+      Dedup.connectedComponents(simhashPairs3(s, dir).select("id_a", "id_b")),
+      Tables(s, dir, "documents"))),
     Some(s"""
-      WITH RECURSIVE $simhashCandSql,
-      edges AS (
-        SELECT id_a, id_b FROM cand WHERE bit_count(xor(sa, sb)) <= 3),
-      sym AS (SELECT id_a AS s, id_b AS d FROM edges
-              UNION SELECT id_b, id_a FROM edges),
-      reach(id, r) AS (
-        SELECT DISTINCT s, s FROM sym
-        UNION
-        SELECT sym.d, reach.r FROM reach JOIN sym ON sym.s = reach.id),
-      comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id),
-      jd AS (SELECT c.id, c.component, d.n_chars
-             FROM comp c JOIN documents d ON d.doc_id = c.id)
-      SELECT id, component, n_chars,
-             CAST(CASE WHEN row_number() OVER (PARTITION BY component
-                    ORDER BY n_chars DESC, id) = 1
-                  THEN 1 ELSE 0 END AS BIGINT) AS keep
-      FROM jd ORDER BY id"""))
+      WITH RECURSIVE ${Dedup.oracleSimhashCtes},
+      ${Dedup.oracleHammingCtes(shBands, shBandBits, 3)},
+      edges AS (SELECT id_a, id_b FROM ham),
+      ${Dedup.oracleComponentsCtes},
+      $dropFlagsSql"""))
 
   /** Benchmark-contamination sweep: a FIXED protected eval set (every
     * 50th document among doc_id < 50000 — 1000 docs at sf>=0.1, and
@@ -1637,85 +1311,17 @@ object DocQueries extends QueryPack {
     */
   val incrementalDedup: GraftQuery = GraftQuery(
     "incremental_dedup_shard",
-    (s, dir) => {
-      val d = Tables(s, dir, "documents")
-      val isNew = col("doc_id") % 10 === 0
-      val newDocs = d.filter(isNew)
-      val corpus = d.filter(!isNew)
-      val exactIds = newDocs
-        .select(col("doc_id"), md5(col("text").cast("binary")).as("fp"))
-        .join(corpus.select(md5(col("text").cast("binary")).as("fp"))
-          .distinct(), Seq("fp"), "left_semi")
-        .select("doc_id")
-      val sigsNew = Dedup.minhashSigsPerRow(newDocs, "doc_id", "text", 3, 32)
-      val sigsOld = Dedup.minhashSigsPerRow(corpus, "doc_id", "text", 3, 32)
-      val near = Dedup.lshCandidatesAcross(sigsNew, sigsOld, 4,
-          sqlBuckets = true)
+    (s, dir) => incrementalSummary(s, dir, "n_near_dup") { (ns, os) =>
+      Dedup.lshCandidatesAcross(ns, os, 4)
         .filter(col("est_jaccard") >= 0.5)
         .select(col("id_a").as("doc_id")).distinct()
-      // ONE labeled pass instead of four crossJoined aggregates — same
-      // rewrite as incremental_dedup_components above: distinct id sets
-      // joined as flags, counts from one aggregation.
-      newDocs.select(col("doc_id"))
-        .join(exactIds.withColumn("__e", lit(1L)), Seq("doc_id"), "left")
-        .join(near.withColumn("__n", lit(1L)), Seq("doc_id"), "left")
-        .agg(
-          count(lit(1)).as("n_new"),
-          coalesce(sum(coalesce(col("__e"), lit(0L))), lit(0L))
-            .as("n_exact_dup"),
-          coalesce(sum(coalesce(col("__n"), lit(0L))), lit(0L))
-            .as("n_near_dup"),
-          coalesce(sum(when(col("__e") === 1L || col("__n") === 1L, 1L)
-            .otherwise(0L)), lit(0L)).as("n_dup_docs"))
-        .select(col("n_new"), col("n_exact_dup"), col("n_near_dup"),
-          col("n_dup_docs"),
-          (col("n_new") - col("n_dup_docs")).as("n_clean"))
     },
     Some(s"""
-      WITH sh AS MATERIALIZED (
-        SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents)),
-      base AS MATERIALIZED (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $permValues),
-      mh AS MATERIALIZED (
-        SELECT id, p, MIN((a * h + b) % 2147483647) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p),
-      bk AS MATERIALIZED (
-        SELECT id, p // 8 AS band,
-               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
-        FROM mh GROUP BY id, p // 8),
-      cand AS MATERIALIZED (
-        SELECT DISTINCT a.id AS ia, b.id AS ib
-        FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-        WHERE a.id % 10 = 0 AND b.id % 10 != 0),
-      est AS MATERIALIZED (
-        SELECT c.ia, c.ib,
-               SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0 AS ej
-        FROM cand c
-        JOIN mh ma ON ma.id = c.ia
-        JOIN mh mb ON mb.id = c.ib AND mb.p = ma.p
-        GROUP BY c.ia, c.ib),
+      WITH ${Dedup.oracleMinhashCtes("")},
+      ${Dedup.oracleLshCtes("a.id % 10 = 0 AND b.id % 10 != 0")},
       near AS MATERIALIZED (
-        SELECT DISTINCT ia AS doc_id FROM est WHERE round(ej, 6) >= 0.5),
-      ex AS MATERIALIZED (
-        SELECT DISTINCT n.doc_id
-        FROM documents n JOIN documents o ON md5(n.text) = md5(o.text)
-        WHERE n.doc_id % 10 = 0 AND o.doc_id % 10 != 0),
-      dup AS MATERIALIZED (
-        SELECT doc_id FROM ex UNION SELECT doc_id FROM near)
-      SELECT (SELECT COUNT(*) FROM documents WHERE doc_id % 10 = 0) AS n_new,
-             (SELECT COUNT(*) FROM ex) AS n_exact_dup,
-             (SELECT COUNT(*) FROM near) AS n_near_dup,
-             (SELECT COUNT(*) FROM dup) AS n_dup_docs,
-             (SELECT COUNT(*) FROM documents WHERE doc_id % 10 = 0)
-               - (SELECT COUNT(*) FROM dup) AS n_clean"""))
+        SELECT DISTINCT id_a AS doc_id FROM est WHERE est_jaccard >= 0.5),
+      ${incrementalSummarySql("n_near_dup")}"""))
 
   /** Two-phase decontamination prefilter (graft.sketch.BloomFilter): the
     * protected benchmark trigram set compressed to a <= m-row Bloom

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{GraftQuery, QueryPack, Tables}
@@ -11,42 +12,83 @@ import graft.graph.{Bfs, KCore, LabelProp, PageRank, Triangles}
   */
 object GraphQueries extends QueryPack {
 
-  /** PageRank over the nation-level trade graph: a directed edge
-    * customer-nation -> supplier-nation for every distinct trading
-    * relationship observed in lineitem x orders. The big fact-fact join
-    * shuffles once on orderkey with both dimension sides broadcast; the
-    * graph itself (<= 25 nodes) is tiny, so the iterations run on a
-    * vector dwarfed by the scan — exactly the shape a 100 TB run has
-    * (edges distilled once, then cheap iterations). Integer micro-unit
-    * arithmetic makes all 5 iterations hash-replayable in DuckDB.
+  /** The nation trade graph every query here reads: one directed edge
+    * customer-nation -> supplier-nation per trading pair observed in
+    * lineitem x orders, self-loops dropped, weighted by its order-line
+    * count `w`. The big fact-fact join shuffles once on orderkey with
+    * both dimension sides broadcast; the result is at most 25·24 rows on
+    * full-lineitem lineage, so it is materialized once (r17: the
+    * consumers read it several times — `tot` and both sides of an
+    * undirected union — and each read would re-run the join).
     */
-  val nationPageRank: GraftQuery = GraftQuery(
-    "pagerank_nation_trade",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val edges = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .select(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-      val ranks = PageRank.pageRankMicro(edges, "src", "dst", iters = 5)
-      val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
-      ranks
-        .join(broadcast(nation), ranks("id") === nation("n_nationkey"))
-        .select(col("n_name").as("nation"), col("rank_micro"))
-        .orderBy(desc("rank_micro"), col("nation"))
-    },
-    Some(s"""
-      WITH e AS MATERIALIZED (
-        SELECT DISTINCT c.c_nationkey AS src, s.s_nationkey AS dst
+  private def tradePairs(s: SparkSession, dir: String): DataFrame = {
+    val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
+    val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
+    val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
+    val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
+    li.join(ord, li("l_orderkey") === ord("o_orderkey"))
+      .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
+      .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
+      .filter(col("c_nationkey") =!= col("s_nationkey"))
+      .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
+      .agg(count(lit(1)).as("w"))
+      .localCheckpoint()
+  }
+
+  /** Oracle of [[tradePairs]]: `pw(src, dst, w)`. */
+  private def tradePairsSql: String = """pw AS MATERIALIZED (
+        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
         FROM lineitem l
         JOIN orders o ON l.l_orderkey = o.o_orderkey
         JOIN customer c ON o.o_custkey = c.c_custkey
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey),
+        WHERE c.c_nationkey <> s.s_nationkey
+        GROUP BY c.c_nationkey, s.s_nationkey)"""
+
+  /** The above-average trade graph: the (src, dst) pairs whose weight is
+    * strictly above the mean — a scale-invariant cut, `w * n_pairs >
+    * total_w` in exact integers.
+    */
+  private def strongTrade(s: SparkSession, dir: String): DataFrame = {
+    val pairW = tradePairs(s, dir)
+    val tot = pairW.agg(sum("w").as("tw"), count(lit(1)).as("np"))
+    pairW.crossJoin(broadcast(tot))
+      .filter(col("w") * col("np") > col("tw"))
+      .select("src", "dst")
+  }
+
+  /** Oracle of [[strongTrade]]: `pw` and `raw(src, dst)`. */
+  private def strongTradeSql: String = s"""$tradePairsSql,
+      tot AS (SELECT SUM(w) AS tw, COUNT(*) AS np FROM pw),
+      raw AS (SELECT src, dst FROM pw, tot WHERE w * np > tw)"""
+
+  /** A per-nation graph result keyed by nation id `id`, as
+    * (nation name `nation`, `value`).
+    */
+  private def named(
+      s: SparkSession, dir: String, byId: DataFrame,
+      value: String): DataFrame = {
+    val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
+    byId.join(broadcast(nation), byId("id") === nation("n_nationkey"))
+      .select(col("n_name").as("nation"), col(value))
+  }
+
+  /** PageRank over the nation-level trade graph ([[tradePairs]];
+    * `pageRankMicro` drops the weights and any duplicate). The graph
+    * (<= 25 nodes) is tiny, so the iterations run on a vector dwarfed by
+    * the scan — exactly the shape a 100 TB run has (edges distilled
+    * once, then cheap iterations). Integer micro-unit arithmetic makes
+    * all 5 iterations hash-replayable in DuckDB.
+    */
+  val nationPageRank: GraftQuery = GraftQuery(
+    "pagerank_nation_trade",
+    (s, dir) => named(s, dir,
+        PageRank.pageRankMicro(tradePairs(s, dir), "src", "dst", iters = 5),
+        "rank_micro")
+      .orderBy(desc("rank_micro"), col("nation")),
+    Some(s"""
+      WITH $tradePairsSql,
+      e AS (SELECT src, dst FROM pw),
       ${PageRank.oracleCtes(iters = 5)}
       SELECT nn.n_name AS nation, r5.r AS rank_micro
       FROM r5 JOIN nation nn ON nn.n_nationkey = r5.id
@@ -61,44 +103,12 @@ object GraphQueries extends QueryPack {
     */
   val nationTriangles: GraftQuery = GraftQuery(
     "triangles_nation_trade",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val pairW = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        // ≤ 25·24 rows on full-lineitem lineage, consumed by tot AND both
-        // union sides of the undirected edge build — materialize once
-        // (r17; the adamic-adar fix, guide §3.3)
-        .localCheckpoint()
-      val tot = pairW.agg(
-        sum("w").as("tw"), count(lit(1)).as("np"))
-      val strong = pairW.crossJoin(broadcast(tot))
-        .filter(col("w") * col("np") > col("tw"))
-        .select("src", "dst")
-      val pvt = Triangles.perVertexTriangles(strong, "src", "dst")
-      val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
-      pvt.join(broadcast(nation), pvt("id") === nation("n_nationkey"))
-        .select(col("n_name").as("nation"), col("n_triangles"))
-        .orderBy("nation")
-    },
+    (s, dir) => named(s, dir,
+        Triangles.perVertexTriangles(strongTrade(s, dir), "src", "dst"),
+        "n_triangles")
+      .orderBy("nation"),
     Some(s"""
-      WITH pw AS MATERIALIZED (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY c.c_nationkey, s.s_nationkey),
-      tot AS (SELECT SUM(w) AS tw, COUNT(*) AS np FROM pw),
-      raw AS (SELECT src, dst FROM pw, tot WHERE w * np > tw),
+      WITH $strongTradeSql,
       ${Triangles.oracleCtes}
       SELECT nn.n_name AS nation, pvt.n_triangles
       FROM pvt JOIN nation nn ON nn.n_nationkey = pvt.id
@@ -110,36 +120,14 @@ object GraphQueries extends QueryPack {
     */
   val nationPageRankWeighted: GraftQuery = GraftQuery(
     "pagerank_nation_weighted",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val edges = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-      val ranks = PageRank.pageRankMicroWeighted(
-        edges, "src", "dst", "w", iters = 5)
-      val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
-      ranks
-        .join(broadcast(nation), ranks("id") === nation("n_nationkey"))
-        .select(col("n_name").as("nation"), col("rank_micro"))
-        .orderBy(desc("rank_micro"), col("nation"))
-    },
+    (s, dir) => named(s, dir,
+        PageRank.pageRankMicroWeighted(
+          tradePairs(s, dir), "src", "dst", "w", iters = 5),
+        "rank_micro")
+      .orderBy(desc("rank_micro"), col("nation")),
     Some(s"""
-      WITH e AS MATERIALIZED (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst,
-               COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY c.c_nationkey, s.s_nationkey),
+      WITH $tradePairsSql,
+      e AS (SELECT src, dst, w FROM pw),
       ${PageRank.oracleCtesWeighted(iters = 5)}
       SELECT nn.n_name AS nation, r5.r AS rank_micro
       FROM r5 JOIN nation nn ON nn.n_nationkey = r5.id
@@ -153,40 +141,11 @@ object GraphQueries extends QueryPack {
     */
   val nationKCore: GraftQuery = GraftQuery(
     "kcore_nation_trade",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val pairW = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint() // see triangles above (r17)
-      val tot = pairW.agg(sum("w").as("tw"), count(lit(1)).as("np"))
-      val strong = pairW.crossJoin(broadcast(tot))
-        .filter(col("w") * col("np") > col("tw"))
-        .select("src", "dst")
-      val core = KCore.kCoreVertices(strong, "src", "dst", k = 8)
-      val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
-      core.join(broadcast(nation), core("id") === nation("n_nationkey"))
-        .select(col("n_name").as("nation"), col("deg"))
-        .orderBy("nation")
-    },
+    (s, dir) => named(s, dir,
+        KCore.kCoreVertices(strongTrade(s, dir), "src", "dst", k = 8), "deg")
+      .orderBy("nation"),
     Some(s"""
-      WITH pw AS MATERIALIZED (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY c.c_nationkey, s.s_nationkey),
-      tot AS (SELECT SUM(w) AS tw, COUNT(*) AS np FROM pw),
-      raw AS (SELECT src, dst FROM pw, tot WHERE w * np > tw),
+      WITH $strongTradeSql,
       ${KCore.oracleCtes(k = 8)}
       SELECT nn.n_name AS nation, core.deg
       FROM core JOIN nation nn ON nn.n_nationkey = core.id
@@ -199,40 +158,12 @@ object GraphQueries extends QueryPack {
     */
   val nationBfs: GraftQuery = GraftQuery(
     "bfs_hops_nation_trade",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val pairW = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        .localCheckpoint() // see triangles above (r17)
-      val tot = pairW.agg(sum("w").as("tw"), count(lit(1)).as("np"))
-      val strong = pairW.crossJoin(broadcast(tot))
-        .filter(col("w") * col("np") > col("tw"))
-        .select("src", "dst")
-      val hops = Bfs.hopsFromMin(strong, "src", "dst")
-      val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
-      hops.join(broadcast(nation), hops("id") === nation("n_nationkey"))
-        .select(col("n_name").as("nation"), col("hop"))
-        .orderBy("hop", "nation")
-    },
+    (s, dir) => named(s, dir,
+        Bfs.hopsFromMin(strongTrade(s, dir), "src", "dst"), "hop")
+      .orderBy("hop", "nation"),
     Some(s"""
-      WITH pw AS MATERIALIZED (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY c.c_nationkey, s.s_nationkey),
-      tot AS (SELECT SUM(w) AS tw, COUNT(*) AS np FROM pw),
-      e AS MATERIALIZED (SELECT src, dst FROM pw, tot WHERE w * np > tw),
+      WITH $strongTradeSql,
+      e AS MATERIALIZED (SELECT src, dst FROM raw),
       ${Bfs.oracleCtes()}
       SELECT nn.n_name AS nation, b.hop
       FROM b${Bfs.DefaultRounds} b
@@ -249,37 +180,12 @@ object GraphQueries extends QueryPack {
     */
   val nationCommunities: GraftQuery = GraftQuery(
     "label_prop_communities",
-    (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val pairW = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        // LabelProp's symmetrization references the edge frame twice
-        // before its own checkpoint — materialize the ≤ 25·24-row frame
-        // once here (r17; same class as above)
-        .localCheckpoint()
-      val comm = LabelProp.propagate(pairW, "src", "dst", "w", iters = 4)
-      val nation = Tables(s, dir, "nation").select("n_nationkey", "n_name")
-      comm.join(broadcast(nation), comm("id") === nation("n_nationkey"))
-        .select(col("n_name").as("nation"), col("community"))
-        .orderBy("nation")
-    },
+    (s, dir) => named(s, dir,
+        LabelProp.propagate(tradePairs(s, dir), "src", "dst", "w", iters = 4),
+        "community")
+      .orderBy("nation"),
     Some(s"""
-      WITH pw AS MATERIALIZED (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY c.c_nationkey, s.s_nationkey),
+      WITH $tradePairsSql,
       sym AS MATERIALIZED (
         SELECT s, d, SUM(w) AS w FROM (
           SELECT src AS s, dst AS d, w FROM pw
@@ -304,27 +210,7 @@ object GraphQueries extends QueryPack {
   val nationAdamicAdar: GraftQuery = GraftQuery(
     "adamic_adar_trade_links",
     (s, dir) => {
-      val li = Tables(s, dir, "lineitem").select("l_orderkey", "l_suppkey")
-      val ord = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      val cust = Tables(s, dir, "customer").select("c_custkey", "c_nationkey")
-      val supp = Tables(s, dir, "supplier").select("s_suppkey", "s_nationkey")
-      val pairW = li
-        .join(ord, li("l_orderkey") === ord("o_orderkey"))
-        .join(broadcast(cust), ord("o_custkey") === cust("c_custkey"))
-        .join(broadcast(supp), li("l_suppkey") === supp("s_suppkey"))
-        .filter(col("c_nationkey") =!= col("s_nationkey"))
-        .groupBy(col("c_nationkey").as("src"), col("s_nationkey").as("dst"))
-        .agg(count(lit(1)).as("w"))
-        // ≤ 25·24 rows, but its lineage is the full lineitem⨝orders join;
-        // it feeds tot AND both union sides of `und`, so without the
-        // materialization the heavy subtree executes 3× (r17 plan: 92
-        // Exchanges; guide §2.4 / §3.3 duplicated-subtree truncation —
-        // the LabelProp edge pattern)
-        .localCheckpoint()
-      val tot = pairW.agg(sum("w").as("tw"), count(lit(1)).as("np"))
-      val strong = pairW.crossJoin(broadcast(tot))
-        .filter(col("w") * col("np") > col("tw"))
-        .select("src", "dst")
+      val strong = strongTrade(s, dir)
       val und = strong.select(col("src").as("a"), col("dst").as("b"))
         .unionByName(strong.select(col("dst").as("a"), col("src").as("b")))
         .distinct()
@@ -355,17 +241,8 @@ object GraphQueries extends QueryPack {
           col("aa_micro"))
         .orderBy(desc("aa_micro"), col("nation_a"), col("nation_b"))
     },
-    Some("""
-      WITH pw AS MATERIALIZED (
-        SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*) AS w
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        WHERE c.c_nationkey <> s.s_nationkey
-        GROUP BY c.c_nationkey, s.s_nationkey),
-      tot AS (SELECT SUM(w) AS tw, COUNT(*) AS np FROM pw),
-      raw AS (SELECT src, dst FROM pw, tot WHERE w * np > tw),
+    Some(s"""
+      WITH $strongTradeSql,
       und AS (
         SELECT DISTINCT a, b FROM (
           SELECT src AS a, dst AS b FROM raw

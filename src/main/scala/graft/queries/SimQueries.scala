@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{GraftQuery, Q, QueryPack, Tables}
 import graft.sim.Similarity
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity-search queries. Brute-force cosine is
@@ -13,26 +14,29 @@ import org.apache.spark.sql.functions._
   */
 object SimQueries extends QueryPack {
 
-  private val cosineTopSql = """
-      WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                    CAST(unnest(embedding) AS DOUBLE) AS v
-             FROM embeddings WHERE vec_id <> 0),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv),
-      top AS (SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-              FROM agg, nq
-              ORDER BY cos DESC, vec_id LIMIT 10)"""
+  // Oracle fragments shared by the ranking queries below; every ranking
+  // is against stored vector 0 with k = 10. The fragments themselves are
+  // the `Similarity` replays of the operators.
+  private def probeSql: String = Similarity.oracleProbeCtes(0L)
+
+  /** `name(vec_id, cos)`: the top 10 of the vectors in `from` by cosine
+    * to vector 0 (needs [[probeSql]]).
+    */
+  private def topSql(name: String, from: String): String = s"""${Similarity.oracleCosineCtes(s"${name}_sc", from)},
+      $name AS (${Similarity.oracleTopKSql(s"${name}_sc", 10)})"""
+
+  /** [[topSql]] over every vector but 0: the exact top 10. */
+  private def exactTopSql(name: String): String =
+    topSql(name, "embeddings WHERE vec_id <> 0")
 
   val cosineTopK: GraftQuery = GraftQuery(
     "cosine_topk_vec0",
     (s, dir) => Similarity.cosineTopK(
       Tables(s, dir, "embeddings"), "vec_id", "embedding", 0L, 10),
-    Some(s"$cosineTopSql SELECT vec_id, cos FROM top"))
+    Some(s"""
+      WITH $probeSql,
+      ${exactTopSql("top")}
+      SELECT vec_id, cos FROM top"""))
 
   /** kNN classification: majority label among the exact top-10. */
   val knnVote: GraftQuery = GraftQuery(
@@ -45,7 +49,9 @@ object SimQueries extends QueryPack {
         .orderBy(desc("n"), col("label"))
         .limit(1)
     },
-    Some(s"""$cosineTopSql
+    Some(s"""
+      WITH $probeSql,
+      ${exactTopSql("top")}
       SELECT label, COUNT(*) AS n
       FROM top JOIN embeddings USING (vec_id)
       GROUP BY label ORDER BY n DESC, label LIMIT 1"""))
@@ -74,24 +80,22 @@ object SimQueries extends QueryPack {
       Tables(s, dir, "embeddings"), "vec_id", "embedding", 0.4,
       nBands = ndBands, planesPerBand = ndPlanes),
     Some(s"""
-      WITH bk AS ($bandBucketSql),
-      cand AS (SELECT DISTINCT a.vec_id AS ia, b2.vec_id AS ib
-               FROM bk a JOIN bk b2
-                 ON a.band = b2.band AND a.bucket = b2.bucket
-                    AND a.vec_id < b2.vec_id),
-      v AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings),
-      n AS (SELECT vec_id, SUM(x * x) AS nr FROM v GROUP BY vec_id),
-      d AS (SELECT ia, ib, SUM(va.x * vb.x) AS dot
-            FROM cand JOIN v va ON va.vec_id = ia
-                      JOIN v vb ON vb.vec_id = ib AND va.pos = vb.pos
-            GROUP BY ia, ib),
-      c AS (SELECT ia AS id_a, ib AS id_b,
-                   round(dot / (sqrt(na.nr) * sqrt(nb.nr)), 6) AS cos
-            FROM d JOIN n na ON na.vec_id = ia JOIN n nb ON nb.vec_id = ib)
+      WITH ${Similarity.oracleBandedCtes(bandBucketSql, "embeddings")}
       SELECT id_a, id_b, cos FROM c WHERE cos >= 0.4
       ORDER BY id_a, id_b"""))
+
+  /** Given the banded pairs `c`: `dropped(vec_id)`, every vector with a
+    * lower-id near-dup at cos >= 0.4.
+    */
+  private def droppedSql: String =
+    "dropped AS (SELECT DISTINCT id_b AS vec_id FROM c WHERE cos >= 0.4)"
+
+  /** Given the banded pairs `c`: the keep list of the vectors in `from`. */
+  private def keepListSql(from: String): String = s"""$droppedSql
+      SELECT e.vec_id, e.label
+      FROM (SELECT vec_id, label FROM $from) e
+      ANTI JOIN dropped USING (vec_id)
+      ORDER BY e.vec_id"""
 
   /** SemDeDup gate: the keep-list after dropping every vector with a
     * lower-id near-duplicate among its sign-LSH candidates — the
@@ -106,26 +110,8 @@ object SimQueries extends QueryPack {
       .select("vec_id", "label")
       .orderBy("vec_id"),
     Some(s"""
-      WITH bk AS ($bandBucketSql),
-      cand AS (SELECT DISTINCT a.vec_id AS ia, b2.vec_id AS ib
-               FROM bk a JOIN bk b2
-                 ON a.band = b2.band AND a.bucket = b2.bucket
-                    AND a.vec_id < b2.vec_id),
-      v AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings),
-      n AS (SELECT vec_id, SUM(x * x) AS nr FROM v GROUP BY vec_id),
-      d AS (SELECT ia, ib, SUM(va.x * vb.x) AS dot
-            FROM cand JOIN v va ON va.vec_id = ia
-                      JOIN v vb ON vb.vec_id = ib AND va.pos = vb.pos
-            GROUP BY ia, ib),
-      dropped AS (SELECT DISTINCT ib AS vec_id
-                  FROM d JOIN n na ON na.vec_id = ia
-                         JOIN n nb ON nb.vec_id = ib
-                  WHERE round(dot / (sqrt(na.nr) * sqrt(nb.nr)), 6) >= 0.4)
-      SELECT e.vec_id, e.label
-      FROM embeddings e ANTI JOIN dropped USING (vec_id)
-      ORDER BY e.vec_id"""))
+      WITH ${Similarity.oracleBandedCtes(bandBucketSql, "embeddings")},
+      ${keepListSql("embeddings")}"""))
 
   // --------------------------------------------------------------------
   // Seeded random-hyperplane LSH, fully oracle-checked: the hyperplanes
@@ -168,22 +154,7 @@ object SimQueries extends QueryPack {
       nBands = ndLshBands, planesPerBand = ndLshPlanesPerBand, dim = 64,
       seed = 42),
     Some(s"""
-      WITH bk AS MATERIALIZED ($ndLshBucketSql),
-      cand AS (SELECT DISTINCT a.vec_id AS ia, b2.vec_id AS ib
-               FROM bk a JOIN bk b2
-                 ON a.band = b2.band AND a.bucket = b2.bucket
-                    AND a.vec_id < b2.vec_id),
-      v AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings),
-      n AS (SELECT vec_id, SUM(x * x) AS nr FROM v GROUP BY vec_id),
-      d AS (SELECT ia, ib, SUM(va.x * vb.x) AS dot
-            FROM cand JOIN v va ON va.vec_id = ia
-                      JOIN v vb ON vb.vec_id = ib AND va.pos = vb.pos
-            GROUP BY ia, ib),
-      c AS (SELECT ia AS id_a, ib AS id_b,
-                   round(dot / (sqrt(na.nr) * sqrt(nb.nr)), 6) AS cos
-            FROM d JOIN n na ON na.vec_id = ia JOIN n nb ON nb.vec_id = ib)
+      WITH ${Similarity.oracleBandedCtes(ndLshBucketSql, "embeddings")}
       SELECT id_a, id_b, cos FROM c WHERE cos >= 0.4
       ORDER BY id_a, id_b"""))
 
@@ -219,30 +190,18 @@ object SimQueries extends QueryPack {
       s"FROM embeddings, pp$where"
   }.mkString(" UNION ALL ")
 
-  private def scNearDupSql(where: String): String = s"""
-      WITH pp AS (
+  /** The scaled banded pairs `c` over `embeddings$where`. */
+  private def scBandedSql(where: String): String = s"""pp AS (
         SELECT LEAST(GREATEST(
                  CASE WHEN q <= 1 THEN 0
                       ELSE length(printf('%b', q - 1)) END, $scMinP),
                $scMaxP) AS p
         FROM (SELECT (COUNT(*) + ${scTarget - 1}) // $scTarget AS q
               FROM embeddings$where)),
-      bk AS MATERIALIZED (${scBucketSql(where)}),
-      cand AS (SELECT DISTINCT a.vec_id AS ia, b2.vec_id AS ib
-               FROM bk a JOIN bk b2
-                 ON a.band = b2.band AND a.bucket = b2.bucket
-                    AND a.vec_id < b2.vec_id),
-      v AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings$where),
-      n AS (SELECT vec_id, SUM(x * x) AS nr FROM v GROUP BY vec_id),
-      d AS (SELECT ia, ib, SUM(va.x * vb.x) AS dot
-            FROM cand JOIN v va ON va.vec_id = ia
-                      JOIN v vb ON vb.vec_id = ib AND va.pos = vb.pos
-            GROUP BY ia, ib),
-      c AS (SELECT ia AS id_a, ib AS id_b,
-                   round(dot / (sqrt(na.nr) * sqrt(nb.nr)), 6) AS cos
-            FROM d JOIN n na ON na.vec_id = ia JOIN n nb ON nb.vec_id = ib)
+      ${Similarity.oracleBandedCtes(scBucketSql(where), s"embeddings$where")}"""
+
+  private def scNearDupSql(where: String): String = s"""
+      WITH ${scBandedSql(where)}
       SELECT id_a, id_b, cos FROM c WHERE cos >= 0.4
       ORDER BY id_a, id_b"""
 
@@ -251,7 +210,7 @@ object SimQueries extends QueryPack {
     * COUNT(*) over the same filter), buckets from the static pool.
     */
   private def scNearDupRun(
-      emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      emb: DataFrame): DataFrame = {
     val p = Similarity.scaledPlaneCount(emb.count(), scTarget, scMinP, scMaxP)
     val buckets = (0 until scBands).map { b =>
       Similarity.lshBucket(
@@ -294,27 +253,16 @@ object SimQueries extends QueryPack {
     * the pairs.
     */
   private def scSemanticKeepRun(
-      emb: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+      emb: DataFrame): DataFrame = {
     val drop = scNearDupRun(emb).select(col("id_b").as("vec_id")).distinct()
     emb.join(drop, Seq("vec_id"), "left_anti")
       .select("vec_id", "label")
       .orderBy("vec_id")
   }
 
-  private def scSemanticKeepSql(where: String): String = {
-    // the scaled near-dup CTE chain, with the final pair select swapped
-    // for the min-id-wins drop + anti-join
-    val base = scNearDupSql(where)
-    val cut = base.lastIndexOf("SELECT id_a, id_b, cos FROM c")
-    // base ends "...)\n      SELECT id_a, ..." — splice a further CTE in
-    base.substring(0, cut).trim.stripSuffix(")") + s"""),
-      dropped AS (
-        SELECT DISTINCT id_b AS vec_id FROM c WHERE cos >= 0.4)
-      SELECT e.vec_id, e.label
-      FROM (SELECT vec_id, label FROM embeddings$where) e
-      ANTI JOIN dropped USING (vec_id)
-      ORDER BY e.vec_id"""
-  }
+  private def scSemanticKeepSql(where: String): String = s"""
+      WITH ${scBandedSql(where)},
+      ${keepListSql(s"embeddings$where")}"""
 
   val semanticDedupScaled: GraftQuery = GraftQuery(
     "semantic_dedup_scaled",
@@ -342,31 +290,26 @@ object SimQueries extends QueryPack {
   private val annLshPlanes =
     Similarity.hyperplanes(annLshPlaneCount, dim = 64, seed = 42)
 
+  /** `name(vec_id, cos)`: the bucketed-ANN top 10 for vector 0 — the
+    * vectors sharing its bucket under the per-vector expression
+    * `bucketSql`, ranked by cosine (needs [[probeSql]]).
+    */
+  private def bucketTopSql(name: String, bucketSql: String): String = s"""bk AS MATERIALIZED (
+        SELECT vec_id, CAST($bucketSql AS BIGINT) AS bucket FROM embeddings),
+      qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
+      cand AS (SELECT bk.vec_id FROM bk JOIN qb USING (bucket)
+               WHERE bk.vec_id <> 0),
+      ${topSql(name, "embeddings WHERE vec_id IN (SELECT vec_id FROM cand)")}"""
+
   val annTopK: GraftQuery = GraftQuery(
     "ann_lsh_topk_vec0",
     (s, dir) => Similarity.annTopK(
       Tables(s, dir, "embeddings"), "vec_id", "embedding", 0L, 10,
       nPlanes = annLshPlaneCount),
     Some(s"""
-      WITH bk AS MATERIALIZED (
-        SELECT vec_id,
-               CAST(${hyperBucketSql(annLshPlanes)} AS BIGINT) AS bucket
-        FROM embeddings),
-      qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-      cand AS (SELECT bk.vec_id FROM bk JOIN qb USING (bucket)
-               WHERE bk.vec_id <> 0),
-      q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT e.vec_id, generate_subscripts(e.embedding, 1) AS pos,
-                    CAST(unnest(e.embedding) AS DOUBLE) AS v
-             FROM embeddings e JOIN cand USING (vec_id)),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv)
-      SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-      FROM agg, nq ORDER BY cos DESC, vec_id LIMIT 10"""))
+      WITH $probeSql,
+      ${bucketTopSql("top", hyperBucketSql(annLshPlanes))}
+      SELECT vec_id, cos FROM top"""))
 
   /** Same bucketed-ANN shape with deterministic sign-bit buckets — the
     * whole pruned pipeline (bucketing + exact rerank + top-k) hash-checks
@@ -383,24 +326,9 @@ object SimQueries extends QueryPack {
       Tables(s, dir, "embeddings"), "vec_id", "embedding", 0L, 10,
       nPlanes = annSignPlanes),
     Some(s"""
-      WITH bk AS (SELECT vec_id,
-                         CAST($annSignBucketSql AS BIGINT) AS bucket
-                  FROM embeddings),
-      qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-      cand AS (SELECT bk.vec_id FROM bk JOIN qb USING (bucket)
-               WHERE bk.vec_id <> 0),
-      q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT e.vec_id, generate_subscripts(e.embedding, 1) AS pos,
-                    CAST(unnest(e.embedding) AS DOUBLE) AS v
-             FROM embeddings e JOIN cand USING (vec_id)),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv)
-      SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-      FROM agg, nq ORDER BY cos DESC, vec_id LIMIT 10"""))
+      WITH $probeSql,
+      ${bucketTopSql("top", annSignBucketSql)}
+      SELECT vec_id, cos FROM top"""))
 
   /** Per-label embedding centroids in long form (label, pos, mean, n):
     * the vector-aggregation primitive behind class prototypes and
@@ -418,12 +346,10 @@ object SimQueries extends QueryPack {
       .agg(Q.r6(sum("x") / count(lit(1))).as("mean"),
         count(lit(1)).as("n"))
       .orderBy("label", "pos"),
-    Some("""
+    Some(s"""
       SELECT label, CAST(pos AS BIGINT) AS pos,
              round(SUM(x) / COUNT(*), 6) AS mean, COUNT(*) AS n
-      FROM (SELECT label, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x
-            FROM embeddings)
+      FROM (${Similarity.oracleComponentsSql("embeddings", "label")})
       GROUP BY label, pos ORDER BY label, pos"""))
 
   /** Johnson-Lindenstrauss random projection 64 -> 16 dims: seeded
@@ -482,12 +408,10 @@ object SimQueries extends QueryPack {
         .agg(count(lit(1)).as("n"))
         .orderBy("label", "assigned")
     },
-    Some("""
+    Some(s"""
       WITH m AS (
         SELECT label AS clabel, pos, round(SUM(x) / COUNT(*), 6) AS mean
-        FROM (SELECT label, generate_subscripts(embedding, 1) AS pos,
-                     CAST(unnest(embedding) AS DOUBLE) AS x
-              FROM embeddings)
+        FROM (${Similarity.oracleComponentsSql("embeddings", "label")})
         GROUP BY clabel, pos),
       c AS (SELECT clabel, list(mean ORDER BY pos) AS centroid
             FROM m GROUP BY clabel),
@@ -515,25 +439,12 @@ object SimQueries extends QueryPack {
     * remains the library's production quantizer.
     */
   private val ivfIters = 3
-  private def ivfAssignSql(t: Int, tbl: String = "embeddings"): String = s"""
-      d$t AS (SELECT e.vec_id, c.clabel,
-             list_sum(list_transform(list_zip(e.embedding, c.centroid),
-               p -> (CAST(p[1] AS DOUBLE) - p[2])
-                  * (CAST(p[1] AS DOUBLE) - p[2]))) AS dist2
-            FROM $tbl e CROSS JOIN c${t - 1} c),
-      a$t AS (SELECT vec_id, clabel AS list
-            FROM (SELECT vec_id, clabel,
-                         row_number() OVER (PARTITION BY vec_id
-                                            ORDER BY dist2, clabel) AS rk
-                  FROM d$t) WHERE rk = 1),
-      m$t AS (SELECT a.list, u.pos, round(SUM(u.x) / COUNT(*), 6) AS mean
-            FROM a$t a
-            JOIN (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                         CAST(unnest(embedding) AS DOUBLE) AS x
-                  FROM $tbl) u USING (vec_id)
-            GROUP BY a.list, u.pos),
-      c$t AS (SELECT list AS clabel, list(mean ORDER BY pos) AS centroid
-            FROM m$t GROUP BY list)"""
+
+  /** The Lloyd fit at 8 lists and the nProbe = 2 lists of vector 0:
+    * `mem(vec_id)`, the candidates the IVF ranking scores.
+    */
+  private def ivfProbeSql: String = s"""${Similarity.oracleLloydCtes("embeddings", "8", ivfIters)},
+      ${Similarity.oracleIvfProbeCtes(0L, 2, ivfIters)}"""
 
   // the deterministic Lloyd fit is shared by ivf_ann_topk_vec0 and the
   // recall report through the session's registry (graft.ChainGuard)
@@ -548,32 +459,13 @@ object SimQueries extends QueryPack {
     "ivf_ann_topk_vec0",
     (s, dir) => Similarity.ivfTopK(lloydIndex(s, dir), 0L, 10, nProbe = 2),
     Some(s"""
-      WITH c0 AS (
-        SELECT CAST(vec_id AS INTEGER) AS clabel,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid
-        FROM embeddings WHERE vec_id < 8),
-      ${(1 to ivfIters).map(t => ivfAssignSql(t)).mkString(",")},
-      q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      pd AS (SELECT c.clabel,
-               list_sum(list_transform(list_zip(c.centroid, q.qe),
-                 p -> (p[1] - CAST(p[2] AS DOUBLE))
-                    * (p[1] - CAST(p[2] AS DOUBLE)))) AS dist2
-             FROM c$ivfIters c CROSS JOIN q),
-      probe AS (SELECT clabel FROM pd ORDER BY dist2, clabel LIMIT 2),
-      mem AS (SELECT a.vec_id FROM a$ivfIters a
-              JOIN probe p ON a.list = p.clabel
-              WHERE a.vec_id <> 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                    CAST(unnest(embedding) AS DOUBLE) AS v
-             FROM embeddings WHERE vec_id IN (SELECT vec_id FROM mem)),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv)
-      SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-      FROM agg, nq ORDER BY cos DESC, vec_id LIMIT 10"""))
+      WITH $ivfProbeSql,
+      $probeSql,
+      ${topSql("top", ivfMembersFrom)}
+      SELECT vec_id, cos FROM top"""))
+
+  private def ivfMembersFrom: String =
+    "embeddings WHERE vec_id IN (SELECT vec_id FROM mem)"
 
   // ---- SemDeDup, the paper's cluster-based shape (VERDICT r14 task 2)
 
@@ -605,40 +497,27 @@ object SimQueries extends QueryPack {
     }
 
   /** The kmeans-dedup drop chain as CTE fragments over source table
-    * `tbl`: the deterministic Lloyd assignment rounds (shared
-    * [[ivfAssignSql]] blocks), within-cluster candidate pairs, exact
-    * cosine rerank, and the min-id-wins drop set. Expects `v`
-    * (per-vector components) and `n` (norms) CTEs over the same rows to
-    * be defined by the caller — the agreement oracle shares them with
-    * the sign-LSH chain.
+    * `tbl`: the deterministic Lloyd fit at the scaled list count,
+    * within-cluster candidate pairs, exact cosine rerank, and the
+    * min-id-wins drop set `kdrop`. Expects `v` and `n`
+    * ([[Similarity.oracleVectorCtes]]) over the same rows from the
+    * caller — the agreement oracle shares them with the sign-LSH chain.
     */
   private def kmeansDropChainSql(tbl: String): String = s"""
       kk AS (
         SELECT GREATEST($kmMinK, LEAST($kmMaxK,
                  (COUNT(*) + ${kmTarget - 1}) // $kmTarget)) AS k
         FROM $tbl),
-      c0 AS (
-        SELECT CAST(vec_id AS INTEGER) AS clabel,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid
-        FROM $tbl WHERE vec_id < (SELECT k FROM kk)),
-      ${(1 to ivfIters).map(t => ivfAssignSql(t, tbl)).mkString(",")},
+      ${Similarity.oracleLloydCtes(tbl, "(SELECT k FROM kk)", ivfIters)},
       kp AS (SELECT a.vec_id AS ia, b2.vec_id AS ib
              FROM a$ivfIters a JOIN a$ivfIters b2
                ON a.list = b2.list AND a.vec_id < b2.vec_id),
-      kd AS (SELECT ia, ib, SUM(va.x * vb.x) AS dot
-             FROM kp JOIN v va ON va.vec_id = ia
-                     JOIN v vb ON vb.vec_id = ib AND va.pos = vb.pos
-             GROUP BY ia, ib),
-      kdrop AS (SELECT DISTINCT ib AS vec_id
-                FROM kd JOIN n na ON na.vec_id = ia
-                        JOIN n nb ON nb.vec_id = ib
-                WHERE round(dot / (sqrt(na.nr) * sqrt(nb.nr)), 6) >= 0.4)"""
+      ${Similarity.oracleRerankCtes("kc", "kp")},
+      kdrop AS (SELECT DISTINCT id_b AS vec_id FROM kc WHERE cos >= 0.4)"""
 
   private def kmeansDedupSql(where: String): String = s"""
       WITH se AS (SELECT * FROM embeddings$where),
-      v AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                   CAST(unnest(embedding) AS DOUBLE) AS x FROM se),
-      n AS (SELECT vec_id, SUM(x * x) AS nr FROM v GROUP BY vec_id),
+      ${Similarity.oracleVectorCtes("se")},
       ${kmeansDropChainSql("se")}
       SELECT e.vec_id, e.label FROM se e ANTI JOIN kdrop USING (vec_id)
       ORDER BY e.vec_id"""
@@ -719,10 +598,9 @@ object SimQueries extends QueryPack {
           Q.r6(col("nb") * 1.0 / (col("nk") + col("nl") - col("nb")))
             .as("keep_jaccard"))
     },
-    Some {
-      val base = scSemanticKeepSql("")
-      val cut = base.lastIndexOf("SELECT e.vec_id, e.label")
-      base.substring(0, cut).trim.stripSuffix(",") + s""",
+    Some(s"""
+      WITH ${scBandedSql("")},
+      $droppedSql,
       lsh_keep AS (
         SELECT e.vec_id FROM embeddings e ANTI JOIN dropped USING (vec_id)),
       ${kmeansDropChainSql("embeddings")},
@@ -736,8 +614,7 @@ object SimQueries extends QueryPack {
                * 1.0 / ((SELECT COUNT(*) FROM kkeep)
                  + (SELECT COUNT(*) FROM lsh_keep)
                  - (SELECT COUNT(*) FROM kkeep JOIN lsh_keep USING (vec_id))),
-               6) AS keep_jaccard"""
-    })
+               6) AS keep_jaccard"""))
 
   /** ANN recall@10 report — the acceptance gate an ANN rollout runs
     * before trading exactness for speed: the IVF (nProbe=2) top-10 for
@@ -751,59 +628,14 @@ object SimQueries extends QueryPack {
     */
   val annRecall: GraftQuery = GraftQuery(
     "ann_recall_ivf_vec0",
-    (s, dir) => {
-      val emb = Tables(s, dir, "embeddings")
-      val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-        .select("vec_id")
-      val ann = Similarity.ivfTopK(lloydIndex(s, dir), 0L, 10, nProbe = 2)
-        .select("vec_id")
-      exact.join(ann, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_overlap"))
-        .select(lit(10L).as("k"), col("n_overlap"),
-          Q.r6(col("n_overlap") / 10.0).as("recall_at_k"))
-    },
+    (s, dir) => recallAt10(Tables(s, dir, "embeddings"),
+      Similarity.ivfTopK(lloydIndex(s, dir), 0L, 10, nProbe = 2)),
     Some(s"""
-      WITH c0 AS (
-        SELECT CAST(vec_id AS INTEGER) AS clabel,
-               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid
-        FROM embeddings WHERE vec_id < 8),
-      ${(1 to ivfIters).map(t => ivfAssignSql(t)).mkString(",")},
-      q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      pd AS (SELECT c.clabel,
-               list_sum(list_transform(list_zip(c.centroid, q.qe),
-                 p -> (p[1] - CAST(p[2] AS DOUBLE))
-                    * (p[1] - CAST(p[2] AS DOUBLE)))) AS dist2
-             FROM c$ivfIters c CROSS JOIN q),
-      probe AS (SELECT clabel FROM pd ORDER BY dist2, clabel LIMIT 2),
-      mem AS (SELECT a.vec_id FROM a$ivfIters a
-              JOIN probe p ON a.list = p.clabel
-              WHERE a.vec_id <> 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                    CAST(unnest(embedding) AS DOUBLE) AS v
-             FROM embeddings WHERE vec_id IN (SELECT vec_id FROM mem)),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv),
-      itop AS (SELECT vec_id FROM (
-                 SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-                 FROM agg, nq ORDER BY cos DESC, vec_id LIMIT 10)),
-      xdv AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                     CAST(unnest(embedding) AS DOUBLE) AS v
-              FROM embeddings WHERE vec_id <> 0),
-      xagg AS (SELECT xdv.vec_id, SUM(xdv.v * qv.v) AS dot,
-                      SUM(xdv.v * xdv.v) AS nd
-               FROM xdv JOIN qv USING (pos) GROUP BY xdv.vec_id),
-      xtop AS (SELECT vec_id FROM (
-                 SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-                 FROM xagg, nq ORDER BY cos DESC, vec_id LIMIT 10))
-      SELECT CAST(10 AS BIGINT) AS k,
-             (SELECT COUNT(*) FROM itop JOIN xtop USING (vec_id))
-               AS n_overlap,
-             round((SELECT COUNT(*) FROM itop JOIN xtop USING (vec_id))
-               / 10.0, 6) AS recall_at_k"""))
+      WITH $ivfProbeSql,
+      $probeSql,
+      ${topSql("itop", ivfMembersFrom)},
+      ${exactTopSql("xtop")}
+      ${recallSelectSql("itop")}"""))
 
   /** Symmetric int8 quantization report over the embedding corpus —
     * scale, saturated codes, max reconstruction error per vector (all
@@ -844,22 +676,13 @@ object SimQueries extends QueryPack {
     * and (score desc, vec_id) tiebreak as the Spark loop.
     */
   private def mmrSql(k: Int): String = {
-    val base = """
-      WITH qv AS (SELECT generate_subscripts(embedding, 1) AS pos,
-                         CAST(unnest(embedding) AS DOUBLE) AS v
-                  FROM embeddings WHERE vec_id = 0),
-      dv AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                    CAST(unnest(embedding) AS DOUBLE) AS v
-             FROM embeddings WHERE vec_id <> 0),
-      nq AS (SELECT SUM(v * v) AS n2 FROM qv),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      rel AS (SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq.n2)), 6) AS rel
-              FROM agg, nq),
-      nrm AS (SELECT vec_id, SUM(v * v) AS n2 FROM dv GROUP BY 1),
-      pag AS (SELECT a.vec_id AS ia, b.vec_id AS ib, SUM(a.v * b.v) AS dot
-              FROM dv a JOIN dv b ON a.pos = b.pos AND a.vec_id <> b.vec_id
+    val base = s"""
+      WITH $probeSql,
+      ${Similarity.oracleCosineCtes("sc", "embeddings WHERE vec_id <> 0")},
+      rel AS (SELECT vec_id, cos AS rel FROM sc),
+      nrm AS (SELECT vec_id, SUM(x * x) AS n2 FROM sc_v GROUP BY 1),
+      pag AS (SELECT a.vec_id AS ia, b.vec_id AS ib, SUM(a.x * b.x) AS dot
+              FROM sc_v a JOIN sc_v b ON a.pos = b.pos AND a.vec_id <> b.vec_id
               GROUP BY a.vec_id, b.vec_id),
       pcm AS (SELECT ia, ib,
                      round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) AS cos
@@ -907,11 +730,10 @@ object SimQueries extends QueryPack {
           .as("std"),
         Q.r6(min("x")).as("min_x"), Q.r6(max("x")).as("max_x"))
       .orderBy("pos"),
-    Some("""
+    Some(s"""
       WITH d AS (
-        SELECT generate_subscripts(embedding, 1) - 1 AS pos,
-               CAST(unnest(embedding) AS DOUBLE) AS x
-        FROM embeddings)
+        SELECT pos - 1 AS pos, x
+        FROM (${Similarity.oracleComponentsSql("embeddings", "vec_id")}))
       SELECT pos, COUNT(*) AS n,
              round(SUM(x) / COUNT(*), 6) AS mean,
              round(sqrt(SUM(x * x) / COUNT(*)
@@ -926,36 +748,14 @@ object SimQueries extends QueryPack {
       Tables(s, dir, "embeddings"), "vec_id", "embedding", 0L, 5),
     Some(mmrSql(5)))
 
-  /** One PQ Lloyd round in DuckDB: assign each (vec, sub) to its nearest
-    * sub-centroid (row_number ties to the smaller label = Spark's
-    * min(struct)), then re-mean the raw components per (sub, label, pos)
-    * with the same round-6 convention.
-    */
   private val pqM = 4
   private val pqSubDim = 16
   private val pqKSub = 8
   private val pqIters = 2
-  private def pqAssignSql(t: Int): String = s"""
-      pd$t AS (SELECT s.vec_id, s.sub, c.clabel,
-             list_sum(list_transform(list_zip(s.subvec, c.centroid),
-               p -> (CAST(p[1] AS DOUBLE) - p[2])
-                  * (CAST(p[1] AS DOUBLE) - p[2]))) AS dist2
-            FROM sv s JOIN pc${t - 1} c ON c.sub = s.sub),
-      pa$t AS (SELECT vec_id, sub, clabel AS code
-            FROM (SELECT vec_id, sub, clabel,
-                         row_number() OVER (PARTITION BY vec_id, sub
-                                            ORDER BY dist2, clabel) AS rk
-                  FROM pd$t) WHERE rk = 1),
-      pm$t AS (SELECT a.sub, a.code AS clabel, u.pos,
-                      round(SUM(u.x) / COUNT(*), 6) AS mean
-            FROM pa$t a
-            JOIN (SELECT vec_id, sub, generate_subscripts(subvec, 1) AS pos,
-                         CAST(unnest(subvec) AS DOUBLE) AS x
-                  FROM sv) u
-              ON u.vec_id = a.vec_id AND u.sub = a.sub
-            GROUP BY a.sub, a.code, u.pos),
-      pc$t AS (SELECT sub, clabel, list(mean ORDER BY pos) AS centroid
-            FROM pm$t GROUP BY sub, clabel)"""
+
+  /** The PQ/ADC replay for vector 0 at this pack's parameters. */
+  private def pqAdcSql: String =
+    Similarity.oraclePqAdcCtes(0L, pqM, pqSubDim, pqKSub, pqIters)
 
   /** Product-quantization ANN for vec 0 ([[Similarity.pqTopKAdc]]): 4
     * subspaces x 16 dims, 8 sub-centroids each from a 2-round
@@ -970,53 +770,24 @@ object SimQueries extends QueryPack {
       Tables(s, dir, "embeddings"), "vec_id", "embedding", 0L, 10,
       m = pqM, subDim = pqSubDim, kSub = pqKSub, iters = pqIters),
     Some(s"""
-      WITH sv AS MATERIALIZED (
-        SELECT vec_id, sub,
-               list_slice(embedding, sub * $pqSubDim + 1,
-                 sub * $pqSubDim + $pqSubDim) AS subvec
-        FROM embeddings
-        CROSS JOIN (SELECT unnest(generate_series(0, ${pqM - 1})) AS sub) g),
-      pc0 AS (
-        SELECT sub, CAST(vec_id AS INTEGER) AS clabel,
-               list_transform(subvec, x -> CAST(x AS DOUBLE)) AS centroid
-        FROM sv WHERE vec_id < $pqKSub),
-      ${(1 to pqIters).map(pqAssignSql).mkString(",")},
-      q AS (SELECT sub, subvec FROM sv WHERE vec_id = 0),
-      tbl AS (SELECT c.sub, c.clabel,
-               CAST(floor(list_sum(list_transform(
-                 list_zip(q.subvec, c.centroid),
-                 p -> (CAST(p[1] AS DOUBLE) - p[2])
-                    * (CAST(p[1] AS DOUBLE) - p[2]))) * 1000000.0 + 0.5)
-                 AS BIGINT) AS d2_micro
-              FROM pc$pqIters c JOIN q ON q.sub = c.sub),
-      adc AS (SELECT a.vec_id, CAST(SUM(t.d2_micro) AS BIGINT)
-                       AS adc_d2_micro
-              FROM pa$pqIters a
-              JOIN tbl t ON t.sub = a.sub AND t.clabel = a.code
-              WHERE a.vec_id <> 0
-              GROUP BY a.vec_id)
+      WITH $pqAdcSql
       SELECT vec_id, adc_d2_micro, adc_d2_micro / 1000000.0 AS adc_dist2
       FROM adc ORDER BY adc_d2_micro, vec_id LIMIT 10"""))
 
-  // shared exact-cosine-top-10 oracle tail for the recall audits: the
-  // query vector's norm, every other vector's dot/norm, the top-10 by
-  // (cos desc, vec_id) — the same xtop block ann_recall_ivf_vec0 uses.
-  private val exactTopSqlTail = """
-      qe0 AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      qv0 AS (SELECT generate_subscripts(qe, 1) AS pos,
-                     CAST(unnest(qe) AS DOUBLE) AS v FROM qe0),
-      nq0 AS (SELECT SUM(v * v) AS nq FROM qv0),
-      xdv AS (SELECT vec_id, generate_subscripts(embedding, 1) AS pos,
-                     CAST(unnest(embedding) AS DOUBLE) AS v
-              FROM embeddings WHERE vec_id <> 0),
-      xagg AS (SELECT xdv.vec_id, SUM(xdv.v * qv0.v) AS dot,
-                      SUM(xdv.v * xdv.v) AS nd
-               FROM xdv JOIN qv0 USING (pos) GROUP BY xdv.vec_id),
-      xtop AS (SELECT vec_id FROM (
-                 SELECT vec_id,
-                        round(dot / (sqrt(nd) * sqrt(nq0.nq)), 6) AS cos
-                 FROM xagg, nq0 ORDER BY cos DESC, vec_id LIMIT 10))"""
+  /** Spark side of every recall audit: recall@10 of an ANN top-10 `ann`
+    * against the exact cosine top-10 for vector 0.
+    */
+  private def recallAt10(emb: DataFrame, ann: DataFrame): DataFrame =
+    Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
+      .select("vec_id")
+      .join(ann.select("vec_id"), Seq("vec_id"))
+      .agg(count(lit(1)).as("n_overlap"))
+      .select(lit(10L).as("k"), col("n_overlap"),
+        Q.r6(col("n_overlap") / 10.0).as("recall_at_k"))
 
+  /** Oracle of [[recallAt10]], given the ANN top-10 `annTop` and the
+    * exact top-10 `xtop` ([[exactTopSql]]).
+    */
   private def recallSelectSql(annTop: String): String = s"""
       SELECT CAST(10 AS BIGINT) AS k,
              (SELECT COUNT(*) FROM $annTop JOIN xtop USING (vec_id))
@@ -1037,46 +808,16 @@ object SimQueries extends QueryPack {
     "ann_recall_pq_vec0",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-        .select("vec_id")
-      val ann = Similarity.pqTopKAdc(emb, "vec_id", "embedding", 0L, 10,
-        m = pqM, subDim = pqSubDim, kSub = pqKSub, iters = pqIters)
-        .select("vec_id")
-      exact.join(ann, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_overlap"))
-        .select(lit(10L).as("k"), col("n_overlap"),
-          Q.r6(col("n_overlap") / 10.0).as("recall_at_k"))
+      recallAt10(emb, Similarity.pqTopKAdc(emb, "vec_id", "embedding", 0L, 10,
+        m = pqM, subDim = pqSubDim, kSub = pqKSub, iters = pqIters))
     },
     Some(s"""
-      WITH sv AS MATERIALIZED (
-        SELECT vec_id, sub,
-               list_slice(embedding, sub * $pqSubDim + 1,
-                 sub * $pqSubDim + $pqSubDim) AS subvec
-        FROM embeddings
-        CROSS JOIN (SELECT unnest(generate_series(0, ${pqM - 1})) AS sub) g),
-      pc0 AS (
-        SELECT sub, CAST(vec_id AS INTEGER) AS clabel,
-               list_transform(subvec, x -> CAST(x AS DOUBLE)) AS centroid
-        FROM sv WHERE vec_id < $pqKSub),
-      ${(1 to pqIters).map(pqAssignSql).mkString(",")},
-      q AS (SELECT sub, subvec FROM sv WHERE vec_id = 0),
-      tbl AS (SELECT c.sub, c.clabel,
-               CAST(floor(list_sum(list_transform(
-                 list_zip(q.subvec, c.centroid),
-                 p -> (CAST(p[1] AS DOUBLE) - p[2])
-                    * (CAST(p[1] AS DOUBLE) - p[2]))) * 1000000.0 + 0.5)
-                 AS BIGINT) AS d2_micro
-              FROM pc$pqIters c JOIN q ON q.sub = c.sub),
-      adc AS (SELECT a.vec_id, CAST(SUM(t.d2_micro) AS BIGINT)
-                       AS adc_d2_micro
-              FROM pa$pqIters a
-              JOIN tbl t ON t.sub = a.sub AND t.clabel = a.code
-              WHERE a.vec_id <> 0
-              GROUP BY a.vec_id),
+      WITH $pqAdcSql,
       ptop AS (SELECT vec_id FROM (
                  SELECT vec_id FROM adc
                  ORDER BY adc_d2_micro, vec_id LIMIT 10)),
-      $exactTopSqlTail
+      $probeSql,
+      ${exactTopSql("xtop")}
       ${recallSelectSql("ptop")}"""))
 
   /** Recall@10 audit for the sign-bit-bucketed ANN — same rationale as
@@ -1090,37 +831,13 @@ object SimQueries extends QueryPack {
     "ann_recall_sign_vec0",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-        .select("vec_id")
-      val ann = Similarity.annTopKSign(emb, "vec_id", "embedding", 0L, 10,
-        nPlanes = annSignPlanes)
-        .select("vec_id")
-      exact.join(ann, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_overlap"))
-        .select(lit(10L).as("k"), col("n_overlap"),
-          Q.r6(col("n_overlap") / 10.0).as("recall_at_k"))
+      recallAt10(emb, Similarity.annTopKSign(emb, "vec_id", "embedding", 0L,
+        10, nPlanes = annSignPlanes))
     },
     Some(s"""
-      WITH bk AS (SELECT vec_id,
-                         CAST($annSignBucketSql AS BIGINT) AS bucket
-                  FROM embeddings),
-      qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-      cand AS (SELECT bk.vec_id FROM bk JOIN qb USING (bucket)
-               WHERE bk.vec_id <> 0),
-      q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT e.vec_id, generate_subscripts(e.embedding, 1) AS pos,
-                    CAST(unnest(e.embedding) AS DOUBLE) AS v
-             FROM embeddings e JOIN cand USING (vec_id)),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv),
-      stop_ AS (SELECT vec_id FROM (
-                 SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-                 FROM agg, nq ORDER BY cos DESC, vec_id LIMIT 10)),
-      $exactTopSqlTail
+      WITH $probeSql,
+      ${bucketTopSql("stop_", annSignBucketSql)},
+      ${exactTopSql("xtop")}
       ${recallSelectSql("stop_")}"""))
 
   /** Recall@10 audit for the seeded-hyperplane-bucketed ANN — closes
@@ -1133,38 +850,13 @@ object SimQueries extends QueryPack {
     "ann_recall_lsh_vec0",
     (s, dir) => {
       val emb = Tables(s, dir, "embeddings")
-      val exact = Similarity.cosineTopK(emb, "vec_id", "embedding", 0L, 10)
-        .select("vec_id")
-      val ann = Similarity.annTopK(emb, "vec_id", "embedding", 0L, 10,
-        nPlanes = annLshPlaneCount)
-        .select("vec_id")
-      exact.join(ann, Seq("vec_id"))
-        .agg(count(lit(1)).as("n_overlap"))
-        .select(lit(10L).as("k"), col("n_overlap"),
-          Q.r6(col("n_overlap") / 10.0).as("recall_at_k"))
+      recallAt10(emb, Similarity.annTopK(emb, "vec_id", "embedding", 0L, 10,
+        nPlanes = annLshPlaneCount))
     },
     Some(s"""
-      WITH bk AS MATERIALIZED (
-        SELECT vec_id,
-               CAST(${hyperBucketSql(annLshPlanes)} AS BIGINT) AS bucket
-        FROM embeddings),
-      qb AS (SELECT bucket FROM bk WHERE vec_id = 0),
-      cand AS (SELECT bk.vec_id FROM bk JOIN qb USING (bucket)
-               WHERE bk.vec_id <> 0),
-      q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-      qv AS (SELECT generate_subscripts(qe, 1) AS pos,
-                    CAST(unnest(qe) AS DOUBLE) AS v FROM q),
-      dv AS (SELECT e.vec_id, generate_subscripts(e.embedding, 1) AS pos,
-                    CAST(unnest(e.embedding) AS DOUBLE) AS v
-             FROM embeddings e JOIN cand USING (vec_id)),
-      agg AS (SELECT dv.vec_id, SUM(dv.v * qv.v) AS dot,
-                     SUM(dv.v * dv.v) AS nd
-              FROM dv JOIN qv USING (pos) GROUP BY dv.vec_id),
-      nq AS (SELECT SUM(v * v) AS nq FROM qv),
-      ltop AS (SELECT vec_id FROM (
-                 SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
-                 FROM agg, nq ORDER BY cos DESC, vec_id LIMIT 10)),
-      $exactTopSqlTail
+      WITH $probeSql,
+      ${bucketTopSql("ltop", hyperBucketSql(annLshPlanes))},
+      ${exactTopSql("xtop")}
       ${recallSelectSql("ltop")}"""))
 
   override def queries: Seq[GraftQuery] =

@@ -25,6 +25,25 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dotD(a, b) / (normD(a) * normD(b))
 
+  // ---- DuckDB replays, in the `oracleCtes` idiom of graft.graph: CTE
+  // lists that a query's oracle places after its own WITH, each next to
+  // the operator it replays. All read `embeddings(vec_id, embedding)`;
+  // `from` is a FROM-clause body such as "embeddings WHERE vec_id <> 0".
+
+  /** One row per component of `embedding` in `from`: (`key`, pos, x),
+    * pos 1-based and x as DOUBLE — the replay of a posexplode.
+    */
+  def oracleComponentsSql(from: String, key: String): String =
+    s"""SELECT $key, generate_subscripts(embedding, 1) AS pos,
+                   CAST(unnest(embedding) AS DOUBLE) AS x
+            FROM $from"""
+
+  /** `qv(vec_id, pos, x)` and `nq(nq)`: the components and squared norm
+    * of stored vector `queryId`, the probe side of [[oracleCosineCtes]].
+    */
+  def oracleProbeCtes(queryId: Long): String = s"""qv AS (${oracleComponentsSql(s"embeddings WHERE vec_id = $queryId", "vec_id")}),
+      nq AS (SELECT SUM(x * x) AS nq FROM qv)"""
+
   /** Exact top-k neighbors of one stored vector by cosine (rounded to 6
     * decimals; ties broken by id for determinism).
     */
@@ -40,6 +59,22 @@ object Similarity {
       .orderBy(desc("cos"), col(idCol))
       .limit(k)
   }
+
+  /** Given [[oracleProbeCtes]]: `$name(vec_id, cos)`, the r6 cosine to
+    * the probe of every vector in `from`, with their components in
+    * `${name}_v(vec_id, pos, x)` — [[cosineTopK]] before its top-k cut
+    * ([[oracleTopKSql]]).
+    */
+  def oracleCosineCtes(name: String, from: String): String = s"""${name}_v AS (${oracleComponentsSql(from, "vec_id")}),
+      ${name}_a AS (SELECT d.vec_id, SUM(d.x * qv.x) AS dot,
+                     SUM(d.x * d.x) AS nd
+              FROM ${name}_v d JOIN qv USING (pos) GROUP BY d.vec_id),
+      $name AS (SELECT vec_id, round(dot / (sqrt(nd) * sqrt(nq)), 6) AS cos
+              FROM ${name}_a, nq)"""
+
+  /** The top-k cut of [[cosineTopK]] over scores `name(vec_id, cos)`. */
+  def oracleTopKSql(name: String, k: Int): String =
+    s"SELECT vec_id, cos FROM $name ORDER BY cos DESC, vec_id LIMIT $k"
 
   /** Maximal Marginal Relevance selection: greedily pick k vectors
     * maximizing `0.7 * relevance - 0.3 * max-similarity-to-selected`
@@ -145,6 +180,39 @@ object Similarity {
       .filter(col("cos") >= threshold)
       .orderBy("id_a", "id_b")
   }
+
+  /** `v(vec_id, pos, x)` and `n(vec_id, nr)`: the components and squared
+    * norms of the vectors in `from`, read by [[oracleRerankCtes]].
+    */
+  def oracleVectorCtes(from: String): String = s"""v AS (${oracleComponentsSql(from, "vec_id")}),
+      n AS (SELECT vec_id, SUM(x * x) AS nr FROM v GROUP BY vec_id)"""
+
+  /** Given [[oracleVectorCtes]]: `$name(id_a, id_b, cos)`, the r6 exact
+    * cosine of every candidate pair in `pairs(ia, ib)` — the rerank of
+    * [[nearDupFromBands]].
+    */
+  def oracleRerankCtes(name: String, pairs: String): String = s"""${name}_dot AS (SELECT ia, ib, SUM(va.x * vb.x) AS dot
+            FROM $pairs JOIN v va ON va.vec_id = ia
+                      JOIN v vb ON vb.vec_id = ib AND va.pos = vb.pos
+            GROUP BY ia, ib),
+      $name AS (SELECT ia AS id_a, ib AS id_b,
+                   round(dot / (sqrt(na.nr) * sqrt(nb.nr)), 6) AS cos
+            FROM ${name}_dot JOIN n na ON na.vec_id = ia
+                             JOIN n nb ON nb.vec_id = ib)"""
+
+  /** [[nearDupFromBands]] before its threshold, over the vectors in
+    * `from`: `bk(vec_id, band, bucket)` from the UNION of per-band
+    * selects `bucketSql`, the distinct candidate pairs `cand(ia, ib)`
+    * sharing a band bucket, [[oracleVectorCtes]] and the reranked pairs
+    * `c(id_a, id_b, cos)`.
+    */
+  def oracleBandedCtes(bucketSql: String, from: String): String = s"""bk AS MATERIALIZED ($bucketSql),
+      cand AS (SELECT DISTINCT a.vec_id AS ia, b2.vec_id AS ib
+               FROM bk a JOIN bk b2
+                 ON a.band = b2.band AND a.bucket = b2.bucket
+                    AND a.vec_id < b2.vec_id),
+      ${oracleVectorCtes(from)},
+      ${oracleRerankCtes("c", "cand")}"""
 
   /** Sign-bit banded LSH near-dup: band `b` buckets on the sign bits of
     * coordinates [b*p, (b+1)*p) — axis-aligned hyperplanes. Deterministic
@@ -269,6 +337,51 @@ object Similarity {
         Seq(idCol)).select(col(idCol), col(vecCol), col("list")),
       centSeq, idCol, vecCol)
   }
+
+  /** [[ivfFitLloyd]] over table `tbl` with `lists` lists (an SQL
+    * expression) and `iters` rounds: seed centroids `c0`, then for each
+    * round t the assignment `a$t(vec_id, list)` and the re-meaned
+    * centroids `c$t(clabel, centroid)`.
+    */
+  def oracleLloydCtes(tbl: String, lists: String, iters: Int): String = {
+    val rounds = (1 to iters).map { t => s"""
+      d$t AS (SELECT e.vec_id, c.clabel,
+             list_sum(list_transform(list_zip(e.embedding, c.centroid),
+               p -> (CAST(p[1] AS DOUBLE) - p[2])
+                  * (CAST(p[1] AS DOUBLE) - p[2]))) AS dist2
+            FROM $tbl e CROSS JOIN c${t - 1} c),
+      a$t AS (SELECT vec_id, clabel AS list
+            FROM (SELECT vec_id, clabel,
+                         row_number() OVER (PARTITION BY vec_id
+                                            ORDER BY dist2, clabel) AS rk
+                  FROM d$t) WHERE rk = 1),
+      m$t AS (SELECT a.list, u.pos, round(SUM(u.x) / COUNT(*), 6) AS mean
+            FROM a$t a
+            JOIN (${oracleComponentsSql(tbl, "vec_id")}) u USING (vec_id)
+            GROUP BY a.list, u.pos),
+      c$t AS (SELECT list AS clabel, list(mean ORDER BY pos) AS centroid
+            FROM m$t GROUP BY list)"""
+    }
+    s"""c0 AS (
+        SELECT CAST(vec_id AS INTEGER) AS clabel,
+               list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid
+        FROM $tbl WHERE vec_id < $lists),${rounds.mkString(",")}"""
+  }
+
+  /** Given [[oracleLloydCtes]] over `embeddings`: `mem(vec_id)`, the
+    * vectors other than `queryId` in the `nProbe` lists nearest to it —
+    * the candidates [[ivfTopK]] scores.
+    */
+  def oracleIvfProbeCtes(queryId: Long, nProbe: Int, iters: Int): String = s"""q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = $queryId),
+      pd AS (SELECT c.clabel,
+               list_sum(list_transform(list_zip(c.centroid, q.qe),
+                 p -> (p[1] - CAST(p[2] AS DOUBLE))
+                    * (p[1] - CAST(p[2] AS DOUBLE)))) AS dist2
+             FROM c$iters c CROSS JOIN q),
+      probe AS (SELECT clabel FROM pd ORDER BY dist2, clabel LIMIT $nProbe),
+      mem AS (SELECT a.vec_id FROM a$iters a
+              JOIN probe p ON a.list = p.clabel
+              WHERE a.vec_id <> $queryId)"""
 
   def ivfTopK(index: IvfIndex, queryId: Long, k: Int, nProbe: Int): DataFrame = {
     val q = index.assigned.filter(col(index.idCol) === queryId)
@@ -556,6 +669,64 @@ object Similarity {
           s => s.getField("mean")).as("centroid"))
     }
     (codes, cents)
+  }
+
+  /** Replay of [[pqTopKAdc]] for stored vector `queryId` before its
+    * top-k cut: the subvectors `sv(vec_id, sub, subvec)`, the `iters`
+    * Lloyd rounds per subspace of [[pqFit]] (each round t assigns
+    * `pa$t(vec_id, sub, code)` to the nearest sub-centroid, ties to the
+    * smaller label like Spark's min(struct), and re-means `pc$t` with the
+    * same round-6 convention), the query's lookup table and
+    * `adc(vec_id, adc_d2_micro)` for every other vector.
+    */
+  def oraclePqAdcCtes(
+      queryId: Long, m: Int, subDim: Int, kSub: Int, iters: Int): String = {
+    val rounds = (1 to iters).map { t => s"""
+      pd$t AS (SELECT s.vec_id, s.sub, c.clabel,
+             list_sum(list_transform(list_zip(s.subvec, c.centroid),
+               p -> (CAST(p[1] AS DOUBLE) - p[2])
+                  * (CAST(p[1] AS DOUBLE) - p[2]))) AS dist2
+            FROM sv s JOIN pc${t - 1} c ON c.sub = s.sub),
+      pa$t AS (SELECT vec_id, sub, clabel AS code
+            FROM (SELECT vec_id, sub, clabel,
+                         row_number() OVER (PARTITION BY vec_id, sub
+                                            ORDER BY dist2, clabel) AS rk
+                  FROM pd$t) WHERE rk = 1),
+      pm$t AS (SELECT a.sub, a.code AS clabel, u.pos,
+                      round(SUM(u.x) / COUNT(*), 6) AS mean
+            FROM pa$t a
+            JOIN (SELECT vec_id, sub, generate_subscripts(subvec, 1) AS pos,
+                         CAST(unnest(subvec) AS DOUBLE) AS x
+                  FROM sv) u
+              ON u.vec_id = a.vec_id AND u.sub = a.sub
+            GROUP BY a.sub, a.code, u.pos),
+      pc$t AS (SELECT sub, clabel, list(mean ORDER BY pos) AS centroid
+            FROM pm$t GROUP BY sub, clabel)"""
+    }
+    s"""sv AS MATERIALIZED (
+        SELECT vec_id, sub,
+               list_slice(embedding, sub * $subDim + 1,
+                 sub * $subDim + $subDim) AS subvec
+        FROM embeddings
+        CROSS JOIN (SELECT unnest(generate_series(0, ${m - 1})) AS sub) g),
+      pc0 AS (
+        SELECT sub, CAST(vec_id AS INTEGER) AS clabel,
+               list_transform(subvec, x -> CAST(x AS DOUBLE)) AS centroid
+        FROM sv WHERE vec_id < $kSub),${rounds.mkString(",")},
+      q AS (SELECT sub, subvec FROM sv WHERE vec_id = $queryId),
+      tbl AS (SELECT c.sub, c.clabel,
+               CAST(floor(list_sum(list_transform(
+                 list_zip(q.subvec, c.centroid),
+                 p -> (CAST(p[1] AS DOUBLE) - p[2])
+                    * (CAST(p[1] AS DOUBLE) - p[2]))) * 1000000.0 + 0.5)
+                 AS BIGINT) AS d2_micro
+              FROM pc$iters c JOIN q ON q.sub = c.sub),
+      adc AS (SELECT a.vec_id, CAST(SUM(t.d2_micro) AS BIGINT)
+                       AS adc_d2_micro
+              FROM pa$iters a
+              JOIN tbl t ON t.sub = a.sub AND t.clabel = a.code
+              WHERE a.vec_id <> $queryId
+              GROUP BY a.vec_id)"""
   }
 
   /** PQ ADC (asymmetric distance computation) top-k for one query id:

@@ -30,7 +30,7 @@ object Scaling {
   }
 
   /** Fit min/max + the p01/p25/p50/p75/p99 grid in one distributed job
-    * over the DISTINCT-VALUE grid ([[GridQuantiles]]) — exact
+    * over the column's distinct-value grid ([[ColumnGrid]]) — exact
     * linear-interpolated percentiles, value-identical to Spark's
     * `percentile` and DuckDB `quantile_cont`. The previous form used the
     * exact `percentile` aggregate, which merges every partition's
@@ -41,17 +41,10 @@ object Scaling {
     * grid values exactly).
     */
   def fit(df: DataFrame, column: String): ScaleStats = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val probs = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
-    val probsDf = probs.zipWithIndex
-      .map { case (p, i) => (column, i, p) }.toDF("g", "i", "p")
-    val kv = df.select(lit(column).as("g"), col(column).cast("double").as("v"))
-    val rows = GridQuantiles.quantiles(kv, broadcast(probsDf)).collect()
-    require(rows.nonEmpty,
-      s"Scaling.fit: column '$column' has no non-null rows")
-    val byI = rows.map(r => r.getInt(1) -> r.getDouble(3)).toMap
-    ScaleStats(column, byI(0), byI(6),
-      byI(1), byI(2), byI(3), byI(4), byI(5))
+    val q = ColumnGrid(df, Seq(column))
+      .quantiles(Map(column -> Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)))
+      .getOrElse(column, throw new IllegalArgumentException(
+        s"Scaling.fit: column '$column' has no non-null rows"))
+    ScaleStats(column, q(0), q(6), q(1), q(2), q(3), q(4), q(5))
   }
 }

@@ -31,7 +31,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
 
   test("minhash estimate: identical docs share full signature; LSH pairs them") {
     val sh = Dedup.shingleSet(docs, "doc_id", "text", 3)
-    val sigs = Dedup.minhashSignatures(sh, 16)
+    val sigs = Dedup.minhashSignaturesPerm(sh, 16)
     val cand = Dedup.lshCandidates(sigs, 4).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     assert(cand((1L, 2L)) == 1.0)
@@ -109,10 +109,10 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       .select(col("doc_id"), col("text")).filter(col("doc_id") < 200)
     val sh = Dedup.shingleSet(d, "doc_id", "text", 3)
     val sigs = Dedup.minhashSignaturesPerm(sh, 16)
-    val star = Dedup.lshBucketStarEdges(sigs, 4, sqlBuckets = true)
+    val star = Dedup.lshBucketStarEdges(sigs, 4)
     // full UNVERIFIED candidate-pair graph: every pair sharing a bucket
     // (lshCandidates output before any est threshold)
-    val full = Dedup.lshCandidates(sigs, 4, sqlBuckets = true)
+    val full = Dedup.lshCandidates(sigs, 4)
       .select("id_a", "id_b")
     def comps(e: org.apache.spark.sql.DataFrame) =
       Dedup.connectedComponents(e).collect()
@@ -137,9 +137,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val sigs = Dedup.minhashSignaturesPerm(sh, 16)
     val ns = sigs.filter(col("id") % 10 === 0)
     val os = sigs.filter(col("id") % 10 =!= 0)
-    val hits = Dedup.lshBucketHitIds(ns, os, 4, sqlBuckets = true)
+    val hits = Dedup.lshBucketHitIds(ns, os, 4)
       .collect().map(_.getLong(0)).toSet
-    val pairIds = Dedup.lshCandidatesAcross(ns, os, 4, sqlBuckets = true)
+    val pairIds = Dedup.lshCandidatesAcross(ns, os, 4)
       .select("id_a").distinct().collect().map(_.getLong(0)).toSet
     assert(hits == pairIds)
     assert(hits.nonEmpty)
@@ -162,25 +162,21 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(got >= 0 && got < (1L << 60)) // 15 hex chars = 60 bits, no sign
   }
 
-  test("md5-permutation + sqlBuckets minhash agrees with the xxhash64 default") {
+  test("md5-permutation minhash stays in [0, P31); 60-bit simhash in range") {
     val sh = Dedup.shingleSet(docs, "doc_id", "text", 3)
-    def pairs(sigs: org.apache.spark.sql.DataFrame, sqlBuckets: Boolean) =
-      Dedup.lshCandidates(sigs, 4, sqlBuckets)
-        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
-        .toMap
-    val fast = pairs(Dedup.minhashSignatures(sh, 16), sqlBuckets = false)
-    val checkable =
-      pairs(Dedup.minhashSignaturesPerm(sh, 16), sqlBuckets = true)
+    val checkable = Dedup.lshCandidates(Dedup.minhashSignaturesPerm(sh, 16), 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+      .toMap
     // permutation family stays in [0, P31)
     val sig = Dedup.minhashSignaturesPerm(sh, 16)
       .select(org.apache.spark.sql.functions.explode(col("sig")))
       .collect().map(_.getLong(0))
     assert(sig.forall(v => v >= 0 && v < Dedup.P31))
-    // exact duplicates are found by BOTH hash families with est = 1.0
-    assert(fast((1L, 2L)) == 1.0 && checkable((1L, 2L)) == 1.0)
-    assert(!fast.contains((1L, 4L)) && !checkable.contains((1L, 4L)))
-    // 60-bit variant of simhash is engine-stable too
-    val fp60 = Dedup.simhash(docs, "doc_id", "text", 60, Dedup.md5Hash60)
+    // exact duplicates are found with est = 1.0
+    assert(checkable((1L, 2L)) == 1.0)
+    assert(!checkable.contains((1L, 4L)))
+    // the 60-bit simhash is engine-stable
+    val fp60 = Dedup.simhash(docs, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(fp60(1L) == fp60(2L) && fp60(1L) != fp60(4L))
     assert(fp60.values.forall(v => v >= 0 && v < (1L << 60)))

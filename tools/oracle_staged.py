@@ -12,7 +12,7 @@ replays the SAME registered oracle SQL with bounded peak disk:
   2. CREATE TEMP TABLE per CTE, in order;
   3. DROP each table right after its LAST textual reference — the
      l0..l21 rounds only feed the next round, so peak is ~2 rounds;
-  4. optionally CHUNK one configured stage (the rerank `d`) by running
+  4. optionally CHUNK one configured stage (the rerank `c_dot`) by running
      its body N times against `ia % N = i` slices of the candidate
      table, INSERT-INTO-appending — complete groups per slice because
      the chunk key is the group key;
@@ -38,8 +38,8 @@ TABLES = ["region", "nation", "customer", "supplier", "part",
 # number of slices). The chunk column must be (part of) the stage's
 # GROUP BY key so every slice computes complete groups.
 CHUNK = {
-    "semantic_dedup_scaled": {"d": ("cand", "ia", 16)},
-    "embedding_near_dup_scaled": {"d": ("cand", "ia", 16)},
+    "semantic_dedup_scaled": {"c_dot": ("cand", "ia", 16)},
+    "embedding_near_dup_scaled": {"c_dot": ("cand", "ia", 16)},
 }
 
 

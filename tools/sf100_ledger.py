@@ -62,6 +62,8 @@ SF100_LOGS = [
     ("r16_oracle.out", "budget", "r16"),
     ("r16_staged.out", "budget", "r16"),
     ("r16_sweep.out", "budget", "r16"),
+    ("oracle_sf100_kmeans.out", "budget", "r18"),
+    ("oracle_sf100_staged.out", "budget", "r18"),
     # NOTE: r13_stream_trigger.out (bounded-trigger knob-ON parity) is
     # deliberately NOT a ledger source — it measures trigger-split
     # semantics for the watermarked streams, not the registered
@@ -186,11 +188,9 @@ def main():
     # Registry = the CURRENT oracle_sql dump when present (includes
     # queries registered after the last driver correctness run);
     # no-oracle queries stay the CORRECTNESS-declared rows-only set.
-    cur = f"{SCALE}/verify_r15_sf100/oracle_sql.json"
+    cur = f"{SCALE}/verify_sf100/oracle_sql.json"
     if not os.path.exists(cur):
-        cur = f"{SCALE}/verify_r14_sf100/oracle_sql.json"
-    if not os.path.exists(cur):
-        cur = f"{SCALE}/verify_r13_sf100/oracle_sql.json"
+        cur = f"{SCALE}/verify_r15_sf100/oracle_sql.json"
     if os.path.exists(cur):
         all_queries = sorted(set(corr) | set(json.load(open(cur))))
     else:
