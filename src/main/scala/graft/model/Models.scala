@@ -43,15 +43,24 @@ class MacroF1Evaluator(override val uid: String) extends Evaluator {
 object Models {
 
   /** Inverse-class-frequency weights (sklearn class_weight='balanced'):
-    * w(c) = n / (k * n_c). Pure column math, no collect of data rows.
+    * w(c) = n / (k * n_c), from one aggregate of the per-label counts (k
+    * and n count a null label too) applied as a literal `when` chain.
+    * Rows with a null label are dropped and the label column comes first;
+    * row order within each partition is kept.
     */
   def withBalancedWeights(df: DataFrame, labelCol: String): DataFrame = {
-    val counts = df.groupBy(labelCol).agg(count(lit(1)).as("__n"))
-    val k = counts.count()
-    val n = df.count()
-    df.join(broadcast(counts), Seq(labelCol))
-      .withColumn("weight", lit(n.toDouble) / (lit(k.toDouble) * col("__n")))
-      .drop("__n")
+    val counts = df.groupBy(labelCol).agg(count(lit(1))).collect()
+      .map(r => r.get(0) -> r.getLong(1))
+    val k = counts.length
+    val n = counts.map(_._2).sum
+    val weight = counts.collect { case (label, nc) if label != null =>
+      (col(labelCol) === lit(label), n.toDouble / (k.toDouble * nc))
+    }.foldLeft(lit(null).cast("double")) { case (w, (isLabel, v)) =>
+      when(isLabel, v).otherwise(w)
+    }
+    df.filter(col(labelCol).isNotNull)
+      .select(col(labelCol) +: df.columns.toSeq.filter(_ != labelCol).map(col) :+
+        weight.as("weight"): _*)
   }
 
   def assembler(features: Seq[String]): VectorAssembler =

@@ -671,38 +671,45 @@ object SimQueries extends QueryPack {
 
   /** MMR diversity selection oracle: the greedy argmax chain is replayed
     * as k chained CTEs — each step picks the best-scoring remaining
-    * vector given the union of all previous picks (correlated MAX over
-    * the pairwise-cosine CTE), with the same literal 0.7/0.3 weights
-    * and (score desc, vec_id) tiebreak as the Spark loop.
+    * vector given the union of all previous picks, with the same literal
+    * 0.7/0.3 weights and (score desc, vec_id) tiebreak as the Spark loop.
+    * Each step's max similarity to the picks is a MAX over `pcu`, the
+    * rounded cosines against every pick so far: step j adds only the
+    * cosines against pick j (`pc$j`), never the full pairwise matrix.
+    * The chain's CTEs are MATERIALIZED: inlined, each step would replay
+    * every earlier one several times over.
     */
   private def mmrSql(k: Int): String = {
     val base = s"""
       WITH $probeSql,
       ${Similarity.oracleCosineCtes("sc", "embeddings WHERE vec_id <> 0")},
       rel AS (SELECT vec_id, cos AS rel FROM sc),
-      nrm AS (SELECT vec_id, SUM(x * x) AS n2 FROM sc_v GROUP BY 1),
-      pag AS (SELECT a.vec_id AS ia, b.vec_id AS ib, SUM(a.x * b.x) AS dot
-              FROM sc_v a JOIN sc_v b ON a.pos = b.pos AND a.vec_id <> b.vec_id
-              GROUP BY a.vec_id, b.vec_id),
-      pcm AS (SELECT ia, ib,
-                     round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) AS cos
-              FROM pag JOIN nrm na ON na.vec_id = ia
-                       JOIN nrm nb ON nb.vec_id = ib),
-      sel1 AS (SELECT CAST(1 AS BIGINT) AS rank, vec_id, rel
+      nrm AS MATERIALIZED (SELECT vec_id, SUM(x * x) AS n2 FROM sc_v GROUP BY 1),
+      sel1 AS MATERIALIZED (SELECT CAST(1 AS BIGINT) AS rank, vec_id, rel
                FROM rel ORDER BY rel DESC, vec_id LIMIT 1),
-      selu1 AS (SELECT * FROM sel1)"""
+      selu1 AS MATERIALIZED (SELECT * FROM sel1)"""
     val steps = (2 to k).map { i =>
+      val j = i - 1
+      val pcu =
+        if (j == 1) "SELECT * FROM pc1"
+        else s"SELECT * FROM pcu${j - 1} UNION ALL SELECT * FROM pc$j"
       s"""
-      sel$i AS (
+      pd$j AS (SELECT a.vec_id AS ia, b.vec_id AS ib, SUM(a.x * b.x) AS dot
+               FROM sel$j s JOIN sc_v b ON b.vec_id = s.vec_id
+               JOIN sc_v a ON a.pos = b.pos AND a.vec_id <> b.vec_id
+               GROUP BY a.vec_id, b.vec_id),
+      pc$j AS MATERIALIZED (
+        SELECT ia, round(dot / (sqrt(na.n2) * sqrt(nb.n2)), 6) AS cos
+        FROM pd$j JOIN nrm na ON na.vec_id = ia JOIN nrm nb ON nb.vec_id = ib),
+      pcu$j AS MATERIALIZED ($pcu),
+      sel$i AS MATERIALIZED (
         SELECT CAST($i AS BIGINT) AS rank, r.vec_id, r.rel FROM rel r
-        WHERE r.vec_id NOT IN (SELECT vec_id FROM selu${i - 1})
+        WHERE r.vec_id NOT IN (SELECT vec_id FROM selu$j)
         ORDER BY 0.7 * r.rel - 0.3 *
-            (SELECT MAX(p.cos) FROM pcm p
-             WHERE p.ia = r.vec_id
-               AND p.ib IN (SELECT vec_id FROM selu${i - 1})) DESC,
+            (SELECT MAX(p.cos) FROM pcu$j p WHERE p.ia = r.vec_id) DESC,
           r.vec_id
         LIMIT 1),
-      selu$i AS (SELECT * FROM selu${i - 1} UNION ALL SELECT * FROM sel$i)"""
+      selu$i AS MATERIALIZED (SELECT * FROM selu$j UNION ALL SELECT * FROM sel$i)"""
     }.mkString(",", ",", "")
     s"$base$steps SELECT rank, vec_id, rel FROM selu$k ORDER BY rank"
   }

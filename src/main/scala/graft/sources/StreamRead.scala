@@ -27,7 +27,7 @@ object StreamRead {
     require(fs.exists(path),
       s"stream source $base matches nothing — refusing to stream an " +
         "empty table")
-    val rd = spark.readStream.schema(spark.read.parquet(base).schema)
+    val rd = spark.readStream.schema(graft.Tables.schema(spark, base))
     if (fs.getFileStatus(path).isDirectory)
       rd.parquet(base)
     else

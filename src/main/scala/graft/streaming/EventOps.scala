@@ -36,7 +36,7 @@ object EventOps {
     */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = graft.Tables(spark, sfDir, "events")
     val nanos = raw.schema("ts").dataType match {
       case LongType => col("ts")
       case _ => unix_micros(col("ts").cast(TimestampType)) * 1000L
@@ -355,7 +355,7 @@ object EventOps {
     * complete mode — the dimension-lookup pattern for event pipelines.
     */
   def streamingEnrichedResult(spark: SparkSession, sfDir: String): DataFrame = {
-    val dim = spark.read.parquet(s"$sfDir/customer.parquet")
+    val dim = graft.Tables(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val enriched = streamingEvents(spark, sfDir)
       .join(dim, col("c_custkey") === col("user_id"))

@@ -1,7 +1,7 @@
 package graft.tree
 
 import graft.transform.QuantileBinner
-import org.apache.spark.{Aggregator, Partitioner}
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -13,16 +13,19 @@ import org.apache.spark.storage.StorageLevel
   * (PLANET-style) for Spark:
   *
   *  - the driver holds only the tree + per-node class counts;
-  *  - one Spark job per level searches ALL frontier nodes at once: a
-  *    single shuffle combines per-class counts map-side under
-  *    (node, feature, value), hash-partitions them on (node, feature) and
-  *    sorts each partition by value; a streaming scan then walks each
-  *    (node, feature) group in value order with O(classes) state and keeps
-  *    its best split;
+  *  - a fit loads its rows once into one persisted column block per
+  *    partition, each feature's rows presorted by value (SPRINT's
+  *    attribute lists); a level keeps only a node id per row;
+  *  - one Spark job per level searches ALL frontier nodes at once: each
+  *    map task walks every sampled feature's presorted rows once and sends
+  *    one per-class count cell per (node, feature, value) run through a
+  *    shuffle that hash-partitions on (node, feature) and sorts each
+  *    partition by value; a streaming scan then walks each (node, feature)
+  *    group in value order with O(classes) state and keeps its best split;
   *  - the driver applies the reference's stopping rules
   *    (house_predict.py:325-334) and tie-breaks (first feature in sampled
   *    order, lowest threshold, strict gain improvement — :310-313), then
-  *    routes rows to children with a compiled `when` expression.
+  *    routes each row's node id to a child with the level's split table.
   *
   * Exact mode (maxBins=None) searches every distinct value like the
   * reference (:275-283); `maxBins=Some(k)` pre-quantizes features with
@@ -167,7 +170,7 @@ object DecisionTree {
     * flag, and the raw bits of the value. Values are normalised before the
     * bits are taken (-0.0 -> 0.0; `doubleToLongBits` keeps one NaN), so
     * equal bits mean Spark-equal values. A `Double` field would never
-    * combine NaN keys, since NaN != NaN.
+    * match NaN keys, since NaN != NaN.
     */
   private final case class Cell(node: Int, feat: Int, isNull: Boolean, bits: Long) {
     def value: Double = java.lang.Double.longBitsToDouble(bits)
@@ -194,6 +197,185 @@ object DecisionTree {
       val c = key.asInstanceOf[Cell]
       Math.floorMod(31 * c.node + c.feat, numPartitions)
     }
+  }
+
+  /** One partition's training rows as columns, loaded once per fit. Row
+    * `i` starts in node `node(i)` and has class index `cls(i)`. For feature
+    * `j`, `vals(j)(i)` is the row's value, normalised (-0.0 -> 0.0) and NaN
+    * where null; `order(j)` lists the rows with the `nulls(j)` null rows
+    * first, then by value in Spark's double order (`Double.compare` on
+    * normalised values, NaN last).
+    */
+  private final class Block(
+      val node: Array[Int], val cls: Array[Int], val vals: Array[Array[Double]],
+      val nulls: Array[Int], val order: Array[Array[Int]]) extends Serializable
+
+  /** `rows` (node int, label long, then the features as doubles) as one
+    * [[Block]] per partition; `labels` must hold every label.
+    */
+  private def load(rows: DataFrame, labels: Seq[Long]): RDD[Block] = {
+    val classOf = labels.zipWithIndex.toMap
+    val nFeat = rows.schema.size - 2
+    rows.queryExecution.toRdd.mapPartitions { it =>
+      val node, cls = new scala.collection.mutable.ArrayBuilder.ofInt
+      val vals = Array.fill(nFeat)(new scala.collection.mutable.ArrayBuilder.ofDouble)
+      val nullRows, valueRows = Array.fill(nFeat)(new scala.collection.mutable.ArrayBuilder.ofInt)
+      var i = 0
+      it.foreach { r =>
+        node += r.getInt(0)
+        cls += classOf(r.getLong(1))
+        var j = 0
+        while (j < nFeat) {
+          if (r.isNullAt(2 + j)) { vals(j) += Double.NaN; nullRows(j) += i }
+          else {
+            val v = r.getDouble(2 + j)
+            vals(j) += (if (v == 0.0) 0.0 else v)
+            valueRows(j) += i
+          }
+          j += 1
+        }
+        i += 1
+      }
+      val v = vals.map(_.result())
+      val order = Array.tabulate(nFeat)(j =>
+        nullRows(j).result() ++ sortByValue(valueRows(j).result(), v(j)))
+      Iterator.single(new Block(
+        node.result(), cls.result(), v, nullRows.map(_.length), order))
+    }
+  }
+
+  /** `rows` stably sorted by `Double.compare` of their values in `v`: a
+    * bottom-up merge sort on primitive arrays.
+    */
+  private def sortByValue(rows: Array[Int], v: Array[Double]): Array[Int] = {
+    val n = rows.length
+    var from = rows
+    var to = new Array[Int](n)
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var a = lo
+        var b = mid
+        var o = lo
+        while (o < hi) {
+          if (b >= hi || (a < mid && java.lang.Double.compare(v(from(a)), v(from(b))) <= 0)) {
+            to(o) = from(a); a += 1
+          } else { to(o) = from(b); b += 1 }
+          o += 1
+        }
+        lo = hi
+      }
+      val t = from; from = to; to = t
+      width *= 2
+    }
+    from
+  }
+
+  /** One map task of a level: walks each sampled feature's presorted rows
+    * once and emits, per run of equal values (the null rows are one run),
+    * one cell per node with rows in the run, holding that node's class
+    * counts in it. Rows whose node is not in `featsOf` (node -> indexes of
+    * its sampled features) are skipped. The state is one class-count row
+    * per searched node.
+    */
+  private def walk(
+      b: Block, nodeOf: Array[Int], featsOf: Map[Int, Array[Int]],
+      k: Int): Iterator[(Cell, Array[Long])] = {
+    val ids = featsOf.keys.toArray.sorted
+    val nFeat = b.vals.length
+    val sampled = ids.map { id =>
+      val s = new Array[Boolean](nFeat)
+      featsOf(id).foreach(s(_) = true)
+      s
+    }
+    // each row's index into `ids`, or -1
+    val slot = nodeOf.map { id =>
+      val s = if (id < 0) -1 else java.util.Arrays.binarySearch(ids, id)
+      if (s < 0) -1 else s
+    }
+    val acc = new Array[Long](ids.length * k)
+    val inRun = new Array[Boolean](ids.length)
+    val hit = new Array[Int](ids.length) // slots with rows in the run, first hit first
+    val out = new Array[(Cell, Array[Long])](ids.length)
+
+    new Iterator[(Cell, Array[Long])] {
+      private var feat = -1
+      private var pos = nodeOf.length // next index into `feat`'s order
+      private var nOut, emitted = 0   // cells of the last run; emitted so far
+
+      def hasNext: Boolean = {
+        while (emitted == nOut && advance()) {}
+        emitted < nOut
+      }
+
+      def next(): (Cell, Array[Long]) = {
+        if (!hasNext) throw new NoSuchElementException
+        emitted += 1
+        out(emitted - 1)
+      }
+
+      /** Counts the next run into `out`; false once every feature is walked. */
+      private def advance(): Boolean = {
+        while (pos == nodeOf.length) {
+          feat += 1
+          while (feat < nFeat && !sampled.exists(_(feat))) feat += 1
+          if (feat == nFeat) return false
+          pos = 0
+        }
+        val order = b.order(feat)
+        val v = b.vals(feat)
+        val isNull = pos < b.nulls(feat)
+        val bits = if (isNull) 0L else java.lang.Double.doubleToLongBits(v(order(pos)))
+        val end =
+          if (isNull) b.nulls(feat)
+          else {
+            var e = pos + 1
+            while (e < order.length &&
+                java.lang.Double.doubleToLongBits(v(order(e))) == bits) e += 1
+            e
+          }
+        var nHit = 0
+        while (pos < end) {
+          val r = order(pos)
+          val s = slot(r)
+          if (s >= 0 && sampled(s)(feat)) {
+            if (!inRun(s)) { inRun(s) = true; hit(nHit) = s; nHit += 1 }
+            acc(s * k + b.cls(r)) += 1L
+          }
+          pos += 1
+        }
+        var o = 0
+        while (o < nHit) {
+          val s = hit(o)
+          out(o) = (Cell(ids(s), feat, isNull, bits),
+            java.util.Arrays.copyOfRange(acc, s * k, s * k + k))
+          java.util.Arrays.fill(acc, s * k, s * k + k, 0L)
+          inRun(s) = false
+          o += 1
+        }
+        nOut = nHit
+        emitted = 0
+        true
+      }
+    }
+  }
+
+  /** The level's one shuffle: the [[walk]] of every partition, hash-
+    * partitioned on (node, feature) and sorted by the full key within each
+    * reduce partition. A map task sends at most one cell per key, so
+    * nothing is combined on either side here; [[candidates]] sums equal
+    * keys as they arrive side by side.
+    */
+  private def histogram(
+      blocks: RDD[Block], nodes: RDD[Array[Int]], featsOf: Map[Int, Array[Int]],
+      k: Int, parts: Int): RDD[(Cell, Array[Long])] = {
+    val cells = blocks.zipPartitions(nodes)((bs, ns) =>
+      walk(bs.next(), ns.next(), featsOf, k))
+    new ShuffledRDD[Cell, Array[Long], Array[Long]](cells, new GroupPartitioner(parts))
+      .setKeyOrdering(CellOrdering)
   }
 
   /** One split candidate of a (node, feature) group: `left` holds the
@@ -243,54 +425,16 @@ object DecisionTree {
     rows.map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1).toSeq
   }
 
-  /** The level's one shuffle. Each row of `rows` (columns __node, label
-    * and `feats`) adds one to its class in the cell of every feature its
-    * node samples (`featsOf`: node -> indexes into `feats`). Counts are
-    * combined map-side, hash-partitioned on (node, feature) and sorted by
-    * the full key within each partition: Spark's spillable combine and
-    * sort, the only place memory grows with the distinct values.
-    */
-  private def histogram(
-      rows: DataFrame, feats: Seq[String], featsOf: Map[Int, Array[Int]],
-      labels: Seq[Long]): RDD[(Cell, Array[Long])] = {
-    val k = labels.size
-    val classOf = labels.zipWithIndex.toMap
-    val melted = rows
-      .select(col("__node") +: col("label") +: feats.map(col(_).cast("double")): _*)
-      .queryExecution.toRdd
-      .flatMap { r =>
-        val node = r.getInt(0)
-        val cls = classOf(r.getLong(1))
-        featsOf(node).iterator.map { j =>
-          val cell =
-            if (r.isNullAt(2 + j)) Cell(node, j, isNull = true, 0L)
-            else {
-              val v = r.getDouble(2 + j)
-              Cell(node, j, isNull = false,
-                java.lang.Double.doubleToLongBits(if (v == 0.0) 0.0 else v))
-            }
-          (cell, cls)
-        }
-      }
-    val counts = new Aggregator[Cell, Int, Array[Long]](
-      cls => { val c = new Array[Long](k); c(cls) = 1L; c },
-      (c, cls) => { c(cls) += 1L; c },
-      (a, b) => { var i = 0; while (i < k) { a(i) += b(i); i += 1 }; a })
-    val parts = graft.SparkEntry.shufflePartitions(rows.sparkSession)
-    new ShuffledRDD[Cell, Int, Array[Long]](melted, new GroupPartitioner(parts))
-      .setAggregator(counts)
-      .setMapSideCombine(true)
-      .setKeyOrdering(CellOrdering)
-  }
-
   /** Streams one reduce partition of [[histogram]] into split candidates
-    * with O(classes) state. Per (node, feature) group the null cell comes
-    * first: the node's class counts (`counts`, kept with the frontier)
-    * minus the null counts are the non-null totals. Values then arrive in
-    * Spark's double order. The lowest distinct value is never a candidate
-    * (the reference iterates `unique_values[1:]`, house_predict.py:283),
-    * nor is one that leaves either child under `minSamplesLeaf` rows
-    * (so never the max value: its right child is empty).
+    * with O(classes) state. Equal cells (one per map task at most) arrive
+    * side by side and are summed first. Per (node, feature) group the null
+    * cell comes first: the node's class counts (`counts`, kept with the
+    * frontier) minus the null counts are the non-null totals. Values then
+    * arrive in Spark's double order. The lowest distinct value is never a
+    * candidate (the reference iterates `unique_values[1:]`,
+    * house_predict.py:283), nor is one that leaves either child under
+    * `minSamplesLeaf` rows (so never the max value: its right child is
+    * empty).
     *
     * Null feature values are excluded from the gain: at routing and
     * inference `x <= thr` is null for them, so they fall to the RIGHT
@@ -300,11 +444,23 @@ object DecisionTree {
       cells: Iterator[(Cell, Array[Long])], counts: Map[Int, Array[Long]],
       impurity: (Array[Long], Long) => Double,
       minSamplesLeaf: Int): Iterator[Candidate] = {
+    val in = cells.buffered
+    val summed = new Iterator[(Cell, Array[Long])] {
+      def hasNext: Boolean = in.hasNext
+      def next(): (Cell, Array[Long]) = {
+        val (cell, c) = in.next()
+        while (in.hasNext && in.head._1 == cell) {
+          val d = in.next()._2
+          for (i <- c.indices) c(i) += d(i)
+        }
+        (cell, c)
+      }
+    }
     var node, feat = -1
     var tot, left = Array.emptyLongArray
     var tn, ln = 0L
     var first = true
-    cells.flatMap { case (cell, c) =>
+    summed.flatMap { case (cell, c) =>
       if (cell.node != node || cell.feat != feat) {
         node = cell.node; feat = cell.feat
         tot = counts(node).clone(); left = new Array[Long](tot.length)
@@ -352,25 +508,41 @@ object DecisionTree {
 
   /** Best split of every (node, sampled feature) pair in ONE job: one
     * [[histogram]] shuffle, a [[candidates]] scan per reduce partition,
-    * and a collect of one [[Candidate]] per pair that has any.
-    *
-    * `rows` holds only the nodes of `featsOf`, with columns __node (int),
-    * label (long) and the features; `counts` are those nodes' per-class
-    * row counts, aligned with `labels`.
+    * and a collect of one [[Candidate]] per pair that has any, keyed by
+    * (node, feature index). `featsOf` maps each searched node to its
+    * sampled feature indexes; `counts` are those nodes' per-class row
+    * counts.
+    */
+  private def levelSplits(
+      blocks: RDD[Block], nodes: RDD[Array[Int]], featsOf: Map[Int, Array[Int]],
+      counts: Map[Int, Seq[Long]], criterion: String, minSamplesLeaf: Int,
+      parts: Int): Map[(Int, Int), Candidate] = {
+    val imp = impurity(criterion)
+    val totals = counts.map { case (id, c) => id -> c.toArray }
+    val k = totals.head._2.length
+    histogram(blocks, nodes, featsOf, k, parts)
+      .mapPartitions(cells =>
+        bestPerGroup(candidates(cells, totals, imp, minSamplesLeaf)))
+      .collect()
+      .map(c => (c.node, c.feat) -> c).toMap
+  }
+
+  /** [[levelSplits]] over a frame of columns __node (int), label (long)
+    * and the features, each row starting in its __node; `counts` are
+    * those nodes' per-class row counts, aligned with `labels`.
     */
   private[tree] def bestSplits(
       rows: DataFrame, featsOf: Map[Int, Seq[String]],
       counts: Map[Int, Seq[Long]], labels: Seq[Long], criterion: String,
       minSamplesLeaf: Int): Map[(Int, String), Candidate] = {
     val feats = featsOf.values.flatten.toSeq.distinct
-    val imp = impurity(criterion)
-    val totals = counts.map { case (id, c) => id -> c.toArray }
+    val blocks = load(
+      rows.select(col("__node") +: col("label") +: feats.map(col(_).cast("double")): _*),
+      labels)
     val featIdx = featsOf.map { case (id, fs) => id -> fs.map(feats.indexOf).toArray }
-    histogram(rows, feats, featIdx, labels)
-      .mapPartitions(cells =>
-        bestPerGroup(candidates(cells, totals, imp, minSamplesLeaf)))
-      .collect()
-      .map(c => (c.node, feats(c.feat)) -> c).toMap
+    levelSplits(blocks, blocks.map(_.node), featIdx, counts, criterion, minSamplesLeaf,
+      graft.SparkEntry.shufflePartitions(rows.sparkSession))
+      .map { case ((id, j), c) => (id, feats(j)) -> c }
   }
 
   /** Root-level gain table for one feature, every candidate
@@ -386,9 +558,10 @@ object DecisionTree {
       s"labels ${unknown.mkString(", ")} of '$labelCol' are not in $labels")
     val imp = impurity(criterion)
     val root = Map(0 -> labels.map(counts.getOrElse(_, 0L)).toArray)
-    val rows = df.select(
-      lit(0).as("__node"), col(labelCol).cast("long").as("label"), col(feature))
-    val gains = histogram(rows, Seq(feature), Map(0 -> Array(0)), labels)
+    val blocks = load(
+      df.select(lit(0), col(labelCol).cast("long"), col(feature).cast("double")), labels)
+    val gains = histogram(blocks, blocks.map(_.node), Map(0 -> Array(0)),
+        labels.size, graft.SparkEntry.shufflePartitions(df.sparkSession))
       .mapPartitions(candidates(_, root, imp, minSamplesLeaf))
       .map(c => Row(c.threshold, c.ln, c.tn, c.gain))
     df.sparkSession.createDataFrame(gains, StructType(Seq(
@@ -397,6 +570,22 @@ object DecisionTree {
       StructField("tn", LongType, nullable = false),
       StructField("gain", DoubleType, nullable = false))))
   }
+
+  /** Next level's node per row: a row of a split node (`ids`, sorted,
+    * with their `feats` and `thresholds`) goes to child 2id+1 when
+    * `x <= threshold` and to 2id+2 otherwise, so null and NaN go right as
+    * in [[TreeModel.predictExpr]]; every other row leaves the tree (-1).
+    */
+  private def route(
+      b: Block, nodeOf: Array[Int], ids: Array[Int], feats: Array[Int],
+      thresholds: Array[Double]): Array[Int] =
+    Array.tabulate(nodeOf.length) { r =>
+      val id = nodeOf(r)
+      val s = if (id < 0) -1 else java.util.Arrays.binarySearch(ids, id)
+      if (s < 0) -1
+      else if (b.vals(feats(s))(r) <= thresholds(s)) 2 * id + 1
+      else 2 * id + 2
+    }
 
   def fit(
       input: DataFrame, features: Seq[String], labelCol: String,
@@ -421,15 +610,14 @@ object DecisionTree {
           (binned, (f, code) => edgeMap(f).edges(code.toInt + 1))
       }
 
-    // labels and root counts in one aggregate, before `cur` is persisted: the
-    // aggregate reads only the label column, and level 0 fills the cache
+    // labels and root counts in one aggregate over the label column; the
+    // blocks are loaded by level 0's job
     val (labels, rootCounts) = labelCounts(df0, labelCol).unzip
-
-    var cur = df0
-      .select((features.map(col) :+
-        col(labelCol).cast("long").as("label") :+
-        lit(0).as("__node")): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val parts = graft.SparkEntry.shufflePartitions(input.sparkSession)
+    val blocks = load(
+      df0.select(lit(0) +: col(labelCol).cast("long") +:
+        features.map(col(_).cast("double")): _*),
+      labels).persist(StorageLevel.MEMORY_AND_DISK)
 
     val nFeat = params.maxFeatures match {
       case None          => features.size
@@ -454,11 +642,10 @@ object DecisionTree {
     val leaves = scala.collection.mutable.Map[Int, TreeLeaf]()
     val splits = scala.collection.mutable.Map[Int, (String, Double)]()
     var frontier: Map[Int, Seq[Long]] = Map(0 -> rootCounts)
-    // parent frame whose persisted blocks are still feeding the (lazily
-    // materialized) child: unpersisted only after the child's first
-    // action (r17 — the explicit per-level count() materialization was a
-    // full extra pass over the routed data at every depth)
-    var pendingPrev: Option[DataFrame] = None
+    // each row's node id; a routed level is persisted, and the level before
+    // it (`pendingPrev`) is released once the next search has read it
+    var nodes: RDD[Array[Int]] = blocks.map(_.node)
+    var pendingPrev: Option[RDD[Array[Int]]] = None
 
     for (depth <- 0 to params.maxDepth if frontier.nonEmpty) {
       // stopping rules (house_predict.py:325-334)
@@ -470,52 +657,45 @@ object DecisionTree {
       stopNow.foreach { case (id, c) => leaves(id) = leafOf(c) }
 
       if (searchable.nonEmpty) {
-        val ids = searchable.keys.toSeq.sorted
-        val featsByNode = ids.map(id => id -> sampleFeatures(id)).toMap
-        val best = bestSplits(
-          cur.filter(col("__node").isin(ids: _*)), featsByNode, searchable,
-          labels, params.criterion, params.minSamplesLeaf)
-        // this level's search has materialized `cur`'s persisted blocks —
-        // the parent's are no longer needed
+        // each node's sampled features, as indexes into `features`
+        val featsByNode = searchable.keys
+          .map(id => id -> sampleFeatures(id).map(features.indexOf).toArray).toMap
+        val best = levelSplits(blocks, nodes, featsByNode, searchable,
+          params.criterion, params.minSamplesLeaf, parts)
         pendingPrev.foreach(_.unpersist())
         pendingPrev = None
 
         var next = Map.empty[Int, Seq[Long]]
-        val routed = scala.collection.mutable.ArrayBuffer[(Int, String, Double)]()
+        val routed = scala.collection.mutable.ArrayBuffer[(Int, Int, Double)]()
         searchable.foreach { case (id, counts) =>
           // first feature in sampled order wins on strict gain improvement
           var bestGain = 0.0
-          var chosen: Option[(String, Candidate)] = None
-          featsByNode(id).foreach { f =>
-            best.get((id, f)).foreach { c =>
-              if (c.gain > bestGain) { bestGain = c.gain; chosen = Some(f -> c) }
+          var chosen: Option[Candidate] = None
+          featsByNode(id).foreach { j =>
+            best.get((id, j)).foreach { c =>
+              if (c.gain > bestGain) { bestGain = c.gain; chosen = Some(c) }
             }
           }
           chosen match {
             case None => leaves(id) = leafOf(counts)
-            case Some((f, c)) =>
+            case Some(c) =>
               // the threshold is still in (possibly binned) training units
-              splits(id) = (f, c.threshold)
-              routed += ((id, f, c.threshold))
+              splits(id) = (features(c.feat), c.threshold)
+              routed += ((id, c.feat, c.threshold))
               next += (2 * id + 1) -> c.left
               next += (2 * id + 2) -> counts.zip(c.left).map { case (t, l) => t - l }
           }
         }
 
         if (routed.nonEmpty) {
-          val routeExpr = routed.foldLeft(col("__node")) {
-            case (e, (id, f, thr)) =>
-              when(col("__node") === id,
-                when(col(f).cast("double") <= thr, lit(2 * id + 1))
-                  .otherwise(lit(2 * id + 2))).otherwise(e)
-          }
-          val prev = cur
-          cur = cur.filter(col("__node").isin(routed.map(_._1).toSeq: _*))
-            .withColumn("__node", routeExpr)
+          val table = routed.sortBy(_._1)
+          val (ids, feats, thresholds) =
+            (table.map(_._1).toArray, table.map(_._2).toArray, table.map(_._3).toArray)
+          val prev = nodes
+          // no action here: the next level's search routes the rows
+          nodes = blocks.zipPartitions(prev)((bs, ns) =>
+            Iterator.single(route(bs.next(), ns.next(), ids, feats, thresholds)))
             .persist(StorageLevel.MEMORY_AND_DISK)
-          // no explicit count: the NEXT level's stats pass materializes
-          // the child (the useful work), and only then is the parent
-          // released (pendingPrev)
           pendingPrev = Some(prev)
         }
         frontier = next
@@ -523,7 +703,8 @@ object DecisionTree {
         frontier = Map.empty
       }
     }
-    cur.unpersist()
+    blocks.unpersist()
+    nodes.unpersist()
     pendingPrev.foreach(_.unpersist()) // loop may end before a next pass
     frontier.foreach { case (id, c) => leaves(id) = leafOf(c) } // safety
 

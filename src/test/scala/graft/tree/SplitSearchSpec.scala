@@ -40,13 +40,17 @@ class SplitSearchSpec extends AnyFunSuite with SparkTestSession {
     rows = (if (mirror) half ++ half.map { case (node, l, vs) =>
       (node, l, vs.map { case d: Double => -d; case other => other })
     } else half).map { case (node, l, vs) => Row.fromSeq(node +: l +: vs) }
+    // one copy of the rows per input partition: every (node, value) key
+    // reaches the shuffle from each map task
+    copies <- Gen.oneOf(1, 2, 3)
     msl <- Gen.choose(1, 3)
     criterion <- Gen.oneOf("entropy", "gini")
-  } yield Case((0 until nFeat).map(i => s"f$i"), labels, rows, msl, criterion)
+  } yield Case((0 until nFeat).map(i => s"f$i"), labels,
+    Seq.fill(copies)(rows).flatten, copies.max(2), msl, criterion)
 
   private def frame(c: Case): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.parallelize(c.rows, 2),
+      spark.sparkContext.parallelize(c.rows, c.partitions),
       StructType(
         StructField("__node", IntegerType, nullable = false) +:
           StructField("label", LongType, nullable = false) +:
@@ -62,45 +66,84 @@ class SplitSearchSpec extends AnyFunSuite with SparkTestSession {
     assert(res.passed, Pretty.pretty(res))
   }
 
+  /** Best split per (node, feature) from the kernel and from the window
+    * form: (threshold bits, gain bits, ln, tn, left counts).
+    */
+  private def bothBestSplits(c: Case): (Map[(Int, String), Any], Map[(Int, String), Any]) = {
+    val df = frame(c)
+    val nodes = c.rows.map(_.getInt(0)).distinct
+    val counts = nodes.map { id =>
+      id -> c.labels.map(l =>
+        c.rows.count(r => r.getInt(0) == id && r.getLong(1) == l).toLong)
+    }.toMap
+    val kernel = DecisionTree.bestSplits(
+      df, nodes.map(_ -> c.feats).toMap, counts, c.labels, c.criterion,
+      c.minSamplesLeaf).map { case ((node, f), b) =>
+      (node, f) -> (bits(b.threshold), bits(b.gain), b.ln, b.tn, b.left)
+    }
+    val reference = SplitStatsReference.bestSplits(
+      SplitStatsReference.splitStats(
+        df, c.feats, c.labels, c.criterion, c.minSamplesLeaf))
+      .collect().map { r =>
+        (r.getAs[Int]("__node"), r.getAs[String]("feat")) ->
+          (bits(r.getAs[Double]("threshold")), bits(r.getAs[Double]("gain")),
+            r.getAs[Long]("ln"), r.getAs[Long]("tn"),
+            c.labels.indices.map(i => r.getAs[Long](s"l_c$i")))
+      }.toMap
+    (kernel, reference)
+  }
+
   test("best split per (node, feature) equals the window form's top row") {
     check(Prop.forAllNoShrink(genCase) { c =>
-      val df = frame(c)
-      val nodes = c.rows.map(_.getInt(0)).distinct
-      val counts = nodes.map { id =>
-        id -> c.labels.map(l =>
-          c.rows.count(r => r.getInt(0) == id && r.getLong(1) == l).toLong)
-      }.toMap
-      val kernel = DecisionTree.bestSplits(
-        df, nodes.map(_ -> c.feats).toMap, counts, c.labels, c.criterion,
-        c.minSamplesLeaf).map { case ((node, f), b) =>
-        (node, f) -> (bits(b.threshold), bits(b.gain), b.ln, b.tn, b.left)
-      }
-      val reference = SplitStatsReference.bestSplits(
-        SplitStatsReference.splitStats(
-          df, c.feats, c.labels, c.criterion, c.minSamplesLeaf))
-        .collect().map { r =>
-          (r.getAs[Int]("__node"), r.getAs[String]("feat")) ->
-            (bits(r.getAs[Double]("threshold")), bits(r.getAs[Double]("gain")),
-              r.getAs[Long]("ln"), r.getAs[Long]("tn"),
-              c.labels.indices.map(i => r.getAs[Long](s"l_c$i")))
-        }.toMap
+      val (kernel, reference) = bothBestSplits(c)
       Prop(kernel == reference) :| s"$c\nkernel    $kernel\nreference $reference"
     })
   }
 
+  /** Root gain table of feature `f` from the kernel and from the window
+    * form, rows (threshold bits, ln, tn, gain bits) in threshold order.
+    */
+  private def bothRootGains(c: Case, f: String): (Seq[Any], Seq[Any]) = {
+    val df = frame(c)
+    val rows = (d: DataFrame) => d.select("threshold", "ln", "tn", "gain")
+      .collect().map(r =>
+        (bits(r.getDouble(0)), r.getLong(1), r.getLong(2), bits(r.getDouble(3))))
+      .sortBy(r => java.lang.Double.longBitsToDouble(r._1)).toSeq
+    val kernel = rows(DecisionTree.rootGains(
+      df, f, "label", c.labels, c.criterion, c.minSamplesLeaf))
+    val reference = rows(SplitStatsReference.splitStats(
+      df.withColumn("__node", lit(0)), Seq(f), c.labels, c.criterion,
+      c.minSamplesLeaf))
+    (kernel, reference)
+  }
+
+  test("keys from both input partitions, special values included, sum exactly") {
+    // every (node, value) key, null, NaN, -0.0, 0.0 and ±Inf included,
+    // reaches the shuffle from both map tasks
+    val values = Seq[Any](null, Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.5, -1.5)
+    val half = for {
+      (v, i) <- values.zipWithIndex
+      node <- Seq(1, 2)
+      label <- Seq(0L, 1L).take(1 + (i + node) % 2)
+    } yield Row(node, label, v, values((i + 3) % values.size))
+    for (criterion <- Seq("entropy", "gini")) {
+      val c = Case(Seq("f0", "f1"), Seq(0L, 1L), half ++ half, 2, 1, criterion)
+      val (kernel, reference) = bothBestSplits(c)
+      assert(kernel.nonEmpty)
+      assert(kernel == reference)
+      for (f <- c.feats) {
+        val (kernelGains, referenceGains) = bothRootGains(c, f)
+        assert(kernelGains.nonEmpty)
+        assert(kernelGains == referenceGains)
+      }
+    }
+  }
+
   test("rootGains equals the window form's gain table row for row") {
     check(Prop.forAllNoShrink(genCase) { c =>
-      val df = frame(c)
       Prop.all(c.feats.map { f =>
-        val rows = (d: DataFrame) => d.select("threshold", "ln", "tn", "gain")
-          .collect().map(r =>
-            (bits(r.getDouble(0)), r.getLong(1), r.getLong(2), bits(r.getDouble(3))))
-          .sortBy(r => java.lang.Double.longBitsToDouble(r._1)).toSeq
-        val kernel = rows(DecisionTree.rootGains(
-          df, f, "label", c.labels, c.criterion, c.minSamplesLeaf))
-        val reference = rows(SplitStatsReference.splitStats(
-          df.withColumn("__node", lit(0)), Seq(f), c.labels, c.criterion,
-          c.minSamplesLeaf))
+        val (kernel, reference) = bothRootGains(c, f)
         Prop(kernel == reference) :| s"$c / $f\nkernel    $kernel\nreference $reference"
       }: _*)
     })
@@ -109,6 +152,6 @@ class SplitSearchSpec extends AnyFunSuite with SparkTestSession {
 
 object SplitSearchSpec {
   final case class Case(
-      feats: Seq[String], labels: Seq[Long], rows: Seq[Row],
+      feats: Seq[String], labels: Seq[Long], rows: Seq[Row], partitions: Int,
       minSamplesLeaf: Int, criterion: String)
 }

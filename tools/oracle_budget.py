@@ -17,6 +17,8 @@ import subprocess
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SFDIR = sys.argv[1]
 OUT = sys.argv[2]
 BUDGET = int(sys.argv[3])
@@ -41,7 +43,7 @@ def run_one(name: str, sql: str) -> dict:
 import duckdb, pandas as pd, hashlib, sys
 con = duckdb.connect()
 con.execute("SET memory_limit='80GB'")
-con.execute("SET temp_directory='/root/repo/target/spark-tmp/duck'")
+con.execute("SET temp_directory='{REPO}/target/spark-tmp/duck'")
 {views}
 df = con.execute({sql!r}).df()
 df = df[sorted(df.columns)]

@@ -19,8 +19,10 @@ import subprocess
 import sys
 import time
 
-SFDIR = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/target/scale/sf100"
-OUT = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/scale/verify_dedup_sf100"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+SFDIR = sys.argv[1] if len(sys.argv) > 1 else f"{REPO}/target/scale/sf100"
+OUT = sys.argv[2] if len(sys.argv) > 2 else f"{REPO}/target/scale/verify_dedup_sf100"
 BUDGET = int(sys.argv[3]) if len(sys.argv) > 3 else 1800
 
 QUERIES = ["span_dedup_coverage", "dedup_components_bucket"]
@@ -37,7 +39,7 @@ def run_one(name: str, sql: str) -> dict:
 import duckdb, pandas as pd, hashlib, sys
 con = duckdb.connect()
 con.execute("SET memory_limit='80GB'")
-con.execute("SET temp_directory='/root/repo/target/spark-tmp/duck'")
+con.execute("SET temp_directory='{REPO}/target/spark-tmp/duck'")
 con.execute("CREATE VIEW documents AS SELECT * FROM read_parquet('{table_glob('documents')}')")
 df = con.execute({sql!r}).df()
 df = df[sorted(df.columns)]

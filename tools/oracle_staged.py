@@ -31,6 +31,8 @@ import re
 import sys
 import time
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
 
@@ -152,7 +154,7 @@ def main():
     for name in queries:
         con = duckdb.connect()
         con.execute("SET memory_limit='60GB'")
-        con.execute("SET temp_directory='/root/repo/target/spark-tmp/duck'")
+        con.execute(f"SET temp_directory='{REPO}/target/spark-tmp/duck'")
         for t in TABLES:
             if os.path.exists(f"{sfdir}/{t}.parquet"):
                 con.execute(f"CREATE VIEW {t} AS SELECT * FROM "

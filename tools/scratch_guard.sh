@@ -10,15 +10,18 @@
 #                            into a replay costs far more than a retry)
 #   scratch_guard N          both, in order
 
+# the checkout holding this file, wherever it is sourced from
+SCRATCH_REPO=$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)
+
 scratch_clean() {
-  rm -rf /root/repo/target/spark-tmp/* 2>/dev/null
+  rm -rf "$SCRATCH_REPO"/target/spark-tmp/* 2>/dev/null
   echo "SCRATCH_GUARD: cleaned target/spark-tmp"
 }
 
 scratch_require_gb() {
   local need=$1
   local avail_kb
-  avail_kb=$(df -Pk /root/repo | awk 'NR==2 {print $4}')
+  avail_kb=$(df -Pk "$SCRATCH_REPO" | awk 'NR==2 {print $4}')
   local avail_gb=$((avail_kb / 1024 / 1024))
   if [ "$avail_gb" -lt "$need" ]; then
     echo "SCRATCH_GUARD: only ${avail_gb} GB free (< ${need} GB needed) — aborting stage" >&2

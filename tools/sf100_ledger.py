@@ -22,7 +22,7 @@ import os
 import re
 import sys
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SCALE = f"{REPO}/target/scale"
 
 # (path, format, round-tag). Order matters: later entries override

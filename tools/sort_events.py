@@ -13,12 +13,13 @@ import time
 
 from pyspark.sql import SparkSession
 
-SRC = "target/scale/sf100/events.parquet"
-DST = "target/scale/sf100_sorted/events.parquet"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+SRC = f"{REPO}/target/scale/sf100/events.parquet"
+DST = f"{REPO}/target/scale/sf100_sorted/events.parquet"
 
 spark = (SparkSession.builder.master("local[16]")
          .config("spark.sql.shuffle.partitions", "49")
-         .config("spark.local.dir", "/root/repo/target/spark-tmp")
+         .config("spark.local.dir", f"{REPO}/target/spark-tmp")
          .config("spark.driver.memory", "32g")
          .getOrCreate())
 df = spark.read.parquet(SRC)

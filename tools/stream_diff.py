@@ -13,6 +13,8 @@ import sys
 import duckdb
 import pandas as pd
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 SFDIR, OUT, NAME = sys.argv[1], sys.argv[2], sys.argv[3]
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -31,7 +33,7 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 sql = json.load(open(f"{OUT}/oracle_sql.json"))[NAME]
 con = duckdb.connect()
 con.execute("SET memory_limit='60GB'")
-con.execute("SET temp_directory='/root/repo/target/spark-tmp/duck'")
+con.execute(f"SET temp_directory='{REPO}/target/spark-tmp/duck'")
 for t in TABLES:
     if os.path.exists(f"{SFDIR}/{t}.parquet"):
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM "
