@@ -236,17 +236,12 @@ object Dedup {
 
   /** LSH candidate pairs: split signatures into `bands` bands, bucket by
     * band hash, emit distinct id pairs sharing any bucket, with estimated
-    * similarity = fraction of matching minhashes.
+    * similarity = fraction of matching minhashes. `sigs` is read three
+    * times (banding and two joins back), so pass a materialized frame
+    * (a `localCheckpoint` or a memoized `ChainGuard.frame`): its upstream
+    * shingling and hashing is the pipeline's most expensive stage.
     */
-  def lshCandidates(sigsIn: DataFrame, bands: Int): DataFrame = {
-    // The signature frame is consumed 3x (banding + two joins back); its
-    // upstream — shingle explode + md5 + 32-perm min-agg — is the most
-    // expensive stage of the pipeline, so materialize it once instead of
-    // recomputing per reference. Signatures are tiny next to the text
-    // (id + numHashes ints), so this holds at scale. localCheckpoint
-    // (not persist): blocks are released when the checkpointed RDD is
-    // GC'd, so long-lived sessions need no caller-side unpersist.
-    val sigs = sigsIn.localCheckpoint()
+  def lshCandidates(sigs: DataFrame, bands: Int): DataFrame = {
     val bk = banded(sigs, bands)
     // dedupe bare id pairs first (cheap shuffle), then join signatures
     // back — never shuffle signature arrays through the pair distinct

@@ -16,31 +16,41 @@ import org.apache.spark.sql.functions._
   */
 object Metrics {
 
+  /** Correct rows over all rows from the (label, pred) counts: bit for
+    * bit the average of 1.0/0.0 per row; a null label or pred is wrong. */
   def accuracy(df: DataFrame, labelCol: String, predCol: String): DataFrame =
-    df.agg(Q.r6(
-      avg(when(col(labelCol) === col(predCol), 1.0).otherwise(0.0)))
-      .as("accuracy"))
+    pairCounts(df, labelCol, predCol).agg(Q.r6(
+      sum(when(col("label") === col("pred"), col("n")).otherwise(0L)) * 1.0 /
+        sum("n")).as("accuracy"))
 
   /** Confusion counts, one row per (label, pred) pair. */
   def confusion(df: DataFrame, labelCol: String, predCol: String): DataFrame =
+    pairCounts(df, labelCol, predCol).orderBy("label", "pred")
+
+  /** (label, pred, n): the one aggregate every metric here reads. The
+    * metrics of one scored frame share its exchange and scan it once, as
+    * long as no filter is pushed below it.
+    */
+  private def pairCounts(df: DataFrame, labelCol: String, predCol: String): DataFrame =
     df.groupBy(col(labelCol).as("label"), col(predCol).as("pred"))
       .agg(count(lit(1)).as("n"))
-      .orderBy("label", "pred")
 
   /** Per-class support/tp/fp/fn and precision/recall/f1 (zero_division=0).
-    * Classes = distinct labels ∪ distinct predictions.
+    * Classes = distinct labels ∪ distinct predictions; a null label and a
+    * null prediction are two classes. The true positives ride the label
+    * sums: a separate filtered, left-joined diagonal would have its filter
+    * pushed below the shared count exchange.
     */
   def perClass(df: DataFrame, labelCol: String, predCol: String): DataFrame = {
-    val byLabel = df.groupBy(col(labelCol).as("cls"))
-      .agg(count(lit(1)).as("support"))
-    val byPred = df.groupBy(col(predCol).as("cls"))
-      .agg(count(lit(1)).as("n_pred"))
-    val diag = df.filter(col(labelCol) === col(predCol))
-      .groupBy(col(labelCol).as("cls")).agg(count(lit(1)).as("tp"))
+    val pairs = pairCounts(df, labelCol, predCol)
+    val byLabel = pairs.groupBy(col("label").as("cls")).agg(
+      sum("n").as("support"),
+      sum(when(col("label") === col("pred"), col("n"))).as("tp"))
+    val byPred = pairs.groupBy(col("pred").as("cls"))
+      .agg(sum("n").as("n_pred"))
     val zero = lit(0L)
     byLabel
       .join(byPred, Seq("cls"), "full_outer")
-      .join(diag, Seq("cls"), "left")
       .select(
         col("cls"),
         coalesce(col("support"), zero).as("support"),

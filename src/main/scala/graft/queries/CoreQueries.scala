@@ -650,9 +650,9 @@ object CoreQueries extends QueryPack {
     * and aggregate OFF THE BUCKETED TABLES and hash-check the result
     * against DuckDB reading the ORIGINAL parquet. This proves the
     * bucketed write→read→join path is lossless end-to-end;
-    * BucketingSpec pins the exchange-free plan property and
-    * `graft.BucketBench` measures it at sf100 (18.5 s co-located vs
-    * 79.4 s shuffled, 4.3×).
+    * BucketingSpec pins the exchange-free plan property; the sf100
+    * measurement (18.5 s co-located vs 79.4 s shuffled, 4.3×) is
+    * recorded in SCALE.md and BASELINE.md.
     */
   val bucketedJoin: GraftQuery = GraftQuery(
     "bucketed_join_roundtrip",
@@ -709,7 +709,8 @@ object CoreQueries extends QueryPack {
     * |lineitem| to ≤|customer| rows — at sf100, 600M→10M) before the
     * customer join, and nation/region broadcast. Same bytes as
     * q5_region_nation_revenue's oracle (grouped by region/nation, no
-    * share columns); `graft.BucketBench` measures the q5 shape at sf100.
+    * share columns); the q5 shape's sf100 times (51.2 s bucketed vs
+    * 83.5 s plain) are recorded in SCALE.md and BASELINE.md.
     */
   val bucketedQ5: GraftQuery = GraftQuery(
     "bucketed_q5_region_revenue",
@@ -774,9 +775,9 @@ object CoreQueries extends QueryPack {
     * like the bucketed orders table (no shuffle on either join side),
     * and only the few qualifying orders touch the broadcast customer
     * dim. Same bytes as q18_large_volume_customers' oracle on the
-    * ORIGINAL parquet; `graft.BucketBench`'s q3-shape requirement pins
-    * the exchange-free property class, and the sf100 run records this
-    * query's own executed-plan exchange count.
+    * ORIGINAL parquet; BucketingSpec pins the exchange-free property
+    * class, and SCALE.md records this query's sf100 times and its
+    * executed-plan exchange count.
     */
   val bucketedQ18: GraftQuery = GraftQuery(
     "bucketed_q18_large_volume",

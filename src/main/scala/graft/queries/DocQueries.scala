@@ -404,25 +404,29 @@ object DocQueries extends QueryPack {
   import graft.ChainGuard.frame
 
   /** MinHash(32) + LSH(4 bands x 8 rows, candidate threshold ~0.84):
-    * near-dup pairs of `docs` with estimated similarity >= 0.5. One md5
-    * base hash per shingle fans out to 32 permutations arithmetically
-    * ((a*h+b) mod P31), and band buckets are the verbatim signature
-    * slices, so the ENTIRE pipeline — shingling, permutations, banding,
-    * candidate dedup, similarity estimate — replays in DuckDB
-    * ([[Dedup.oracleMinhashCtes]], [[Dedup.oracleLshCtes]]). Signatures
-    * come from the per-row form (r16): no shingle explode or regroup
-    * exchange — the signature projection runs where the text is.
-    * lshCandidates checkpoints the signature frame internally (consumed
-    * 3x); its blocks free with RDD GC — no cleanup here.
+    * near-dup pairs of a materialized signature frame with estimated
+    * similarity >= 0.5. One md5 base hash per shingle fans out to 32
+    * permutations arithmetically ((a*h+b) mod P31), and band buckets are
+    * the verbatim signature slices, so the ENTIRE pipeline — shingling,
+    * permutations, banding, candidate dedup, similarity estimate —
+    * replays in DuckDB ([[Dedup.oracleMinhashCtes]],
+    * [[Dedup.oracleLshCtes]]).
     */
-  private def lshPairs(docs: DataFrame): DataFrame =
-    Dedup.lshCandidates(
-        Dedup.minhashSigsPerRow(docs, "doc_id", "text", 3, 32), 4)
-      .filter(col("est_jaccard") >= 0.5)
+  private def lshPairs(sigs: DataFrame): DataFrame =
+    Dedup.lshCandidates(sigs, 4).filter(col("est_jaccard") >= 0.5)
+
+  /** MinHash(32) signatures of `docs` in the per-row form (r16). */
+  private def minhashSigs(docs: DataFrame): DataFrame =
+    Dedup.minhashSigsPerRow(docs, "doc_id", "text", 3, 32)
+
+  /** The whole corpus's [[minhashSigs]], materialized once for the LSH
+    * pairs and the full-corpus bucket components. */
+  private def corpusSigs(s: SparkSession, dir: String): DataFrame =
+    frame(s, s"minhash_sigs $dir") { minhashSigs(Tables(s, dir, "documents")) }
 
   /** [[lshPairs]] over the whole corpus. */
   private def lshEdges(s: SparkSession, dir: String): DataFrame =
-    frame(s, s"lsh_edges $dir") { lshPairs(Tables(s, dir, "documents")) }
+    frame(s, s"lsh_edges $dir") { lshPairs(corpusSigs(s, dir)) }
 
   /** Oracle of [[lshEdges]] and [[lshComponents]]: `edges` and `comp`
     * (needs `WITH RECURSIVE`).
@@ -482,8 +486,8 @@ object DocQueries extends QueryPack {
   val lshQuality: GraftQuery = GraftQuery(
     "lsh_quality_report",
     (s, dir) => {
-      val cand = lshPairs(
-          Tables(s, dir, "documents").filter(col("doc_id") < 500))
+      val cand = lshPairs(minhashSigs(
+          Tables(s, dir, "documents").filter(col("doc_id") < 500)).localCheckpoint())
         .select(col("id_a"), col("id_b"), lit(1L).as("c"))
       val truth = allPairs05(s, dir)
         .select(col("id_a"), col("id_b"), lit(1L).as("t"))
@@ -688,7 +692,7 @@ object DocQueries extends QueryPack {
     frame(s, s"${memoKey}_cc $dir") {
       val edges = frame(s, s"$memoKey $dir") {
         Dedup.lshBucketStarEdges(
-          Dedup.minhashSigsPerRow(sliceDocs(s, dir, pred), "doc_id", "text", 3, 32),
+          if (pred.isEmpty) corpusSigs(s, dir) else minhashSigs(sliceDocs(s, dir, pred)),
           4)
       }
       Dedup.connectedComponents(edges)
@@ -970,9 +974,7 @@ object DocQueries extends QueryPack {
       .join(corpus.select(md5(col("text").cast("binary")).as("fp"))
         .distinct(), Seq("fp"), "left_semi")
       .select("doc_id")
-    val nearIds = near(
-      Dedup.minhashSigsPerRow(newDocs, "doc_id", "text", 3, 32),
-      Dedup.minhashSigsPerRow(corpus, "doc_id", "text", 3, 32))
+    val nearIds = near(minhashSigs(newDocs), minhashSigs(corpus))
     // ONE labeled pass instead of four crossJoined aggregates: the old
     // shape re-derived exactIds twice and scanned newDocs five times
     // (each crossJoin branch is its own subtree). exactIds and nearIds

@@ -7,9 +7,9 @@ import org.apache.spark.sql.DataFrame
 /** The reference's profiling rule engine and adaptive binning designer
   * (data_analysis.ipynb cells 7-10, SURVEY §3 entry point 3).
   *
-  * Per column: the [[ColumnGrid]] moments (one melted scan, two grid
-  * aggregations: exact scaled-integer mean + cardinality + spread, then
-  * central moments), driver-side rule evaluation on the tiny result. All
+  * Per column: the [[ColumnGrid]] moments (one Spark job: exact
+  * scaled-integer mean, cardinality, spread and central moments),
+  * driver-side rule evaluation on the tiny result. All
   * thresholds are the reference's (cell 8): CV>1.0, |skew|>2,
   * kurtosis>3, unique_ratio>0.8, range>10·std. An all-null column is an
   * IllegalArgumentException naming it.
@@ -21,10 +21,12 @@ object Profiling {
       mean: Double, std: Double, cv: Double, min: Double, max: Double,
       range: Double, skewness: Double, kurtosis: Double)
 
-  def columnStats(df: DataFrame, cols: Seq[(String, Int)]): Seq[ColumnStats] =
-    columnStats(ColumnGrid(df, cols.map(_._1)).localCheckpoint(), cols)
+  def columnStats(df: DataFrame, cols: Seq[(String, Int)]): Seq[ColumnStats] = {
+    val got = ColumnGrid(df, cols.map(_._1)).read(cols.toMap)
+    cols.map { case (c, d) => columnStats(c, d, got(c).moments) }
+  }
 
-  /** Stats from the grid's moments. Arithmetic per column: exact s1/n
+  /** Stats from a column's grid moments. Arithmetic per column: exact s1/n
     * over longs for the mean; skewness and kurtosis from the central
     * moments about that scaled mean, weighted by exact counts — inside
     * the same ulp band the two engines' differing accumulation orders
@@ -32,20 +34,15 @@ object Profiling {
     * m2-about-the-true-mean form stddev_samp converges to (the
     * profileNumeric r17 class, parity-pinned at both scales).
     */
-  private def columnStats(
-      grid: ColumnGrid, cols: Seq[(String, Int)]): Seq[ColumnStats] = {
-    val moments = grid.moments(cols.toMap)
-    cols.map { case (c, d) =>
-      val m = moments(c)
-      require(m.n > 0, s"no non-null rows to profile column $c")
-      val scale = math.pow(10, d)
-      val n = m.n.toDouble
-      val mean = m.ssum * 1.0 / m.n / scale
-      val std = math.sqrt(m.m2 / (n - 1))
-      val (skew, kurt) = m.skewKurtosis
-      ColumnStats(c, m.n, m.nd, m.nd * 1.0 / n, mean, std, std / mean,
-        m.min, m.max, m.max - m.min, skew, kurt)
-    }
+  private def columnStats(c: String, d: Int, m: ColumnGrid.Moments): ColumnStats = {
+    require(m.n > 0, s"no non-null rows to profile column $c")
+    val scale = math.pow(10, d)
+    val n = m.n.toDouble
+    val mean = m.ssum * 1.0 / m.n / scale
+    val std = math.sqrt(m.m2 / (n - 1))
+    val (skew, kurt) = m.skewKurtosis
+    ColumnStats(c, m.n, m.nd, m.nd * 1.0 / n, mean, std, std / mean,
+      m.min, m.max, m.max - m.min, skew, kurt)
   }
 
   /** Overfitting-risk flags per column (cell 8 rules), flags as 0/1. */
@@ -79,28 +76,27 @@ object Profiling {
       df: DataFrame, cols: Seq[(String, Int)]): Seq[BinDesign] =
     designed(df, cols).map(_._1)
 
-  /** Zero extra scans (r17): the quantile fit probes the SAME grid the
-    * stats came from — four jobs for any column count (the checkpoint,
-    * two moment passes, one quantile probe).
+  /** One Spark job for any column count: the grid read that gives the
+    * stats also gives every column's quantiles at each edge probability
+    * i/k of k = 3..10 (the clamp of nBins), so the quantile models need
+    * no second pass.
     */
   private def designed(
       df: DataFrame, cols: Seq[(String, Int)]): Seq[(BinDesign, ColumnStats)] = {
-    val grid = ColumnGrid(df, cols.map(_._1)).localCheckpoint()
-    val chosen = columnStats(grid, cols).map { s =>
+    val edgeProbs = (3 to 10).flatMap(QuantileBinner.edgeProbs).distinct
+    val got = ColumnGrid(df, cols.map(_._1))
+      .read(cols.toMap, cols.map(_._1 -> edgeProbs).toMap)
+    cols.map { case (c, d) =>
+      val s = columnStats(c, d, got(c).moments)
       val strategy =
         if (s.uniqueRatio > 0.5 || math.abs(s.skewness) > 1.0) "quantile"
         else "equal_width"
       val nBins = math.max(3, math.min(10, math.sqrt(s.nUnique.toDouble).toInt))
-      (s, strategy, nBins)
-    }
-    val qModels = QuantileBinner.fitMany(
-      grid, chosen.collect { case (s, "quantile", k) => s.column -> k })
-    chosen.map { case (s, strategy, nBins) =>
       val model = strategy match {
-        case "quantile"    => qModels(s.column)
-        case "equal_width" => EqualWidthBinner.fromMinMax(s.column, nBins, s.min, s.max)
+        case "quantile"    => QuantileBinner.fromQuantiles(c, nBins, got(c).quantiles)
+        case "equal_width" => EqualWidthBinner.fromMinMax(c, nBins, s.min, s.max)
       }
-      (BinDesign(s.column, strategy, nBins, model), s)
+      (BinDesign(c, strategy, nBins, model), s)
     }
   }
 

@@ -27,35 +27,26 @@ object Stats {
   /** Per-column profile matching pandas `describe()` (column, n_rows,
     * n_nulls, n_distinct, mean, std, min, p25, p50, p75, max). `decimals`
     * gives each column's fixed decimal scale (for exact means). Every
-    * statistic is read off ONE melted scan, the [[ColumnGrid]]: its
-    * moments (two grid aggregations) and its quartiles, value-identical
-    * to the exact `percentile` aggregate (and to pandas / DuckDB
-    * `quantile_cont`) but distributed: the percentile aggregate merges
-    * every partition's value→count map in ONE reducer, the single-task
-    * bottleneck QuantileBinner.fitMany measured at 147 s for exactly this
-    * 4-lineitem-column shape at sf10 (r16: guide §5). Four jobs: the
-    * grid checkpoint, the two moment passes and the overlapped quartile
-    * probe. An all-null column reports n_rows 0 and null statistics.
+    * statistic is read off ONE [[ColumnGrid]] read, one Spark job: its
+    * moments and its quartiles, value-identical to the exact
+    * `percentile` aggregate (and to pandas / DuckDB `quantile_cont`) but
+    * distributed: the percentile aggregate merges every partition's
+    * value→count map in ONE reducer, the single-task bottleneck
+    * QuantileBinner.fitMany measured at 147 s for exactly this
+    * 4-lineitem-column shape at sf10 (r16: guide §5). An all-null column
+    * reports n_rows 0 and null statistics.
     */
   def profileNumeric(df: DataFrame, cols: Seq[(String, Int)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val grid = ColumnGrid(df, cols.map(_._1)).localCheckpoint()
-    // the quantile probe is independent of the moment passes — run it
-    // overlapped (guide §2.6) so its grid shuffle+sort back-fills the
-    // two small grid aggregations
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val pctF = scala.concurrent.Future {
-      grid.quantiles(cols.map { case (c, _) => c -> Seq(0.25, 0.5, 0.75) }.toMap)
-    }
-    val moments = grid.moments(cols.toMap)
-    val pct = scala.concurrent.Await.result(
-      pctF, scala.concurrent.duration.Duration.Inf)
+    val quartiles = Seq(0.25, 0.5, 0.75)
+    val got = ColumnGrid(df, cols.map(_._1))
+      .read(cols.toMap, cols.map(_._1 -> quartiles).toMap)
     cols.map { case (c, d) =>
-      val m = moments(c)
+      val m = got(c).moments
       def ifRows(x: => Double): Option[Double] = if (m.n > 0) Some(x) else None
-      val q = pct.get(c).map(_.map(Q.r6Double))
+      val q = if (m.n > 0) Some(quartiles.map(p => Q.r6Double(got(c).quantiles(p))))
+        else None
       // sample central moment about the true mean — the value
       // stddev_samp converges to; r4 keeps the last-ulp band of the
       // different accumulation orders (Spark Welford / DuckDB / this)
@@ -142,7 +133,7 @@ object Stats {
 
   /** Bias-corrected sample skewness G1 and excess kurtosis G2 (pandas
     * semantics, SURVEY §7.4.5) from exact central moments: the
-    * [[ColumnGrid]] moments of Profiling.columnStats, one melted scan for
+    * [[ColumnGrid]] moments of Profiling.columnStats, one Spark job for
     * every column. Only for small-magnitude fixed-decimal columns
     * (moments must stay in exact double range). An all-null column is an
     * IllegalArgumentException naming it.
@@ -150,10 +141,9 @@ object Stats {
   def skewKurtosis(df: DataFrame, cols: Seq[(String, Int)]): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val moments =
-      ColumnGrid(df, cols.map(_._1)).localCheckpoint().moments(cols.toMap)
+    val got = ColumnGrid(df, cols.map(_._1)).read(cols.toMap)
     cols.map { case (c, _) =>
-      val m = moments(c)
+      val m = got(c).moments
       require(m.n > 0, s"no non-null rows to profile column $c")
       val (sk, ku) = m.skewKurtosis
       (c, Q.r6Double(sk), Q.r6Double(ku))
@@ -396,14 +386,14 @@ object Stats {
     * engines. Both medians come from the distinct-value grid
     * ([[graft.transform.GridQuantiles]], r16) — value-identical to the
     * exact `percentile` aggregate but without its one-reducer
-    * value-map merge (guide §5); the grid's single-task window is
-    * bounded by the value DOMAIN. The fixed-memory estimate path stays
+    * value-map merge (guide §5); each median streams one grid, bounded
+    * by the value DOMAIN. The fixed-memory estimate path stays
     * `histQuantile`'s fixed-m histogram.
     */
   def madOutliers(df: DataFrame, valueCents: Column): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val medProbs = broadcast(Seq(("m", 0, 0.5)).toDF("g", "i", "p"))
+    val medProbs = Seq(("m", 0, 0.5)).toDF("g", "i", "p")
     def gridMedian(counts: DataFrame, c: Column): Double =
       graft.transform.GridQuantiles.quantilesFromCounts(
         counts.select(lit("m").as("g"), c.cast("double").as("v"),

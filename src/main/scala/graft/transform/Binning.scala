@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * dropped (`duplicates='drop'`), and null / out-of-range values map to
   * code -1 (pandas NaN -> -1 under `.cat.codes`).
   *
-  * Fit is a single Spark aggregation (exact `percentile`, not
-  * `approxQuantile` — bin boundaries must be exact for oracle parity);
+  * Fit is one Spark job (exact quantiles, not `approxQuantile` — bin
+  * boundaries must be exact for oracle parity);
   * transform compiles to a nested `when` chain — pure Catalyst expressions,
   * whole-stage-codegen friendly, no UDF, scale-independent.
   */
@@ -69,54 +69,49 @@ object QuantileBinner {
   def fit(df: DataFrame, column: String, nBins: Int): BinModel =
     fitMany(df, Seq(column -> nBins))(column)
 
-  /** Batched EXACT quantile fit over the DISTINCT-VALUE grid — one scan
-    * fits every (column, nBins) spec, and the heavy lifting distributes.
+  /** Batched EXACT quantile fit over the DISTINCT-VALUE grid: one
+    * [[ColumnGrid]] read — one Spark job — fits every (column, nBins)
+    * spec.
     *
     * Why not `percentile(...)`: Spark's exact Percentile aggregate keeps
     * a value→count map per partial and merges every partition's map in
     * ONE reducer — measured 147 s for 4 lineitem columns at 60M rows
-    * (sf10), all of it single-threaded merge+sort. The same statistic
-    * computed here: melt the spec columns in one pass (240M (col,value)
-    * rows), hash-aggregate to per-(col,value) counts WITH map-side
-    * combine (the grid is the compressed domain — 583k distinct prices
-    * in those same 60M rows), cumulative-count window per column (each
-    * sorts only its grid), and a broadcast rank-probe joins the ≤17
-    * target ranks per column against the grid. One action, distributed
-    * everywhere the data is big, single-task only on the grid.
+    * (sf10), all of it single-threaded merge+sort. The grid counts each
+    * column's values in its map tasks and streams each column's
+    * distinct values (583k distinct prices in those same 60M rows) in
+    * its own reduce task.
     *
     * Output parity: identical doubles to Spark `percentile` (and so to
-    * the DuckDB `quantile_cont` oracles). Rank position k = p·(n−1);
-    * result = (ceil(k)−k)·v_lo + (k−floor(k))·v_hi with the same
-    * short-circuits (integral k, or equal bracketing values → v_lo) —
-    * operand-for-operand Percentile.getPercentile's interpolation.
+    * the DuckDB `quantile_cont` oracles) — the grid replays
+    * Percentile.getPercentile's interpolation operand for operand.
     * Grouping by the double-cast value is safe: numeric→double is
     * monotone, and where two wide longs collapse to one double,
     * Percentile's equal-key short-circuit returns that same double.
     * BinningSpec pins edge-for-edge equality against `percentile` on
     * real table columns; unbounded-domain streams at 100 TB use
     * [[fitApprox]]/HistQuantile instead (the grid is only as small as
-    * the value domain). The grid+probe core is [[GridQuantiles]] —
-    * shared with the grouped-quantiles operator.
+    * the value domain).
     */
   def fitMany(df: DataFrame, specs: Seq[(String, Int)]): Map[String, BinModel] =
     if (specs.isEmpty) Map.empty
-    else fitMany(ColumnGrid(df, specs.map(_._1)), specs)
-
-  /** [[fitMany]] over a [[ColumnGrid]] that holds every spec column:
-    * callers that just profiled the same columns reuse their grid and
-    * fit with ZERO additional corpus scans (r17, guide §6).
-    */
-  def fitMany(grid: ColumnGrid, specs: Seq[(String, Int)]): Map[String, BinModel] =
-    if (specs.isEmpty) Map.empty
     else {
-      val qs = grid.quantiles(specs.map { case (c, k) =>
-        c -> (0 to k).map(i => i.toDouble / k) }.toMap)
-      specs.map { case (c, _) =>
-        val edges = qs.getOrElse(c, throw new IllegalArgumentException(
-          s"no non-null rows to fit quantile bins for $c"))
-        c -> BinModel(c, Binning.atLeastOneBucket(Binning.dedupEdges(edges.toArray)))
-      }.toMap
+      val got = ColumnGrid(df, specs.map(_._1))
+        .read(probs = specs.map { case (c, k) => c -> edgeProbs(k) }.toMap)
+      specs.map { case (c, k) => c -> fromQuantiles(c, k, got(c).quantiles) }.toMap
     }
+
+  /** The edge probabilities i/k, i = 0..k, of a `k`-bin fit. */
+  def edgeProbs(k: Int): Seq[Double] = (0 to k).map(i => i.toDouble / k)
+
+  /** The `k`-bin model of column `c` from its exact quantiles, which
+    * must hold every [[edgeProbs]] of k; none means no non-null row.
+    */
+  def fromQuantiles(c: String, k: Int, quantiles: Map[Double, Double]): BinModel = {
+    if (quantiles.isEmpty) throw new IllegalArgumentException(
+      s"no non-null rows to fit quantile bins for $c")
+    BinModel(c, Binning.atLeastOneBucket(
+      Binning.dedupEdges(edgeProbs(k).map(quantiles).toArray)))
+  }
 
   /** Scale path: Greenwald-Khanna approximate quantiles (single pass,
     * bounded memory per executor — exact `percentile` buffers every value

@@ -1,121 +1,88 @@
 package graft.transform
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.ShuffledRDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.col
+import scala.collection.mutable
 
-/** The per-column distinct-value grid: ONE melted scan of `cols` counts
-  * each (column, value) occurrence, and every per-column statistic the
-  * profiling, binning and moment operators report is read off those
-  * counts — bounded by the value DOMAINS, not the row count (guide §6;
-  * LMFAO's shared aggregate view).
+/** The per-column distinct-value grid: every per-column statistic the
+  * profiling, binning and moment operators report — counts, exact scaled
+  * sums, central moments and exact quantiles — is read off the
+  * (column, value) counts in ONE Spark job, bounded by the value DOMAINS
+  * rather than the row count (LMFAO's one shared pass for a batch of
+  * aggregates).
   *
-  * Contract:
-  *  - rows (g: int, v: double, cnt: long), `g` the column's position in
-  *    the (de-duplicated) `cols`, `v` the value cast to double, `cnt` its
-  *    occurrence count. The int code (not the name string) is the group
-  *    key so the melted rows hash and shuffle a 4-byte key; the code ↔
-  *    name mapping never leaves this class — readers take and return
-  *    column names.
-  *  - null values stay in the grid as their own (g, null, cnt) rows, so
-  *    the null count rides the same scan; every reader skips them (a
-  *    `when(v IS NOT NULL)` or a filter, which Catalyst pushes below the
-  *    grid aggregate, so a reader that drops nulls plans exactly like a
-  *    grid built without them).
-  *  - the grid is lazy; [[localCheckpoint]] materializes it once for
-  *    callers with several readers. A single-reader caller (the quantile
-  *    fit) keeps it lazy: no extra job.
+  * A read is one shuffle:
+  *  - each map task counts every column's values locally (-0.0 folded to
+  *    0.0, all NaNs one value, nulls counted apart) and sends one run per
+  *    column: a header (its non-null count, null count, exact scaled sum
+  *    and raw sum) and its distinct values in Spark's double order with
+  *    their counts;
+  *  - the shuffle partitions on the column;
+  *  - each reduce task streams each of its columns once: the headers
+  *    give n and both means before the first value, then the runs merge
+  *    into one ordered stream of distinct values, equal values summed,
+  *    and the central moments and the quantiles' rank positions are
+  *    folded in that pass.
+  *
+  * The column ↔ int code mapping never leaves this file: readers pass and
+  * get column names.
   */
-final class ColumnGrid private (cols: Seq[String], counts: DataFrame) {
-  import ColumnGrid.Moments
+final class ColumnGrid private (df: DataFrame, cols: Seq[String]) {
+  import ColumnGrid._
 
-  private val nn = col("v").isNotNull
-
-  /** Materialize the grid once (one job) for several readers. */
-  def localCheckpoint(): ColumnGrid = new ColumnGrid(cols, counts.localCheckpoint())
-
-  /** `f(i)` on the rows of column code `i`: the per-column expression fold. */
-  private def perCol(f: Int => Column): Column =
-    cols.indices.tail.foldLeft(when(col("g") === 0, f(0))) { (acc, i) =>
-      acc.when(col("g") === i, f(i))
+  /** One job: [[Summary]] per column. `decimals` gives the fixed decimal
+    * scale d of each column whose scaled moments are wanted, `probs` the
+    * probabilities whose exact quantiles are wanted. A NaN, ±Inf or
+    * out-of-range value in a scaled column is an ArithmeticException
+    * naming it.
+    */
+  def read(
+      decimals: Map[String, Int] = Map.empty,
+      probs: Map[String, Seq[Double]] = Map.empty): Map[String, Summary] = {
+    val k = cols.size
+    val got = summarize(df.select(cols.map(col(_).cast("double")): _*), k,
+      cols.map(decimals.getOrElse(_, NoScale)).toArray,
+      cols.map(c => probs.getOrElse(c, Nil).distinct.toArray).toArray) { (r, t) =>
+      var i = 0
+      while (i < k) {
+        if (r.isNullAt(i)) t(i).nulls += 1 else t(i).add(r.getDouble(i), 1L)
+        i += 1
+      }
     }
-
-  /** Per-column [[Moments]] in two grid aggregations (two jobs). `decimals`
-    * gives each column's fixed decimal scale d: the scaled value is
-    * round(v·10^d), the same double the per-row `Stats.scaled` computed,
-    * taken once per distinct value and weighted by its exact count.
-    */
-  def moments(decimals: Map[String, Int]): Map[String, Moments] = {
-    val scaledV =
-      perCol(i => round(col("v") * math.pow(10, decimals(cols(i))))).cast("long")
-    val p1 = counts.groupBy("g").agg(
-      coalesce(sum(when(nn, col("cnt"))), lit(0L)).as("n"),
-      coalesce(sum(when(col("v").isNull, col("cnt"))), lit(0L)).as("nulls"),
-      coalesce(sum(when(nn, 1L)), lit(0L)).as("nd"),
-      coalesce(sum(when(nn, col("cnt") * scaledV)), lit(0L)).as("ssum"),
-      min(col("v")).as("mn"),
-      max(col("v")).as("mx"),
-      sum(when(nn, col("cnt") * col("v"))).as("sv")
-    ).collect().map { r =>
-      def dbl(i: Int) = if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-      r.getInt(0) -> Moments(r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), dbl(5), dbl(6), dbl(7))
-    }.toMap.withDefaultValue(Moments(0L, 0L, 0L, 0L, Double.NaN, Double.NaN, Double.NaN))
-    // pass 2: central moments about the exact scaled mean (s2..s4) and
-    // the sample second moment about the raw mean (m2, the value
-    // stddev_samp converges to); multiplications instead of pow()
-    val dltS = scaledV.cast("double") - perCol(i => lit(p1(i).ssum * 1.0 / p1(i).n))
-    val d2 = dltS * dltS
-    val dltR = col("v") - perCol(i => lit(p1(i).sv / p1(i).n))
-    val p2 = counts.filter(nn).groupBy("g").agg(
-      sum(col("cnt") * d2).as("s2"),
-      sum(col("cnt") * d2 * dltS).as("s3"),
-      sum(col("cnt") * d2 * d2).as("s4"),
-      sum(col("cnt") * dltR * dltR).as("m2")
-    ).collect().map(r => r.getInt(0) -> r).toMap
     cols.indices.map { i =>
-      cols(i) -> p2.get(i).fold(p1(i)) { r =>
-        p1(i).copy(s2 = r.getDouble(1), s3 = r.getDouble(2),
-          s4 = r.getDouble(3), m2 = r.getDouble(4))
-      }
+      if (!got(i).exact) throw new ArithmeticException(
+        s"column ${cols(i)}: no exact scaled sum at ${decimals(cols(i))} decimals")
+      cols(i) -> got(i)
     }.toMap
-  }
-
-  /** Exact quantiles of the non-null values ([[GridQuantiles]]' replay
-    * of `Percentile.getPercentile`), one job for every column: `probs`
-    * per column name; each column's quantiles come back in `probs`
-    * order. A column without a non-null value is absent from the result.
-    */
-  def quantiles(probs: Map[String, Seq[Double]]): Map[String, Seq[Double]] = {
-    val spark = counts.sparkSession
-    import spark.implicits._
-    val probsDf = probs.toSeq.flatMap { case (c, ps) =>
-      ps.zipWithIndex.map { case (p, i) => (cols.indexOf(c), i, p) }
-    }.toDF("g", "i", "p")
-    GridQuantiles.quantilesFromCounts(counts.filter(nn), broadcast(probsDf))
-      .collect().groupBy(_.getInt(0)).map { case (g, rs) =>
-        cols(g) -> rs.sortBy(_.getInt(1)).map(_.getDouble(3)).toSeq
-      }
   }
 }
 
 object ColumnGrid {
 
-  /** Melt `cols` (each cast to double) into the grid; lazy. */
-  def apply(df: DataFrame, cols: Seq[String]): ColumnGrid = {
-    val names = cols.distinct
-    val kvCols = names.zipWithIndex.flatMap { case (c, i) =>
-      Seq(lit(i), col(c).cast("double")) }
-    new ColumnGrid(names,
-      df.select(explode(map(kvCols: _*)).as(Seq("g", "v")))
-        .groupBy("g", "v").agg(count(lit(1)).as("cnt")))
-  }
+  /** The grid of `cols` (each cast to double) of `df`; nothing runs until
+    * [[ColumnGrid.read]]. */
+  def apply(df: DataFrame, cols: Seq[String]): ColumnGrid =
+    new ColumnGrid(df, cols.distinct)
 
-  /** One column's grid statistics. Pass 1: `n` non-null rows, `nulls`,
-    * `nd` distinct non-null values, `ssum` = Σ cnt·round(v·10^d) as an
-    * exact long, `min`, `max`, `sv` = Σ cnt·v. Pass 2, about the scaled
-    * mean ssum/n: `s2`, `s3`, `s4` = Σ cnt·(x − ssum/n)^k over the scaled
-    * x; about the raw mean sv/n: `m2` = Σ cnt·(v − sv/n)². A column with
-    * no non-null value has n = 0, ssum = 0 and NaN everywhere else.
+  /** One column's read: its [[Moments]] and the exact quantile of each
+    * requested probability, keyed by it (none without a non-null value);
+    * `exact` is false when its scaled sum has no exact long value.
+    */
+  final case class Summary(
+      moments: Moments, quantiles: Map[Double, Double], exact: Boolean = true)
+
+  /** One column's grid statistics. Known from the headers: `n` non-null
+    * rows, `nulls`, `ssum` = Σ cnt·round(v·10^d) as an exact long, and
+    * `sv` = Σ cnt·v. From the values in ascending order: `nd` distinct
+    * non-null values, `min`, `max`; about the scaled mean ssum/n, `s2`,
+    * `s3`, `s4` = Σ cnt·(x − ssum/n)^k over the scaled x; about the raw
+    * mean sv/n, `m2` = Σ cnt·(v − sv/n)². A column with no non-null value
+    * has n = 0, ssum = 0 and NaN everywhere else; one read without a
+    * decimal scale has ssum = 0 and NaN `s2`..`s4`.
     */
   final case class Moments(
       n: Long, nulls: Long, nd: Long, ssum: Long,
@@ -135,5 +102,219 @@ object ColumnGrid {
       val kurt = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
       (skew, kurt)
     }
+  }
+
+  /** `decimals` entry of a code whose scaled moments are not wanted. */
+  private[transform] val NoScale = -1
+
+  /** One map task's values of one code: `add` them (a weight is a count
+    * of equal values), then [[runs]] gives the distinct values in Spark's
+    * double order with their total weights.
+    */
+  private[transform] final class Tally {
+    var nulls = 0L
+    private val vals = new mutable.ArrayBuilder.ofDouble
+    private var wts: mutable.ArrayBuilder.ofLong = null // null while every weight is 1
+
+    def isEmpty: Boolean = vals.length == 0 && nulls == 0
+
+    def add(v: Double, w: Long): Unit = {
+      if (w != 1L && wts == null) {
+        wts = new mutable.ArrayBuilder.ofLong
+        (0 until vals.length).foreach(_ => wts += 1L)
+      }
+      vals += v + 0.0 // -0.0 + 0.0 = 0.0
+      if (wts != null) wts += w
+    }
+
+    def runs: (Array[Double], Array[Long]) = {
+      val v = vals.result()
+      val (w, order) =
+        if (wts == null) { java.util.Arrays.sort(v); (Array.fill(v.length)(1L), v.indices) }
+        else (wts.result(), v.indices.sortWith((a, b) => java.lang.Double.compare(v(a), v(b)) < 0))
+      val outV = new mutable.ArrayBuilder.ofDouble
+      val outW = new mutable.ArrayBuilder.ofLong
+      var i = 0
+      while (i < v.length) {
+        val x = v(order(i))
+        var c = 0L
+        while (i < v.length && java.lang.Double.compare(v(order(i)), x) == 0) {
+          c += w(order(i))
+          i += 1
+        }
+        outV += x
+        outW += c
+      }
+      (outV.result(), outW.result())
+    }
+  }
+
+  /** Spark's `round(v · 10^d)` cast to long: HALF_UP on the double's
+    * decimal form. An ArithmeticException where the value has no exact
+    * long (NaN, ±Inf or beyond the long range).
+    */
+  private def scaled(v: Double, d: Int): Long = {
+    val x = v * math.pow(10, d)
+    if (x.isNaN || x.isInfinite) throw new ArithmeticException(s"$x")
+    java.math.BigDecimal.valueOf(x)
+      .setScale(0, java.math.RoundingMode.HALF_UP).longValueExact()
+  }
+
+  /** Whether `body` ran without an ArithmeticException. */
+  private def exactly(body: => Unit): Boolean =
+    try { body; true } catch { case _: ArithmeticException => false }
+
+  /** One map task's part of one code: `head` = Array(n, nulls, ssum, raw
+    * bits of sv, 1 if ssum is inexact), then its distinct values in
+    * Spark's double order with their counts and (when scaled) their
+    * scaled values. A few primitive arrays per (code, map task), not an
+    * object pair per value, are what the shuffle serializes.
+    */
+  private final class Run(
+      val part: Int, val head: Array[Long], val vals: Array[Double],
+      val cnts: Array[Long], val scaled: Array[Long]) extends Serializable
+
+  private def runOf(part: Int, t: Tally, d: Int): Run = {
+    val (v, w) = t.runs
+    val sc = new Array[Long](if (d == NoScale) 0 else v.length)
+    var n, ssum = 0L
+    var sv = 0.0
+    var exact = true
+    var i = 0
+    while (i < v.length) {
+      n += w(i)
+      sv += w(i) * v(i)
+      if (d != NoScale) exact &&= exactly {
+        sc(i) = scaled(v(i), d)
+        ssum = Math.addExact(ssum, Math.multiplyExact(w(i), sc(i)))
+      }
+      i += 1
+    }
+    new Run(part, Array(n, t.nulls, ssum, java.lang.Double.doubleToRawLongBits(sv),
+      if (exact) 0L else 1L), v, w, sc)
+  }
+
+  /** The one read job over the rows of `df`, run as an SQL execution of
+    * its plan: `observe` adds each row to the map task's [[Tally]] of
+    * every code it touches (`nCodes` codes); `decimals(g)` is code g's
+    * scale or [[NoScale]], `probs(g)` its distinct probabilities. Returns
+    * one [[Summary]] per code.
+    */
+  private[transform] def summarize(
+      df: DataFrame, nCodes: Int, decimals: Array[Int], probs: Array[Array[Double]])(
+      observe: (InternalRow, Array[Tally]) => Unit): IndexedSeq[Summary] = {
+    if (nCodes == 0) return IndexedSeq.empty
+    val parts = math.min(nCodes, graft.SparkEntry.shufflePartitions(df.sparkSession))
+    val qe = df.queryExecution
+    val got = SQLExecution.withNewExecutionId(qe, Some("column grid read")) {
+      val runs = qe.toRdd.mapPartitionsWithIndex { (part, it) =>
+        val tallies = Array.fill(nCodes)(new Tally)
+        it.foreach(observe(_, tallies))
+        tallies.indices.iterator.filterNot(tallies(_).isEmpty)
+          .map(g => g -> runOf(part, tallies(g), decimals(g)))
+      }
+      new ShuffledRDD[Int, Run, Run](runs, new HashPartitioner(math.max(1, parts)))
+        .mapPartitions(_.toSeq.groupBy(_._1).iterator.map { case (g, rs) =>
+          g -> reduceCode(rs.map(_._2).sortBy(_.part).toArray,
+            decimals(g) != NoScale, probs(g))
+        })
+        .collect().toMap
+    }
+    (0 until nCodes).map(g => got.getOrElse(g, Summary(
+      Moments(0L, 0L, 0L, 0L, Double.NaN, Double.NaN, Double.NaN), Map.empty)))
+  }
+
+  /** One code in its reduce task: the headers summed in map-task order
+    * (a fixed order for the raw sum), then the runs merged into one
+    * stream of distinct values in order, equal values summed.
+    */
+  private def reduceCode(
+      runs: Array[Run], isScaled: Boolean, probs: Array[Double]): Summary = {
+    var n, nulls, ssum = 0L
+    var sv = 0.0
+    var exact = true
+    runs.foreach { r =>
+      n += r.head(0)
+      nulls += r.head(1)
+      exact &&= r.head(4) == 0L && exactly { ssum = Math.addExact(ssum, r.head(2)) }
+      sv += java.lang.Double.longBitsToDouble(r.head(3))
+    }
+    val fold = new Fold(n, ssum, sv, isScaled, probs)
+    val at = new Array[Int](runs.length)
+    def value(r: Int) = runs(r).vals(at(r))
+    val heap = new java.util.PriorityQueue[Integer](math.max(1, runs.length),
+      (a: Integer, b: Integer) => java.lang.Double.compare(value(a), value(b)))
+    runs.indices.filter(runs(_).vals.nonEmpty).foreach(heap.add(_))
+    while (!heap.isEmpty) {
+      val v = value(heap.peek)
+      val sc = if (isScaled) runs(heap.peek).scaled(at(heap.peek)) else 0L
+      var cnt = 0L
+      while (!heap.isEmpty && java.lang.Double.compare(value(heap.peek), v) == 0) {
+        val r: Int = heap.poll()
+        cnt += runs(r).cnts(at(r))
+        at(r) += 1
+        if (at(r) < runs(r).vals.length) heap.add(r)
+      }
+      fold.add(v, sc, cnt)
+    }
+    Summary(fold.moments(nulls), fold.quantiles, exact)
+  }
+
+  /** The streaming fold of one code's distinct values (ascending, each
+    * with its scaled value and count), given its totals from the
+    * headers. Each term is weighted by its exact count: cnt·d²,
+    * (cnt·d²)·d and (cnt·d²)·d² about the scaled mean ssum·1.0/n, and
+    * (cnt·r)·r about the raw mean sv/n.
+    */
+  private final class Fold(
+      n: Long, ssum: Long, sv: Double, isScaled: Boolean, probs: Array[Double]) {
+    private val meanS = ssum * 1.0 / n
+    private val meanR = sv / n
+    private val pos = probs.map(_ * (n - 1).toDouble)
+    private val lo = pos.map(k => math.floor(k).toLong)
+    private val hi = pos.map(k => math.ceil(k).toLong)
+    private val vlo, vhi = new Array[Double](probs.length)
+    private var nd, before = 0L
+    private var mn, mx = Double.NaN
+    private var s2, s3, s4, m2 = 0.0
+
+    def add(v: Double, scaledV: Long, cnt: Long): Unit = {
+      if (nd == 0) mn = v
+      mx = v
+      nd += 1
+      if (isScaled) {
+        val dltS = scaledV.toDouble - meanS
+        val d2 = dltS * dltS
+        s2 += cnt * d2
+        s3 += cnt * d2 * dltS
+        s4 += cnt * d2 * d2
+      }
+      val dltR = v - meanR
+      m2 += cnt * dltR * dltR
+      val last = before + cnt - 1
+      var j = 0
+      while (j < probs.length) {
+        if (lo(j) >= before && lo(j) <= last) vlo(j) = v
+        if (hi(j) >= before && hi(j) <= last) vhi(j) = v
+        j += 1
+      }
+      before += cnt
+    }
+
+    def moments(nulls: Long): Moments =
+      if (nd == 0) Moments(0L, nulls, 0L, 0L, Double.NaN, Double.NaN, Double.NaN)
+      else if (!isScaled) Moments(n, nulls, nd, 0L, mn, mx, sv, m2 = m2)
+      else Moments(n, nulls, nd, ssum, mn, mx, sv, s2, s3, s4, m2)
+
+    /** `Percentile.getPercentile`: the integral-position and equal-key
+      * short-circuits, then (hi − k)·v_lo + (k − lo)·v_hi.
+      */
+    def quantiles: Map[Double, Double] =
+      if (nd == 0) Map.empty
+      else probs.indices.map { j =>
+        val same = vlo(j) == vhi(j) || vlo(j).isNaN && vhi(j).isNaN
+        probs(j) -> (if (lo(j) == hi(j) || same) vlo(j)
+          else (hi(j) - pos(j)) * vlo(j) + (pos(j) - lo(j)) * vhi(j))
+      }.toMap
   }
 }

@@ -1,72 +1,67 @@
 package graft.transform
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Exact quantiles over the DISTINCT-VALUE grid, per group — the
   * distributed replacement for Spark's exact `percentile` aggregate
   * (which merges every partition's value→count map in ONE reducer; see
   * [[QuantileBinner.fitMany]] for the sf10 measurement that motivated
-  * this). The heavy work — counting occurrences per (group, value) —
-  * is a hash aggregation with map-side combine; the only single-task
-  * step is the cumulative window over each group's grid, bounded by the
-  * value DOMAIN, not the row count.
+  * this). Each group key becomes an int code and the groups are read by
+  * [[ColumnGrid]]'s one job: values counted into sorted runs per map
+  * task, shuffled per group, and each group's runs merged and streamed
+  * once in its reduce task — bounded by the value DOMAIN, not the row
+  * count.
   *
-  * Rank semantics replay `Percentile.getPercentile`
-  * operand-for-operand: position k = p·(n−1) over the group's non-null
-  * count, bracketing ranks floor(k)/ceil(k) resolved against cumulative
-  * counts, result = (ceil(k)−k)·v_lo + (k−floor(k))·v_hi with the
-  * integral-k and equal-key short-circuits. Every operand is either an
-  * exact integer or the same double on both engines, so the whole
-  * computation is hash-replayable in SQL — the oracle mirrors the grid,
-  * not a built-in whose interpolation order may differ by an ulp.
+  * Rank semantics are `Percentile.getPercentile`'s, replayed in
+  * [[ColumnGrid]]: position k = p·(n−1) over the group's non-null count,
+  * bracketing ranks floor(k)/ceil(k) resolved against cumulative counts,
+  * result = (ceil(k)−k)·v_lo + (k−floor(k))·v_hi with the integral-k and
+  * equal-key short-circuits. Every operand is either an exact integer or
+  * the same double on both engines, so the whole computation is
+  * hash-replayable in SQL — the oracle mirrors the grid, not a built-in
+  * whose interpolation order may differ by an ulp.
   */
 object GridQuantiles {
 
   /** `kv`: rows (g, v) — group key and double value (nulls dropped).
     * `probs`: rows (g, i, p) — the target probabilities per group, `i`
-    * an ordering index. Returns (g, i, q).
+    * an ordering index. Returns (g, i, p, q); a group without a non-null
+    * value is absent.
     */
   def quantiles(kv: DataFrame, probs: DataFrame): DataFrame =
-    quantilesFromCounts(
-      kv.filter(col("v").isNotNull)
-        .groupBy("g", "v").agg(count(lit(1)).as("cnt")),
-      probs)
+    quantilesFromCounts(kv.select(col("g"), col("v"), lit(1L).as("cnt")), probs)
 
-  /** The interpolation tail of [[quantiles]] over an ALREADY-COUNTED
-    * grid — rows (g, v, cnt) with non-null v. Callers that derive
-    * several statistics from one grid ([[ColumnGrid]], madOutliers)
+  /** [[quantiles]] over an ALREADY-COUNTED grid — rows (g, v, cnt).
+    * Callers that derive several statistics from one grid (madOutliers)
     * count once and reuse the frame, so the corpus is scanned exactly
     * once (guide §6).
     */
   def quantilesFromCounts(counts: DataFrame, probs: DataFrame): DataFrame = {
-    val cum = Window.partitionBy("g").orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // per-group total as a broadcast join of a tiny parallel aggregate,
-    // NOT an entire-partition window: the unordered window was a second
-    // WindowExec buffering each group's whole grid in its single task
-    // (r17: 1.5 s of profile_lineitem's probe was exactly this). The
-    // long-sum total is bit-identical either way.
-    val totals = counts.groupBy("g").agg(sum("cnt").as("n"))
-    val grid = counts
-      .select(col("g"), col("v"), col("cnt"),
-        (sum("cnt").over(cum) - col("cnt")).as("cb"))
-      .join(broadcast(totals), Seq("g"))
-    val coversLo = col("lo").between(col("cb"), col("cb") + col("cnt") - 1)
-    val coversHi = col("hi").between(col("cb"), col("cb") + col("cnt") - 1)
-    probs.join(grid, Seq("g"))
-      .withColumn("k", col("p") * (col("n") - 1).cast("double"))
-      .withColumn("lo", floor(col("k")))
-      .withColumn("hi", ceil(col("k")))
-      .filter(coversLo || coversHi)
-      .groupBy("g", "i", "p", "k")
-      .agg(max(when(coversLo, col("v"))).as("vlo"),
-        max(when(coversHi, col("v"))).as("vhi"))
-      .select(col("g"), col("i"), col("p"),
-        when(floor(col("k")) === ceil(col("k")), col("vlo"))
-          .when(col("vlo") === col("vhi"), col("vlo"))
-          .otherwise((ceil(col("k")) - col("k")) * col("vlo") +
-            (col("k") - floor(col("k"))) * col("vhi")).as("q"))
+    val spark = counts.sparkSession
+    val gField = probs.schema("g")
+    val ps = probs.select(col("g"), col("i"), col("p").cast("double"))
+      .collect().filterNot(_.isNullAt(0))
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(gField.dataType)
+    val keys = ps.map(r => toInternal(r.get(0))).distinct
+    val code = keys.zipWithIndex.toMap
+    val probsOf = keys.map(k =>
+      ps.filter(r => toInternal(r.get(0)) == k).map(_.getDouble(2)).distinct)
+    val gType = gField.dataType
+    val got = ColumnGrid.summarize(
+      counts.select(col("g"), col("v").cast("double"), col("cnt").cast("long")),
+      keys.length, Array.fill(keys.length)(ColumnGrid.NoScale), probsOf) { (r, t) =>
+      if (!r.isNullAt(0) && !r.isNullAt(1))
+        code.get(r.get(0, gType)).foreach(g => t(g).add(r.getDouble(1), r.getLong(2)))
+    }
+    val out = ps.flatMap { r =>
+      got(code(toInternal(r.get(0)))).quantiles.get(r.getDouble(2))
+        .map(q => Row(r.get(0), r.get(1), r.getDouble(2), q))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), StructType(Seq(
+      gField, probs.schema("i"), StructField("p", DoubleType),
+      StructField("q", DoubleType))))
   }
 }

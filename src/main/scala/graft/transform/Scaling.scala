@@ -29,22 +29,23 @@ object Scaling {
       Q.r6(least(greatest(c, lit(p01)), lit(p99)))
   }
 
-  /** Fit min/max + the p01/p25/p50/p75/p99 grid in one distributed job
-    * over the column's distinct-value grid ([[ColumnGrid]]) — exact
+  /** Fit min/max + the p01/p25/p50/p75/p99 grid in one Spark job over
+    * the column's distinct-value grid ([[ColumnGrid]]) — exact
     * linear-interpolated percentiles, value-identical to Spark's
     * `percentile` and DuckDB `quantile_cont`. The previous form used the
     * exact `percentile` aggregate, which merges every partition's
     * value→count map in ONE reducer — the single-task bottleneck
     * [[QuantileBinner.fitMany]] measured at 147 s for 4 columns at sf10
     * (r16: guide §5, no single-task data work). min/max ride the same
-    * grid as p=0 / p=1 (integral rank positions resolve to the extreme
+    * read as p=0 / p=1 (integral rank positions resolve to the extreme
     * grid values exactly).
     */
   def fit(df: DataFrame, column: String): ScaleStats = {
-    val q = ColumnGrid(df, Seq(column))
-      .quantiles(Map(column -> Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)))
-      .getOrElse(column, throw new IllegalArgumentException(
-        s"Scaling.fit: column '$column' has no non-null rows"))
+    val ps = Seq(0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0)
+    val got = ColumnGrid(df, Seq(column)).read(probs = Map(column -> ps))(column)
+    if (got.quantiles.isEmpty) throw new IllegalArgumentException(
+      s"Scaling.fit: column '$column' has no non-null rows")
+    val q = ps.map(got.quantiles)
     ScaleStats(column, q(0), q(6), q(1), q(2), q(3), q(4), q(5))
   }
 }

@@ -166,8 +166,24 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
   test("grouped quantiles prunes the lineitem scan to its two columns") {
     val q = SparkEntry.allQueries
       .find(_.name == "grouped_quantiles_returnflag").get
-    val plan = q.run(spark, dir).queryExecution.executedPlan.toString
-    val readSchemas = plan.linesIterator
+    // the grid read runs while the query is built, as an SQL execution of
+    // its own: its plan is read off the execution-start event
+    val sc = spark.sparkContext
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            plans.add(s.physicalPlanDescription)
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      plans.add(q.run(spark, dir).queryExecution.executedPlan.toString)
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val readSchemas = plans.toArray.flatMap(_.toString.linesIterator)
       .filter(_.contains("ReadSchema")).mkString("\n")
     assert(readSchemas.contains("l_returnflag") &&
       readSchemas.contains("l_extendedprice"),

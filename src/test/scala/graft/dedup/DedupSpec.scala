@@ -1,8 +1,6 @@
 package graft.dedup
 
 import graft.SparkTestSession
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -74,30 +72,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("connected components: each propagation round is one Spark job") {
-    val sc = spark.sparkContext
-    // counts only this thread's jobs (its job group), not those of any
-    // stream another suite left running
-    def jobsForPath(n: Long): Int = {
-      val group = s"cc-job-guard-$n"
-      var jobs = 0
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null &&
-              e.properties.getProperty("spark.jobGroup.id") == group)
-            synchronized { jobs += 1 }
-      }
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "DedupSpec job guard")
-      try {
-        Dedup.connectedComponents(
-          (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b"))
-        ListenerBusDrain(sc)
-        listener.synchronized(jobs)
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    }
+    def jobsForPath(n: Long): Int = jobsOf(Dedup.connectedComponents(
+      (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")))._1
     // a path 1-2-...-n takes n rounds: n - 1 carry label 1 to vertex n,
     // one more sees no change
     assert(jobsForPath(8) - jobsForPath(4) == 8 - 4)

@@ -21,6 +21,19 @@ class MetricsSpec extends AnyFunSuite with SparkTestSession {
     assert(Metrics.accuracy(df, "label", "pred").head().getDouble(0) == 1.0)
   }
 
+  test("macro average and accuracy of one scored frame scan it once") {
+    val scored = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq((0L, 0L), (0L, 1L), (1L, 1L), (2L, 1L), (1L, 1L)), 2)).toDF("label", "pred")
+    val out = Metrics.macroAvg(scored, "label", "pred")
+      .crossJoin(Metrics.accuracy(scored, "label", "pred"))
+    assert(out.collect().head.getAs[Double]("accuracy") == 0.6)
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.ExternalRDDScanExec[_] => s
+      }
+    assert(scans.size == 1)
+  }
+
   test("ROC-AUC: perfect separation = 1.0, random-ish = 0.5, ties handled") {
     val perfect = Seq((0.1, 0), (0.2, 0), (0.8, 1), (0.9, 1)).toDF("score", "label")
     assert(Metrics.rocAuc(perfect, "score", "label").head().getDouble(0) == 1.0)

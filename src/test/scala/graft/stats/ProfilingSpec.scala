@@ -42,32 +42,13 @@ class ProfilingSpec extends AnyFunSuite with SparkTestSession {
     val df = (1 to 500).map(i =>
       (i.toDouble, (i % 7).toDouble, math.pow(1.02, i % 90), i * 0.5))
       .toDF("a", "b", "c", "d")
-    val actions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = actions.incrementAndGet()
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      val designs = Profiling.designBinning(
-        df, Seq("a" -> 2, "b" -> 2, "c" -> 6, "d" -> 2))
-      assert(designs.size == 4)
-      // listener delivery is async; wait until the count is stable
-      var last = -1
-      var same = 0
-      while (same < 3) {
-        Thread.sleep(200)
-        if (actions.get() == last) same += 1 else { same = 0; last = actions.get() }
-      }
-      // r17 one-scan shape: grid materialization (the ONLY corpus scan)
-      // + 2 grid aggregations + 1 grid quantile probe — constant in the
-      // column count; a per-column fit would scale actions with it
-      assert(actions.get() <= 4,
-        s"designBinning ran ${actions.get()} actions; batching regressed")
-    } finally spark.listenerManager.unregister(listener)
+    val cols = Seq("a" -> 2, "b" -> 2, "c" -> 6, "d" -> 2)
+    // one grid read gives the stats and every candidate quantile edge —
+    // one Spark job for any column count; a per-column fit would scale
+    // the jobs with it
+    val (jobs, designs) = jobsOf(Profiling.designBinning(df, cols))
+    assert(designs.size == 4)
+    assert(jobs == 1, s"designBinning ran $jobs jobs; batching regressed")
+    assert(jobsOf(Profiling.designReport(df, cols))._1 == 1)
   }
 }

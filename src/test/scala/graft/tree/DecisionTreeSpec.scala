@@ -1,8 +1,6 @@
 package graft.tree
 
 import graft.SparkTestSession
-import org.apache.spark.graft.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -178,33 +176,12 @@ class DecisionTreeSpec extends AnyFunSuite with SparkTestSession {
     // positive-gain split, so levels 0, 1 and 2 are searched
     val df = (1 to 48).map(i => (i.toDouble, if (i % 8 < 3) 1L else 0L))
       .toDF("x", "label")
-    val sc = spark.sparkContext
-    // counts only this thread's jobs (its job group), not those of any
-    // stream another suite left running
-    def jobsOf(p: TreeParams): (Int, TreeModel) = {
-      val group = s"tree-job-guard-${p.maxDepth}"
-      var jobs = 0
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties != null &&
-              e.properties.getProperty("spark.jobGroup.id") == group)
-            synchronized { jobs += 1 }
-      }
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "DecisionTreeSpec job guard")
-      try {
-        val m = DecisionTree.fit(df, Seq("x"), "label", p)
-        ListenerBusDrain(sc)
-        (listener.synchronized(jobs), m)
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    }
+    def fitJobs(p: TreeParams): (Int, TreeModel) =
+      jobsOf(DecisionTree.fit(df, Seq("x"), "label", p))
     // maxDepth = 0 searches nothing: only the label/root-count aggregate
-    val (aggregateJobs, stump) = jobsOf(TreeParams(maxDepth = 0))
+    val (aggregateJobs, stump) = fitJobs(TreeParams(maxDepth = 0))
     assert(stump.depth == 0)
-    val (jobs, m) = jobsOf(TreeParams(maxDepth = 3))
+    val (jobs, m) = fitJobs(TreeParams(maxDepth = 3))
     assert(m.depth == 3)
     assert(jobs - aggregateJobs == 3)
   }
