@@ -91,22 +91,11 @@ object Bench {
             .foreach(_.unpersist(blocking = true))
           t
         }.min
-        // Streaming twins leave loaded state-store maps + GC debt that
-        // shadowed the queries sorted right after them (r6: flagship
-        // 9.2 s in-sweep vs 2.3 s isolated). Unload the providers and
-        // take the GC hit here, outside anyone's timer — and OUTSIDE
-        // the repeat loop: r7 unloaded after every rep, so rep 2 of a
-        // stream query re-created its state store cold and min-of-2
-        // measured the cold path (cms_heavy_hitters_stream 2.1 -> 7.1 s
-        // was exactly this, not a plan change).
-        if (name.endsWith("_stream")) {
-          try org.apache.spark.sql.GraftStateBridge.unloadStateStores()
-          catch { case _: Throwable => () }
+        // ... and clear the gate's own fit garbage (or a featurizer's or
+        // a stream's debt; each stream unloads its own state stores)
+        // before the next timer
+        if (gateOnce(name) || gcAfter(name) || name.endsWith("_stream"))
           System.gc()
-        }
-        // ... and clear the gate's own fit garbage (or a featurizer's
-        // persisted-frame debt) before the next timer
-        if (gateOnce(name) || gcAfter(name)) System.gc()
         name -> failure.toLeft(dt)
       }
     val results = outcomes.collect { case (k, Right(v)) => k -> v }

@@ -62,7 +62,7 @@ object SparkEntry {
       .getOrCreate()
   }
 
-  private val ShufflePartitions = "spark.sql.shuffle.partitions"
+  val ShufflePartitions = "spark.sql.shuffle.partitions"
   private val confLocks = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession, AnyRef]())
 
@@ -70,19 +70,22 @@ object SparkEntry {
   def shufflePartitions(spark: SparkSession): Int =
     spark.conf.get(ShufflePartitions).toInt
 
-  /** The one way to scope a conf change: runs `body` with
-    * `spark.sql.shuffle.partitions` set to `n` on `spark`, then restores
-    * the value it replaced. Scopes on one session take turns on that
-    * session's lock; without it two overlapping scopes can restore out of
-    * order (A saves 4 and sets 8, B saves 8 and sets 1, A restores 4, B
-    * restores 8) and leave the session pinned. A body must not wait on
-    * another thread that enters a scope on the same session.
+  /** The one way to scope a conf change: runs `body` with each `key ->
+    * value` set on `spark`, then restores each key, unsetting one that was
+    * unset. Scopes on one session take turns on its lock; without it two
+    * overlapping scopes can restore out of order (A saves 4 and sets 8, B
+    * saves 8 and sets 1, A restores 4, B restores 8) and leave the session
+    * pinned. A body must not wait on another thread that enters a scope on
+    * the same session.
     */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T =
     confLocks.computeIfAbsent(spark, _ => new Object).synchronized {
-      val prev = spark.conf.get(ShufflePartitions)
-      spark.conf.set(ShufflePartitions, n.toString)
-      try body
-      finally spark.conf.set(ShufflePartitions, prev)
+      val prev = settings.map { case (k, v) =>
+        val old = spark.conf.getAll.get(k); spark.conf.set(k, v); k -> old
+      }
+      try body finally prev.reverseIterator.foreach { case (k, old) =>
+        old.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+      }
     }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Q, QueryPack, Tables}
+import graft.sources.Bucketing
 import graft.transform.QuantileBinner
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -657,29 +658,12 @@ object CoreQueries extends QueryPack {
   val bucketedJoin: GraftQuery = GraftQuery(
     "bucketed_join_roundtrip",
     (s, dir) => {
-      // Leftover table dirs from a PREVIOUS session are unknown to the
-      // in-memory catalog and make saveAsTable(overwrite) refuse — clear
-      // any such orphan locations first (same-session reps overwrite
-      // through the catalog normally).
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq("graft_bkt_lineitem", "graft_bkt_orders").foreach { t =>
-        if (!s.catalog.tableExists(t)) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$wh/$t"))
-        }
-      }
       val l = Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
       val o = Tables(s, dir, "orders")
         .select("o_orderkey", "o_orderdate", "o_orderpriority")
-      graft.sources.Bucketing.writeBucketed(
-        l.repartition(8, col("l_orderkey")), "graft_bkt_lineitem",
-        "l_orderkey", 8)
-      graft.sources.Bucketing.writeBucketed(
-        o.repartition(8, col("o_orderkey")), "graft_bkt_orders",
-        "o_orderkey", 8)
+      Bucketing.writeBucketed(l, "graft_bkt_lineitem", "l_orderkey", 8)
+      Bucketing.writeBucketed(o, "graft_bkt_orders", "o_orderkey", 8)
       val bl = s.table("graft_bkt_lineitem")
       val bo = s.table("graft_bkt_orders")
       bl.join(bo, col("l_orderkey") === col("o_orderkey"))
@@ -715,25 +699,11 @@ object CoreQueries extends QueryPack {
   val bucketedQ5: GraftQuery = GraftQuery(
     "bucketed_q5_region_revenue",
     (s, dir) => {
-      // clear orphan table dirs from a previous session (see bucketedJoin)
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq("graft_bkt5_lineitem", "graft_bkt5_orders").foreach { t =>
-        if (!s.catalog.tableExists(t)) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$wh/$t"))
-        }
-      }
       val l = Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount")
       val o = Tables(s, dir, "orders").select("o_orderkey", "o_custkey")
-      graft.sources.Bucketing.writeBucketed(
-        l.repartition(8, col("l_orderkey")), "graft_bkt5_lineitem",
-        "l_orderkey", 8)
-      graft.sources.Bucketing.writeBucketed(
-        o.repartition(8, col("o_orderkey")), "graft_bkt5_orders",
-        "o_orderkey", 8)
+      Bucketing.writeBucketed(l, "graft_bkt5_lineitem", "l_orderkey", 8)
+      Bucketing.writeBucketed(o, "graft_bkt5_orders", "o_orderkey", 8)
       val revPerCust = s.table("graft_bkt5_lineitem")
         .join(s.table("graft_bkt5_orders"),
           col("l_orderkey") === col("o_orderkey"))
@@ -782,25 +752,11 @@ object CoreQueries extends QueryPack {
   val bucketedQ18: GraftQuery = GraftQuery(
     "bucketed_q18_large_volume",
     (s, dir) => {
-      // clear orphan table dirs from a previous session (see bucketedJoin)
-      val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-      Seq("graft_bkt18_lineitem", "graft_bkt18_orders").foreach { t =>
-        if (!s.catalog.tableExists(t)) {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-          }
-          rm(new java.io.File(s"$wh/$t"))
-        }
-      }
       val l = Tables(s, dir, "lineitem").select("l_orderkey", "l_quantity")
       val o = Tables(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice")
-      graft.sources.Bucketing.writeBucketed(
-        l.repartition(8, col("l_orderkey")), "graft_bkt18_lineitem",
-        "l_orderkey", 8)
-      graft.sources.Bucketing.writeBucketed(
-        o.repartition(8, col("o_orderkey")), "graft_bkt18_orders",
-        "o_orderkey", 8)
+      Bucketing.writeBucketed(l, "graft_bkt18_lineitem", "l_orderkey", 8)
+      Bucketing.writeBucketed(o, "graft_bkt18_orders", "o_orderkey", 8)
       val big = s.table("graft_bkt18_lineitem")
         .groupBy("l_orderkey")
         .agg(sum(Q.cents("l_quantity")).as("qty_cents"))

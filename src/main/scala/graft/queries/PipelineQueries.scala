@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{GraftQuery, Q, QueryPack}
+import graft.SparkEntry.{ShufflePartitions, withConf}
 import graft.model.Models
 import graft.pipeline.{HousePipeline, HouseSynth, Sol2Pipeline}
 import org.apache.spark.sql.functions._
@@ -33,7 +34,7 @@ object PipelineQueries extends QueryPack {
       // cv_random_search's coalesce(8)): measured 20.6 -> ~14 s on the
       // r14 box. Values are partition-independent (hash split, exact
       // quantiles, deterministic tree), so the gate output is unchanged.
-      val (r, hist) = graft.SparkEntry.withShufflePartitions(s, 8) {
+      val (r, hist) = withConf(s, ShufflePartitions -> "8") {
         val res = HousePipeline.run(train, test,
           HousePipeline.Config(tree = graft.tree.TreeParams(
             maxDepth = 4, minSamplesSplit = 20, minSamplesLeaf = 10,
@@ -72,7 +73,7 @@ object PipelineQueries extends QueryPack {
       // for a few KB. Values are partition-independent (hash split,
       // seeded fits), so the report is unchanged; only scheduling load
       // drops. The house gate measured 20.6 -> 7.3 s from this pin.
-      val r = graft.SparkEntry.withShufflePartitions(s, 8) {
+      val r = withConf(s, ShufflePartitions -> "8") {
         Sol2Pipeline.run(train, Sol2Pipeline.Config(
           cvFolds = 2, rfNumTrees = 3, gbtMaxIter = 3))
       }

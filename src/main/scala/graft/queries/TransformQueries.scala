@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{GraftQuery, Q, QueryPack, Tables}
 import graft.transform._
+import org.apache.spark.sql.GraftStateBridge
 import org.apache.spark.sql.functions._
 
 /** Oracle-checked queries for the fit/transform module (SURVEY §2.8
@@ -426,7 +427,8 @@ object TransformQueries extends QueryPack {
             }
             .start()
         }
-      try sq.processAllAvailable() finally sq.stop()
+      try sq.processAllAvailable()
+      finally { sq.stop(); GraftStateBridge.unloadStateStores(sq) }
       // Zero micro-batches (empty/missing source) never invokes
       // foreachBatch, so the snapshot dir may not exist — return the
       // empty aggregate with the query's schema instead of letting the

@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
@@ -53,16 +55,14 @@ object Sources {
   private val scratchRoots =
     java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
   private lazy val cleanupHook: Unit =
-    sys.addShutdownHook {
-      scratchRoots.forEach { root =>
-        def rm(f: java.io.File): Unit = {
-          val kids = f.listFiles()
-          if (kids != null) kids.foreach(rm)
-          f.delete(): Unit
-        }
-        rm(new java.io.File(root))
-      }
-    }: Unit
+    sys.addShutdownHook(scratchRoots.forEach(deleteRecursively(_))): Unit
+
+  /** Deletes the file or directory tree at `path`, if there is one. */
+  def deleteRecursively(
+      path: String, conf: Configuration = new Configuration()): Unit = {
+    val p = new Path(path)
+    p.getFileSystem(conf).delete(p, true): Unit
+  }
 
   /** Per-run scratch dir for a round-trip gate: salted with the Spark
     * applicationId so concurrent runs against the same data dir (e.g.

@@ -188,35 +188,23 @@ object EventOps {
       .orderBy("user_id")
   }
 
-  /** ORDERED-INGESTION interval join under a BOUNDED trigger — the
-    * standing gate for the r13 finding that the stream-stream join's
-    * bounded-trigger divergence was pure arrival order (the raw corpus
-    * files are unordered in event time, 99.9% of events arrive "late",
-    * so the watermark evicts join state that unordered later batches
-    * still need; on a time-ordered copy the result is hash-EQUAL to the
-    * batch oracle — measured over all 168,000 sf100 pairs). This query
-    * re-proves that prescription every sweep: it writes an event-time-
-    * ordered copy (range partition on ts + sort within — the
-    * `tools/sort_events.py` layout, produced engine-side), bumps part
-    * mod-times in range order so the file source ingests oldest-first,
-    * then runs the SAME watermarked join with maxFilesPerTrigger=1 —
-    * genuinely multi-batch (one file per trigger), unlike the
-    * single-batch drain of `interval_join_stream`. State stays bounded
-    * by the watermark horizon AND the result equals the batch oracle —
-    * the ordered-ingestion contract a production deployment relies on.
+  /** Ordered-ingestion interval join under a bounded trigger. On the raw
+    * files, unordered in event time, the watermark evicts join state that
+    * later batches still need; on an event-time-ordered copy the result
+    * equals the batch oracle (all 168,000 sf100 pairs). This query writes
+    * such a copy (range partition on ts, sorted within: the
+    * `tools/sort_events.py` layout), stamps the parts' modification times
+    * in range order so the file source ingests oldest first, and runs the
+    * same watermarked join with maxFilesPerTrigger=1: one batch per file,
+    * state bounded by the watermark, and the batch oracle's result.
     */
   def streamingClickErrorPairsOrderedResult(
       spark: SparkSession, sfDir: String, gapUs: Long): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    // app-id-salted scratch under java.io.tmpdir (the roundtrip-sink
-    // convention) so concurrent runs against the same data dir never collide
-    val scratch = new Path(
-      s"${System.getProperty("java.io.tmpdir")}/graft_ordered_events/" +
-        s"${spark.sparkContext.applicationId}/${new Path(sfDir).getName}")
-    val k = 8
+    val scratch = new org.apache.hadoop.fs.Path(
+      graft.sources.Sources.scratchDir(spark, "ordered_events", sfDir))
     events(spark, sfDir)
       .drop("ts_us", "event_ts")
-      .repartitionByRange(k, col("ts"))
+      .repartitionByRange(8, col("ts"))
       .sortWithinPartitions("ts")
       .write.mode("overwrite").parquet(scratch.toString)
     // The file stream source orders unseen files by modification time;
@@ -365,45 +353,40 @@ object EventOps {
       .orderBy("c_mktsegment")
   }
 
-  /** The 2h/1h sliding-window aggregation as a Structured Streaming
-    * query — the same multi-assign `window(len, slide)` operator as the
-    * batch [[sliding]], running against the watermarked stream. Each
-    * event updates exactly two window states; state is bounded by the
-    * watermark horizon, not the stream length.
+  /** Event count and cent sum per `w` window of `event_ts` and event type
+    * over the watermarked event stream, the window start as column `start`.
     */
-  def streamingSliding(spark: SparkSession, sfDir: String): DataFrame = {
+  private def streamingWindows(spark: SparkSession, sfDir: String,
+      w: Column, start: String): DataFrame =
     streamingEvents(spark, sfDir)
       .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
       .withWatermark("event_ts", "1 hour")
-      .groupBy(window(col("event_ts"), "2 hours", "1 hour"), col("event_type"))
+      .groupBy(w, col("event_type"))
       .agg(count(lit(1)).as("n"), sum(Q.cents("value")).as("sum_value_cents"))
       .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH").as("win_start"),
+        date_format(col("window.start"), "yyyy-MM-dd HH").as(start),
         col("event_type"), col("n"), col("sum_value_cents"))
-  }
 
-  /** [[streamingSliding]] run to completion on a memory sink — final
-    * table equals the batch [[sliding]] output, hence shares its oracle.
+  /** The 2h/1h sliding-window aggregation as a Structured Streaming query
+    * run to completion on a memory sink: the same multi-assign
+    * `window(len, slide)` operator as the batch [[sliding]], against the
+    * watermarked stream. Each event updates exactly two window states, and
+    * the state is bounded by the watermark horizon, not the stream length.
+    * The final table equals the batch [[sliding]] output and shares its
+    * oracle.
     */
   def streamingSlidingResult(spark: SparkSession, sfDir: String): DataFrame =
-    Streams.drain(streamingSliding(spark, sfDir), "complete",
-        s"$sfDir/events.parquet")
+    Streams.drain(streamingWindows(spark, sfDir,
+        window(col("event_ts"), "2 hours", "1 hour"), "win_start"),
+      "complete", s"$sfDir/events.parquet")
       .orderBy("win_start", "event_type")
 
   /** The hourly aggregation as a Structured Streaming query over the same
     * parquet (watermark + tumbling window). Returns the streaming DF; the
     * caller starts it (tests use a memory sink + processAllAvailable).
     */
-  def streamingHourly(spark: SparkSession, sfDir: String): DataFrame = {
-    streamingEvents(spark, sfDir)
-      .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-      .withWatermark("event_ts", "1 hour")
-      .groupBy(window(col("event_ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(Q.cents("value")).as("sum_value_cents"))
-      .select(
-        date_format(col("window.start"), "yyyy-MM-dd HH").as("hour"),
-        col("event_type"), col("n"), col("sum_value_cents"))
-  }
+  def streamingHourly(spark: SparkSession, sfDir: String): DataFrame =
+    streamingWindows(spark, sfDir, window(col("event_ts"), "1 hour"), "hour")
 
   /** STREAMING daily-active-users: exact distinct counting as stateful
     * dedup (`dropDuplicates` on (user, day) keeps one state row per

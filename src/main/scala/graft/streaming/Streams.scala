@@ -1,73 +1,118 @@
 package graft.streaming
 
+import graft.SparkEntry.{ShufflePartitions, withConf}
+import graft.sources.Sources
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, GraftStateBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{NamedExpression, SessionWindow}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.streaming.{GroupStateTimeout, StreamingQuery}
 
 /** The one stream runner. [[drain]] runs a streaming frame to completion
   * on a memory sink and hands back the drained rows as a batch frame;
   * every Structured Streaming twin in the engine goes through it.
   *
-  * State sizing: a streaming query's state-store partition count is FIXED
-  * at start from `spark.sql.shuffle.partitions`, and AQE never coalesces
-  * it. At the session default (one partition per core) each stateful
-  * operator opens one store per core (four per partition for a
-  * stream-stream join) even when the whole state is a few KB, so the
-  * fixed open/commit cost per micro-batch grows with the core count while
-  * the work does not: `interval_join_ordered_stream` measured 35.2 s at
-  * 32 cores vs 7.4 s at 8 with identical plans. The count is therefore
-  * derived from the data: ceil(source bytes / advisory partition size),
-  * floored at 1. The source size bounds the state (join buffers, dedup
-  * keys and window panes all hold at most the rows that flow in), so a
-  * 2 MB source runs 1 state partition per operator and a 2 GB one ~32.
-  * Every drained output is a per-key aggregate, dedup or projection whose
-  * value does not depend on the partition count.
+  * State partitions: a stream fixes its state-store partition count at
+  * start from `spark.sql.shuffle.partitions` (AQE never coalesces it), and
+  * each store costs a fixed open/commit per batch however small the state
+  * (`interval_join_ordered_stream`: 35.2 s at 32 cores, 7.4 s at 8). The
+  * count is ceil(source bytes / advisory partition size): the source
+  * bounds the state, and no drained output depends on the count.
+  *
+  * Checkpoint: Spark's FileSystem checkpoint manager. The default
+  * FileContext one looks up link status on every atomic rename, of each
+  * file and its `.crc`, and without the Hadoop native library each lookup
+  * forks `readlink`: 408 of the 621 subprocesses of a `sql_events` bench
+  * pass, all from its four drains. The atomic rename only protects a
+  * restart, and a drain never restarts: its checkpoint is new and deleted.
+  *
+  * No-data batches: after the data, Spark runs a batch that only advances
+  * the watermark. [[idleBatchesEmitNothing]] skips it when no operator
+  * can emit in it: an inner stream-stream join (an evicted row can match
+  * nothing later), a dedup (eviction forgets keys), an aggregate in
+  * complete or update mode (complete re-emits the same table, update only
+  * keys that got rows) and `flatMapGroupsWithState` without a timeout (it
+  * runs only for keys with rows). Anything else keeps it: append-mode
+  * aggregates and session windows emit windows the watermark closes,
+  * outer/semi/anti stream joins emit unmatched rows on eviction, and
+  * timeouts and `transformWithState` fire on it.
   */
 object Streams {
+  private val CheckpointLocation = "spark.sql.streaming.checkpointLocation"
 
-  /** Total bytes under `path` (file or directory), 0 if absent. */
-  def sourceBytes(spark: SparkSession, path: String): Long = {
-    val p = new Path(path)
+  /** Starts a stream with `settings` and state partitions sized to the
+    * bytes under `source`; only the start, which captures them, is scoped.
+    */
+  def withStatePartitions(spark: SparkSession, source: String,
+      settings: (String, String)*)(start: => StreamingQuery): StreamingQuery = {
+    val p = new Path(source)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    val bytes = if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+    val advisory = JavaUtils.byteStringAsBytes(spark.conf.get(
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
+    val n = math.max(1L, (bytes + advisory - 1) / advisory)
+    withConf(spark, settings :+ ShufflePartitions -> n.toString: _*)(start)
   }
 
-  /** Partition count for `bytes` of source data: one per advisory
-    * partition size (the same knob AQE sizes batch shuffles with),
-    * floored at 1.
-    */
-  def statePartitions(spark: SparkSession, bytes: Long): Int = {
-    val advisory = org.apache.spark.network.util.JavaUtils
-      .byteStringAsBytes(spark.conf.get(
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB"))
-    math.max(1L, (bytes + advisory - 1) / advisory).toInt
-  }
-
-  /** Starts a stream (`start`) with its state partitions sized to the
-    * bytes under `source`. The count is captured when the query starts,
-    * so only the start runs inside the conf scope.
-    */
-  def withStatePartitions(spark: SparkSession, source: String)(
-      start: => StreamingQuery): StreamingQuery =
-    graft.SparkEntry.withShufflePartitions(
-      spark, statePartitions(spark, sourceBytes(spark, source)))(start)
+  /** True when no operator in the streaming part of `plan`, drained in
+    * output `mode`, can emit rows in a batch that reads no data. */
+  private def idleBatchesEmitNothing(plan: LogicalPlan, mode: String) =
+    !plan.exists {
+      case p if !p.isStreaming => false
+      case j: Join =>
+        j.joinType != Inner && j.left.isStreaming && j.right.isStreaming
+      case _: Deduplicate | _: DeduplicateWithinWatermark => false
+      case a: Aggregate => mode.equalsIgnoreCase("append") ||
+        a.groupingExpressions.exists {
+          case e: NamedExpression => e.metadata.contains(SessionWindow.marker)
+          case _ => false
+        }
+      case f: FlatMapGroupsWithState =>
+        f.timeout != GroupStateTimeout.NoTimeout
+      case _: LeafNode | _: Project | _: Filter | _: SubqueryAlias |
+          _: EventTimeWatermark | _: Union | _: Expand | _: Generate |
+          _: RepartitionOperation | _: DeserializeToObject |
+          _: SerializeFromObject | _: AppendColumns => false
+      case _ => true
+    }
 
   /** Runs `stream` to completion on a memory sink in output `mode`, with
-    * its state sized to `source`, and returns the drained rows. The sink's
-    * temp view is dropped before returning; the frame stays valid because
-    * its analyzed plan holds the sink itself.
+    * its state sized to `source`, and returns the drained rows. Its temp
+    * view, loaded state stores and checkpoint (under the session's
+    * checkpoint location, else `java.io.tmpdir`) are gone when it returns
+    * or throws; the frame stays valid because its plan holds the sink.
     */
   def drain(stream: DataFrame, mode: String, source: String): DataFrame = {
     val spark = stream.sparkSession
     val name = "graft_stream_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    val sq = withStatePartitions(spark, source) {
-      stream.writeStream.format("memory").queryName(name)
-        .outputMode(mode).start()
-    }
+    val checkpoint = new Path(spark.conf.getOption(CheckpointLocation)
+      .getOrElse(System.getProperty("java.io.tmpdir")), name).toString
+    val settings = ("spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[FileSystemBasedCheckpointFileManager].getName) +:
+      Option.when(idleBatchesEmitNothing(stream.queryExecution.analyzed,
+        mode))("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+        .toSeq
     try {
-      try sq.processAllAvailable() finally sq.stop()
+      val sq = withStatePartitions(spark, source, settings: _*) {
+        val q = stream.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", checkpoint).outputMode(mode).start()
+        // the stream's thread makes the sources' logs after `start`, from
+        // the reading session's conf: they must see the manager setting
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .awaitInitialization(Long.MaxValue)
+        q
+      }
+      try sq.processAllAvailable()
+      finally { sq.stop(); GraftStateBridge.unloadStateStores(sq) }
       spark.table(name)
-    } finally spark.catalog.dropTempView(name)
+    } finally {
+      spark.catalog.dropTempView(name)
+      Sources.deleteRecursively(checkpoint, spark.sessionState.newHadoopConf())
+    }
   }
 }

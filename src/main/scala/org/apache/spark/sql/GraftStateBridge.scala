@@ -1,15 +1,27 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.execution.streaming.operators.stateful.StateStoreWriter
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+import org.apache.spark.sql.execution.streaming.state.{StateStore, StateStoreProviderId}
+import org.apache.spark.sql.streaming.StreamingQuery
 
-/** Bridge to the state-store registry (package-private surface, like
-  * [[GraftPlanBridge]]): a finished micro-batch query leaves its loaded
-  * HDFS-backed state maps (and the maintenance thread's retained
-  * versions) in the local-mode JVM, where they shadow the execution
-  * memory of whatever batch query the bench times next. `unloadAll`
-  * drops every loaded provider; the registry re-loads lazily, so later
-  * streaming queries are unaffected beyond a cold re-open.
+/** Bridge to Spark's internal state-store registry, in one place like
+  * [[GraftPlanBridge]]. A stopped micro-batch query leaves its loaded
+  * state maps in the local-mode JVM, where they shadow the execution
+  * memory of the queries after it and the maintenance thread keeps
+  * touching its checkpoint.
   */
 object GraftStateBridge {
-  def unloadStateStores(): Unit = StateStore.unloadAll()
+  /** Unloads only the stopped `query`'s providers: each store of each
+    * stateful operator of its last planned batch. */
+  def unloadStateStores(query: StreamingQuery): Unit = Option(query
+      .asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution)
+    .foreach(_.executedPlan.foreach {
+      case op: StateStoreWriter =>
+        for (p <- 0 until op.getStateInfo.numPartitions;
+             name <- op.stateStoreNames)
+          StateStore.removeFromLoadedProvidersAndClose(
+            StateStoreProviderId(op.getStateInfo, p, name))
+      case _ =>
+    })
 }

@@ -13,8 +13,8 @@ class BucketingSpec extends AnyFunSuite with SparkTestSession {
       val dims = (1L to 500L).map(i => (i % 97, s"d$i")).toDF("k", "b")
       Bucketing.writeBucketed(facts, "graft_bucketed_facts", "k", 8)
       Bucketing.writeBucketed(dims, "graft_bucketed_dims", "k", 8)
-      val joined = Bucketing.table(spark, "graft_bucketed_facts")
-        .join(Bucketing.table(spark, "graft_bucketed_dims"), "k")
+      val joined = spark.table("graft_bucketed_facts")
+        .join(spark.table("graft_bucketed_dims"), "k")
       assert(joined.count() > 0)
       assert(Bucketing.isShuffleFree(joined),
         joined.queryExecution.executedPlan.toString.take(2000))
