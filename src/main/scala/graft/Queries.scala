@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * A replay that several oracles share is defined once, next to the
   * operator it replays, as a CTE-list fragment the oracle composes after
   * its own `WITH` (`PageRank.oracleCtes`, `Dedup.oracleMinhashCtes`,
-  * `Similarity.oracleBandedCtes`, ...), so a fix to a replay lands in one
-  * place.
+  * `Similarity.oracleBandedCtes`, `DecisionTree.oracleTrainCtes`, ...),
+  * so a fix to a replay lands in one place.
   *
   * Harness contract: runners (Bench, Verify, tests) call
   * `spark.catalog.clearCache()` between queries. A query MAY therefore

@@ -31,6 +31,10 @@ object Dedup {
     conv(substring(md5(concat(c, lit("|" + seed))), 1, 15), 16, 10)
       .cast("long")
 
+  /** The DuckDB twin of [[md5Hash60]] over the VARCHAR expression `s`. */
+  def oracleMd5Hash60(s: String, seed: Int): String =
+    s"CAST(concat('0x', substring(md5($s || '|$seed'), 1, 15)) AS BIGINT)"
+
   /** Modulus for the universal-hash permutation family: the Mersenne
     * prime 2^31-1. Keeps a*(h mod p)+b under 2^62, so the arithmetic is
     * exact in both Spark (wrapping) and DuckDB (overflow-checked) BIGINT.
@@ -585,8 +589,7 @@ object Dedup {
         GROUP BY id, tok),
       h AS (
         SELECT id, w,
-               CAST(concat('0x', substring(md5(tok || '|0'), 1, 15))
-                    AS BIGINT) AS h
+               ${oracleMd5Hash60("tok", 0)} AS h
         FROM toks),
       b AS (
         SELECT id,

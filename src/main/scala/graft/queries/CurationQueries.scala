@@ -142,7 +142,7 @@ object CurationQueries extends QueryPack {
             .as("kept_share"))
         .orderBy("lang")
     },
-    Some("""
+    Some(s"""
       WITH b AS (
         SELECT doc_id, lang,
                len(string_split(text, ' ')) AS nt,
@@ -157,9 +157,7 @@ object CurationQueries extends QueryPack {
       k AS (
         SELECT lang, COUNT(*) AS n_kept, CAST(SUM(nt) AS BIGINT) AS kept_tokens
         FROM b
-        WHERE CAST(concat('0x',
-                substring(md5(CAST(doc_id AS VARCHAR) || '|7'), 1, 15))
-              AS BIGINT) % 1000000
+        WHERE ${graft.dedup.Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)} % 1000000
               < CAST(round(q * 1000000) AS BIGINT)
         GROUP BY lang),
       t AS (SELECT lang, COUNT(*) AS n_total FROM b GROUP BY lang)
@@ -855,8 +853,8 @@ object CurationQueries extends QueryPack {
         FROM documents$where),
       g AS MATERIALIZED (
         SELECT doc_id, lang, source,
-               CAST(concat('0x', substring(md5(gram || '|${graft.text.Dsir.HashSeed}'), 1, 15))
-                 AS BIGINT) % ${graft.text.Dsir.Buckets} AS bucket
+               ${graft.dedup.Dedup.oracleMd5Hash60("gram", graft.text.Dsir.HashSeed)}
+                 % ${graft.text.Dsir.Buckets} AS bucket
         FROM (
           SELECT doc_id, lang, source, arr[i] AS gram
           FROM (SELECT doc_id, lang, source, arr,

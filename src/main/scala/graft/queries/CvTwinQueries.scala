@@ -16,10 +16,11 @@ import org.apache.spark.sql.functions._
   * oracle-green twin, the CV counterpart of `rf_bagged_vote_confusion`.
   *
   * Determinism swap: folds are a seeded cross-engine 60-bit md5 hash of
-  * the order key mod 3 (the engine's own `Splits.hashFold` scheme), and
-  * every (config, fold) fit is the exact level-wise trainer already
-  * DuckDB-replayed by the tree family. The grid varies maxDepth {1, 2} — two
-  * genuinely different models, so selection is decided by the data, not
+  * the order key mod 3 (`Dedup.md5Hash60(l_orderkey, 13) % 3`, not the
+  * `pmod(id, k)` of `Splits.hashFold`), and every (config, fold) fit
+  * is the exact level-wise trainer already DuckDB-replayed by the tree
+  * family. The grid varies maxDepth {1, 2} — two genuinely different
+  * models, so selection is decided by the data, not
   * degenerate. The task is a PLANTED two-level interaction —
   * y = (l_tax >= 0.05) where quantity <= 25, else (l_discount <= 0.03)
   * — the standard device for validating model-selection mechanics when
@@ -122,7 +123,7 @@ object CvTwinQueries extends QueryPack {
 
   // ---------------------------------------------------------------------
   // DuckDB replay: one level-wise training chain per (depth, fold) —
-  // the tree family's proven CTE shape, suffixed `_{d}_{f}` — then the
+  // `DecisionTree.oracleTrainCtes`, suffixed `_{d}_{f}` — then the
   // held-out fold routed through that config's winner tables, confusion
   // counts, macro-F1 micro, config sums, and the argmax config.
   // Every feature here is LOW-CARDINALITY (quantity 50 x discount 11 x
@@ -134,87 +135,21 @@ object CvTwinQueries extends QueryPack {
   // disk at 389 s).
   // ---------------------------------------------------------------------
 
-  private def valByFord(row: String, w: String): String =
-    s"(CASE $w.ford WHEN 0 THEN $row.f0 WHEN 1 THEN $row.f1" +
-      s" WHEN 2 THEN $row.f2 ELSE $row.f3 END)"
-
-  private def levelSql(l: Int, sfx: String): String = {
-    val p = params(0) // depth-independent thresholds
-    s"""
-      sr${l}_$sfx AS MATERIALIZED (SELECT node FROM a${l}_$sfx GROUP BY node
-               HAVING SUM(w) >= ${p.minSamplesSplit}
-                  AND SUM(y*w) > 0 AND SUM(w) - SUM(y*w) > 0),
-      aj${l}_$sfx AS MATERIALIZED (
-        SELECT a.* FROM a${l}_$sfx a JOIN sr${l}_$sfx s ON a.node = s.node),
-      m${l}_$sfx AS MATERIALIZED (
-        SELECT node, 0 AS ford, f0 AS v, y, w FROM aj${l}_$sfx
-        UNION ALL SELECT node, 1, f1, y, w FROM aj${l}_$sfx
-        UNION ALL SELECT node, 2, f2, y, w FROM aj${l}_$sfx
-        UNION ALL SELECT node, 3, f3, y, w FROM aj${l}_$sfx),
-      g${l}_$sfx AS MATERIALIZED (SELECT node, ford, v,
-                     CAST(SUM(w) AS BIGINT) AS n,
-                     CAST(SUM(y*w) AS BIGINT) AS c1,
-                     CAST(SUM(w) - SUM(y*w) AS BIGINT) AS c0
-              FROM m${l}_$sfx GROUP BY node, ford, v),
-      c${l}_$sfx AS MATERIALIZED (SELECT node, ford, v,
-                     SUM(n)  OVER wc AS ln,  SUM(n)  OVER wa AS tn,
-                     SUM(c0) OVER wc AS lc0, SUM(c0) OVER wa AS tc0,
-                     SUM(c1) OVER wc AS lc1, SUM(c1) OVER wa AS tc1,
-                     MIN(v)  OVER wa AS vmin
-              FROM g${l}_$sfx
-              WINDOW wc AS (PARTITION BY node, ford ORDER BY v
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                     wa AS (PARTITION BY node, ford)),
-      s${l}_$sfx AS MATERIALIZED (SELECT node, ford, v,
-                     ${TreeQueries.gainSql} AS gain
-              FROM c${l}_$sfx
-              WHERE v > vmin AND ln >= ${p.minSamplesLeaf}
-                AND tn - ln >= ${p.minSamplesLeaf}),
-      b${l}_$sfx AS MATERIALIZED (SELECT node, ford, v AS thr
-              FROM s${l}_$sfx WHERE gain > 0
-              QUALIFY row_number() OVER (PARTITION BY node
-                ORDER BY gain DESC, ford ASC, v ASC) = 1),
-      a${l + 1}_$sfx AS MATERIALIZED (
-        SELECT a.f0, a.f1, a.f2, a.f3, a.y, a.w,
-               CASE WHEN win.node IS NULL THEN a.node
-                    WHEN ${valByFord("a", "win")} <= win.thr THEN 2*a.node+1
-                    ELSE 2*a.node+2 END AS node
-        FROM a${l}_$sfx a LEFT JOIN b${l}_$sfx win ON a.node = win.node)"""
-  }
-
-  /** Training chain for config depth `d` on fold-complement `f`, then
-    * the held-out fold routed level-by-level and confusion-counted.
+  /** Config depth `d` trained on fold-complement `f` by the shared
+    * `DecisionTree.oracleTrainCtes` chain, then the held-out fold routed
+    * through it and confusion-counted.
     */
   private def configFoldSql(d: Int, f: Int): String = {
     val sfx = s"${d}_$f"
-    val train = s"""
-      a0_$sfx AS MATERIALIZED (
-        SELECT f0, f1, f2, f3, y, w, 0 AS node FROM base WHERE h <> $f),
-      ${(0 until d).map(levelSql(_, sfx)).mkString(",\n")},
-      leaf_$sfx AS MATERIALIZED (SELECT node,
-               CASE WHEN SUM(y*w) > SUM(w) - SUM(y*w) THEN 1 ELSE 0 END AS pred
-              FROM a${d}_$sfx GROUP BY node)"""
-    val route = (0 until d).map { l =>
-      val from = if (l == 0) s"(SELECT * FROM base WHERE h = $f)"
-                 else s"p${l}_$sfx"
-      val prev = if (l == 0) "0" else s"p.n${l}_$sfx"
-      s"""
-      p${l + 1}_$sfx AS MATERIALIZED (
-        SELECT p.*, CASE WHEN win.node IS NULL THEN $prev
-                         WHEN ${valByFord("p", "win")} <= win.thr
-                           THEN 2*($prev)+1
-                         ELSE 2*($prev)+2 END AS n${l + 1}_$sfx
-        FROM $from p LEFT JOIN b${l}_$sfx win ON win.node = $prev)"""
-    }.mkString(",\n")
-    s"""$train,
-      $route,
+    s"""${DecisionTree.oracleTrainCtes(s"(SELECT * FROM base WHERE h <> $f)", sfx, params(d))},
+      ${DecisionTree.oracleRouteCtes(s"(SELECT * FROM base WHERE h = $f)", sfx, params(d))},
       conf_$sfx AS MATERIALIZED (
         SELECT CAST(SUM(p.w) AS BIGINT) AS n_val,
                CAST(SUM(CASE WHEN p.y = 1 AND l.pred = 1 THEN p.w ELSE 0 END) AS BIGINT) AS tp1,
                CAST(SUM(CASE WHEN p.y = 0 AND l.pred = 1 THEN p.w ELSE 0 END) AS BIGINT) AS fp1,
                CAST(SUM(CASE WHEN p.y = 1 AND l.pred = 0 THEN p.w ELSE 0 END) AS BIGINT) AS fn1,
                CAST(SUM(CASE WHEN p.y = 0 AND l.pred = 0 THEN p.w ELSE 0 END) AS BIGINT) AS tn
-        FROM p${d}_$sfx p JOIN leaf_$sfx l ON l.node = p.n${d}_$sfx)"""
+        FROM route_$sfx p JOIN leaf_$sfx l ON l.node = p.node_$sfx)"""
   }
 
   private def rowSql(d: Int, f: Int): String = s"""
@@ -244,9 +179,8 @@ object CvTwinQueries extends QueryPack {
                     THEN CASE WHEN l_tax >= 0.05 THEN 1 ELSE 0 END
                     ELSE CASE WHEN l_discount <= 0.03 THEN 1 ELSE 0 END
                END AS y,
-               CAST(concat('0x', substring(md5(
-                 CAST(l_orderkey AS VARCHAR) || '|$hashSeed'), 1, 15))
-                 AS BIGINT) % $nFolds AS h
+               ${graft.dedup.Dedup.oracleMd5Hash60("CAST(l_orderkey AS VARCHAR)", hashSeed)}
+                 % $nFolds AS h
         FROM lineitem)
         GROUP BY f0, f1, f2, f3, y, h),
       $chains,

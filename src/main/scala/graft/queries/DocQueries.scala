@@ -1127,16 +1127,14 @@ object DocQueries extends QueryPack {
       .agg(count(lit(1)).as("n"),
         sum(TextOps.tokenCount(col("text"))).as("sum_tokens"))
       .orderBy("lang"),
-    Some("""
+    Some(s"""
       WITH b AS (
         SELECT lang, text,
                len(string_split(text, ' ')) AS nt,
                len(list_filter(string_split(text, ' '),
                    x -> x IN ('the', 'a'))) AS nstop
         FROM documents
-        WHERE CAST(concat('0x',
-                 substring(md5(CAST(doc_id AS VARCHAR) || '|0'), 1, 15))
-               AS BIGINT) % 100 < 50),
+        WHERE ${graft.dedup.Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 0)} % 100 < 50),
       q AS (
         SELECT lang, nt,
                round(0.4 * least(length(text) / 500.0, 1.0)

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * ~2/3 of the data, overlapping like bootstrap resamples), and each
   * bag's tree is the exact level-wise trainer already DuckDB-replayed
   * by the tree family (`tree_train_confusion`). Per-bag training,
-  * routing of EVERY row through every tree, and the majority vote all
-  * replay verbatim in the oracle SQL below.
+  * routing of EVERY row through every tree (`DecisionTree.oracleTrainCtes`
+  * and `oracleRouteCtes`), and the majority vote all replay in the
+  * oracle SQL below.
   *
   * Scale shape: identical to the single-tree trainer times nBags —
   * per-level grouped gain tables (bounded by node*feature*distinct-
@@ -65,90 +66,23 @@ object EnsembleQueries extends QueryPack {
     Some(oracleSql))
 
   // ---------------------------------------------------------------------
-  // DuckDB replay: per-bag depth-2 training (the tree family's proven
-  // level-wise CTE shape, suffixed per bag), then every base row routed
-  // through each bag's winner tables and majority-voted.
+  // DuckDB replay: per-bag training by the shared
+  // `DecisionTree.oracleTrainCtes` chain (suffix = bag), then every base
+  // row routed through each bag's winner tables and majority-voted.
   // ---------------------------------------------------------------------
 
-  private def valByFord(row: String, w: String): String =
-    s"(CASE $w.ford WHEN 0 THEN $row.f0 WHEN 1 THEN $row.f1" +
-      s" WHEN 2 THEN $row.f2 ELSE $row.f3 END)"
-
-  private def levelSql(l: Int, b: Int): String = s"""
-      sr${l}_$b AS MATERIALIZED (SELECT node FROM a${l}_$b GROUP BY node
-               HAVING COUNT(*) >= ${params.minSamplesSplit}
-                  AND SUM(y) > 0 AND COUNT(*) - SUM(y) > 0),
-      aj${l}_$b AS MATERIALIZED (
-        SELECT a.* FROM a${l}_$b a JOIN sr${l}_$b s ON a.node = s.node),
-      m${l}_$b AS MATERIALIZED (
-        SELECT node, 0 AS ford, f0 AS v, y FROM aj${l}_$b
-        UNION ALL SELECT node, 1, f1, y FROM aj${l}_$b
-        UNION ALL SELECT node, 2, f2, y FROM aj${l}_$b
-        UNION ALL SELECT node, 3, f3, y FROM aj${l}_$b),
-      g${l}_$b AS MATERIALIZED (SELECT node, ford, v, COUNT(*) AS n,
-                     SUM(y) AS c1, COUNT(*) - SUM(y) AS c0
-              FROM m${l}_$b GROUP BY node, ford, v),
-      c${l}_$b AS MATERIALIZED (SELECT node, ford, v,
-                     SUM(n)  OVER wc AS ln,  SUM(n)  OVER wa AS tn,
-                     SUM(c0) OVER wc AS lc0, SUM(c0) OVER wa AS tc0,
-                     SUM(c1) OVER wc AS lc1, SUM(c1) OVER wa AS tc1,
-                     MIN(v)  OVER wa AS vmin
-              FROM g${l}_$b
-              WINDOW wc AS (PARTITION BY node, ford ORDER BY v
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                     wa AS (PARTITION BY node, ford)),
-      s${l}_$b AS MATERIALIZED (SELECT node, ford, v,
-                     ${TreeQueries.gainSql} AS gain
-              FROM c${l}_$b
-              WHERE v > vmin AND ln >= ${params.minSamplesLeaf}
-                AND tn - ln >= ${params.minSamplesLeaf}),
-      b${l}_$b AS MATERIALIZED (SELECT node, ford, v AS thr
-              FROM s${l}_$b WHERE gain > 0
-              QUALIFY row_number() OVER (PARTITION BY node
-                ORDER BY gain DESC, ford ASC, v ASC) = 1),
-      a${l + 1}_$b AS MATERIALIZED (
-        SELECT a.f0, a.f1, a.f2, a.f3, a.y,
-               CASE WHEN w.node IS NULL THEN a.node
-                    WHEN ${valByFord("a", "w")} <= w.thr THEN 2*a.node+1
-                    ELSE 2*a.node+2 END AS node
-        FROM a${l}_$b a LEFT JOIN b${l}_$b w ON a.node = w.node)"""
-
-  private def bagSql(b: Int): String = s"""
-      a0_$b AS MATERIALIZED (
-        SELECT f0, f1, f2, f3, y, 0 AS node FROM base WHERE h <> $b),
-      ${(0 until params.maxDepth).map(levelSql(_, b)).mkString(",\n")},
-      leaf_$b AS MATERIALIZED (SELECT node,
-               CASE WHEN SUM(y) > COUNT(*) - SUM(y) THEN 1 ELSE 0 END AS pred
-              FROM a${params.maxDepth}_$b GROUP BY node)"""
-
-  /** Route every base row through bag b's winner tables level by level;
-    * `src` is the upstream row CTE (base for bag 0, q{b-1} after).
-    */
-  private def routeSql(b: Int, src: String): String = {
-    val levels = (0 until params.maxDepth).map { l =>
-      val from = if (l == 0) src else s"p${l}_$b"
-      val prev = if (l == 0) "0" else s"p.n${l}_$b"
-      s"""
-      p${l + 1}_$b AS MATERIALIZED (
-        SELECT p.*, CASE WHEN w.node IS NULL THEN $prev
-                         WHEN ${valByFord("p", "w")} <= w.thr
-                           THEN 2*($prev)+1
-                         ELSE 2*($prev)+2 END AS n${l + 1}_$b
-        FROM $from p LEFT JOIN b${l}_$b w ON w.node = $prev)"""
-    }.mkString(",\n")
-    s"""$levels,
-      q$b AS MATERIALIZED (
-        SELECT p.*, l.pred AS pred_$b
-        FROM p${params.maxDepth}_$b p
-        JOIN leaf_$b l ON l.node = p.n${params.maxDepth}_$b)"""
-  }
-
   private lazy val oracleSql: String = {
-    val bags = (0 until nBags).map(bagSql).mkString(",\n")
-    val routes = (0 until nBags)
-      .map(b => routeSql(b, if (b == 0) "base" else s"q${b - 1}"))
-      .mkString(",\n")
-    val voteSum = (0 until nBags).map(b => s"pred_$b").mkString(" + ")
+    val bags = (0 until nBags).map { b =>
+      DecisionTree.oracleTrainCtes(s"(SELECT * FROM base WHERE h <> $b)", s"$b", params)
+    }
+    // bag b routes the rows bag b-1 routed, so the last route holds
+    // every bag's leaf
+    val routes = (0 until nBags).map { b =>
+      DecisionTree.oracleRouteCtes(if (b == 0) "base" else s"route_${b - 1}", s"$b", params)
+    }
+    val voteSum = (0 until nBags).map(b => s"l$b.pred").mkString(" + ")
+    val leafJoins = (0 until nBags)
+      .map(b => s"JOIN leaf_$b l$b ON l$b.node = r.node_$b").mkString("\n      ")
     s"""
       WITH base AS MATERIALIZED (
         SELECT CAST(l_quantity AS DOUBLE) AS f0,
@@ -156,18 +90,18 @@ object EnsembleQueries extends QueryPack {
                CAST(l_tax AS DOUBLE) AS f2,
                CAST(l_extendedprice AS DOUBLE) AS f3,
                CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y,
-               CAST(concat('0x', substring(md5(
-                 CAST(l_orderkey AS VARCHAR) || '|$hashSeed'), 1, 15))
-                 AS BIGINT) % $nBags AS h
+               1 AS w,
+               ${graft.dedup.Dedup.oracleMd5Hash60("CAST(l_orderkey AS VARCHAR)", hashSeed)}
+                 % $nBags AS h
         FROM lineitem),
-      $bags,
-      $routes
-      SELECT CAST(y AS BIGINT) AS label,
+      ${(bags ++ routes).mkString(",\n      ")}
+      SELECT CAST(r.y AS BIGINT) AS label,
              CAST($voteSum AS BIGINT) AS votes,
              CAST(CASE WHEN $voteSum >= ${nBags / 2 + 1} THEN 1 ELSE 0 END
                AS BIGINT) AS pred,
              COUNT(*) AS n
-      FROM q${nBags - 1}
+      FROM route_${nBags - 1} r
+      $leafJoins
       GROUP BY 1, 2, 3 ORDER BY label, votes"""
   }
 

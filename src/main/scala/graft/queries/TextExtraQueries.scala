@@ -213,8 +213,7 @@ object TextExtraQueries extends QueryPack {
         SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents),
       b AS MATERIALIZED (
         SELECT lang,
-               CAST(concat('0x', substring(md5(tok || '|0'), 1, 15))
-                    AS BIGINT) % $lcM AS bucket,
+               ${graft.dedup.Dedup.oracleMd5Hash60("tok", 0)} % $lcM AS bucket,
                tok
         FROM w)
       SELECT lang, COUNT(DISTINCT bucket) AS occupied,

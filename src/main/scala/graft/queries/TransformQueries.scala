@@ -274,12 +274,10 @@ object TransformQueries extends QueryPack {
             .as("quantity_imputed"))
         .orderBy("l_orderkey", "l_linenumber")
     },
-    Some("""
+    Some(s"""
       WITH x AS (
         SELECT l_orderkey, l_linenumber, l_returnflag,
-               CASE WHEN CAST(concat('0x', substring(md5(
-                      concat_ws('|', l_orderkey, l_linenumber) || '|3'),
-                      1, 15)) AS BIGINT) % 10 = 0
+               CASE WHEN ${graft.dedup.Dedup.oracleMd5Hash60("concat_ws('|', l_orderkey, l_linenumber)", 3)} % 10 = 0
                     THEN NULL
                     ELSE CAST(round(l_quantity * 100) AS BIGINT) END AS c
         FROM lineitem),
@@ -509,12 +507,10 @@ object TransformQueries extends QueryPack {
       graft.dedup.Dedup.md5Hash60(col("o_orderkey").cast("string"), 11)
         % 5,
       priorWeight = 20),
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT o_orderpriority AS category,
-               CAST(concat('0x', substring(
-                 md5(CAST(o_orderkey AS VARCHAR) || '|11'), 1, 15))
-                 AS BIGINT) % 5 AS fold,
+               ${graft.dedup.Dedup.oracleMd5Hash60("CAST(o_orderkey AS VARCHAR)", 11)} % 5 AS fold,
                CAST(round(o_totalprice * 100) AS BIGINT) AS v
         FROM orders),
       per AS (

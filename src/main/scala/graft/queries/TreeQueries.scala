@@ -7,14 +7,14 @@ import org.apache.spark.sql.functions._
 
 /** Decision-tree queries (SURVEY §2.8 M8/M9, §2.4 A11-A14, A20).
   *
-  * The FULL depth-3 level-wise trainer is oracle-checked: the DuckDB SQL
-  * below replays training end to end — per-(node,feature,threshold)
-  * cumulative gain tables, the reference's stopping rules and tie-breaks
-  * (gain desc, feature order, lowest threshold; house_predict.py:283-334),
-  * and per-level row routing — as three chained rounds of the
-  * `split_gains_discount` CTE shape. The binned queries additionally
-  * replay the exact-quantile bucketizer (`quantile_cont` is bit-identical
-  * to Spark `percentile`, and the i/16 probs are dyadic => exact).
+  * The FULL depth-3 level-wise trainer is oracle-checked: each oracle
+  * feeds its base rows to `DecisionTree.oracleTrainCtes`, which replays
+  * training end to end — per-(node,feature,threshold) cumulative gain
+  * tables, the reference's stopping rules and tie-breaks (gain desc,
+  * feature order, lowest threshold; house_predict.py:283-334), and
+  * per-level row routing. The binned queries additionally replay the
+  * exact-quantile bucketizer (`quantile_cont` is bit-identical to Spark
+  * `percentile`, and the i/16 probs are dyadic => exact).
   */
 object TreeQueries extends QueryPack {
 
@@ -34,7 +34,7 @@ object TreeQueries extends QueryPack {
         criterion = "entropy", minSamplesLeaf = 1)
       .select(col("threshold"), col("ln"), col("tn"), Q.r6(col("gain")).as("gain"))
       .orderBy("threshold"),
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT CAST(l_discount AS DOUBLE) AS v,
                CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
@@ -51,14 +51,7 @@ object TreeQueries extends QueryPack {
             WINDOW wc AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
                    wa AS ())
       SELECT v AS threshold, CAST(ln AS BIGINT) AS ln, CAST(tn AS BIGINT) AS tn,
-             round(
-               (-(CASE WHEN tc0 > 0 THEN (tc0/tn)*log2(tc0/tn) ELSE 0.0 END
-                  + CASE WHEN tc1 > 0 THEN (tc1/tn)*log2(tc1/tn) ELSE 0.0 END))
-               - (ln/tn) * (-(CASE WHEN lc0 > 0 THEN (lc0/ln)*log2(lc0/ln) ELSE 0.0 END
-                              + CASE WHEN lc1 > 0 THEN (lc1/ln)*log2(lc1/ln) ELSE 0.0 END))
-               - ((tn-ln)/tn) * (-(CASE WHEN tc0-lc0 > 0 THEN ((tc0-lc0)/(tn-ln))*log2((tc0-lc0)/(tn-ln)) ELSE 0.0 END
-                                   + CASE WHEN tc1-lc1 > 0 THEN ((tc1-lc1)/(tn-ln))*log2((tc1-lc1)/(tn-ln)) ELSE 0.0 END)),
-               6) AS gain
+             round(${DecisionTree.oracleGainSql}, 6) AS gain
       FROM c
       WHERE ln >= 1 AND tn - ln >= 1
         AND v > (SELECT MIN(v) FROM d) -- reference skips unique_values[0]
@@ -79,116 +72,32 @@ object TreeQueries extends QueryPack {
     }
 
   // ---------------------------------------------------------------------
-  // DuckDB replay of the depth-3 level-wise trainer.
+  // DuckDB replay: the pack's base rows, trained by the shared
+  // `DecisionTree.oracleTrainCtes` chain (suffix `t`).
   // ---------------------------------------------------------------------
 
-  /** Per-candidate entropy gain in the same operand order as the
-    * trainer's split scan (`DecisionTree.impurity` and its gain), so both
-    * engines produce bit-identical doubles; `split_gains_discount` checks
-    * this cross-engine.
-    */
-  private[queries] val gainSql =
-    """(-(CASE WHEN tc0 > 0 THEN (tc0/tn)*log2(tc0/tn) ELSE 0.0 END
-          + CASE WHEN tc1 > 0 THEN (tc1/tn)*log2(tc1/tn) ELSE 0.0 END))
-       - (ln/tn) * (-(CASE WHEN lc0 > 0 THEN (lc0/ln)*log2(lc0/ln) ELSE 0.0 END
-                      + CASE WHEN lc1 > 0 THEN (lc1/ln)*log2(lc1/ln) ELSE 0.0 END))
-       - ((tn-ln)/tn) * (-(CASE WHEN tc0-lc0 > 0 THEN ((tc0-lc0)/(tn-ln))*log2((tc0-lc0)/(tn-ln)) ELSE 0.0 END
-                           + CASE WHEN tc1-lc1 > 0 THEN ((tc1-lc1)/(tn-ln))*log2((tc1-lc1)/(tn-ln)) ELSE 0.0 END))"""
+  /** Training rows after the last level, each in its leaf. */
+  private val leafRows = s"a${params.maxDepth}_t"
 
-  /** val-of-winning-feature expression for row alias `a` vs best alias `b`. */
-  private val bValSql =
-    "(CASE b.ford WHEN 0 THEN a.f0 WHEN 1 THEN a.f1 WHEN 2 THEN a.f2 ELSE a.f3 END)"
-
-  private val fordNameSql =
-    "(CASE b.ford WHEN 0 THEN 'l_quantity' WHEN 1 THEN 'l_discount'" +
-      " WHEN 2 THEN 'l_tax' ELSE 'l_extendedprice' END)"
-
-  /** One training level: searchable-node filter (reference stopping rules
-    * house_predict.py:325-334), melted gain table with minSamplesLeaf and
-    * lowest-distinct-value pruning, per-node winner (gain desc, feature
-    * order asc, threshold asc, strict gain > 0), and row routing to
-    * 2*node+1 / 2*node+2 (leaf rows keep their node — heap ids are unique
-    * so the last assignment IS the leaf).
-    */
-  private def levelSql(l: Int, binned: Boolean): String = {
-    // path thresholds: exact mode prints the raw split value; binned mode
-    // maps bucket code c back to edges(c+1) (right-closed buckets), i.e.
-    // 1-based e[c+2], exactly DecisionTree.fit's thresholdOf
-    val thrSql =
-      if (binned)
-        "printf('%.6f', (CASE b.ford WHEN 0 THEN e0.e[CAST(b.thr AS INTEGER)+2]" +
-          " WHEN 1 THEN e1.e[CAST(b.thr AS INTEGER)+2]" +
-          " WHEN 2 THEN e2.e[CAST(b.thr AS INTEGER)+2]" +
-          " ELSE e3.e[CAST(b.thr AS INTEGER)+2] END))"
-      else "printf('%.6f', b.thr)"
-    val edgeJoin = if (binned) ", e0, e1, e2, e3" else ""
-    s"""
-      sr$l AS MATERIALIZED (SELECT node FROM a$l GROUP BY node
-               HAVING SUM(w) >= ${params.minSamplesSplit}
-                  AND SUM(y*w) > 0 AND SUM(w) - SUM(y*w) > 0),
-      aj$l AS MATERIALIZED (SELECT a.* FROM a$l a JOIN sr$l s ON a.node = s.node),
-      m$l AS MATERIALIZED (
-        SELECT node, 0 AS ford, f0 AS v, y, w FROM aj$l
-        UNION ALL SELECT node, 1, f1, y, w FROM aj$l
-        UNION ALL SELECT node, 2, f2, y, w FROM aj$l
-        UNION ALL SELECT node, 3, f3, y, w FROM aj$l),
-      g$l AS MATERIALIZED (SELECT node, ford, v, CAST(SUM(w) AS BIGINT) AS n,
-                     CAST(SUM(y*w) AS BIGINT) AS c1,
-                     CAST(SUM(w) - SUM(y*w) AS BIGINT) AS c0
-              FROM m$l GROUP BY node, ford, v),
-      c$l AS MATERIALIZED (SELECT node, ford, v,
-                     SUM(n)  OVER wc AS ln,  SUM(n)  OVER wa AS tn,
-                     SUM(c0) OVER wc AS lc0, SUM(c0) OVER wa AS tc0,
-                     SUM(c1) OVER wc AS lc1, SUM(c1) OVER wa AS tc1,
-                     MIN(v)  OVER wa AS vmin
-              FROM g$l
-              WINDOW wc AS (PARTITION BY node, ford ORDER BY v
-                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-                     wa AS (PARTITION BY node, ford)),
-      s$l AS MATERIALIZED (SELECT node, ford, v, $gainSql AS gain
-              FROM c$l
-              WHERE v > vmin AND ln >= ${params.minSamplesLeaf}
-                AND tn - ln >= ${params.minSamplesLeaf}),
-      b$l AS MATERIALIZED (SELECT node, ford, v AS thr
-              FROM s$l WHERE gain > 0
-              QUALIFY row_number() OVER (PARTITION BY node
-                ORDER BY gain DESC, ford ASC, v ASC) = 1),
-      a${l + 1} AS MATERIALIZED (
-        SELECT a.f0, a.f1, a.f2, a.f3, a.y, a.w,
-               CASE WHEN b.node IS NULL THEN a.node
-                    WHEN $bValSql <= b.thr THEN 2*a.node+1
-                    ELSE 2*a.node+2 END AS node,
-               CASE WHEN b.node IS NULL THEN a.path
-                    ELSE a.path || (CASE WHEN a.path = '' THEN '' ELSE ' AND ' END)
-                         || $fordNameSql
-                         || (CASE WHEN $bValSql <= b.thr THEN ' <= ' ELSE ' > ' END)
-                         || $thrSql
-               END AS path
-        FROM a$l a LEFT JOIN b$l b ON a.node = b.node$edgeJoin)"""
-  }
-
-  /** The full 3-level training chain. Exact mode melts raw (double-cast)
-    * feature values; binned mode first fits 16 exact-quantile edges per
-    * feature (`QuantileBinner.fitMany` semantics: dedup'd sorted edges,
-    * the i/16 probs are exact dyadic doubles) and trains on bucket codes
-    * (= count of interior edges strictly below the value — the `cut`
-    * right-closed chain in closed form).
+  /** The base rows and the training chain. Exact mode trains on raw
+    * (double-cast) feature values, one row each; binned mode first fits
+    * 16 exact-quantile edges per feature (`QuantileBinner.fitMany`
+    * semantics: dedup'd sorted edges, the i/16 probs are exact dyadic
+    * doubles) and trains on bucket codes (= count of interior edges
+    * strictly below the value — the `cut` right-closed chain in closed
+    * form).
     */
   private def trainSql(binned: Boolean): String = {
     val probs = (0 to nBins).map(i => i.toDouble / nBins).mkString("[", ", ", "]")
     val rawF = Seq(
       "CAST(l_quantity AS DOUBLE)", "CAST(l_discount AS DOUBLE)",
       "CAST(l_tax AS DOUBLE)", "CAST(l_extendedprice AS DOUBLE)")
+    val y = "CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y"
     val base =
       if (!binned)
-        // exact mode: continuous feature values don't collapse — carry
-        // the data-sized frame with unit weights (SUM(w) == COUNT(*),
-        // so every downstream statistic is unchanged)
-        s"""a0 AS MATERIALIZED (
+        s"""base AS MATERIALIZED (
           SELECT ${rawF(0)} AS f0, ${rawF(1)} AS f1,
-                 ${rawF(2)} AS f2, ${rawF(3)} AS f3,
-                 CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y,
-                 0 AS node, '' AS path, 1 AS w
+                 ${rawF(2)} AS f2, ${rawF(3)} AS f3, $y, 1 AS w
           FROM lineitem)"""
       else {
         val es = rawF.zipWithIndex.map { case (f, i) =>
@@ -203,44 +112,43 @@ object TreeQueries extends QueryPack {
         // BEFORE the level-wise replay (the r12 HHI pre-aggregation
         // move: counting commutes with grouping). Every level statistic
         // is a sum of counts, so SUM(w) arithmetic is exactly COUNT(*)
-        // over the raw frame; routing and path depend only on the bin
-        // vector, so distinct rows stay bounded at every level. This is
-        // what makes the trainer oracle replayable at the 600M-row rung
-        // (the per-row a$l chain needed >55 GB of DuckDB temp and died
-        // on disk at sf100).
+        // over the raw frame; routing depends only on the bin vector,
+        // so distinct rows stay bounded at every level. This is what
+        // makes the trainer oracle replayable at the 600M-row rung (the
+        // per-row chain needed >55 GB of DuckDB temp and died on disk at
+        // sf100).
         s"""$es,
-        a0 AS MATERIALIZED (
-          SELECT f0, f1, f2, f3, y, 0 AS node, '' AS path,
-                 COUNT(*) AS w
-          FROM (SELECT $codes,
-                 CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS y
+        base AS MATERIALIZED (
+          SELECT f0, f1, f2, f3, y, COUNT(*) AS w
+          FROM (SELECT $codes, $y
           FROM lineitem, e0, e1, e2, e3)
           GROUP BY f0, f1, f2, f3, y)"""
       }
-    s"WITH $base,\n${(0 until params.maxDepth).map(levelSql(_, binned)).mkString(",\n")}"
+    s"WITH $base,\n      ${DecisionTree.oracleTrainCtes("base", "t", params)}"
   }
 
-  // DuckDB inlines non-materialized CTEs per reference; the level CTEs
-  // reference their winner table `b$l` 4+ times inside routing/path CASE
-  // expressions, so inlining recomputes the whole upstream trainer
-  // pipeline ~4^depth times (observed: tree_path_counts >6 min at sf0.01
-  // vs 1.7 s materialized — slow enough to time out the entire
-  // correctness gate). Every SELECT CTE in this family is therefore
-  // written `AS MATERIALIZED (` directly at construction (a post-hoc
-  // regex rewrite silently missed new shapes); WINDOW definitions and
-  // the tiny single-reference VALUES table stay plain.
-
-  private val leafSql =
-    """leaf AS MATERIALIZED (SELECT node,
-                       CASE WHEN SUM(y*w) > SUM(w) - SUM(y*w) THEN 1 ELSE 0 END AS pred
-                FROM a3 GROUP BY node)"""
+  /** Every split of the binned tree: `ft(ford, feature)` names the
+    * features and `sp(node, ford, thr)` unions the winner tables of all
+    * levels, each bucket code mapped back to its bucket's upper edge
+    * edges(code+1) (1-based e[code+2]), exactly `DecisionTree.fit`'s
+    * thresholdOf.
+    */
+  private val binnedSplitsSql: String = {
+    val winners = (0 until params.maxDepth)
+      .map(l => s"SELECT node, ford, thr FROM b${l}_t").mkString(" UNION ALL ")
+    val edge = (0 until feats.size)
+      .map(i => s"WHEN $i THEN e$i.e[CAST(b.thr AS INTEGER)+2]").mkString(" ")
+    val names = feats.zipWithIndex.map { case (f, i) => s"($i, '$f')" }.mkString(", ")
+    s"""ft(ford, feature) AS (VALUES $names),
+      sp AS MATERIALIZED (SELECT b.node, b.ford, CASE b.ford $edge END AS thr
+             FROM ($winners) b, e0, e1, e2, e3)"""
+  }
 
   private def confusionSql(binned: Boolean): String =
-    s"""${trainSql(binned)},
-      $leafSql
+    s"""${trainSql(binned)}
       SELECT CAST(a.y AS BIGINT) AS label, CAST(l.pred AS BIGINT) AS pred,
              CAST(SUM(a.w) AS BIGINT) AS n
-      FROM a3 a JOIN leaf l ON a.node = l.node
+      FROM $leafRows a JOIN leaf_t l ON a.node = l.node
       GROUP BY a.y, l.pred ORDER BY label, pred"""
 
   /** M8+M9 end-to-end: depth-3 exact-mode tree, evaluated via confusion
@@ -283,11 +191,8 @@ object TreeQueries extends QueryPack {
         .toDF("feature", "importance").orderBy("feature")
     },
     Some(s"""${trainSql(binned = true)},
-      sp AS MATERIALIZED (SELECT ford FROM b0 UNION ALL SELECT ford FROM b1
-             UNION ALL SELECT ford FROM b2),
+      $binnedSplitsSql,
       fc AS MATERIALIZED (SELECT ford, COUNT(*) AS c FROM sp GROUP BY ford),
-      ft(ford, feature) AS (VALUES (0, 'l_quantity'), (1, 'l_discount'),
-                                   (2, 'l_tax'), (3, 'l_extendedprice')),
       tot AS MATERIALIZED (SELECT GREATEST(CAST(COALESCE(SUM(c), 0) AS DOUBLE), 1.0) AS t
               FROM fc)
       SELECT f.feature AS feature, COALESCE(fc.c, 0) / tot.t AS importance
@@ -308,11 +213,11 @@ object TreeQueries extends QueryPack {
     },
     Some(s"""${trainSql(binned = true)},
       lp AS MATERIALIZED (SELECT node, SUM(y*w) / GREATEST(SUM(w), 1) AS p
-             FROM a3 GROUP BY node),
+             FROM $leafRows GROUP BY node),
       sg AS MATERIALIZED (SELECT round(lp.p, 6) AS score,
                     CAST(SUM(a.y*a.w) AS BIGINT) AS np,
                     CAST(SUM(a.w) - SUM(a.y*a.w) AS BIGINT) AS nn
-             FROM a3 a JOIN lp ON a.node = lp.node
+             FROM $leafRows a JOIN lp ON a.node = lp.node
              GROUP BY round(lp.p, 6)),
       cw AS MATERIALIZED (SELECT np, nn,
                     COALESCE(SUM(nn) OVER (ORDER BY score
@@ -323,7 +228,10 @@ object TreeQueries extends QueryPack {
 
   /** Per-sample decision paths (house_predict_model.ipynb cell 14) of the
     * binned tree, aggregated to (path, n); thresholds rendered %.6f in
-    * both engines.
+    * both engines. The oracle renders each leaf's path once from `sp`:
+    * heap ids encode the path, so split s lies k levels above leaf n when
+    * (n+1) >> k = s+1, and the path went left at s when (n+1) >> (k-1)
+    * is even.
     */
   val pathCounts: GraftQuery = GraftQuery(
     "tree_path_counts",
@@ -335,11 +243,24 @@ object TreeQueries extends QueryPack {
         .orderBy("path")
     },
     Some(s"""${trainSql(binned = true)},
-      $leafSql
-      SELECT (CASE WHEN a.path = '' THEN '(root)' ELSE a.path END)
-               || ' => label=' || CAST(l.pred AS VARCHAR) AS path,
+      $binnedSplitsSql,
+      lpath AS MATERIALIZED (
+        SELECT l.node, l.pred,
+               string_agg(s.feature
+                   || (CASE WHEN ((l.node + 1) >> (s.k - 1)) % 2 = 0
+                            THEN ' <= ' ELSE ' > ' END)
+                   || printf('%.6f', s.thr),
+                 ' AND ' ORDER BY s.node) AS path
+        FROM leaf_t l
+        LEFT JOIN (SELECT sp.*, ft.feature, r.k
+                   FROM sp JOIN ft ON ft.ford = sp.ford,
+                        range(1, ${params.maxDepth + 1}) r(k)) s
+          ON ((l.node + 1) >> s.k) = s.node + 1
+        GROUP BY l.node, l.pred)
+      SELECT COALESCE(p.path, '(root)')
+               || ' => label=' || CAST(p.pred AS VARCHAR) AS path,
              CAST(SUM(a.w) AS BIGINT) AS n
-      FROM a3 a JOIN leaf l ON a.node = l.node
+      FROM $leafRows a JOIN lpath p ON a.node = p.node
       GROUP BY 1 ORDER BY path"""))
 
   override def queries: Seq[GraftQuery] = Seq(

@@ -55,18 +55,23 @@ final case class TreeModel(
     root: TreeNode, features: Seq[String], labels: Seq[Long],
     params: TreeParams) {
 
-  /** Compile the tree to a nested `when` expression — codegen'd scalar
-    * inference, ~free at scan speed (reference predicts row-by-row in
-    * Python, house_predict.py:371-387). Nulls route right.
+  /** The tree compiled to one nested `when` expression: codegen'd scalar
+    * inference at scan speed (the reference predicts row by row in
+    * Python, house_predict.py:371-387). `leaf` gives a leaf's value from
+    * the leaf and the splits above it, innermost first, each paired with
+    * whether the row went left. Nulls route right.
     */
-  def predictExpr: Column = {
-    def go(n: TreeNode): Column = n match {
-      case TreeLeaf(l, _, _) => lit(l)
-      case TreeSplit(f, t, lft, rgt) =>
-        when(col(f) <= lit(t), go(lft)).otherwise(go(rgt))
+  private def whenChain(leaf: (TreeLeaf, List[(TreeSplit, Boolean)]) => Column): Column = {
+    def go(n: TreeNode, path: List[(TreeSplit, Boolean)]): Column = n match {
+      case l: TreeLeaf => leaf(l, path)
+      case s @ TreeSplit(f, t, lft, rgt) =>
+        when(col(f) <= lit(t), go(lft, (s, true) :: path))
+          .otherwise(go(rgt, (s, false) :: path))
     }
-    go(root)
+    go(root, Nil)
   }
+
+  def predictExpr: Column = whenChain((l, _) => lit(l.label))
 
   def transform(df: DataFrame, out: String = "prediction"): DataFrame =
     df.withColumn(out, predictExpr)
@@ -74,17 +79,10 @@ final case class TreeModel(
   /** Leaf class distribution as probabilities, aligned with `labels` —
     * richer than the reference's one-hot predict_proba
     * (house_predict.py:389-394; documented divergence, SURVEY §7.5).
-    * Same compiled when-chain shape as predictExpr: codegen'd, no UDF.
     */
-  def probaExpr: Column = {
-    def go(n: TreeNode): Column = n match {
-      case TreeLeaf(_, tot, counts) =>
-        val t = math.max(tot, 1L).toDouble
-        array(counts.map(c => lit(c / t)): _*)
-      case TreeSplit(f, t, lft, rgt) =>
-        when(col(f) <= lit(t), go(lft)).otherwise(go(rgt))
-    }
-    go(root)
+  def probaExpr: Column = whenChain { (l, _) =>
+    val t = math.max(l.n, 1L).toDouble
+    array(l.counts.map(c => lit(c / t)): _*)
   }
 
   /** Probability of a single class (e.g. the positive class, for ROC-AUC
@@ -93,33 +91,22 @@ final case class TreeModel(
   def probaOf(label: Long): Column = {
     val i = labels.indexOf(label)
     require(i >= 0, s"unknown label $label (labels: $labels)")
-    def go(n: TreeNode): Column = n match {
-      case TreeLeaf(_, tot, counts) =>
-        lit(counts(i) / math.max(tot, 1L).toDouble)
-      case TreeSplit(f, t, lft, rgt) =>
-        when(col(f) <= lit(t), go(lft)).otherwise(go(rgt))
-    }
-    go(root)
+    whenChain((l, _) => lit(l.counts(i) / math.max(l.n, 1L).toDouble))
   }
 
   /** Per-row decision path (house_predict_model.ipynb cell 14's per-sample
-    * path printout) — a compiled when-chain over path-string LITERALS, so
+    * path printout) — a when-chain over path-string LITERALS, so
     * inference stays codegen'd with zero per-row string building.
     *
     * `fmt` renders thresholds; the default is Scala's Double.toString.
     * Pass [[TreeModel.fmt6]] for fixed 6-decimal output that is
     * bit-reproducible from SQL `printf('%.6f', t)` (oracle parity).
     */
-  def pathExpr(fmt: Double => String = _.toString): Column = {
-    def go(n: TreeNode, path: List[String]): Column = n match {
-      case TreeLeaf(l, _, _) =>
-        lit((if (path.isEmpty) "(root)" else path.reverse.mkString(" AND "))
-          + s" => label=$l")
-      case TreeSplit(f, t, lft, rgt) =>
-        when(col(f) <= lit(t), go(lft, s"$f <= ${fmt(t)}" :: path))
-          .otherwise(go(rgt, s"$f > ${fmt(t)}" :: path))
+  def pathExpr(fmt: Double => String = _.toString): Column = whenChain { (l, path) =>
+    val steps = path.reverse.map { case (s, left) =>
+      s"${s.feature} ${if (left) "<=" else ">"} ${fmt(s.threshold)}"
     }
-    go(root, Nil)
+    lit((if (steps.isEmpty) "(root)" else steps.mkString(" AND ")) + s" => label=${l.label}")
   }
 
   /** Split-count importance, normalized (house_predict.py:396-418). */
@@ -391,7 +378,7 @@ object DecisionTree {
   /** Impurity of a class-count vector (the reference's vectorized
     * entropy/gini, house_predict.py:228-245). The operand order and the
     * `StrictMath` log are those of the same formula in Spark SQL, so the
-    * gains are bit-identical to it and to DuckDB's (TreeQueries.gainSql).
+    * gains are bit-identical to it and to DuckDB's ([[oracleGainSql]]).
     */
   private def impurity(criterion: String): (Array[Long], Long) => Double =
     criterion match {
@@ -716,4 +703,121 @@ object DecisionTree {
       }
     TreeModel(build(0), features, labels, params)
   }
+
+  // ---------------------------------------------------------------------
+  // DuckDB replay of `fit`: the CTE-list fragments every tree oracle
+  // composes after its own `WITH` and its base rows.
+  //
+  // DuckDB inlines a non-materialized CTE at each reference. A level
+  // reads its winner table `b<l>` several times inside the routing CASE,
+  // so inlining recomputes the whole upstream chain about 4^depth times
+  // (observed: tree_path_counts over 6 min at sf0.01 against 1.7 s
+  // materialized). Every SELECT CTE of the replay is therefore written
+  // `AS MATERIALIZED (` where it is built; a regex rewrite after the
+  // fact silently missed new shapes.
+  // ---------------------------------------------------------------------
+
+  /** Entropy gain of one binary split candidate from the cumulative
+    * class counts in scope (`ln`, `lc0`, `lc1` left of the threshold;
+    * `tn`, `tc0`, `tc1` over the node), in the operand order of
+    * [[impurity]] and the gain in [[candidates]], so both engines
+    * produce bit-identical doubles (`split_gains_discount` checks this).
+    */
+  val oracleGainSql: String =
+    """(-(CASE WHEN tc0 > 0 THEN (tc0/tn)*log2(tc0/tn) ELSE 0.0 END
+          + CASE WHEN tc1 > 0 THEN (tc1/tn)*log2(tc1/tn) ELSE 0.0 END))
+       - (ln/tn) * (-(CASE WHEN lc0 > 0 THEN (lc0/ln)*log2(lc0/ln) ELSE 0.0 END
+                      + CASE WHEN lc1 > 0 THEN (lc1/ln)*log2(lc1/ln) ELSE 0.0 END))
+       - ((tn-ln)/tn) * (-(CASE WHEN tc0-lc0 > 0 THEN ((tc0-lc0)/(tn-ln))*log2((tc0-lc0)/(tn-ln)) ELSE 0.0 END
+                           + CASE WHEN tc1-lc1 > 0 THEN ((tc1-lc1)/(tn-ln))*log2((tc1-lc1)/(tn-ln)) ELSE 0.0 END))"""
+
+  /** Row alias `row`'s value of the feature that winner alias `win` splits on. */
+  private def oracleSplitValue(row: String, win: String): String =
+    s"(CASE $win.ford WHEN 0 THEN $row.f0 WHEN 1 THEN $row.f1" +
+      s" WHEN 2 THEN $row.f2 ELSE $row.f3 END)"
+
+  /** [[fit]] of an entropy tree of depth >= 1 that searches every
+    * feature, on four features and a 0/1 label, given `src`: a FROM item
+    * of weighted rows `(f0, f1, f2, f3, y, w)` (w = 1 per row, or a
+    * count where the caller pre-aggregated). Appends `a0_<sfx>`, then
+    * per level l the searchable nodes (stopping rules,
+    * house_predict.py:325-334), the melted per-(node, feature, value)
+    * counts, their cumulative sums, the gain of every candidate past the
+    * lowest distinct value with `minSamplesLeaf` rows on each side, the
+    * winner table `b<l>_<sfx>(node, ford, thr)` (gain > 0, then gain
+    * desc, feature order, lowest threshold: the trainer's tie-breaks)
+    * and the routed rows `a<l+1>_<sfx>` (a row of a split node goes to
+    * 2·node+1 when its value is <= thr, else 2·node+2; other rows keep
+    * their node, so heap ids are unique and the last node is the leaf);
+    * then `leaf_<sfx>(node, pred)`, the majority label of each leaf
+    * (ties go to 0). Binned trees pass bucket codes as features.
+    */
+  def oracleTrainCtes(src: String, sfx: String, params: TreeParams): String = {
+    def level(l: Int): String = {
+      val (a, next) = (s"a${l}_$sfx", s"a${l + 1}_$sfx")
+      s"""sr${l}_$sfx AS MATERIALIZED (SELECT node FROM $a GROUP BY node
+               HAVING SUM(w) >= ${params.minSamplesSplit}
+                  AND SUM(y*w) > 0 AND SUM(w) - SUM(y*w) > 0),
+      aj${l}_$sfx AS MATERIALIZED (
+        SELECT a.* FROM $a a JOIN sr${l}_$sfx s ON a.node = s.node),
+      m${l}_$sfx AS MATERIALIZED (
+        SELECT node, 0 AS ford, f0 AS v, y, w FROM aj${l}_$sfx
+        UNION ALL SELECT node, 1, f1, y, w FROM aj${l}_$sfx
+        UNION ALL SELECT node, 2, f2, y, w FROM aj${l}_$sfx
+        UNION ALL SELECT node, 3, f3, y, w FROM aj${l}_$sfx),
+      g${l}_$sfx AS MATERIALIZED (SELECT node, ford, v,
+                     CAST(SUM(w) AS BIGINT) AS n,
+                     CAST(SUM(y*w) AS BIGINT) AS c1,
+                     CAST(SUM(w) - SUM(y*w) AS BIGINT) AS c0
+              FROM m${l}_$sfx GROUP BY node, ford, v),
+      c${l}_$sfx AS MATERIALIZED (SELECT node, ford, v,
+                     SUM(n)  OVER wc AS ln,  SUM(n)  OVER wa AS tn,
+                     SUM(c0) OVER wc AS lc0, SUM(c0) OVER wa AS tc0,
+                     SUM(c1) OVER wc AS lc1, SUM(c1) OVER wa AS tc1,
+                     MIN(v)  OVER wa AS vmin
+              FROM g${l}_$sfx
+              WINDOW wc AS (PARTITION BY node, ford ORDER BY v
+                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+                     wa AS (PARTITION BY node, ford)),
+      s${l}_$sfx AS MATERIALIZED (SELECT node, ford, v, $oracleGainSql AS gain
+              FROM c${l}_$sfx
+              WHERE v > vmin AND ln >= ${params.minSamplesLeaf}
+                AND tn - ln >= ${params.minSamplesLeaf}),
+      b${l}_$sfx AS MATERIALIZED (SELECT node, ford, v AS thr
+              FROM s${l}_$sfx WHERE gain > 0
+              QUALIFY row_number() OVER (PARTITION BY node
+                ORDER BY gain DESC, ford ASC, v ASC) = 1),
+      $next AS MATERIALIZED (
+        SELECT a.f0, a.f1, a.f2, a.f3, a.y, a.w,
+               CASE WHEN win.node IS NULL THEN a.node
+                    WHEN ${oracleSplitValue("a", "win")} <= win.thr THEN 2*a.node+1
+                    ELSE 2*a.node+2 END AS node
+        FROM $a a LEFT JOIN b${l}_$sfx win ON a.node = win.node)"""
+    }
+    s"""a0_$sfx AS MATERIALIZED (
+        SELECT f0, f1, f2, f3, y, w, 0 AS node FROM $src),
+      ${(0 until params.maxDepth).map(level).mkString(",\n      ")},
+      leaf_$sfx AS MATERIALIZED (SELECT node,
+               CASE WHEN SUM(y*w) > SUM(w) - SUM(y*w) THEN 1 ELSE 0 END AS pred
+              FROM a${params.maxDepth}_$sfx GROUP BY node)"""
+  }
+
+  /** Sends the rows of `src` (a FROM item with columns f0..f3) through
+    * the winner tables `b0_<sfx>..b<maxDepth-1>_<sfx>` of
+    * [[oracleTrainCtes]]. Appends `route_<sfx>`: every column of `src`
+    * plus `node_<sfx>`, the row's leaf, which joins `leaf_<sfx>`.
+    */
+  def oracleRouteCtes(src: String, sfx: String, params: TreeParams): String =
+    (0 until params.maxDepth).map { l =>
+      val name = if (l == params.maxDepth - 1) s"route_$sfx" else s"r${l + 1}_$sfx"
+      val (from, cols, at) =
+        if (l == 0) (src, "p.*", "0")
+        else (s"r${l}_$sfx", s"p.* EXCLUDE (node_$sfx)", s"p.node_$sfx")
+      s"""$name AS MATERIALIZED (
+        SELECT $cols,
+               CASE WHEN win.node IS NULL THEN $at
+                    WHEN ${oracleSplitValue("p", "win")} <= win.thr THEN 2*$at+1
+                    ELSE 2*$at+2 END AS node_$sfx
+        FROM $from p LEFT JOIN b${l}_$sfx win ON win.node = $at)"""
+    }.mkString(",\n      ")
 }

@@ -1,6 +1,7 @@
 package graft.tree
 
 import graft.SparkTestSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -184,5 +185,25 @@ class DecisionTreeSpec extends AnyFunSuite with SparkTestSession {
     val (jobs, m) = fitJobs(TreeParams(maxDepth = 3))
     assert(m.depth == 3)
     assert(jobs - aggregateJobs == 3)
+  }
+
+  test("the compiled expressions are the spelled-out when-chains over the tree") {
+    val m = TreeModel(
+      TreeSplit("x", 1.5, TreeLeaf(0L, 3, Seq(3L, 0L)),
+        TreeSplit("z", 2.0, TreeLeaf(1L, 2, Seq(0L, 2L)), TreeLeaf(0L, 4, Seq(3L, 1L)))),
+      Seq("x", "z"), Seq(0L, 1L), TreeParams())
+    val df = Seq((1.0, 2.0)).toDF("x", "z")
+    def resolved(c: Column) =
+      df.select(c.as("o")).queryExecution.analyzed.expressions.head.children.head
+    def chain(a: Column, b: Column, c: Column) =
+      when(col("x") <= lit(1.5), a).otherwise(when(col("z") <= lit(2.0), b).otherwise(c))
+    assert(resolved(m.predictExpr) == resolved(chain(lit(0L), lit(1L), lit(0L))))
+    assert(resolved(m.probaOf(1L)) == resolved(chain(lit(0.0), lit(1.0), lit(0.25))))
+    assert(resolved(m.probaExpr) == resolved(chain(
+      array(lit(1.0), lit(0.0)), array(lit(0.0), lit(1.0)), array(lit(0.75), lit(0.25)))))
+    assert(resolved(m.pathExpr(TreeModel.fmt6)) == resolved(chain(
+      lit("x <= 1.500000 => label=0"),
+      lit("x > 1.500000 AND z <= 2.000000 => label=1"),
+      lit("x > 1.500000 AND z > 2.000000 => label=0"))))
   }
 }
