@@ -57,7 +57,7 @@ object ChainGuard {
       val out = build.localCheckpoint()
       out.queryExecution.analyzed.collectFirst {
         case lr: LogicalRDD => lr.rdd.id
-      }.foreach(id => owners.put(id, spark))
+      }.foreach(owners.put(_, spark))
       out
     }
 

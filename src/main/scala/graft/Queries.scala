@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * A replay that several oracles share is defined once, next to the
   * operator it replays, as a CTE-list fragment the oracle composes after
-  * its own `WITH` (`PageRank.oracleCtes`, `Dedup.oracleMinhashCtes`,
-  * `Similarity.oracleBandedCtes`, `DecisionTree.oracleTrainCtes`, ...),
+  * its own `WITH` (`PageRank.oracleCtesWeighted`, `Dedup.oracleMinhashCtes`,
+  * `Dedup.oracleComponentsCtes`, `Similarity.oracleBandedCtes`,
+  * `DecisionTree.oracleTrainCtes`, ...),
   * so a fix to a replay lands in one place.
   *
   * Harness contract: runners (Bench, Verify, tests) call

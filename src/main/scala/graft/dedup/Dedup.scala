@@ -21,19 +21,30 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Seeded 60-bit cross-engine hash: first 15 hex chars of a seeded md5,
-    * parsed base-16. Bit-identical to DuckDB
-    * `CAST(concat('0x', substring(md5(s || '|' || seed), 1, 15)) AS BIGINT)`,
+  /** Unseeded 60-bit cross-engine hash: the first 15 hex chars of
+    * md5(c), parsed base-16. Bit-identical to DuckDB [[oracleMd5Bits60]];
+    * the seeded, mod-P31 and HLL hashes below are all this one.
+    */
+  def md5Bits60(c: Column): Column =
+    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** The DuckDB twin of [[md5Bits60]] over the VARCHAR expression `s`
+    * (`||`, not `concat`, so that a NULL input gives NULL, as in Spark:
+    * `concat` skips NULLs and the cast of a bare '0x' fails).
+    */
+  def oracleMd5Bits60(s: String): String =
+    s"CAST('0x' || substring(md5($s), 1, 15) AS BIGINT)"
+
+  /** Seeded 60-bit cross-engine hash: [[md5Bits60]] of `c || '|' || seed`,
     * which makes MinHash/SimHash pipelines fully DuckDB-oracle-checkable.
     * ~3x the CPU of xxhash64 — still a per-token projection that scales.
     */
   val md5Hash60: (Column, Int) => Column = (c, seed) =>
-    conv(substring(md5(concat(c, lit("|" + seed))), 1, 15), 16, 10)
-      .cast("long")
+    md5Bits60(concat(c, lit("|" + seed)))
 
   /** The DuckDB twin of [[md5Hash60]] over the VARCHAR expression `s`. */
   def oracleMd5Hash60(s: String, seed: Int): String =
-    s"CAST(concat('0x', substring(md5($s || '|$seed'), 1, 15)) AS BIGINT)"
+    oracleMd5Bits60(s"$s || '|$seed'")
 
   /** Modulus for the universal-hash permutation family: the Mersenne
     * prime 2^31-1. Keeps a*(h mod p)+b under 2^62, so the arithmetic is
@@ -50,12 +61,13 @@ object Dedup {
     (a, b)
   }
 
-  /** Unseeded 60-bit md5 base hash reduced mod P31 — ONE md5 per input;
-    * the permutations above fan it out arithmetically. Cross-engine:
-    * DuckDB `CAST(concat('0x', substring(md5(s),1,15)) AS BIGINT) % P31`.
+  /** [[md5Bits60]] reduced mod P31 — ONE md5 per input; the permutations
+    * above fan it out arithmetically. DuckDB twin: [[oracleMd5Base]].
     */
-  def md5Base(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long") % P31
+  def md5Base(c: Column): Column = md5Bits60(c) % P31
+
+  /** The DuckDB twin of [[md5Base]] over the VARCHAR expression `s`. */
+  def oracleMd5Base(s: String): String = s"${oracleMd5Bits60(s)} % $P31"
 
   /** Exact duplicate groups by an arbitrary key expression: group size and
     * kept (minimum) id per group with >1 member.
@@ -494,13 +506,22 @@ object Dedup {
   // selects documents ("" or " WHERE <predicate>"); `pair` is a predicate
   // over the two join sides `a` and `b` (e.g. "a.id < b.id").
 
+  /** The DuckDB twin of the positions `sequence(1, greatest(len - k + 1,
+    * 0))` the shingle kernels take over `text` ([[graft.expressions.Shingles]]):
+    * when the text has fewer than k chars the series descends to [1, 0],
+    * and `substr` at either position is the whole text ('' included) —
+    * one shingle of a short text, two occurrences of it. A NULL text has
+    * no positions.
+    */
+  def oracleShinglePositions(k: Int): String =
+    s"generate_series(1, greatest(length(text) - ${k - 1}, 0), if(length(text) < $k, -1, 1))"
+
   /** `sh(id, sh)`: the distinct character 3-shingles of the documents
     * `where` selects ([[shingleSet]] with k = 3).
     */
   def oracleShingleCtes(where: String): String = s"""sh AS MATERIALIZED (
         SELECT DISTINCT doc_id AS id, substr(text, CAST(i AS INTEGER), 3) AS sh
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
+        FROM (SELECT doc_id, text, unnest(${oracleShinglePositions(3)}) AS i
               FROM documents$where))"""
 
   /** Given `sh`: `jac(id_a, id_b, jaccard)`, the r6 exact Jaccard of each
@@ -519,61 +540,103 @@ object Dedup {
         JOIN sz sa ON sa.id = id_a
         JOIN sz sb ON sb.id = id_b)"""
 
-  /** `sh` plus `mh(id, p, m)`: the 32-permutation MinHash signatures of
-    * the documents `where` selects, one row per (doc, permutation) —
-    * [[minhashSigsPerRow]] with k = 3 and 32 hashes, in the explode form
-    * (one md5 base hash per shingle, crossed with the permutations).
+  /** `sh` plus `mh(id, sig)` and `bk(id, band, bucket)`: the 32-long
+    * MinHash signature list of each document `where` selects
+    * ([[minhashSigsPerRow]] with k = 3: one [[md5Base]] per distinct
+    * shingle, then each permutation's min over the document's hash list),
+    * and its 4 bands of 8 as bucket strings — the `banded` keys of
+    * [[lshCandidates]], [[lshBucketStarEdges]] and [[lshBucketHitIds]].
+    * The hash list keeps every CTE at the distinct-shingle row count:
+    * crossing each shingle with the 32 permutations as rows ran DuckDB
+    * out of temp disk on the sf100 10% slice.
     */
   def oracleMinhashCtes(where: String): String = {
-    val perms = permConstants(32).zipWithIndex
-      .map { case ((a, b), i) => s"($i, $a, $b)" }.mkString(", ")
+    val mins = permConstants(32).map { case (a, b) =>
+      s"list_min(list_transform(hs, x -> ($a * x + $b) % $P31))"
+    }.mkString(",\n                ")
     s"""${oracleShingleCtes(where)},
-      base AS (
-        SELECT id,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT)
-                 % $P31 AS h
-        FROM sh),
-      perms(p, a, b) AS (VALUES $perms),
       mh AS MATERIALIZED (
-        SELECT id, p, MIN((a * h + b) % $P31) AS m
-        FROM base CROSS JOIN perms
-        GROUP BY id, p)"""
+        SELECT id,
+               [$mins] AS sig
+        FROM (SELECT id, list(${oracleMd5Base("sh")}) AS hs
+              FROM sh GROUP BY id)),
+      bk AS (
+        SELECT id, band,
+               array_to_string(list_slice(sig, band * 8 + 1, band * 8 + 8), ',')
+                 AS bucket
+        FROM mh CROSS JOIN range(0, 4) r(band))"""
   }
 
-  /** Given `mh`: `bk(id, band, bucket)` (4 bands of 8 rows), the pairs
-    * sharing a bucket that `pair` admits as `cand(id_a, id_b)`, and
-    * `est(id_a, id_b, est_jaccard)` — [[lshCandidates]] (pair
-    * "a.id < b.id") and [[lshCandidatesAcross]] with 4 bands.
+  /** The number of equal positions of two 32-long signature lists. */
+  def oracleSigMatches(a: String, b: String): String =
+    s"len(list_filter(range(1, 33), i -> $a[i] = $b[i]))"
+
+  /** Given `mh` and `bk`: the pairs sharing a bucket that `pair` admits
+    * as `cand(id_a, id_b)`, and `est(id_a, id_b, est_jaccard)` —
+    * [[lshCandidates]] (pair "a.id < b.id") and [[lshCandidatesAcross]]
+    * with 4 bands.
     */
-  def oracleLshCtes(pair: String): String = s"""bk AS MATERIALIZED (
-        SELECT id, p // 8 AS band,
-               string_agg(CAST(m AS VARCHAR), ',' ORDER BY p) AS bucket
-        FROM mh GROUP BY id, p // 8),
-      cand AS (
+  def oracleLshCtes(pair: String): String = s"""cand AS (
         SELECT DISTINCT a.id AS id_a, b.id AS id_b
         FROM bk a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
                                AND $pair),
       est AS (
         SELECT c.id_a, c.id_b,
-               round(SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) / 32.0, 6)
+               round(${oracleSigMatches("ma.sig", "mb.sig")} / 32.0, 6)
                  AS est_jaccard
         FROM cand c
         JOIN mh ma ON ma.id = c.id_a
-        JOIN mh mb ON mb.id = c.id_b AND mb.p = ma.p
-        GROUP BY c.id_a, c.id_b)"""
+        JOIN mh mb ON mb.id = c.id_b)"""
 
-  /** Given `edges(id_a, id_b)`: `sym(s, d)` and `comp(id, component)`,
-    * the labels [[connectedComponents]] converges to, as a transitive
-    * closure (needs `WITH RECURSIVE`; its rows grow with the square of
-    * a component's size, so it suits small graphs only).
+  /** Given `bk`: `edges(id_a, id_b)`, the hub star of every bucket
+    * ([[lshBucketStarEdges]]).
     */
-  val oracleComponentsCtes: String = """sym AS (SELECT id_a AS s, id_b AS d FROM edges
-              UNION SELECT id_b, id_a FROM edges),
-      reach(id, r) AS (
-        SELECT DISTINCT s, s FROM sym
-        UNION
-        SELECT sym.d, reach.r FROM reach JOIN sym ON sym.s = reach.id),
-      comp AS (SELECT id, MIN(r) AS component FROM reach GROUP BY id)"""
+  val oracleBucketStarCtes: String = """edges AS (
+        SELECT DISTINCT id_a, id_b
+        FROM (SELECT MIN(id) OVER (PARTITION BY band, bucket) AS id_a,
+                     id AS id_b
+              FROM bk)
+        WHERE id_a <> id_b)"""
+
+  /** Given `edges(id_a, id_b)`: `comp(id, component)`, the labels
+    * [[connectedComponents]] converges to. `sym` is the symmetrised edge
+    * set plus a self-loop per vertex and `l0` labels each vertex with
+    * itself; round `l<k>` gives each vertex the min label over `sym`, i.e.
+    * of its own and its neighbours' labels — the Spark rounds' step, one
+    * O(edges) join each — to a fixed depth of 20. The depth is
+    * guarded: one extra round must change no label, else the oracle
+    * raises an error rather than report an unconverged labelling
+    * (comparing the output round with the one before it would misfire on
+    * a graph that converges exactly at the last round). Rounds that
+    * change a label, measured at sf0.01: 6 for the LSH verified-pair
+    * graph, 9 for the bucket-star graph and 1 for the SimHash graph (the
+    * Spark loop runs one more, which changes nothing); the sf100 10%
+    * bucket-star slice needed 16.
+    */
+  val oracleComponentsCtes: String = {
+    val depth = 20
+    val rounds = (1 to depth + 1).map { k =>
+      s"""l$k AS MATERIALIZED (
+        SELECT e.d AS id, MIN(p.lbl) AS lbl
+        FROM sym e JOIN l${k - 1} p ON p.id = e.s
+        GROUP BY e.d)"""
+    }.mkString(",\n      ")
+    s"""sym AS MATERIALIZED (
+        SELECT id_a AS s, id_b AS d FROM edges
+        UNION SELECT id_b, id_a FROM edges
+        UNION SELECT id_a, id_a FROM edges
+        UNION SELECT id_b, id_b FROM edges),
+      l0 AS MATERIALIZED (SELECT DISTINCT s AS id, s AS lbl FROM sym),
+      $rounds,
+      comp AS (
+        SELECT id,
+               CASE WHEN (SELECT COUNT(*)
+                          FROM l${depth + 1} a JOIN l$depth b USING (id)
+                          WHERE a.lbl <> b.lbl) > 0
+                    THEN error('components oracle unconverged at depth $depth')
+                    ELSE lbl END AS component
+        FROM l$depth)"""
+  }
 
   /** `fp(id, simhash)`: the [[simhash]] fingerprint of every document. */
   val oracleSimhashCtes: String = {

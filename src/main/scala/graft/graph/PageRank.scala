@@ -28,8 +28,12 @@ object PageRank {
   /** One million micro-units = rank 1.0 (the per-node initial mass). */
   val Micro: Long = 1000000L
 
-  /** @param edges    directed edges; self-loops and duplicates are
-    *                 removed here so callers can pass raw pair frames
+  /** Unweighted PageRank: [[pageRankMicroWeighted]] over the distinct
+    * `(src, dst)` pairs with unit weights, where `(r * 1) div W_src` is
+    * `r div out_degree`.
+    *
+    * @param edges    directed edges; self-loops and duplicates are
+    *                 removed, so callers can pass raw pair frames
     * @param src,dst  edge endpoint columns (any integral type)
     * @param iters    fixed iteration count (unrolled by the oracle)
     * @param dampingPct damping factor as an integer percent (85 = 0.85)
@@ -37,38 +41,11 @@ object PageRank {
     */
   def pageRankMicro(
       edges: DataFrame, src: String, dst: String,
-      iters: Int, dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges
-      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint() // consumed every iteration (deg + contributions)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint()
-    // out-degree folded onto the edges once; reused all rounds
-    val eDeg = e
-      .join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .localCheckpoint()
-    val base = (100L - dampingPct) * Micro / 100L
-    var rank = nodes.select(col("id"), lit(Micro).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = eDeg
-        .join(rank, eDeg("src") === rank("id"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      rank = nodes
-        .join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          expr(s"$base + ($dampingPct * coalesce(s, cast(0 as bigint))) div 100")
-            .cast("long").as("r"))
-        .localCheckpoint()
-    }
-    rank.select(col("id"), col("r").as("rank_micro"))
-  }
+      iters: Int, dampingPct: Int = 85): DataFrame =
+    pageRankMicroWeighted(
+      edges.select(col(src).as("src"), col(dst).as("dst")).distinct()
+        .withColumn("w", lit(1L)),
+      "src", "dst", "w", iters, dampingPct)
 
   /** Weighted PageRank, same integer micro-unit contract: each source
     * splits its rank over out-edges proportionally to integer edge
@@ -112,8 +89,11 @@ object PageRank {
     rank.select(col("id"), col("r").as("rank_micro"))
   }
 
-  /** The weighted twin of `oracleCtes`: expects `e(src, dst, w)` already
-    * weight-collapsed (one row per directed pair, w > 0).
+  /** The DuckDB-replayable CTE chain for [[pageRankMicroWeighted]], given
+    * a CTE `e(src, dst, w)` already in scope: weight-collapsed, one row
+    * per directed pair, w > 0, no self-loops ([[pageRankMicro]]'s edges
+    * with `1 AS w`). Appends `nodes`, `deg`, and `r0..r{iters}`; the
+    * caller selects from `r{iters}(id, r)`.
     */
   def oracleCtesWeighted(iters: Int, dampingPct: Int = 85): String = {
     val base = (100L - dampingPct) * Micro / 100L
@@ -124,30 +104,6 @@ object PageRank {
     val steps = (1 to iters).map { i =>
       s"""r$i AS (SELECT n.id,
             CAST($base + ($dampingPct * COALESCE(SUM((r${i - 1}.r * e.w) // d.tw), 0)) // 100
-                 AS BIGINT) AS r
-          FROM nodes n
-          LEFT JOIN e ON e.dst = n.id
-          LEFT JOIN deg d ON d.src = e.src
-          LEFT JOIN r${i - 1} ON r${i - 1}.id = e.src
-          GROUP BY n.id)"""
-    }
-    (head +: steps).mkString(",\n      ")
-  }
-
-  /** The DuckDB-replayable CTE chain for `pageRankMicro`, given CTEs
-    * `e(src, dst)` (deduped, no self-loops) already in scope. Appends
-    * `nodes`, `deg`, and `r0..r{iters}`; the caller selects from
-    * `r{iters}(id, r)`.
-    */
-  def oracleCtes(iters: Int, dampingPct: Int = 85): String = {
-    val base = (100L - dampingPct) * Micro / 100L
-    val head =
-      s"""nodes AS MATERIALIZED (SELECT src AS id FROM e UNION SELECT dst FROM e),
-      deg AS MATERIALIZED (SELECT src, COUNT(*) AS deg FROM e GROUP BY src),
-      r0 AS (SELECT id, CAST($Micro AS BIGINT) AS r FROM nodes)"""
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS (SELECT n.id,
-            CAST($base + ($dampingPct * COALESCE(SUM(r${i - 1}.r // d.deg), 0)) // 100
                  AS BIGINT) AS r
           FROM nodes n
           LEFT JOIN e ON e.dst = n.id

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.dedup.Dedup
 import graft.{GraftQuery, Q, QueryPack, Tables}
 import graft.split.Splits
 import graft.text.{Pii, TextOps}
@@ -75,11 +76,10 @@ object CurationQueries extends QueryPack {
       .shardAssign(
         Tables(s, dir, "documents").select("doc_id"), "doc_id", 64)
       .orderBy("doc_id"),
-    Some("""
+    Some(s"""
       WITH h AS (
         SELECT doc_id,
-               CAST(concat('0x', substring(
-                 md5(CAST(doc_id AS VARCHAR) || '|7'), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)}
                  AS hv
         FROM documents)
       SELECT doc_id, hv % 64 AS shard,
@@ -105,13 +105,11 @@ object CurationQueries extends QueryPack {
         .select(col("lang"), col("rk"), col("doc_id"), col("n_chars"))
         .orderBy("lang", "rk")
     },
-    Some("""
+    Some(s"""
       SELECT lang, rk, doc_id, n_chars
       FROM (SELECT lang, doc_id, n_chars,
                    row_number() OVER (PARTITION BY lang
-                     ORDER BY CAST(concat('0x', substring(
-                         md5(CAST(doc_id AS VARCHAR) || '|7'), 1, 15))
-                       AS BIGINT),
+                     ORDER BY ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)},
                        doc_id) AS rk
             FROM documents)
       WHERE rk <= 3 ORDER BY lang, rk"""))
@@ -157,7 +155,7 @@ object CurationQueries extends QueryPack {
       k AS (
         SELECT lang, COUNT(*) AS n_kept, CAST(SUM(nt) AS BIGINT) AS kept_tokens
         FROM b
-        WHERE ${graft.dedup.Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)} % 1000000
+        WHERE ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)} % 1000000
               < CAST(round(q * 1000000) AS BIGINT)
         GROUP BY lang),
       t AS (SELECT lang, COUNT(*) AS n_total FROM b GROUP BY lang)
@@ -375,7 +373,7 @@ object CurationQueries extends QueryPack {
           sum(graft.dedup.Dedup.md5Base(col("text"))).as("text_checksum"))
         .orderBy("shard")
     },
-    Some("""
+    Some(raw"""
       WITH c AS (
         SELECT doc_id,
                trim(regexp_replace(regexp_replace(regexp_replace(
@@ -404,14 +402,12 @@ object CurationQueries extends QueryPack {
       k AS (SELECT doc_id, text FROM d WHERE rn = 1),
       sh AS (
         SELECT text,
-               CAST(concat('0x', substring(
-                 md5(CAST(doc_id AS VARCHAR) || '|7'), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)}
                  % 16 AS shard
         FROM k)
       SELECT shard, COUNT(*) AS n_docs,
              CAST(SUM(length(text)) AS BIGINT) AS sum_chars,
-             CAST(SUM(CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT)
-                      % 2147483647) AS BIGINT) AS text_checksum
+             CAST(SUM(${Dedup.oracleMd5Base("text")}) AS BIGINT) AS text_checksum
       FROM sh GROUP BY shard ORDER BY shard"""))
 
   /** Data-budget curve: rank documents by (rounded) quality descending
@@ -546,14 +542,12 @@ object CurationQueries extends QueryPack {
         .select("vec_id", "label")
         .orderBy("vec_id")
     },
-    Some("""
+    Some(s"""
       WITH c AS (SELECT label, COUNT(*) AS n FROM embeddings GROUP BY label),
       m AS (SELECT MIN(n) AS m FROM c),
       r AS (SELECT vec_id, label,
                    row_number() OVER (PARTITION BY label ORDER BY
-                     CAST(concat('0x', substring(
-                       md5(CAST(vec_id AS VARCHAR) || '|0'), 1, 15))
-                       AS BIGINT), vec_id) AS rk
+                     ${Dedup.oracleMd5Hash60("CAST(vec_id AS VARCHAR)", 0)}, vec_id) AS rk
             FROM embeddings)
       SELECT vec_id, label FROM r, m WHERE rk <= m.m
       ORDER BY vec_id"""))
@@ -637,12 +631,10 @@ object CurationQueries extends QueryPack {
     },
     Some(s"""
       WITH ha AS (
-        SELECT CAST(concat('0x', substring(
-                 md5(CAST(o_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        SELECT ${Dedup.oracleMd5Bits60("CAST(o_custkey AS VARCHAR)")} AS h
         FROM orders),
       hb AS (
-        SELECT CAST(concat('0x', substring(
-                 md5(CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+        SELECT ${Dedup.oracleMd5Bits60("CAST(c_custkey AS VARCHAR)")} AS h
         FROM customer),
       r AS (
         SELECT 'orders' AS side, h % 256 AS reg,
@@ -742,16 +734,12 @@ object CurationQueries extends QueryPack {
             .as("est_intersection"),
           col("exact_common"))
     },
-    Some("""
+    Some(s"""
       WITH ka AS (
-        SELECT DISTINCT CAST(concat('0x', substring(
-                 md5(CAST(o_custkey AS VARCHAR) || '|0'), 1, 15))
-                 AS BIGINT) AS h
+        SELECT DISTINCT ${Dedup.oracleMd5Hash60("CAST(o_custkey AS VARCHAR)", 0)} AS h
         FROM orders),
       kb AS (
-        SELECT DISTINCT CAST(concat('0x', substring(
-                 md5(CAST(c_custkey AS VARCHAR) || '|0'), 1, 15))
-                 AS BIGINT) AS h
+        SELECT DISTINCT ${Dedup.oracleMd5Hash60("CAST(c_custkey AS VARCHAR)", 0)} AS h
         FROM customer),
       sa AS (SELECT h FROM ka ORDER BY h LIMIT 256),
       sb AS (SELECT h FROM kb ORDER BY h LIMIT 256),
@@ -822,8 +810,7 @@ object CurationQueries extends QueryPack {
       WITH r AS (
         SELECT source, n_chars,
                row_number() OVER (PARTITION BY source
-                 ORDER BY CAST(concat('0x', substring(
-                     md5(CAST(doc_id AS VARCHAR) || '|11'), 1, 15)) AS BIGINT),
+                 ORDER BY ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 11)},
                    doc_id) AS rk
         FROM documents)
       SELECT source, COUNT(*) AS n_docs,
@@ -853,7 +840,7 @@ object CurationQueries extends QueryPack {
         FROM documents$where),
       g AS MATERIALIZED (
         SELECT doc_id, lang, source,
-               ${graft.dedup.Dedup.oracleMd5Hash60("gram", graft.text.Dsir.HashSeed)}
+               ${Dedup.oracleMd5Hash60("gram", graft.text.Dsir.HashSeed)}
                  % ${graft.text.Dsir.Buckets} AS bucket
         FROM (
           SELECT doc_id, lang, source, arr[i] AS gram
@@ -927,9 +914,7 @@ object CurationQueries extends QueryPack {
                       ELSE -CAST(floor(-gk * 1e6 + 0.5) AS BIGINT) END
                AS key_micro
       FROM (SELECT doc_id, lang, weight_micro,
-                   -ln(-ln((CAST(concat('0x', substring(
-                       md5(CAST(doc_id AS VARCHAR) || '|${graft.text.Dsir.GumbelSeed}'),
-                       1, 15)) AS BIGINT) + 0.5) / 1152921504606846976.0)) AS gk
+                   -ln(-ln((${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", graft.text.Dsir.GumbelSeed)} + 0.5) / 1152921504606846976.0)) AS gk
             FROM w)
       ORDER BY key_micro DESC, doc_id LIMIT 100"""))
 
@@ -984,9 +969,8 @@ object CurationQueries extends QueryPack {
        |  FROM documents$where),
        |g AS MATERIALIZED (
        |  SELECT doc_id, lang,
-       |         CAST(concat('0x', substring(
-       |             md5(gram || '|${graft.text.Dsir.HashSeed}'), 1, 15))
-       |           AS BIGINT) % ${graft.text.Dsir.Buckets} AS bucket
+       |         ${Dedup.oracleMd5Hash60("gram", graft.text.Dsir.HashSeed)}
+       |           % ${graft.text.Dsir.Buckets} AS bucket
        |  FROM (
        |    SELECT doc_id, lang, arr[i] AS gram
        |    FROM (SELECT doc_id, lang, arr,

@@ -250,11 +250,11 @@ object DocQueries extends QueryPack {
         .groupBy("id", "tok").agg(count(lit(1)).as("tf"))
       graft.text.TermCosine.cosineTopK(post, dfCap = 25, k = 15)
     },
-    Some("""
+    Some(s"""
       WITH sh AS (
         SELECT doc_id AS id, substr(text, CAST(i AS INTEGER), 4) AS tok
         FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 3)) AS i
+                     unnest(${Dedup.oracleShinglePositions(4)}) AS i
               FROM documents WHERE doc_id < 500)),
       p AS (SELECT id, tok, COUNT(*) AS tf FROM sh GROUP BY 1, 2),
       n AS (SELECT id, SUM(tf * tf) AS n2 FROM p GROUP BY 1),
@@ -428,9 +428,7 @@ object DocQueries extends QueryPack {
   private def lshEdges(s: SparkSession, dir: String): DataFrame =
     frame(s, s"lsh_edges $dir") { lshPairs(corpusSigs(s, dir)) }
 
-  /** Oracle of [[lshEdges]] and [[lshComponents]]: `edges` and `comp`
-    * (needs `WITH RECURSIVE`).
-    */
+  /** Oracle of [[lshEdges]] and [[lshComponents]]: `edges` and `comp`. */
   private def lshComponentsSql: String = s"""${Dedup.oracleMinhashCtes("")},
       ${Dedup.oracleLshCtes("a.id < b.id")},
       edges AS (SELECT id_a, id_b FROM est WHERE est_jaccard >= 0.5),
@@ -584,13 +582,12 @@ object DocQueries extends QueryPack {
       WITH ${Dedup.oracleMinhashCtes(" WHERE doc_id < 2000")},
       ${Dedup.oracleJaccardCtes("b.id = a.id + 1")},
       mt AS (
-        SELECT e.id_a, e.jaccard,
-               CAST(SUM(CASE WHEN ma.m = mb.m THEN 1 ELSE 0 END) AS BIGINT)
+        SELECT e.jaccard,
+               CAST(${Dedup.oracleSigMatches("ma.sig", "mb.sig")} AS BIGINT)
                  AS matches
         FROM jac e
         JOIN mh ma ON ma.id = e.id_a
-        JOIN mh mb ON mb.id = e.id_b AND mb.p = ma.p
-        GROUP BY e.id_a, e.id_b, e.jaccard)
+        JOIN mh mb ON mb.id = e.id_b)
       SELECT matches, round(matches / 32.0, 6) AS est_jaccard,
              COUNT(*) AS n_pairs,
              CAST(SUM(CASE WHEN abs(matches / 32.0 - jaccard) <= 0.125
@@ -603,8 +600,8 @@ object DocQueries extends QueryPack {
     * (est_jaccard >= 0.5) as edges, connected components by min-label
     * propagation, one row per clustered doc with its canonical (minimum)
     * id — i.e. the actual keep/drop decision a dedup pipeline ships. The
-    * oracle replays the whole pipeline in DuckDB, with the component step
-    * as a recursive transitive-closure CTE.
+    * oracle replays the whole pipeline in DuckDB
+    * ([[Dedup.oracleComponentsCtes]] for the component step).
     */
   val dedupClusters: GraftQuery = GraftQuery(
     "dedup_clusters_lsh",
@@ -612,7 +609,7 @@ object DocQueries extends QueryPack {
       .select(col("id"), col("comp").as("component"))
       .orderBy("id"),
     Some(s"""
-      WITH RECURSIVE $lshComponentsSql
+      WITH $lshComponentsSql
       SELECT id, component FROM comp ORDER BY id"""))
 
   /** SCALE-MODE near-dup components: star-reduced bucket-connectivity
@@ -634,20 +631,16 @@ object DocQueries extends QueryPack {
   /** Truth-slice twin of `dedup_components_bucket` for sf100
     * value-level evidence: the full oracle disk-killed DuckDB at 373 s /
     * 57 GB (r10 bound), so this runs the SAME star-edge CC operator over
-    * the deterministic `doc_id % 100 = 7` hundredth of the corpus.
-    * (History: the slice was pinned at 1% in r12 because the oracle's
-    * then-quadratic transitive-closure CTE OOMed DuckDB on the sliced
-    * giant near-dup component at 10%; the closure is now the iterative
-    * [[ccRoundSql]] propagation and `dedup_components_slice10` carries
-    * the wider gate.) (At sf0.001/0.01 the slice keeps only ~5
-    * docs — the FULL twin `dedup_components_bucket` is the small-sf
-    * gate; this query exists for sf100.) The
-    * semantics are INDUCED-SUBGRAPH components — both engines bucket,
-    * star-reduce, and propagate over the identical sliced corpus — NOT
-    * the restriction of the full-corpus components (a cross-slice
-    * near-dup edge is dropped on both sides by construction, so two
-    * sliced docs joined only through an unsliced doc land in different
-    * components than a full run would put them). That restriction
+    * the deterministic `doc_id % 100 = 7` hundredth of the corpus
+    * (`dedup_components_slice10` carries the wider gate). At
+    * sf0.001/0.01 the slice keeps only ~5 docs — the FULL twin
+    * `dedup_components_bucket` is the small-sf gate; this query exists
+    * for sf100. The semantics are INDUCED-SUBGRAPH components — both
+    * engines bucket, star-reduce, and propagate over the identical
+    * sliced corpus — NOT the restriction of the full-corpus components
+    * (a cross-slice near-dup edge is dropped on both sides by
+    * construction, so two sliced docs joined only through an unsliced
+    * doc land in different components than a full run would put them). That restriction
     * cannot be sliced soundly; what this gate pins is the operator
     * itself — hashing, banding, bucket-star reduction, min-label
     * propagation — at sf100 data characteristics.
@@ -655,16 +648,14 @@ object DocQueries extends QueryPack {
   val dedupComponentsSlice: GraftQuery = bucketCcQuery(
     "dedup_components_slice", "bucket_star_edges_slice", "doc_id % 100 = 7")
 
-  /** 10% truth slice of the bucket-CC operator (VERDICT r12 task 4):
-    * viable now that the oracle's transitive-closure CTE — which
-    * materialized component-size^2 pairs and OOMed DuckDB on the sf100
-    * giant component at the 10% slice — is rewritten as the same
-    * fixed-depth iterative min-label propagation the Spark side runs
-    * ([[ccRoundSql]]; per-round cost is O(edges), edge volume is
-    * bounded by bands x sliced corpus). Same induced-subgraph
-    * semantics argument as `dedup_components_slice`; 10x the sliced
-    * duplicate mass makes the sf100 gate an order of magnitude more
-    * representative of the real corpus structure.
+  /** 10% truth slice of the bucket-CC operator (VERDICT r12 task 4): the
+    * full-corpus replay is out of DuckDB's reach at sf100, and the 10%
+    * slice is within it ([[Dedup.oracleComponentsCtes]] costs O(edges)
+    * per round, and edge volume is bounded by bands x sliced corpus).
+    * Same induced-subgraph semantics argument as
+    * `dedup_components_slice`; 10x the sliced duplicate mass makes the
+    * sf100 gate an order of magnitude more representative of the real
+    * corpus structure.
     */
   val dedupComponentsSlice10: GraftQuery = bucketCcQuery(
     "dedup_components_slice10", "bucket_star_edges_slice10",
@@ -679,6 +670,12 @@ object DocQueries extends QueryPack {
 
   private def sliceWhere(pred: String): String =
     if (pred.isEmpty) "" else s" WHERE $pred"
+
+  /** Oracle of [[bucketCcLabels]]: `edges` and `comp`. */
+  private def bucketComponentsSql(pred: String): String =
+    s"""${Dedup.oracleMinhashCtes(sliceWhere(pred))},
+      ${Dedup.oracleBucketStarCtes},
+      ${Dedup.oracleComponentsCtes}"""
 
   /** Memoized bucket-CC labels (id, comp) for a doc subset: star edges
     * (memoized under `memoKey`) then min-label propagation, memoized one
@@ -705,7 +702,7 @@ object DocQueries extends QueryPack {
       .select(col("id"), col("comp").as("component"))
       .orderBy("id"),
     Some(s"""
-      ${bucketCcPrefixSql(sliceWhere(pred))}
+      WITH ${bucketComponentsSql(pred)}
       SELECT id, component FROM comp ORDER BY id"""))
 
   /** Clustered docs with their component and length:
@@ -747,7 +744,7 @@ object DocQueries extends QueryPack {
     (s, dir) => dropFlags(members(
       bucketCcLabels(s, dir, memoKey, pred), sliceDocs(s, dir, pred))),
     Some(s"""
-      ${bucketCcPrefixSql(sliceWhere(pred))},
+      WITH ${bucketComponentsSql(pred)},
       $dropFlagsSql"""))
 
   /** Keep-best over the memoized bucket-CC components: one row per
@@ -770,7 +767,7 @@ object DocQueries extends QueryPack {
         .orderBy("component")
     },
     Some(s"""
-      ${bucketCcPrefixSql(sliceWhere(pred))},
+      WITH ${bucketComponentsSql(pred)},
       $membersSql,
       k AS (SELECT component, id, n_chars,
                    row_number() OVER (PARTITION BY component
@@ -779,121 +776,6 @@ object DocQueries extends QueryPack {
             FROM jd)
       SELECT component, id AS kept_doc_id, n_members, n_chars AS kept_len
       FROM k WHERE rk = 1 ORDER BY component"""))
-
-  /** One min-label-propagation round as a CTE: every vertex takes the
-    * min of its own label and its neighbors' labels — the exact
-    * per-round step [[Dedup.connectedComponents]] runs, so a
-    * fixed-depth chain replays the Spark fixpoint as long as the graph
-    * converges within the depth (further rounds are idempotent; an
-    * unconverged graph hash-MISMATCHES loudly rather than passing).
-    * Replaces the transitive-closure `reach` CTE, which materialized
-    * component-size^2 (id, root) pairs and OOMed DuckDB on the sf100
-    * giant near-dup component at any slice above 1% (r12 bound).
-    */
-  private def ccRoundSql(k: Int): String = s"""
-      l$k AS MATERIALIZED (
-        SELECT v.id, LEAST(v.lbl, COALESCE(MIN(p.lbl), v.lbl)) AS lbl
-        FROM l${k - 1} v
-        LEFT JOIN sym e ON e.d = v.id
-        LEFT JOIN l${k - 1} p ON p.id = e.s
-        GROUP BY v.id, v.lbl)"""
-
-  // final + literal => compile-time constant, immune to object-val
-  // initialization order (the query vals above evaluate bucketCcPrefixSql
-  // during construction, before later plain vals are assigned).
-  // 20 rounds: the r14 guard measured the sf100 slice10 graph converging
-  // at EXACTLY depth 16 (the r13 value was tight, not comfortable), so
-  // the output depth gets headroom; the guard below proves the fixpoint
-  // with one extra idempotent round either way.
-  private final val ccRounds = 20
-
-  // The CC oracles replay the 32-permutation MinHash the way the Spark
-  // side computes it — 32 min-expressions in ONE pass over a per-doc
-  // hash LIST — instead of the generic base CROSS JOIN perms explode.
-  // The explode materializes |shingles| x 32 rows before the group
-  // (6.4B at the 10% sf100 slice, 64B full) and was the measured DuckDB
-  // disk kill (>60 GB temp at 225 s on an idle box); the list form is
-  // bounded by the distinct-shingle frame itself. Same h, same
-  // (a*h+b) % p arithmetic, same band bucket strings — values are
-  // bit-identical, only the evaluation shape changes.
-  /** The 32 per-permutation list-min expressions over the per-doc hash
-    * list `hs` (shared by every list-based MinHash oracle replay).
-    */
-  private def listMinhashMins: String =
-    graft.dedup.Dedup.permConstants(32).zipWithIndex
-      .map { case ((a, b), i) =>
-        s"list_min(list_transform(hs, x -> ($a * x + $b) % 2147483647)) AS m$i"
-      }.mkString(",\n               ")
-
-  /** 4-band bucket rows (id, band, bucket) from the `wide` signature
-    * frame — bit-identical to Spark's band strings.
-    */
-  private def listMinhashBandSel: String = (0 until 4).map { b =>
-    val cols = (0 until 8).map(j => s"CAST(m${b * 8 + j} AS VARCHAR)")
-      .mkString(" || ',' || ")
-    s"SELECT id, $b AS band, $cols AS bucket FROM wide"
-  }.mkString("\n        UNION ALL ")
-
-  /** Shared list-based MinHash banding prefix: distinct-shingle hashes ->
-    * per-doc hash lists -> 32 permutation mins in one pass -> 4 band
-    * bucket rows (`bk`). The explode-free shape is what keeps the sf100
-    * DuckDB replay inside disk (see the r13 note above ccRoundSql).
-    */
-  private def listMinhashBkSql(where: String): String = s"""
-      WITH RECURSIVE sh AS (
-        SELECT DISTINCT doc_id AS id,
-               CAST(concat('0x', substring(md5(
-                 substr(text, CAST(i AS INTEGER), 3)), 1, 15)) AS BIGINT)
-                 % 2147483647 AS h
-        FROM (SELECT doc_id, text,
-                     unnest(generate_series(1, length(text) - 2)) AS i
-              FROM documents$where)),
-      hl AS MATERIALIZED (
-        SELECT id, list(h) AS hs
-        FROM sh GROUP BY id),
-      wide AS MATERIALIZED (
-        SELECT id,
-               $listMinhashMins
-        FROM hl),
-      bk AS (
-        $listMinhashBandSel)"""
-
-  /** Full bucket-CC oracle prefix, ending in a `comp (id, component)` CTE.
-    * The final labels are CONVERGENCE-GUARDED (ADVICE r13): the Spark
-    * side iterates to fixpoint while the oracle runs a fixed
-    * ccRounds-deep chain, so a graph with min-label eccentricity above
-    * ccRounds would leave the oracle unconverged and flag correct Spark
-    * output as a hash mismatch. The guard runs ONE EXTRA propagation
-    * round and requires it to be idempotent (l_{k+1} == l_k row-wise) —
-    * "no change in the round AFTER the output" is exactly "the output is
-    * the fixpoint", whereas comparing the last two OUTPUT rounds
-    * misfires when convergence lands exactly on the final round (the r14
-    * sf100 slice10 graph converges at exactly depth 16 — the first
-    * guard draft errored on a hash-green case). Unconverged graphs raise
-    * a DuckDB error() naming the real problem; converged ones pay one
-    * O(edges) round + one O(V) equi-join.
-    */
-  private def bucketCcPrefixSql(where: String): String = s"""
-      ${listMinhashBkSql(where)},
-      se AS (
-        SELECT DISTINCT MIN(id) OVER (PARTITION BY band, bucket) AS id_a,
-               id AS id_b
-        FROM bk),
-      edges AS (SELECT id_a, id_b FROM se WHERE id_a <> id_b),
-      sym AS MATERIALIZED (
-        SELECT id_a AS s, id_b AS d FROM edges
-        UNION SELECT id_b, id_a FROM edges),
-      l0 AS MATERIALIZED (SELECT DISTINCT s AS id, s AS lbl FROM sym),
-      ${(1 to ccRounds + 1).map(ccRoundSql).mkString(",")},
-      comp AS (
-        SELECT id,
-               CASE WHEN (SELECT COUNT(*)
-                          FROM l${ccRounds + 1} a
-                          JOIN l$ccRounds b USING (id)
-                          WHERE a.lbl <> b.lbl) > 0
-                    THEN error('bucket-CC oracle unconverged at depth $ccRounds')
-                    ELSE lbl END AS component
-        FROM l$ccRounds)"""
 
   /** SCALE-MODE dedup DECISION (VERDICT r13 task 1): the per-doc
     * keep/drop flags a production pipeline ships, composed over the
@@ -1020,7 +902,7 @@ object DocQueries extends QueryPack {
       Dedup.lshBucketHitIds(ns, os, 4).withColumnRenamed("id", "doc_id")
     },
     Some(s"""
-      ${listMinhashBkSql("")},
+      WITH ${Dedup.oracleMinhashCtes("")},
       cb AS MATERIALIZED (
         SELECT DISTINCT band, bucket FROM bk WHERE id % 10 <> 0),
       near AS MATERIALIZED (
@@ -1034,8 +916,8 @@ object DocQueries extends QueryPack {
     * the smallest id — the policy real curation runs use (longest /
     * highest-quality survivor). Same cluster pipeline as
     * `dedup_clusters_lsh` plus one argmax window over the (tiny)
-    * clustered-doc set; the oracle extends the recursive
-    * transitive-closure CTE with the same argmax.
+    * clustered-doc set; the oracle extends the same component replay
+    * with the same argmax.
     */
   val dedupKeepBest: GraftQuery = GraftQuery(
     "dedup_keep_best",
@@ -1057,7 +939,7 @@ object DocQueries extends QueryPack {
         .orderBy("component")
     },
     Some(s"""
-      WITH RECURSIVE $lshComponentsSql,
+      WITH $lshComponentsSql,
       mem AS (SELECT c.component, c.id, length(d.text) AS len
               FROM comp c JOIN documents d ON d.doc_id = c.id),
       k AS (SELECT component, id, len,
@@ -1134,7 +1016,7 @@ object DocQueries extends QueryPack {
                len(list_filter(string_split(text, ' '),
                    x -> x IN ('the', 'a'))) AS nstop
         FROM documents
-        WHERE ${graft.dedup.Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 0)} % 100 < 50),
+        WHERE ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 0)} % 100 < 50),
       q AS (
         SELECT lang, nt,
                round(0.4 * least(length(text) / 500.0, 1.0)
@@ -1251,7 +1133,7 @@ object DocQueries extends QueryPack {
       Dedup.connectedComponents(simhashPairs3(s, dir).select("id_a", "id_b")),
       Tables(s, dir, "documents"))),
     Some(s"""
-      WITH RECURSIVE ${Dedup.oracleSimhashCtes},
+      WITH ${Dedup.oracleSimhashCtes},
       ${Dedup.oracleHammingCtes(shBands, shBandBits, 3)},
       edges AS (SELECT id_a, id_b FROM ham),
       ${Dedup.oracleComponentsCtes},
@@ -1374,14 +1256,12 @@ object DocQueries extends QueryPack {
         SELECT DISTINCT gram FROM g WHERE doc_id % 50 != 0),
       f AS MATERIALIZED (
         SELECT DISTINCT
-               CAST(concat('0x', substring(
-                 md5(gram || '|' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Bits60("gram || '|' || CAST(i AS VARCHAR)")}
                  % $bloomM AS bucket
         FROM bench CROSS JOIN range(0, $bloomK) s(i)),
       pm AS MATERIALIZED (
         SELECT gram,
-               CAST(concat('0x', substring(
-                 md5(gram || '|' || CAST(i AS VARCHAR)), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Bits60("gram || '|' || CAST(i AS VARCHAR)")}
                  % $bloomM AS bucket
         FROM corpus CROSS JOIN range(0, $bloomK) s(i)),
       cand AS MATERIALIZED (
@@ -1424,7 +1304,7 @@ object DocQueries extends QueryPack {
         SELECT doc_id, string_split(text, ' ') AS l FROM documents),
       w AS MATERIALIZED (
         SELECT doc_id, CAST(i AS BIGINT) AS pos,
-               CAST(concat('0x', substring(md5(array_to_string(l[CAST(i AS INTEGER):CAST(i AS INTEGER) + ${spanK - 1}], ' ')), 1, 15)) AS BIGINT) AS fp
+               ${Dedup.oracleMd5Bits60(s"array_to_string(l[CAST(i AS INTEGER):CAST(i AS INTEGER) + ${spanK - 1}], ' ')")} AS fp
         FROM t, LATERAL unnest(generate_series(1, len(l) - ${spanK - 1})) AS u(i)),
       dupfp AS MATERIALIZED (
         SELECT fp, MIN(doc_id) AS keep_id FROM w

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.dedup.Dedup
 import graft.{GraftQuery, Q, QueryPack}
 import graft.streaming.EventOps
 import org.apache.spark.sql.expressions.Window
@@ -787,7 +788,7 @@ object EventQueries extends QueryPack {
         FROM events),
       tg AS (SELECT DISTINCT h FROM ev),
       b AS (SELECT h,
-                   CAST(concat('0x', substring(md5(u), 1, 15)) AS BIGINT) AS hs
+                   ${Dedup.oracleMd5Bits60("u")} AS hs
             FROM ev),
       r AS MATERIALIZED (
         SELECT h, hs % 256 AS reg,
@@ -834,8 +835,7 @@ object EventQueries extends QueryPack {
     },
     Some(s"""
       WITH b AS (
-        SELECT CAST(concat('0x', substring(
-                 md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS hs
+        SELECT ${Dedup.oracleMd5Bits60("CAST(user_id AS VARCHAR)")} AS hs
         FROM events),
       r AS (SELECT hs % 256 AS reg,
                    MAX(CASE WHEN hs // 256 = 0 THEN 53

@@ -88,8 +88,8 @@ object GraphQueries extends QueryPack {
       .orderBy(desc("rank_micro"), col("nation")),
     Some(s"""
       WITH $tradePairsSql,
-      e AS (SELECT src, dst FROM pw),
-      ${PageRank.oracleCtes(iters = 5)}
+      e AS (SELECT src, dst, 1 AS w FROM pw),
+      ${PageRank.oracleCtesWeighted(iters = 5)}
       SELECT nn.n_name AS nation, r5.r AS rank_micro
       FROM r5 JOIN nation nn ON nn.n_nationkey = r5.id
       ORDER BY rank_micro DESC, nation"""))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.dedup.Dedup
 import graft.{GraftQuery, Q, QueryPack, Tables}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -40,10 +41,9 @@ object MiscQueries extends QueryPack {
           min("doc_id").as("min_id"), max("doc_id").as("max_id"))
         .orderBy("lang")
     },
-    Some("""
+    Some(s"""
       SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-             CAST(SUM(CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT)
-                      % 2147483647) AS BIGINT) AS text_checksum,
+             CAST(SUM(${Dedup.oracleMd5Base("text")}) AS BIGINT) AS text_checksum,
              MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
       FROM documents GROUP BY lang ORDER BY lang"""))
 
@@ -76,10 +76,9 @@ object MiscQueries extends QueryPack {
           min("doc_id").as("min_id"), max("doc_id").as("max_id"))
         .orderBy("source")
     },
-    Some("""
+    Some(s"""
       SELECT source, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-             CAST(SUM(CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT)
-                      % 2147483647) AS BIGINT) AS text_checksum,
+             CAST(SUM(${Dedup.oracleMd5Base("text")}) AS BIGINT) AS text_checksum,
              MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
       FROM documents GROUP BY source ORDER BY source"""))
 
@@ -104,10 +103,9 @@ object MiscQueries extends QueryPack {
           min("doc_id").as("min_id"), max("doc_id").as("max_id"))
         .orderBy("lang")
     },
-    Some("""
+    Some(s"""
       SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-             CAST(SUM(CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT)
-                      % 2147483647) AS BIGINT) AS text_checksum,
+             CAST(SUM(${Dedup.oracleMd5Base("text")}) AS BIGINT) AS text_checksum,
              MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
       FROM documents GROUP BY lang ORDER BY lang"""))
 
@@ -344,10 +342,9 @@ object MiscQueries extends QueryPack {
           min("doc_id").as("min_id"), max("doc_id").as("max_id"))
         .orderBy("lang")
     },
-    Some("""
+    Some(s"""
       SELECT lang, COUNT(*) AS n, CAST(SUM(n_chars) AS BIGINT) AS sum_chars,
-             CAST(SUM(CAST(concat('0x', substring(md5(text), 1, 15)) AS BIGINT)
-                      % 2147483647) AS BIGINT) AS text_checksum,
+             CAST(SUM(${Dedup.oracleMd5Base("text")}) AS BIGINT) AS text_checksum,
              MIN(doc_id) AS min_id, MAX(doc_id) AS max_id
       FROM documents WHERE lang = 'en' GROUP BY lang ORDER BY lang"""))
 

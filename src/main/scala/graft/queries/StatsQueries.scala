@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.dedup.Dedup
 import graft.{GraftQuery, Q, QueryPack, Tables}
 import graft.stats.Stats
 import org.apache.spark.sql.functions.{col, lit}
@@ -343,12 +344,10 @@ object StatsQueries extends QueryPack {
       Q.cents("o_totalprice"),
       graft.dedup.Dedup.md5Hash60(col("o_orderkey").cast("string"), 7)
         % 2 === 0),
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-               CASE WHEN CAST(concat('0x', substring(
-                      md5(CAST(o_orderkey AS VARCHAR) || '|7'), 1, 15))
-                    AS BIGINT) % 2 = 0
+               CASE WHEN ${Dedup.oracleMd5Hash60("CAST(o_orderkey AS VARCHAR)", 7)} % 2 = 0
                     THEN 1 ELSE 0 END AS a
         FROM orders),
       p AS (
@@ -382,12 +381,10 @@ object StatsQueries extends QueryPack {
       Q.cents("o_totalprice"),
       graft.dedup.Dedup.md5Hash60(col("o_orderkey").cast("string"), 7)
         % 2 === 0),
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-               CASE WHEN CAST(concat('0x', substring(
-                      md5(CAST(o_orderkey AS VARCHAR) || '|7'), 1, 15))
-                    AS BIGINT) % 2 = 0
+               CASE WHEN ${Dedup.oracleMd5Hash60("CAST(o_orderkey AS VARCHAR)", 7)} % 2 = 0
                     THEN 1 ELSE 0 END AS a
         FROM orders),
       per AS (
@@ -531,12 +528,10 @@ object StatsQueries extends QueryPack {
       Q.cents("o_totalprice"),
       graft.dedup.Dedup.md5Hash60(col("o_orderkey").cast("string"), 7)
         % 2 === 0),
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-               CASE WHEN CAST(concat('0x', substring(
-                      md5(CAST(o_orderkey AS VARCHAR) || '|7'), 1, 15))
-                    AS BIGINT) % 2 = 0
+               CASE WHEN ${Dedup.oracleMd5Hash60("CAST(o_orderkey AS VARCHAR)", 7)} % 2 = 0
                     THEN 1 ELSE 0 END AS a
         FROM orders),
       agg AS (
@@ -582,12 +577,10 @@ object StatsQueries extends QueryPack {
       Q.cents("o_totalprice"),
       graft.dedup.Dedup.md5Hash60(col("o_orderkey").cast("string"), 7)
         % 2 === 0),
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-               CASE WHEN CAST(concat('0x', substring(
-                      md5(CAST(o_orderkey AS VARCHAR) || '|7'), 1, 15))
-                    AS BIGINT) % 2 = 0
+               CASE WHEN ${Dedup.oracleMd5Hash60("CAST(o_orderkey AS VARCHAR)", 7)} % 2 = 0
                     THEN 1 ELSE 0 END AS a
         FROM orders),
       per AS (
@@ -760,13 +753,11 @@ object StatsQueries extends QueryPack {
       Q.cents("o_totalprice"),
       graft.dedup.Dedup.md5Hash60(col("o_orderkey").cast("string"), 7)
         % 2 === 0),
-    Some("""
+    Some(s"""
       WITH s AS (
         SELECT CAST(round(c_acctbal * 100) AS BIGINT) AS x,
                CAST(round(o_totalprice * 100) AS BIGINT) AS y,
-               CASE WHEN CAST(concat('0x', substring(
-                      md5(CAST(o_orderkey AS VARCHAR) || '|7'), 1, 15))
-                    AS BIGINT) % 2 = 0
+               CASE WHEN ${Dedup.oracleMd5Hash60("CAST(o_orderkey AS VARCHAR)", 7)} % 2 = 0
                     THEN 1 ELSE 0 END AS a
         FROM orders JOIN customer ON o_custkey = c_custkey),
       agg AS (

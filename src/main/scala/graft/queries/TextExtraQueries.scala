@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.dedup.Dedup
 import graft.{GraftQuery, Q, QueryPack, Tables}
 import graft.stats.Stats
 import org.apache.spark.sql.expressions.Window
@@ -38,8 +39,7 @@ object TextExtraQueries extends QueryPack {
         SELECT unnest(string_split(text, ' ')) AS item FROM documents),
       melt AS MATERIALIZED (
         SELECT item, r,
-               CAST(concat('0x', substring(
-                 md5(item || '|' || CAST(r AS VARCHAR)), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Bits60("item || '|' || CAST(r AS VARCHAR)")}
                  % $cmsW AS bucket
         FROM toks CROSS JOIN range(0, $cmsD) t(r)),
       cells AS MATERIALIZED (
@@ -133,7 +133,7 @@ object TextExtraQueries extends QueryPack {
         .unionByName(digest("zz_global", global))
         .orderBy("part")
     },
-    Some("""
+    Some(s"""
       WITH toks AS MATERIALIZED (
         SELECT source, unnest(string_split(text, ' ')) AS item
         FROM documents),
@@ -141,8 +141,7 @@ object TextExtraQueries extends QueryPack {
         SELECT source, item, COUNT(*) AS n FROM toks GROUP BY 1, 2),
       pb AS MATERIALIZED (
         SELECT source, r,
-               CAST(concat('0x', substring(
-                 md5(item || '|' || CAST(r AS VARCHAR)), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Bits60("item || '|' || CAST(r AS VARCHAR)")}
                  % 64 AS bucket,
                n
         FROM pc CROSS JOIN range(0, 4) t(r)),
@@ -155,8 +154,7 @@ object TextExtraQueries extends QueryPack {
         SELECT item, COUNT(*) AS n FROM toks GROUP BY 1),
       gb AS MATERIALIZED (
         SELECT r,
-               CAST(concat('0x', substring(
-                 md5(item || '|' || CAST(r AS VARCHAR)), 1, 15)) AS BIGINT)
+               ${Dedup.oracleMd5Bits60("item || '|' || CAST(r AS VARCHAR)")}
                  % 64 AS bucket,
                n
         FROM gc CROSS JOIN range(0, 4) t(r)),
@@ -213,7 +211,7 @@ object TextExtraQueries extends QueryPack {
         SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents),
       b AS MATERIALIZED (
         SELECT lang,
-               ${graft.dedup.Dedup.oracleMd5Hash60("tok", 0)} % $lcM AS bucket,
+               ${Dedup.oracleMd5Hash60("tok", 0)} % $lcM AS bucket,
                tok
         FROM w)
       SELECT lang, COUNT(DISTINCT bucket) AS occupied,
@@ -300,11 +298,11 @@ object TextExtraQueries extends QueryPack {
   private def hllShingleSql(where: String): String = s"""
       WITH b AS MATERIALIZED (
         SELECT source,
-               CAST(concat('0x', substring(md5(sh), 1, 15)) AS BIGINT) AS h,
+               ${Dedup.oracleMd5Bits60("sh")} AS h,
                sh
         FROM (SELECT source, substr(text, CAST(i AS INTEGER), 3) AS sh
               FROM (SELECT source, text,
-                           unnest(generate_series(1, length(text) - 2)) AS i
+                           unnest(${Dedup.oracleShinglePositions(3)}) AS i
                     FROM documents$where))),
       r AS MATERIALIZED (
         SELECT source, h % 256 AS reg,
@@ -706,12 +704,10 @@ object TextExtraQueries extends QueryPack {
           Q.r6(col("avg_nll")).as("avg_nll"), Q.r6(col("ppl")).as("ppl"))
         .orderBy("doc_id")
     },
-    Some("""
+    Some(s"""
       WITH d AS (
         SELECT doc_id, text,
-               CAST(concat('0x', substring(
-                 md5(CAST(doc_id AS VARCHAR) || '|7'), 1, 15))
-               AS BIGINT) % 2 AS h
+               ${Dedup.oracleMd5Hash60("CAST(doc_id AS VARCHAR)", 7)} % 2 AS h
         FROM documents),
       tw AS (SELECT unnest(string_split(text, ' ')) AS word
              FROM d WHERE h = 0),
@@ -953,8 +949,8 @@ object TextExtraQueries extends QueryPack {
     * tie-broken argmax, AND the leftmost-first greedy application
     * (sentinel-space `replace`) across all 8 rounds — a wrong merge in
     * round k derails every later round's counts. Oracle: fixed-depth
-    * unrolled CTE blocks ([[graft.text.Bpe.trainSql]]), the `ccRoundSql`
-    * pattern.
+    * unrolled CTE blocks ([[graft.text.Bpe.trainSql]]), the
+    * [[graft.dedup.Dedup.oracleComponentsCtes]] pattern.
     */
   val bpeMergeTrain: GraftQuery = GraftQuery(
     "bpe_merge_train",

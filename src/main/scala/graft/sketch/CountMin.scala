@@ -25,8 +25,7 @@ object CountMin {
     * byte-identical to `Dedup.md5Hash60` with the row id as the seed.
     */
   def bucket(item: Column, row: Column, w: Int): Column =
-    conv(substring(md5(concat(item, lit("|"), row.cast("string"))), 1, 15),
-      16, 10).cast("long") % w
+    graft.dedup.Dedup.md5Bits60(concat(item, lit("|"), row.cast("string"))) % w
 
   /** Build the sketch: (r, bucket, cnt) — at most d*w rows.
     *

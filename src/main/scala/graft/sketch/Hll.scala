@@ -35,7 +35,7 @@ object Hll {
     * rho = max over values of (leading-zeros-of-tail + 1).
     */
   def registers(df: DataFrame, value: Column, groups: Seq[Column]): DataFrame = {
-    val h = conv(substring(md5(value), 1, 15), 16, 10).cast("long")
+    val h = graft.dedup.Dedup.md5Bits60(value)
     val withHash = df.select(groups :+ h.as("__h"): _*)
     val names = withHash.columns.dropRight(1)
     withHash
@@ -82,7 +82,7 @@ object Hll {
     */
   def streamingRegisters(
       stream: DataFrame, value: Column, sourcePath: String): DataFrame = {
-    val h = conv(substring(md5(value), 1, 15), 16, 10).cast("long")
+    val h = graft.dedup.Dedup.md5Bits60(value)
     val registers = stream
       .select(h.as("__h"))
       .select(

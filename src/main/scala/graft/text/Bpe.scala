@@ -148,7 +148,8 @@ object Bpe {
 
   /** DuckDB twin of [[train]]: `rounds` unrolled CTE blocks, each one
     * pair-count + argmax + replace, same sentinel-space representation
-    * (same fixed-depth-unroll pattern as the CC oracle's `ccRoundSql`).
+    * (same fixed-depth-unroll pattern as
+    * [[graft.dedup.Dedup.oracleComponentsCtes]]).
     */
   def trainSql(rounds: Int): String = {
     val union = (1 to rounds)

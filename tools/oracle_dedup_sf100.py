@@ -7,9 +7,9 @@ check_parity.py: columns sorted by name, rows sorted, exact values).
 
 These two were the round-9 verdict's "may be intractable in DuckDB"
 candidates: both explode per-position rows (8-gram fingerprints over
-50M docs; 3-char shingles x 32 minhash perms + a recursive-CTE
-connected components). A timeout is recorded as a MEASURED bound, not
-silence.
+50M docs; 3-char shingles into 32-permutation MinHash lists, then
+fixed-depth min-label connected components). A timeout is recorded as a
+MEASURED bound, not silence.
 
 Usage: tools/oracle_dedup_sf100.py <sfDir> <verifyOutDir> [budget_s]
 """
