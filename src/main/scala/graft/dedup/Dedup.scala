@@ -1,8 +1,7 @@
 package graft.dedup
 
 import graft.Q
-import org.apache.spark.HashPartitioner
-import org.apache.spark.rdd.RDD
+import graft.graph.VertexLoop
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -349,57 +348,18 @@ object Dedup {
     * rest" cluster id that turns near-dup PAIRS into dedup DECISIONS. An
     * edge with a null endpoint is dropped: a null id is not a vertex.
     *
-    * The symmetrised adjacency is built once, hash-partitioned on the
-    * vertex over `spark.sql.shuffle.partitions` and checkpointed; labels
-    * live in an RDD co-partitioned with it. Each round is ONE Spark job:
-    * only vertices whose label changed in the previous round (all of them
-    * in round 1) send it to their neighbours — exact for min-propagation,
-    * since an unchanged label has already been seen — the messages are
-    * combined by one `reduceByKey(min)`, merged into the labels by a
-    * narrow `zipPartitions`, and the checkpointed round's action counts
-    * the changed vertices. Runs to the fixpoint: at most diameter + 1
-    * rounds. The sf0.01 LSH verified-pair graph (378 vertices, 3,351
-    * edges) takes 7 rounds, the bucket-star graph (380 vertices, 559
-    * edges) 10.
+    * [[graft.graph.VertexLoop.minProgram]] run to the fixpoint: at most
+    * diameter + 1 rounds, one Spark job each. The sf0.01 LSH verified-pair
+    * graph (378 vertices, 3,351 edges) takes 7 rounds, the bucket-star
+    * graph (380 vertices, 559 edges) 10.
     */
   def connectedComponents(edges: DataFrame): DataFrame = {
-    val spark = edges.sparkSession
-    val parts = new HashPartitioner(
-      graft.SparkEntry.shufflePartitions(spark))
-    val adj = edges
-      .select(col("id_a").cast("long"), col("id_b").cast("long")).na.drop()
-      .queryExecution.toRdd
-      .flatMap { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1))
-        Iterator(a -> b, b -> a)
-      }
-      .groupByKey(parts).mapValues(_.toArray.distinct)
-      .localCheckpoint()
-    // (vertex, (label, changed last round)), in adj's stored order
-    var labels: RDD[(Long, (Long, Boolean))] = adj.mapPartitions(
-      _.map { case (v, _) => (v, (v, true)) }, preservesPartitioning = true)
-    var changed = 1L
-    while (changed > 0) {
-      val msgs = adj.zipPartitions(labels) { (a, l) =>
-        a.zip(l).flatMap { case ((_, nbrs), (_, (lbl, chg))) =>
-          if (chg) nbrs.iterator.map(_ -> lbl) else Iterator.empty
-        }
-      }.reduceByKey(parts, math.min(_, _))
-      val next = labels.zipPartitions(msgs, preservesPartitioning = true) {
-        (l, m) =>
-          val best = m.toMap
-          l.map { case (v, (lbl, _)) =>
-            val nbr = best.getOrElse(v, lbl)
-            (v, if (nbr < lbl) (nbr, true) else (lbl, false))
-          }
-      }.localCheckpoint()
-      changed = next.filter(_._2._2).count() // the round's one job
-      labels.unpersist() // superseded round — don't pin its blocks
-      labels = next
+    val e = edges.select(
+      col("id_a").cast("long"), col("id_b").cast("long"), lit(1L)).na.drop()
+    val labels = VertexLoop.run[Long, Long](e, undirected = true, Int.MaxValue) {
+      _ => VertexLoop.minProgram(identity, identity)
     }
-    adj.unpersist()
-    spark.createDataFrame(labels.map { case (v, (c, _)) => (v, c) })
-      .toDF("id", "comp")
+    edges.sparkSession.createDataFrame(labels).toDF("id", "comp")
   }
 
   /** STREAMING exact dedup: the same keep-first-arrival semantics as

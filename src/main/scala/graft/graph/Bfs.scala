@@ -1,47 +1,32 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** Breadth-first hop counts from the minimum-id vertex, by unrolled
-  * frontier relaxation: `h_{i+1}(v) = min(h_i(v), 1 + min over in-edges
-  * h_i(u))` — each round one join + min-aggregation over the (tiny next
-  * to the fact scan) reached set, checkpointed so lineage stays O(1).
-  * A fixed unroll replays as a SQL CTE chain; converged extra rounds
-  * are no-ops, so any unroll >= the graph's eccentricity is exact
-  * (BfsSpec pins convergence on the harness graphs). Unreached
-  * vertices are absent from the output.
+/** Breadth-first hop counts from the minimum-id vertex by min-propagation
+  * on the [[VertexLoop]]: `h_{i+1}(v) = min(h_i(v), 1 + min over
+  * neighbours h_i(u))`, to the fixpoint, capped at the oracle's unroll of
+  * `rounds` (converged extra rounds are no-ops). Unreached vertices are
+  * absent from the output.
   */
 object Bfs {
 
   val DefaultRounds = 6
 
-  /** (id, hop) for every vertex reachable from the minimum vertex id,
-    * treating edges as undirected.
+  /** (id, hop) for every vertex reachable from the minimum vertex id
+    * within `rounds` hops, treating edges as undirected. An edge with a
+    * null endpoint or a self-loop adds no vertex.
     */
   def hopsFromMin(
       edges: DataFrame, src: String, dst: String,
       rounds: Int = DefaultRounds): DataFrame = {
-    val dir0 = edges.select(
-      col(src).cast("long").as("src"), col(dst).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    val e = dir0
-      .union(dir0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint()
-    val source = e.agg(min(least(col("src"), col("dst"))).as("id"))
-      .select(col("id"), lit(0).cast("int").as("hop"))
-    var reached = source.localCheckpoint()
-    for (_ <- 1 to rounds) {
-      reached = reached
-        .unionByName(reached
-          .join(e, reached("id") === e("src"))
-          .select(col("dst").as("id"), (col("hop") + 1).as("hop")))
-        .groupBy("id").agg(min("hop").as("hop"))
-        .localCheckpoint()
+    val e = VertexLoop.edgeFrame(edges, src, dst)
+    val hops = VertexLoop.run[Long, Long](e, undirected = true, rounds) { adj =>
+      val source = adj.keys.fold(Long.MaxValue)(math.min)
+      VertexLoop.minProgram(v => if (v == source) 0L else Long.MaxValue, _ + 1)
     }
-    reached
+    edges.sparkSession.createDataFrame(hops.collect {
+      case (v, h) if h < Long.MaxValue => (v, h.toInt)
+    }).toDF("id", "hop")
   }
 
   /** SQL replay, given `e(src, dst)` (directed, deduped, no loops) in

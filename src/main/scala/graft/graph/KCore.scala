@@ -1,19 +1,13 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** k-core extraction: the maximal subgraph in which every vertex has
   * undirected degree >= k, computed by iterative peeling — each round
-  * drops vertices below k and the edges touching them (Matula & Beck
-  * 1983). A fixed peel count keeps the computation replayable as an
-  * unrolled SQL CTE chain; KCoreSpec pins that the harness graphs reach
-  * the fixpoint well inside the default 12 rounds (extra rounds are
-  * no-ops once converged, in both engines identically).
-  *
-  * Each peel is a degree aggregation plus two semi joins — all key
-  * shuffles on the (already distilled) edge list, with the shrinking
-  * edge frame checkpointed per round so lineage stays O(1).
+  * drops the vertices below k and the edges touching them (Matula & Beck
+  * 1983). On the [[VertexLoop]], the vertices that die in a round tell
+  * their neighbours; it stops at the fixpoint, capped at the oracle's
+  * unroll of `peels` (converged extra rounds are no-ops).
   */
 object KCore {
 
@@ -25,36 +19,19 @@ object KCore {
   def kCoreVertices(
       edges: DataFrame, src: String, dst: String, k: Int,
       peels: Int = DefaultPeels): DataFrame = {
-    var alive = edges
-      .select(
-        least(col(src), col(dst)).cast("long").as("a"),
-        greatest(col(src), col(dst)).cast("long").as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
-    // Early exit at the fixpoint (r16): peeling only ever SHRINKS the
-    // edge set, so an unchanged edge count means an unchanged edge set
-    // and every remaining round is a no-op — identical result, fewer
-    // full passes (the oracle unrolls all rounds; extra rounds are
-    // idempotent there too). The count reads the just-checkpointed
-    // blocks, not the lineage.
-    var prevEdges = alive.count()
-    var converged = false
-    for (_ <- 1 to peels if !converged) {
-      val deg = alive.select(col("a").as("id"))
-        .union(alive.select(col("b").as("id")))
-        .groupBy("id").agg(count(lit(1)).as("deg"))
-      val keep = deg.filter(col("deg") >= k).select("id")
-      alive = alive
-        .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-        .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-        .localCheckpoint()
-      val n = alive.count()
-      if (n == prevEdges) converged = true else prevEdges = n
+    val e = VertexLoop.edgeFrame(edges, src, dst)
+    // (alive, degree among the live vertices)
+    val core = VertexLoop.run[(Boolean, Long), Long](e, undirected = true, peels) { _ =>
+      VertexLoop.Program(
+        init = (_, n) => (true, n.ids.length.toLong),
+        send = (s, _, n) =>
+          if (s._1 && s._2 < k) n.ids.iterator.map(_ -> 1L) else Iterator.empty,
+        combine = _ + _,
+        merge = { case ((alive, deg), m) => (alive && deg >= k, deg - m.getOrElse(0L)) })
     }
-    alive.select(col("a").as("id"))
-      .union(alive.select(col("b").as("id")))
-      .groupBy("id").agg(count(lit(1)).as("deg"))
+    edges.sparkSession.createDataFrame(core.collect {
+      case (v, (true, deg)) if deg > 0 => (v, deg)
+    }).toDF("id", "deg")
   }
 
   /** Unrolled SQL replay, given `raw(src, dst)` in scope; exposes

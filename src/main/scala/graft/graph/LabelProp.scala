@@ -1,8 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Synchronous weighted label propagation (community detection).
   *
@@ -10,59 +9,38 @@ import org.apache.spark.sql.functions._
   * synchronous round, a node adopts the label carrying the largest total
   * incident edge weight among its neighbours, ties broken toward the
   * smallest label — the deterministic variant of Raghavan et al.'s LPA
-  * (near-linear community detection), run for a FIXED iteration count so
-  * the whole computation is replayable as an unrolled SQL CTE chain.
-  * Mirrors the reference's "derive a grouping from pairwise structure"
-  * analyses (`sol_2/data_analysis.ipynb` cell 7, JSON L491 builds
-  * group-level summaries); the operator itself is net-new surface.
+  * (near-linear community detection). Mirrors the reference's "derive a
+  * grouping from pairwise structure" analyses (`sol_2/data_analysis.ipynb`
+  * cell 7, JSON L491 builds group-level summaries); the operator itself
+  * is net-new surface.
   *
-  * Scale notes: one iteration = one join of the (weight-collapsed,
-  * symmetrized) edge list against the current label vector + one
-  * aggregation by (node, label) + one per-node argmax window — the same
-  * shuffle shape as weighted PageRank, O(edges) per round with no
-  * all-pairs term. Edges are materialized once with `localCheckpoint`
-  * and reused every round; each label vector is checkpointed so plan
-  * depth stays O(1) per iteration. Determinism: weights are exact
-  * integers, the argmax is (total weight desc, label asc) — no floats
-  * anywhere, so results are bit-identical across engines/partitionings.
+  * Runs on the [[VertexLoop]] to the fixpoint, capped at the oracle's
+  * unroll of `iters`. Weights are exact integers and the argmax is (total
+  * weight desc, label asc), so results are bit-identical across engines
+  * and partitionings.
   */
 object LabelProp {
 
   /** @param edges directed weighted edges; symmetrized and
     *              weight-collapsed here (parallel/reverse edges sum)
     * @param src,dst,weight edge columns (weight: positive integers)
-    * @param iters fixed synchronous round count (unrolled by the oracle)
+    * @param iters round cap (the oracle's unroll)
     * @return one row per node: (id: long, community: long)
     */
   def propagate(
       edges: DataFrame, src: String, dst: String, weight: String,
       iters: Int): DataFrame = {
     require(iters >= 1)
-    val dir = edges
-      .select(col(src).cast("long").as("s"), col(dst).cast("long").as("d"),
-        col(weight).cast("long").as("w"))
-      .where(col("s").isNotNull && col("d").isNotNull &&
-        col("s") =!= col("d") && col("w") > 0)
-    val sym = dir
-      .union(dir.select(col("d").as("s"), col("s").as("d"), col("w")))
-      .groupBy("s", "d").agg(sum("w").as("w"))
-      .localCheckpoint() // consumed every round
-    val nodes = sym.select(col("s").as("id")).distinct().localCheckpoint()
-    var lab = nodes.select(col("id"), col("id").as("lab"))
-    val byBest = Window.partitionBy("id")
-      .orderBy(desc("tw"), col("nlab"))
-    for (_ <- 1 to iters) {
-      val scores = sym
-        .join(lab, sym("d") === lab("id"))
-        .groupBy(sym("s").as("id"), col("lab").as("nlab"))
-        .agg(sum("w").as("tw"))
-      lab = scores
-        .withColumn("rk", row_number().over(byBest))
-        .filter(col("rk") === 1)
-        .select(col("id"), col("nlab").as("lab"))
-        .localCheckpoint()
+    val e = VertexLoop.edgeFrame(edges, src, dst, col(weight))
+    // messages: label -> total weight
+    val labels = VertexLoop.run[Long, Map[Long, Long]](e, undirected = true, iters) { _ =>
+      VertexLoop.Program(
+        init = (v, _) => v,
+        send = (lab, _, n) => n.iterator.map { case (u, w) => u -> Map(lab -> w) },
+        combine = (a, b) => b.foldLeft(a) { case (c, (l, w)) => c.updated(l, c.getOrElse(l, 0L) + w) },
+        merge = (lab, m) => m.fold(lab)(_.minBy { case (l, w) => (-w, l) }._1))
     }
-    lab.select(col("id"), col("lab").as("community"))
+    edges.sparkSession.createDataFrame(labels).toDF("id", "community")
   }
 
   /** Unrolled DuckDB CTE chain replaying [[propagate]] verbatim.

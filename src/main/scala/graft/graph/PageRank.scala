@@ -9,16 +9,10 @@ import org.apache.spark.sql.functions._
   * node) and every update is integer arithmetic — floor division for the
   * per-edge contribution (`r div out_degree`) and for the damping blend
   * (`(d * sum) div 100`) — so the result is bit-identical regardless of
-  * partitioning, accumulation order, or engine. That makes a 5-iteration
+  * partitioning, accumulation order, or engine. That makes an `iters`
   * run replayable as an unrolled SQL CTE chain in any ANSI engine, which
-  * is how the driver's DuckDB oracle checks it.
-  *
-  * Scale notes: each iteration is one shuffle (contribution aggregation
-  * by destination) plus a join of the edge list against the current rank
-  * vector; the edge list and its out-degrees are materialized once up
-  * front with `localCheckpoint` and reused every round, and each new rank
-  * vector is checkpointed so lineage stays O(1) rather than O(iters) — on
-  * a cluster the rank vector (one long per node) is dwarfed by the edges.
+  * is how the driver's DuckDB oracle checks it. Runs on the [[VertexLoop]]
+  * to the fixpoint, capped at the oracle's unroll.
   * Dangling-node mass evaporates (the classic simplification); the oracle
   * mirrors that, so totals shrink slightly each round instead of being
   * renormalized.
@@ -58,35 +52,19 @@ object PageRank {
       edges: DataFrame, src: String, dst: String, weight: String,
       iters: Int, dampingPct: Int = 85): DataFrame = {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
-    val e = edges
-      .select(col(src).cast("long").as("src"), col(dst).cast("long").as("dst"),
-        col(weight).cast("long").as("w"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst") && col("w") > 0)
-      .groupBy("src", "dst").agg(sum("w").as("w"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint()
-    val eDeg = e
-      .join(e.groupBy("src").agg(sum("w").as("tw")), "src")
-      .localCheckpoint()
+    val e = VertexLoop.edgeFrame(edges, src, dst, col(weight))
     val base = (100L - dampingPct) * Micro / 100L
-    var rank = nodes.select(col("id"), lit(Micro).as("r"))
-    for (_ <- 1 to iters) {
-      val contrib = eDeg
-        .join(rank, eDeg("src") === rank("id"))
-        .select(col("dst"), expr("(r * w) div tw").as("c"))
-        .groupBy("dst").agg(sum("c").as("s"))
-      rank = nodes
-        .join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(col("id"),
-          expr(s"$base + ($dampingPct * coalesce(s, cast(0 as bigint))) div 100")
-            .cast("long").as("r"))
-        .localCheckpoint()
+    val ranks = VertexLoop.run[Long, Long](e, undirected = false, iters) { _ =>
+      VertexLoop.Program(
+        init = (_, _) => Micro,
+        send = (r, _, n) => {
+          val tw = n.ws.sum
+          n.iterator.map { case (u, w) => u -> r * w / tw }
+        },
+        combine = _ + _,
+        merge = (_, s) => base + dampingPct * s.getOrElse(0L) / 100L)
     }
-    rank.select(col("id"), col("r").as("rank_micro"))
+    edges.sparkSession.createDataFrame(ranks).toDF("id", "rank_micro")
   }
 
   /** The DuckDB-replayable CTE chain for [[pageRankMicroWeighted]], given

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.{GraftQuery, QueryPack, Tables}
 import graft.graph.{Bfs, KCore, LabelProp, PageRank, Triangles}
 
-/** Graph analytics over the harness tables. The connected-components
-  * dedup clusters live in `DocQueries`; this pack holds the rank-style
-  * iterative algorithms.
+/** Graph analytics over the nation trade graph. PageRank, k-core, BFS and
+  * label propagation run on [[graft.graph.VertexLoop]] to the fixpoint, capped
+  * at their oracles' unrolls; triangles and Adamic–Adar are relational plans.
+  * The connected-components dedup clusters, on the same loop, are in `DocQueries`.
   */
 object GraphQueries extends QueryPack {
 
@@ -74,11 +75,9 @@ object GraphQueries extends QueryPack {
   }
 
   /** PageRank over the nation-level trade graph ([[tradePairs]];
-    * `pageRankMicro` drops the weights and any duplicate). The graph
-    * (<= 25 nodes) is tiny, so the iterations run on a vector dwarfed by
-    * the scan — exactly the shape a 100 TB run has (edges distilled
-    * once, then cheap iterations). Integer micro-unit arithmetic makes
-    * all 5 iterations hash-replayable in DuckDB.
+    * `pageRankMicro` drops the weights and any duplicate). Integer
+    * micro-unit arithmetic makes the 5 iterations hash-replayable in
+    * DuckDB.
     */
   val nationPageRank: GraftQuery = GraftQuery(
     "pagerank_nation_trade",
@@ -135,9 +134,8 @@ object GraphQueries extends QueryPack {
 
   /** 8-core of the strong trade graph: the dense trading club that
     * survives iterative peeling of low-degree nations. Same sparsified
-    * edge set as the triangle gate; 12 unrolled peels (fixpoint reached
-    * much earlier — KCoreSpec pins convergence; converged extra rounds
-    * are no-ops in both engines).
+    * edge set as the triangle gate; at most 12 peels, the oracle's
+    * unroll (KCoreSpec pins that the harness graphs converge inside it).
     */
   val nationKCore: GraftQuery = GraftQuery(
     "kcore_nation_trade",
@@ -153,8 +151,7 @@ object GraphQueries extends QueryPack {
 
   /** BFS hop distances over the strong trade graph (undirected) from
     * its minimum nation key — reachability + eccentricity in one gate;
-    * 6 unrolled relaxation rounds (diameter is far smaller; converged
-    * rounds are no-ops in both engines).
+    * at most 6 relaxation rounds, the oracle's unroll.
     */
   val nationBfs: GraftQuery = GraftQuery(
     "bfs_hops_nation_trade",
@@ -175,8 +172,8 @@ object GraphQueries extends QueryPack {
     * the community carrying the largest total trade volume among its
     * neighbours, ties toward the smallest label. Complements the
     * component/PageRank views: CC answers "connected at all?", LPA
-    * answers "which dense trading bloc?". All-integer, so the 4 rounds
-    * replay verbatim as unrolled DuckDB CTEs.
+    * answers "which dense trading bloc?". All-integer, so at most 4
+    * rounds replay verbatim as the oracle's unrolled DuckDB CTEs.
     */
   val nationCommunities: GraftQuery = GraftQuery(
     "label_prop_communities",

@@ -15,15 +15,24 @@ import org.apache.spark.sql.types.StructType
   */
 object Sources {
 
+  /** NULL's CSV spelling on both sides, apart from the `""` of an empty text:
+    * `''`, blank texts and NULL round-trip as themselves (a text `\N` does not). */
+  private val CsvNull = "\\N"
+
   def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.option("header", "true").schema(schema).csv(path)
+    spark.read.option("header", "true").option("nullValue", CsvNull)
+      .schema(schema).csv(path)
 
   def writeSubmissionCsv(
       df: DataFrame, path: String, cols: Seq[String] = Seq("id", "label"),
       singleFile: Boolean = true): Unit = {
     val out = df.select(cols.head, cols.tail: _*)
     (if (singleFile) out.coalesce(1) else out)
-      .write.mode("overwrite").option("header", "true").csv(path)
+      .write.mode("overwrite").option("header", "true")
+      .option("nullValue", CsvNull)
+      .option("ignoreLeadingWhiteSpace", "false")
+      .option("ignoreTrailingWhiteSpace", "false")
+      .csv(path)
   }
 
   /** JSONL (newline-delimited JSON) scan with an explicit schema — the

@@ -1,7 +1,13 @@
 package graft.dedup
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestSession
+import graft.graph.GraphGen
+import org.apache.spark.graft.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
 import org.scalacheck.util.Pretty
@@ -56,6 +62,44 @@ class ConnectedComponentsSpec extends AnyFunSuite with SparkTestSession {
           rows(ConnectedComponentsReference.connectedComponents(df)) == got
       (Prop(got == expected) :| s"$edges\ngot      $got\nexpected $expected") &&
         (Prop(matchesReference) :| s"$edges\nreference differs from $got")
+    })
+  }
+
+  test("the edge read and every round run in one SQL execution") {
+    val sc = spark.sparkContext
+    val group = s"cc-execution-${java.util.UUID.randomUUID}"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          starts.add(s.executionId.toString)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(e.properties.getProperty("spark.sql.execution.id"))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "one execution")
+    try {
+      Dedup.connectedComponents((1L to 5L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+      ListenerBusDrain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    // a path of 6 vertices takes 6 rounds, one job each
+    assert(starts.size == 1)
+    assert(jobs.asScala.toSeq == Seq.fill(6)(starts.peek))
+  }
+
+  test("labels equal a union-find over the edges with both endpoints set") {
+    GraphGen.check(Prop.forAllNoShrink(GraphGen.edges) { es =>
+      val got = rows(Dedup.connectedComponents(
+        GraphGen.frame(spark, es).toDF("id_a", "id_b", "w")))
+      val expected = unionFind(GraphGen.present(es).map(e => (e._1, e._2)))
+      Prop(got == expected) :| s"$es\ngot      $got\nexpected $expected"
     })
   }
 }

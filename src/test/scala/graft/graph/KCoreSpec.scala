@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -51,5 +52,40 @@ class KCoreSpec extends AnyFunSuite with SparkTestSession {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(at11 === at12, s"sf$sf not converged by peel 11")
     }
+  }
+
+  test("random edge shapes match driver-side edge peeling up to the peel cap") {
+    GraphGen.check(Prop.forAllNoShrink(
+        GraphGen.edges, Gen.choose(0, 3), Gen.choose(0, 12)) { (es, k, peels) =>
+      val got = KCore.kCoreVertices(GraphGen.frame(spark, es), "src", "dst", k, peels)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val expected = KCoreSpec.reference(es, k, peels)
+      Prop(got == expected) :| s"$es k=$k peels=$peels\ngot      $got\nexpected $expected"
+    })
+  }
+
+  test("each peel is one Spark job") {
+    def jobsForPath(n: Long): Int = jobsOf(KCore.kCoreVertices(
+      (1L until n).map(i => (i, i + 1)).toDF("src", "dst"), "src", "dst", 2, 20))._1
+    // a path of n (even) vertices loses both ends each round, n / 2
+    // rounds; one more sees no change
+    assert(jobsForPath(8) - jobsForPath(4) == 8 / 2 - 4 / 2)
+  }
+}
+
+object KCoreSpec {
+
+  /** The oracle's unroll on the driver: `peels` times, drop the edges
+    * touching a vertex of degree < k; then each vertex's degree.
+    */
+  def reference(es: Seq[GraphGen.Edge], k: Int, peels: Int): Map[Long, Long] = {
+    var e = GraphGen.present(es).filter(x => x._1 != x._2)
+      .map(x => (x._1 min x._2, x._1 max x._2)).distinct
+    def deg = e.flatMap(x => Seq(x._1, x._2)).groupMapReduce(identity)(_ => 1L)(_ + _)
+    for (_ <- 1 to peels) {
+      val keep = deg.filter(_._2 >= k).keySet
+      e = e.filter(x => keep(x._1) && keep(x._2))
+    }
+    deg
   }
 }

@@ -1,5 +1,6 @@
 package graft.graph
 
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -45,5 +46,41 @@ class LabelPropSpec extends AnyFunSuite with SparkTestSession {
     val c = communities(
       Seq((1L, 1L, 9L), (1L, 2L, 1L), (2L, 3L, 0L)), iters = 1)
     assert(c.keySet === Set(1L, 2L))
+  }
+
+  test("random edge shapes match driver-side synchronous rounds") {
+    GraphGen.check(Prop.forAllNoShrink(GraphGen.edges, Gen.choose(1, 5)) { (es, iters) =>
+      val got = LabelProp.propagate(GraphGen.frame(spark, es), "src", "dst", "w", iters)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val expected = LabelPropSpec.reference(es, iters)
+      Prop(got == expected) :| s"$es iters=$iters\ngot      $got\nexpected $expected"
+    })
+  }
+
+  test("each round is one Spark job") {
+    // two nodes swap labels every round, so every round changes a label
+    def jobs(iters: Int): Int = jobsOf(LabelProp.propagate(
+      Seq((1L, 2L, 1L)).toDF("src", "dst", "w"), "src", "dst", "w", iters))._1
+    assert(jobs(4) - jobs(2) == 4 - 2)
+  }
+}
+
+object LabelPropSpec {
+
+  /** `iters` synchronous argmax rounds (total weight desc, label asc)
+    * over the symmetrized, weight-summed positive edges.
+    */
+  def reference(es: Seq[GraphGen.Edge], iters: Int): Map[Long, Long] = {
+    val sym = GraphGen.present(es).filter(e => e._1 != e._2 && e._3 > 0)
+      .flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
+      .groupMapReduce(e => (e._1, e._2))(_._3)(_ + _)
+    var lab = sym.keys.map(e => e._1 -> e._1).toMap
+    for (_ <- 1 to iters) {
+      lab = sym.toSeq.groupBy(_._1._1).map { case (v, nbrs) =>
+        v -> nbrs.groupMapReduce(n => lab(n._1._2))(_._2)(_ + _)
+          .minBy { case (l, w) => (-w, l) }._1
+      }
+    }
+    lab
   }
 }

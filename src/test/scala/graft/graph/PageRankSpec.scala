@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.Row
+import org.scalacheck.{Gen, Prop}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestSession
@@ -67,5 +68,48 @@ class PageRankSpec extends AnyFunSuite with SparkTestSession {
     val b = PageRank.pageRankMicro(df.coalesce(1), "src", "dst", 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a === b)
+  }
+
+  test("random edge shapes match driver-side integer rounds, weighted and not") {
+    GraphGen.check(Prop.forAllNoShrink(
+        GraphGen.edges, Gen.choose(1, 6), Gen.oneOf(0, 50, 85, 100)) { (es, iters, d) =>
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val df = GraphGen.frame(spark, es)
+      val weighted = rows(PageRank.pageRankMicroWeighted(df, "src", "dst", "w", iters, d))
+      val unit = rows(PageRank.pageRankMicro(df, "src", "dst", iters, d))
+      val present = GraphGen.present(es)
+      val expW = PageRankSpec.reference(present, iters, d)
+      val expU = PageRankSpec.reference(present.map(e => (e._1, e._2, 1L)).distinct, iters, d)
+      (Prop(weighted == expW) :| s"$es iters=$iters d=$d\nweighted $weighted\nexpected $expW") &&
+        (Prop(unit == expU) :| s"$es iters=$iters d=$d\nunit     $unit\nexpected $expU")
+    })
+  }
+
+  test("each iteration is one Spark job, up to the fixpoint") {
+    // ranks on this graph keep moving until iteration 30; the 31st
+    // changes none
+    def jobs(iters: Int): Int = jobsOf(PageRank.pageRankMicro(
+      Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 1L)).toDF("src", "dst"),
+      "src", "dst", iters))._1
+    assert(jobs(5) - jobs(3) == 5 - 3)
+    assert(jobs(40) - jobs(5) == 31 - 5)
+  }
+}
+
+object PageRankSpec {
+
+  /** `iters` integer rounds over the weight-collapsed positive edges. */
+  def reference(es: Seq[(Long, Long, Long)], iters: Int, d: Int): Map[Long, Long] = {
+    val e = es.filter(x => x._1 != x._2 && x._3 > 0)
+      .groupMapReduce(x => (x._1, x._2))(_._3)(_ + _)
+    val tw = e.groupMapReduce(_._1._1)(_._2)(_ + _)
+    val base = (100L - d) * PageRank.Micro / 100L
+    var r = e.keys.flatMap(p => Seq(p._1, p._2)).map(_ -> PageRank.Micro).toMap
+    for (_ <- 1 to iters) {
+      val s = e.toSeq.groupMapReduce(_._1._2) { case ((a, _), w) => r(a) * w / tw(a) }(_ + _)
+      r = r.map { case (v, _) => v -> (base + d * s.getOrElse(v, 0L) / 100L) }
+    }
+    r
   }
 }

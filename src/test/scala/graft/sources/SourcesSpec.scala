@@ -19,4 +19,16 @@ class SourcesSpec extends AnyFunSuite with SparkTestSession {
     assert(back.count() == 3)
     assert(back.filter("label = 1").select("id").head().getLong(0) == 2L)
   }
+
+  test("CSV round-trip keeps empty, whitespace-only, NULL and multi-byte texts") {
+    val texts = Seq(Some(""), Some("   "), None, Some("héllo 😀 "), Some(" a\tb "))
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("csv").toString + "/out"
+    Sources.writeSubmissionCsv(df, dir, cols = Seq("id", "text"), singleFile = false)
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("text", StringType)))
+    val back = Sources.readCsv(spark, dir, schema).collect()
+      .map(r => r.getLong(0) -> Option(r.getString(1))).sortBy(_._1).toSeq
+    assert(back == texts.zipWithIndex.map { case (t, i) => (i.toLong, t) })
+  }
 }
