@@ -356,9 +356,8 @@ object Dedup {
   def connectedComponents(edges: DataFrame): DataFrame = {
     val e = edges.select(
       col("id_a").cast("long"), col("id_b").cast("long"), lit(1L)).na.drop()
-    val labels = VertexLoop.run[Long, Long](e, undirected = true, Int.MaxValue) {
-      _ => VertexLoop.minProgram(identity, identity)
-    }
+    val labels = VertexLoop.run[Long, Long](e, undirected = true, Int.MaxValue)(
+      VertexLoop.minProgram(identity, identity))
     edges.sparkSession.createDataFrame(labels).toDF("id", "comp")
   }
 

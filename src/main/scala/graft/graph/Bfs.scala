@@ -1,6 +1,7 @@
 package graft.graph
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, col, least, lit, min}
 
 /** Breadth-first hop counts from the minimum-id vertex by min-propagation
   * on the [[VertexLoop]]: `h_{i+1}(v) = min(h_i(v), 1 + min over
@@ -20,10 +21,10 @@ object Bfs {
       edges: DataFrame, src: String, dst: String,
       rounds: Int = DefaultRounds): DataFrame = {
     val e = VertexLoop.edgeFrame(edges, src, dst)
-    val hops = VertexLoop.run[Long, Long](e, undirected = true, rounds) { adj =>
-      val source = adj.keys.fold(Long.MaxValue)(math.min)
-      VertexLoop.minProgram(v => if (v == source) 0L else Long.MaxValue, _ + 1)
-    }
+    val source = e.agg(coalesce(min(least(col("src"), col("dst"))), lit(Long.MaxValue)))
+      .head().getLong(0)
+    val hops = VertexLoop.run[Long, Long](e, undirected = true, rounds)(
+      VertexLoop.minProgram(v => if (v == source) 0L else Long.MaxValue, _ + 1))
     edges.sparkSession.createDataFrame(hops.collect {
       case (v, h) if h < Long.MaxValue => (v, h.toInt)
     }).toDF("id", "hop")

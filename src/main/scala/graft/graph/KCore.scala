@@ -21,14 +21,13 @@ object KCore {
       peels: Int = DefaultPeels): DataFrame = {
     val e = VertexLoop.edgeFrame(edges, src, dst)
     // (alive, degree among the live vertices)
-    val core = VertexLoop.run[(Boolean, Long), Long](e, undirected = true, peels) { _ =>
+    val core = VertexLoop.run[(Boolean, Long), Long](e, undirected = true, peels)(
       VertexLoop.Program(
         init = (_, n) => (true, n.ids.length.toLong),
         send = (s, _, n) =>
           if (s._1 && s._2 < k) n.ids.iterator.map(_ -> 1L) else Iterator.empty,
         combine = _ + _,
-        merge = { case ((alive, deg), m) => (alive && deg >= k, deg - m.getOrElse(0L)) })
-    }
+        merge = { case ((alive, deg), m) => (alive && deg >= k, deg - m.getOrElse(0L)) }))
     edges.sparkSession.createDataFrame(core.collect {
       case (v, (true, deg)) if deg > 0 => (v, deg)
     }).toDF("id", "deg")

@@ -33,13 +33,12 @@ object LabelProp {
     require(iters >= 1)
     val e = VertexLoop.edgeFrame(edges, src, dst, col(weight))
     // messages: label -> total weight
-    val labels = VertexLoop.run[Long, Map[Long, Long]](e, undirected = true, iters) { _ =>
+    val labels = VertexLoop.run[Long, Map[Long, Long]](e, undirected = true, iters)(
       VertexLoop.Program(
         init = (v, _) => v,
         send = (lab, _, n) => n.iterator.map { case (u, w) => u -> Map(lab -> w) },
         combine = (a, b) => b.foldLeft(a) { case (c, (l, w)) => c.updated(l, c.getOrElse(l, 0L) + w) },
-        merge = (lab, m) => m.fold(lab)(_.minBy { case (l, w) => (-w, l) }._1))
-    }
+        merge = (lab, m) => m.fold(lab)(_.minBy { case (l, w) => (-w, l) }._1)))
     edges.sparkSession.createDataFrame(labels).toDF("id", "community")
   }
 

@@ -54,7 +54,7 @@ object PageRank {
     require(iters >= 1 && dampingPct >= 0 && dampingPct <= 100)
     val e = VertexLoop.edgeFrame(edges, src, dst, col(weight))
     val base = (100L - dampingPct) * Micro / 100L
-    val ranks = VertexLoop.run[Long, Long](e, undirected = false, iters) { _ =>
+    val ranks = VertexLoop.run[Long, Long](e, undirected = false, iters)(
       VertexLoop.Program(
         init = (_, _) => Micro,
         send = (r, _, n) => {
@@ -62,8 +62,7 @@ object PageRank {
           n.iterator.map { case (u, w) => u -> r * w / tw }
         },
         combine = _ + _,
-        merge = (_, s) => base + dampingPct * s.getOrElse(0L) / 100L)
-    }
+        merge = (_, s) => base + dampingPct * s.getOrElse(0L) / 100L))
     edges.sparkSession.createDataFrame(ranks).toDF("id", "rank_micro")
   }
 

@@ -1,5 +1,6 @@
 package graft.graph
 
+import scala.collection.mutable
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
@@ -21,9 +22,8 @@ import org.apache.spark.sql.functions.{col, lit}
   */
 object VertexLoop {
 
-  /** A vertex's out-neighbours `ids` and the summed weights `ws` of its edges
-    * to them: primitive arrays, which Spark's size estimate of the cached
-    * adjacency reads in O(1), where it would walk an array of pairs. */
+  /** A vertex's out-neighbours `ids` and its summed edge weights `ws` to them:
+    * primitive arrays, which Spark's size estimate reads in O(1), not pair by pair. */
   final case class Nbrs(ids: Array[Long], ws: Array[Long]) {
     def iterator: Iterator[(Long, Long)] = ids.iterator.zip(ws.iterator)
   }
@@ -63,35 +63,38 @@ object VertexLoop {
   /** Each vertex's state after running `program` over `edges(src, dst,
     * w)` (longs, no nulls) for at most `rounds` rounds. An edge is an
     * out-edge of `src`, and of `dst` too if `undirected`; parallel edges
-    * sum their weights; a vertex that only receives edges has none.
-    * `program` sees the adjacency (BFS reads its source there). The edge
-    * read and every round run as one SQL execution.
+    * sum their weights; a vertex that only receives edges has none. The
+    * edge read and every round run as one SQL execution.
     */
   def run[S: ClassTag, M: ClassTag](
-      edges: DataFrame, undirected: Boolean, rounds: Int)(
-      program: RDD[(Long, Nbrs)] => Program[S, M]): RDD[(Long, S)] = {
+      edges: DataFrame, undirected: Boolean, rounds: Int)(p: Program[S, M]): RDD[(Long, S)] = {
     val parts = new HashPartitioner(graft.SparkEntry.shufflePartitions(edges.sparkSession))
     val qe = edges.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("vertex loop")) {
       val adj = qe.toRdd
-        .flatMap { r =>
-          val (a, b, w) = (r.getLong(0), r.getLong(1), r.getLong(2))
-          // weight 0 only marks `b` as a vertex; arrays take Spark's Kryo shuffle
-          Iterator(a -> Array(b, w), b -> (if (undirected) Array(a, w) else Array(b, 0L)))
+        .mapPartitions { rows =>
+          // `(to, w)` pairs interleaved: one shuffled record per vertex and partition
+          val ends = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+          def at(v: Long) = ends.getOrElseUpdate(v, new mutable.ArrayBuilder.ofLong)
+          rows.foreach { r =>
+            val (a, b, w) = (r.getLong(0), r.getLong(1), r.getLong(2))
+            at(a).addOne(b).addOne(w)
+            if (undirected) at(b).addOne(a).addOne(w) else at(b) // a vertex that only receives
+          }
+          ends.iterator.map { case (v, es) => v -> es.result() }
         }
         .groupByKey(parts)
-        .mapValues { es =>
-          val m = es.groupMapReduce(_(0))(_(1))(_ + _).filter(_._2 != 0L)
-          Nbrs(m.keys.toArray, m.values.toArray)
+        .mapValues { ess =>
+          val sum = mutable.LongMap.empty[Long]
+          for (es <- ess; i <- es.indices by 2) sum(es(i)) = sum.getOrElse(es(i), 0L) + es(i + 1)
+          Nbrs(sum.keys.toArray, sum.values.toArray)
         }
         .localCheckpoint()
-      val p = program(adj)
       // (vertex, (state, changed last round)), in adj's stored order
       var states: RDD[(Long, (S, Boolean))] = adj.mapPartitions(
         _.map { case (v, n) => (v, (p.init(v, n), true)) },
         preservesPartitioning = true)
-      var round = 0
-      var changed = 1L
+      var (round, changed) = (0, 1L)
       while (changed > 0 && round < rounds) {
         val msgs = adj.zipPartitions(states) { (a, s) =>
           a.zip(s).flatMap { case ((_, n), (_, (st, chg))) => p.send(st, chg, n) }

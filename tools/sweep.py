@@ -3,7 +3,8 @@
 registered query (or a given list) at one scale, one JSON line per query.
 
 It builds with perfbench's build and runs one pass with perfbench's
-`run_pass`, so a sweep measures what the benchmark measures. Each line
+`run_pass` under the benchmark's own JVM options (heap included), so a
+sweep measures what the benchmark measures. Each line
 holds the query's status, its phase times (construct, plan, action), its
 Spark job counts (traced passes only) and the order-independent digest
 of its result. `--compare DIR` then lists every query whose digest
@@ -11,7 +12,7 @@ differs from, or is missing in, an earlier sweep's output.
 
 Usage:
   python3 tools/sweep.py --scale /path/to/sf0.1 --out target/sweep/NAME \\
-      [--seed N] [--trace 0|1] [--queries q1,q2,...] [--heap 6g] \\
+      [--seed N] [--trace 0|1] [--queries q1,q2,...] \\
       [--compare target/sweep/OTHER]
 
 Writes OUT/sweep.jsonl and OUT/pass.json (the harness's whole report).
@@ -54,17 +55,12 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=1, help="seed of the query order")
     ap.add_argument("--trace", type=int, choices=(0, 1), default=1)
     ap.add_argument("--queries", help="comma-separated names (default: every query)")
-    ap.add_argument("--heap", default="6g", help="-Xmx of the pass's JVM")
     ap.add_argument("--compare", type=Path, help="an earlier sweep's output directory")
     a = ap.parse_args()
     out = a.out.resolve()
     if ROOT / "target" not in out.parents:
         ap.error(f"--out must lie under {ROOT / 'target'}")
-    # the class-data archive is recorded under the benchmark's own options,
-    # since later benchmark runs of this checkout map the same file
     built = build.build(run.JAVA_OPTS)
-    # the heap of this sweep's pass only: run.py's list in this process
-    run.JAVA_OPTS[:] = [o for o in run.JAVA_OPTS if not o.startswith("-Xmx")] + [f"-Xmx{a.heap}"]
     names = a.queries.split(",") if a.queries else registry(built[0])
     random.Random(a.seed).shuffle(names)
     work = build.target_dir() / "work" / f"sweep-{out.name}"
